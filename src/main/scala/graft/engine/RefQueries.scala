@@ -10,21 +10,28 @@ import org.apache.spark.sql.functions._
   * Reference shape (per pipeline): two chained MapReduce jobs with a durable
   * intermediate (MovieRank.java:169,194) — here a single DataFrame whose
   * physical plan is:
-  *   Scan(fact) → BroadcastHashJoin(dim) → partial HashAggregate →
-  *   Exchange(hash) → final HashAggregate → Filter(HAVING) →
-  *   Exchange(range) → Sort
+  *   Scan(fact) → partial HashAggregate(factKey) → Exchange(hash) →
+  *   final HashAggregate → BroadcastHashJoin(dim) → HashAggregate(key, title) →
+  *   Filter(HAVING) → Exchange(range) → Sort
   * i.e. exactly two in-flight shuffles and zero durable intermediates; the
   * DistributedCache replicated-HashMap join (MovieRank.java:30-51,67) becomes
   * `broadcast(dim)` → BroadcastExchangeExec.
+  *
+  * The fact side is aggregated on its key alone before the join: this is the
+  * reference's combiner (MovieRank.java:80-95), which it left switched off
+  * (MovieRank.java:161), made real. Spark's optimizer does not push an
+  * aggregate below a join, so joining first would probe the dimension with
+  * every fact row and then hash-aggregate on the wide (key, title) pair.
   *
   * Scale notes (100 TB design):
   *   - the dimension is broadcast explicitly — at any realistic movie/part
   *     dimension size (≪ executor memory) this removes the fact-side shuffle
   *     a sort-merge join would need;
-  *   - aggregation keys (dimKey, title) are low-cardinality relative to the
-  *     fact, so partial (map-side) aggregation — which Spark always plants —
-  *     collapses the shuffle to |dim| rows per task, the same win the
-  *     reference's (disabled) combiner chased (MovieRank.java:80-95,161);
+  *   - the partial aggregate collapses each fact task to at most one row per
+  *     fact key before the hash exchange, so only |keys|-sized data shuffles
+  *     and only that reaches the join;
+  *   - the (key, title) re-aggregate adds no exchange: the broadcast join's
+  *     output partitioning, hashed on factKey, also covers dimKey;
   *   - the final global sort range-partitions only the aggregated rows
   *     (|dim|-sized), never the fact.
   */
@@ -44,10 +51,8 @@ object RefQueries {
   def rankByCount(fact: DataFrame, dim: DataFrame,
                   factKey: String, dimKey: String, titleCol: String,
                   asc: Boolean = true): DataFrame = {
-    val joined = fact.join(broadcast(dim), fact(factKey) === dim(dimKey), "inner")
-    val agg = joined
-      .groupBy(dim(dimKey).as("key"), dim(titleCol).as("title"))
-      .agg(count(lit(1)).as("cnt"))
+    val agg = perMember(fact, dim, factKey, dimKey, titleCol, measure = None)
+      .withColumnRenamed("n", "cnt")
     val cntOrder = if (asc) col("cnt").asc else col("cnt").desc
     agg.orderBy(cntOrder, col("key").asc)
   }
@@ -65,16 +70,36 @@ object RefQueries {
                   factKey: String, dimKey: String, titleCol: String,
                   measure: String, minCount: Long, minAvg: Double,
                   asc: Boolean = true): DataFrame = {
-    val joined = fact.join(broadcast(dim), fact(factKey) === dim(dimKey), "inner")
-    val agg = joined
-      .groupBy(dim(dimKey).as("key"), dim(titleCol).as("title"))
-      .agg(count(lit(1)).as("num_ratings"), avg(fact(measure)).as("avg_raw"))
+    val agg = perMember(fact, dim, factKey, dimKey, titleCol, Some(measure))
+      .withColumnRenamed("n", "num_ratings")
       .where(col("num_ratings") > minCount && col("avg_raw") > minAvg)
       .withColumn("avg_rating", round(col("avg_raw"), 4))
       .drop("avg_raw")
     val avgOrder = if (asc) col("avg_rating").asc else col("avg_rating").desc
     agg.select(col("key"), col("title"), col("avg_rating"), col("num_ratings"))
       .orderBy(avgOrder, col("key").asc)
+  }
+
+  /** The shared aggregate-before-join core: (key, title, n[, avg_raw]) per
+    * dimension member, equal to grouping the fact ⋈ dim join by (dimKey,
+    * titleCol) on any input.
+    *   1. group the fact on `factKey` alone: count, plus avg(measure);
+    *   2. broadcast-join those partials, one row per key, to the dimension;
+    *   3. re-aggregate by (dimKey, titleCol): `sum` of the counts, `max` of
+    *      the per-key average. Every row of such a group carries the same
+    *      key, hence the same average, so `max` is exact and keeps avg's
+    *      result type; a key duplicated in the dimension still counts its
+    *      fact rows once per duplicate, as the join-first shape does.
+    */
+  private def perMember(fact: DataFrame, dim: DataFrame,
+                        factKey: String, dimKey: String, titleCol: String,
+                        measure: Option[String]): DataFrame = {
+    val partials = fact.groupBy(fact(factKey))
+      .agg(count(lit(1)).as("n"), measure.map(m => avg(fact(m)).as("a")).toSeq: _*)
+    partials.join(broadcast(dim), partials(factKey) === dim(dimKey), "inner")
+      .groupBy(dim(dimKey).as("key"), dim(titleCol).as("title"))
+      .agg(sum(partials("n")).as("n"),
+        measure.map(_ => max(partials("a")).as("avg_raw")).toSeq: _*)
   }
 
   /** J1a join-miss policy (SURVEY.md §2.3): the reference's missing-dimension

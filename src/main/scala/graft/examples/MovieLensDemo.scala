@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.engine.{MovieAnalysis, Sources}
 
 /** The reference engine's CLI, re-expressed (MovieRank.java:145-214 +
@@ -27,19 +27,25 @@ object MovieLensDemo {
     val movies = Sources.moviesCsv(spark, args(0))
     val ratings = Sources.ratingsCsv(spark, args(1))
 
-    val rank = MovieAnalysis.movieRank(movies, ratings, asc = false)
-    val rating = MovieAnalysis.movieRating(movies, ratings)
-
-    println("== MovieRank (top by review count) ==")
-    rank.show(10, truncate = false)
-    println("== MovieRating (avg rating, support > 10, avg > 4.0) ==")
-    rating.show(10, truncate = false)
-
-    args.lift(2).foreach { out =>
-      rank.write.mode("overwrite").option("sep", "\t").csv(s"$out/movierank")
-      rating.write.mode("overwrite").option("sep", "\t").csv(s"$out/movierating")
-      println(s"wrote $out/movierank and $out/movierating")
+    val outDir = args.lift(2)
+    // Each pipeline runs once: with an outDir its result is persisted, written,
+    // and its first rows are shown from the persisted copy.
+    def emit(heading: String, name: String, result: DataFrame): Unit = {
+      println(heading)
+      outDir match {
+        case Some(out) =>
+          result.persist()
+          result.write.mode("overwrite").option("sep", "\t").csv(s"$out/$name")
+          result.show(10, truncate = false)
+          result.unpersist()
+          println(s"wrote $out/$name")
+        case None => result.show(10, truncate = false)
+      }
     }
+    emit("== MovieRank (top by review count) ==", "movierank",
+      MovieAnalysis.movieRank(movies, ratings, asc = false))
+    emit("== MovieRating (avg rating, support > 10, avg > 4.0) ==", "movierating",
+      MovieAnalysis.movieRating(movies, ratings))
     println(f"Time taken: ${(System.nanoTime() - t0) / 1e9}%.1f sec")
     spark.stop()
   }

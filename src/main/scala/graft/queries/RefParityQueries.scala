@@ -27,7 +27,8 @@ object RefParityQueries {
 
     // ── Headline pipelines (SURVEY.md §2.10) ──────────────────────────────
     // Q1 MovieRank ≙ rank parts by lineitem count (MovieRank.java:145-214):
-    // broadcast join + groupBy count + global asc sort (O1 literal order).
+    // count per l_partkey, broadcast join to part, re-aggregate per
+    // (p_partkey, p_name), global asc sort (O1 literal order).
     "q1_movierank" -> q((s, dir) =>
       RefQueries.rankByCount(
         Sources.lineitem(s, dir), Sources.part(s, dir),
@@ -58,7 +59,9 @@ object RefParityQueries {
     // (movieId, count) pairs, then the dim join broadcasts — the 100 TB
     // shape. Ratings of unknown movieIds drop via the inner join (the
     // clean variant of J1a; the faithful "null"-title form is
-    // join_miss_null).
+    // join_miss_null). Not MovieAnalysis.movieRank: this query and its oracle
+    // emit one row per movies.csv row, where movieRank merges a duplicated
+    // movieId into one (movieId, title) row with the summed count.
     "q1_movielens_csv" -> q((s, _) => {
       val movies = Sources.moviesCsv(s, s"$FixtureDir/movies.csv")
       val ratings = Sources.ratingsCsv(s, s"$FixtureDir/ratings.csv")
@@ -71,7 +74,8 @@ object RefParityQueries {
     // The MovieRating pipeline on the same CSV fixture: avg rating per
     // movie with the reference's dual strict HAVING (count > 10 AND
     // avg > 3.5 — MovieRating.java:97,100), ascending rating sort. Completes
-    // the literal-format pair with q1_movielens_csv.
+    // the literal-format pair with q1_movielens_csv. Not MovieAnalysis.
+    // movieRating: HAVING here compares the rounded average against 3.5.
     "q2_movielens_csv" -> q((s, _) => {
       val movies = Sources.moviesCsv(s, s"$FixtureDir/movies.csv")
       val ratings = Sources.ratingsCsv(s, s"$FixtureDir/ratings.csv")

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Prop, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, propBoolean}
 import org.apache.spark.sql.functions._
 import graft.engine.RefQueries
 import graft.functions.{NGramShingles, SimHash64, VecKernel}
@@ -31,6 +31,36 @@ object GraftProps extends Properties("graft") {
     val expected = rows.groupBy(_._1).view.mapValues(_.size.toLong).toMap
     got == expected
   }
+
+  // Fact keys 0..10 against a dimension that lacks 0, 9 and 10, repeats key
+  // 7 with its own title and key 8 with a second title, and has a null
+  // title; half-step ratings make averages tie the HAVING threshold.
+  private val starGen: Gen[List[(Int, Double)]] =
+    Gen.listOfN(60, Gen.zip(Gen.choose(0, 10), Gen.choose(1, 10).map(_ * 0.5)))
+
+  property("rankByCount/ratingByAvg ≡ join-first reference (missing, duplicate keys, null title)") =
+    forAll(starGen) { rows =>
+      import spark.implicits._
+      val fact = rows.toDF("movieId", "rating")
+      val dim = (Seq(1 -> Some("title1"), 2 -> None) ++
+        (3 to 8).map(i => i -> Some(s"title$i")) ++
+        Seq(7 -> Some("title7"), 8 -> Some("other8"))).toDF("dimId", "title")
+      // Join-first reference: every fact row probes the dimension, then
+      // (key, title) groups count and average the joined rows.
+      val joinFirst = fact.join(broadcast(dim), fact("movieId") === dim("dimId"))
+        .groupBy(dim("dimId").as("key"), dim("title").as("title"))
+        .agg(count(lit(1)).as("n"), avg(fact("rating")).as("avg_raw"))
+      def rowsOf(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toSeq).sortBy(_.toString).toSeq
+      val rank = RefQueries.rankByCount(fact, dim, "movieId", "dimId", "title")
+      val rating = RefQueries.ratingByAvg(fact, dim, "movieId", "dimId", "title",
+        measure = "rating", minCount = 3L, minAvg = 2.5)
+      val rankRef = joinFirst.select(col("key"), col("title"), col("n"))
+      val ratingRef = joinFirst.where(col("n") > 3L && col("avg_raw") > 2.5)
+        .select(col("key"), col("title"), round(col("avg_raw"), 4), col("n"))
+      (rowsOf(rank) == rowsOf(rankRef)) :| "rankByCount" &&
+        (rowsOf(rating) == rowsOf(ratingRef)) :| "ratingByAvg"
+    }
 
   property("aggregation invariant under repartition(7)") = forAll(ratingGen) { rows =>
     import spark.implicits._

@@ -54,12 +54,17 @@ class MovieAnalysisSpec extends AnyFunSuite {
 
   test("tab-text sink round-trip (S4): write sep=\\t csv, read back identical") {
     val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val df = MovieAnalysis.movieRating(movies, ratings)
-    df.write.mode("overwrite").option("sep", "\t").option("header", "true").csv(out)
-    val back = spark.read.option("sep", "\t").option("header", "true")
-      .schema(df.schema).csv(out)
-    assert(back.count() == df.count())
-    assert(back.orderBy("avg_rating", "movieId").collect().toSeq ==
-      df.collect().toSeq)
+    try {
+      val df = MovieAnalysis.movieRating(movies, ratings)
+      df.write.mode("overwrite").option("sep", "\t").option("header", "true").csv(out)
+      val back = spark.read.option("sep", "\t").option("header", "true")
+        .schema(df.schema).csv(out)
+      assert(back.count() == df.count())
+      assert(back.orderBy("avg_rating", "movieId").collect().toSeq ==
+        df.collect().toSeq)
+    } finally {
+      import scala.reflect.io.Directory
+      new Directory(new java.io.File(out)).deleteRecursively()
+    }
   }
 }

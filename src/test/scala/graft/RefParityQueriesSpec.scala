@@ -34,6 +34,26 @@ class RefParityQueriesSpec extends AnyFunSuite {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join in:\n$plan")
     assert(!plan.contains("SortMergeJoin"), "dimension join must not shuffle the fact side")
+    assertFactAggregatedBeforeJoin(plan)
+  }
+
+  test("q2_movierating plan: broadcast join + two-phase aggregate, no extra shuffle") {
+    val df = RefParityQueries.queries("q2_movierating")(spark, dir)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join in:\n$plan")
+    assert(!plan.contains("SortMergeJoin"), "dimension join must not shuffle the fact side")
+    assertFactAggregatedBeforeJoin(plan)
+  }
+
+  /** The lineitem side is counted per l_partkey below the part join, and the
+    * (p_partkey, p_name) re-aggregate above the join adds no hash exchange:
+    * the one hash exchange is the fact aggregate's own. */
+  private def assertFactAggregatedBeforeJoin(plan: String): Unit = {
+    val joinIdx = plan.indexOf("BroadcastHashJoin")
+    val factAggIdx = plan.indexOf("HashAggregate(keys=[l_partkey")
+    assert(factAggIdx > joinIdx, s"fact aggregate must sit below the join in:\n$plan")
+    assert("Exchange hashpartitioning".r.findAllMatchIn(plan).size == 1,
+      s"expected only the fact aggregate's hash exchange in:\n$plan")
   }
 
   test("q1_movielens_csv plan: aggregate below the join, dimension broadcast") {
