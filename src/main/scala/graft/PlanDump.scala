@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.queries.DedupQueries.JaccardThreshold
 
 /** Dev tool: write `.explain("formatted")` output of registered queries to
   * files — the optimization-round evidence format (`plans/r<n>/<query>_
@@ -36,10 +37,10 @@ object PlanDump {
         org.apache.spark.sql.DataFrame] = Map(
       "dedup_jaccard_pairs" -> ((s, d) => graft.operators.Dedup
         .exactJaccardJoin(graft.engine.Sources.documents(s, d),
-          "doc_id", "text", n = 3, threshold = 0.8)),
+          "doc_id", "text", n = 3, threshold = JaccardThreshold)),
       "dedup_containment_pairs" -> ((s, d) => graft.operators.Dedup
         .containmentJoin(graft.engine.Sources.documents(s, d),
-          "doc_id", "text", n = 3, threshold = 0.8)))
+          "doc_id", "text", n = 3, threshold = JaccardThreshold)))
     def dump(name: String, fn: (SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Unit =
       try {

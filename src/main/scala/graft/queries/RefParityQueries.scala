@@ -19,9 +19,10 @@ object RefParityQueries {
     (s, dir) => f(Tuning.tune(s), dir)
 
   /** Committed MovieLens-format CSV fixture (deterministic, RFC-4180 edge
-    * rows included) — independent of the driver's sf dir, same absolute path
-    * visible to the DuckDB oracle. */
-  val FixtureDir = "/root/repo/fixtures"
+    * rows included) — independent of the sf testdata dir. Resolved against
+    * the working directory, which sbt and [[graft.Verify]] set to the
+    * checkout, so the DuckDB oracle sees the same absolute path. */
+  val FixtureDir: String = new java.io.File("fixtures").getAbsolutePath
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -31,6 +31,10 @@ class StreamingOpsSpec extends AnyFunSuite {
     * day ahead (its own window never closes and never appears in output). */
   private val sentinel = (999L, Timestamp.valueOf("2024-01-02 10:00:00"), 99L, "flush", 0.0)
 
+  private def deleteDirs(dirs: String*): Unit = dirs.foreach { d =>
+    new scala.reflect.io.Directory(new java.io.File(d)).deleteRecursively()
+  }
+
   private def runStream(name: String)(build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
                                       mode: OutputMode): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
@@ -185,15 +189,17 @@ class StreamingOpsSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    mem.addData(rows: _*)
-    val df = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-    val q = StreamingOps.toParquetBatches(df, out, ckpt)
-    q.processAllAvailable()
-    q.stop()
-    val landed = spark.read.parquet(out)
-    assert(landed.count() == rows.size)
-    assert(landed.columns.contains("__batch_id"))
+    try {
+      val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
+      mem.addData(rows: _*)
+      val df = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
+      val q = StreamingOps.toParquetBatches(df, out, ckpt)
+      q.processAllAvailable()
+      q.stop()
+      val landed = spark.read.parquet(out)
+      assert(landed.count() == rows.size)
+      assert(landed.columns.contains("__batch_id"))
+    } finally deleteDirs(out, ckpt)
   }
 
   test("toParquetBatches replay: re-writing the same batch id does not duplicate rows") {
@@ -201,23 +207,25 @@ class StreamingOpsSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     val out = java.nio.file.Files.createTempDirectory("graft_sink_replay").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_replay").toString
-    val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    mem.addData(rows: _*)
-    val df = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-    val q = StreamingOps.toParquetBatches(df, out, ckpt)
-    q.processAllAvailable()
-    q.stop()
-    val once = spark.read.parquet(out)
-    val n = once.count()
-    // partition-dir column comes back type-inferred (int), not long
-    val lastBatch = once.agg(org.apache.spark.sql.functions.max("__batch_id"))
-      .collect()(0).get(0).asInstanceOf[Number].longValue
-    // simulate a post-crash replay of the final batch: same rows, same id
-    val replayRows = once.where(org.apache.spark.sql.functions.col("__batch_id") === lastBatch)
-      .drop("__batch_id")
-    StreamingOps.writeBatch(replayRows, lastBatch, out)
-    assert(spark.read.parquet(out).count() == n,
-      "a replayed batch must overwrite its own partition, not append a second copy")
+    try {
+      val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
+      mem.addData(rows: _*)
+      val df = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
+      val q = StreamingOps.toParquetBatches(df, out, ckpt)
+      q.processAllAvailable()
+      q.stop()
+      val once = spark.read.parquet(out)
+      val n = once.count()
+      // partition-dir column comes back type-inferred (int), not long
+      val lastBatch = once.agg(org.apache.spark.sql.functions.max("__batch_id"))
+        .collect()(0).get(0).asInstanceOf[Number].longValue
+      // simulate a post-crash replay of the final batch: same rows, same id
+      val replayRows = once.where(org.apache.spark.sql.functions.col("__batch_id") === lastBatch)
+        .drop("__batch_id")
+      StreamingOps.writeBatch(replayRows, lastBatch, out)
+      assert(spark.read.parquet(out).count() == n,
+        "a replayed batch must overwrite its own partition, not append a second copy")
+    } finally deleteDirs(out, ckpt)
   }
 
   test("checkpoint resume: a restarted query processes only new files, exactly once") {
@@ -226,38 +234,42 @@ class StreamingOpsSpec extends AnyFunSuite {
     val in = java.nio.file.Files.createTempDirectory("graft_resume_in")
     val out = java.nio.file.Files.createTempDirectory("graft_resume_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_resume_ckpt").toString
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("value", DoubleType)))
+    val stages = scala.collection.mutable.Buffer.empty[String]
+    try {
+      val schema = StructType(Seq(
+        StructField("event_id", LongType), StructField("value", DoubleType)))
 
-    // drop a single-file parquet batch into the watched dir under a stable name
-    def addFile(name: String, data: Seq[(Long, Double)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_resume_stage").toString
-      data.toDF("event_id", "value").coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, in.resolve(name))
-    }
-    // run the file-source stream against the SAME checkpoint until drained
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(schema).parquet(in.toString)
-      val q = StreamingOps.toParquetBatches(stream, out, ckpt)
-      q.processAllAvailable()
-      q.stop()
-    }
+      // drop a single-file parquet batch into the watched dir under a stable name
+      def addFile(name: String, data: Seq[(Long, Double)]): Unit = {
+        val tmp = java.nio.file.Files.createTempDirectory("graft_resume_stage").toString
+        stages += tmp
+        data.toDF("event_id", "value").coalesce(1).write.mode("overwrite").parquet(tmp)
+        val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
+        java.nio.file.Files.move(part.toPath, in.resolve(name))
+      }
+      // run the file-source stream against the SAME checkpoint until drained
+      def runOnce(): Unit = {
+        val stream = spark.readStream.schema(schema).parquet(in.toString)
+        val q = StreamingOps.toParquetBatches(stream, out, ckpt)
+        q.processAllAvailable()
+        q.stop()
+      }
 
-    addFile("a.parquet", Seq((1L, 1.0), (2L, 2.0)))
-    runOnce() // processes file a
-    val afterA = spark.read.parquet(out)
-    assert(afterA.select("event_id").as[Long].collect().toSet == Set(1L, 2L))
-    val batchesA = afterA.select("__batch_id").distinct().count()
+      addFile("a.parquet", Seq((1L, 1.0), (2L, 2.0)))
+      runOnce() // processes file a
+      val afterA = spark.read.parquet(out)
+      assert(afterA.select("event_id").as[Long].collect().toSet == Set(1L, 2L))
+      val batchesA = afterA.select("__batch_id").distinct().count()
 
-    addFile("b.parquet", Seq((3L, 3.0)))
-    runOnce() // resumed from the checkpoint: must see ONLY file b
-    val afterB = spark.read.parquet(out)
-    assert(afterB.select("event_id").as[Long].collect().toSet == Set(1L, 2L, 3L),
-      "restart must process the new file and must NOT reprocess the old one")
-    assert(afterB.count() == 3, "exactly-once across restart: no duplicated rows")
-    assert(afterB.select("__batch_id").distinct().count() == batchesA + 1,
-      "the resumed run must land as a NEW batch id continuing the checkpointed sequence")
+      addFile("b.parquet", Seq((3L, 3.0)))
+      runOnce() // resumed from the checkpoint: must see ONLY file b
+      val afterB = spark.read.parquet(out)
+      assert(afterB.select("event_id").as[Long].collect().toSet == Set(1L, 2L, 3L),
+        "restart must process the new file and must NOT reprocess the old one")
+      assert(afterB.count() == 3, "exactly-once across restart: no duplicated rows")
+      assert(afterB.select("__batch_id").distinct().count() == batchesA + 1,
+        "the resumed run must land as a NEW batch id continuing the checkpointed sequence")
+    } finally deleteDirs(Seq(in.toString, out, ckpt) ++ stages: _*)
   }
 
   test("file-source streaming: readStream over the real events.parquet ≡ batch") {
