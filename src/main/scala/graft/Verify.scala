@@ -22,14 +22,14 @@ import java.util.concurrent.atomic.AtomicBoolean
   *     rest are disclosed as `skipped` — and the run order puts
   *     [[SparkEntry.newThisRound]] first so a degraded run still covers the
   *     round's additions before the carried surface;
-  *   - queries run CONCURRENTLY (SPARK_GRAFT_VERIFY_THREADS, default 4)
-  *     but grouped by name family (prefix before the first '_'): the
-  *     shared memoized artifacts (stored ANN indexes, snapshot tables —
-  *     TrieMap.getOrElseUpdate may evaluate its builder twice under a
-  *     race, and two builders writing one index dir corrupt it) are only
-  *     ever shared within a family, so family-serial scheduling makes the
-  *     parallel run artifact-safe by construction. Families are queued
-  *     longest-first (LPT) with new-query families promoted to the head.
+  *   - queries run CONCURRENTLY (SPARK_GRAFT_VERIFY_THREADS, default 4).
+  *     Shared artifacts (stored ANN indexes, snapshot tables, trained
+  *     quantizers) are safe under any interleaving: [[graft.queries.Artifacts]]
+  *     builds each one exactly once and makes concurrent callers wait for
+  *     it. Queries are still grouped by name family (prefix before the
+  *     first '_') purely as a scheduling choice: families run serially,
+  *     queued longest-first (LPT) with new-query families promoted to the
+  *     head.
   */
 object Verify {
   def main(args: Array[String]): Unit = {

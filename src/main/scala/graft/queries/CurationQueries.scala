@@ -27,13 +27,8 @@ object CurationQueries {
     * ONLY if the protocol's invisibility guarantees hold: the orphan's rows
     * must not surface and the torn snapshot must not be current — the
     * correctness gate itself exercises the crash story every round. */
-  private val snapshotTableBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private[graft] def snapshotTableDir(s: SparkSession, dir: String): String =
-    snapshotTableBuilt.getOrElseUpdate(dir, {
-      val t = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_snaptab_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("snaptab", dir) { t =>
       val d = Sources.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("n_chars"))
       // commit 0 + 1: the corpus arrives in two appends
@@ -57,8 +52,7 @@ object CurationQueries {
         d.limit(3).withColumn("lang", lit("TORN")))
       assert(new java.io.File(s"$t/manifests/snap=3/_SUCCESS").delete(),
         "torn-manifest plant failed")
-      t
-    })
+    }
 
   /** Build-once snapshot table WITH manifest stats (X156): two commits —
     * the second an append, proving stats union across manifest
@@ -66,13 +60,8 @@ object CurationQueries {
     * file covers a narrow envelope and the manifest's min/max columns can
     * actually skip files. Ids split 3:1 between the commits; together they
     * hold the whole documents table. */
-  private val snapshotStatsTableBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private[graft] def snapshotStatsTableDir(s: SparkSession, dir: String): String =
-    snapshotStatsTableBuilt.getOrElseUpdate(dir, {
-      val t = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_snapstats_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("snapstats", dir) { t =>
       val d = Sources.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("n_chars"))
       val stats = Seq("lang", "doc_id")
@@ -82,8 +71,7 @@ object CurationQueries {
       graft.operators.Snapshot.commitAppend(s, t,
         d.where(col("doc_id") % 4 === 0)
           .repartitionByRange(2, col("lang"), col("doc_id")), stats)
-      t
-    })
+    }
 
   /** Build-once WRITE-AUDIT-PUBLISH table (X158): the ref-gated publish
     * flow. Commit 0 (odd doc_ids) audits clean → ref "main" = 0. Commit 1
@@ -94,13 +82,8 @@ object CurationQueries {
     * snapshot 1 stays readable by id for debugging — audits clean, and
     * "main" moves to 2. A ref reader can never have observed the bad rows
     * at any point in this history. */
-  private val wapTableBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private[graft] def wapTableDir(s: SparkSession, dir: String): String =
-    wapTableBuilt.getOrElseUpdate(dir, {
-      val t = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_snapwap_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("snapwap", dir) { t =>
       val Snap = graft.operators.Snapshot
       val d = Sources.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -117,8 +100,7 @@ object CurationQueries {
       val fixed = Snap.commitAppend(s, t, d.where(col("doc_id") % 2 === 0),
         parent = Some(base))
       if (audit(fixed)) Snap.setRef(s, t, "main", fixed)
-      t
-    })
+    }
 
   /** Build-once DELETION-VECTOR table (X159): two appends, a positional
     * merge-on-read DELETE (every doc_id % 7 == 3 row present at delete
@@ -126,13 +108,8 @@ object CurationQueries {
     * pairs), then a THIRD append whose rows include doc_id % 7 == 3
     * members that must NOT be affected (the vector binds to the files it
     * was computed over, never to future data). */
-  private val dvTableBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private[graft] def dvTableDir(s: SparkSession, dir: String): String =
-    dvTableBuilt.getOrElseUpdate(dir, {
-      val t = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_snapdv_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("snapdv", dir) { t =>
       val Snap = graft.operators.Snapshot
       val d = Sources.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -140,8 +117,7 @@ object CurationQueries {
       Snap.commitAppend(s, t, d.where(col("doc_id") % 3 === 2))
       Snap.commitDelete(s, t, col("doc_id") % 7 === 3)
       Snap.commitAppend(s, t, d.where(col("doc_id") % 3 === 0))
-      t
-    })
+    }
 
   /** Build-once EQUALITY-DELETE table (X160, round-17) — the keyed sibling
     * of [[dvTableDir]] with the SAME commit choreography and therefore the
@@ -152,13 +128,8 @@ object CurationQueries {
     * commit sequence FOLLOWS the delete's (the Iceberg-v2 sequence rule).
     * The deliberate twin-ness cross-checks both delete mechanisms against
     * one relational truth. */
-  private val eqdvTableBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private[graft] def eqdvTableDir(s: SparkSession, dir: String): String =
-    eqdvTableBuilt.getOrElseUpdate(dir, {
-      val t = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_snapeqdv_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("snapeqdv", dir) { t =>
       val Snap = graft.operators.Snapshot
       val d = Sources.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -167,8 +138,7 @@ object CurationQueries {
       Snap.commitEqDelete(s, t,
         d.where(col("doc_id") % 7 === 3).select(col("doc_id")))
       Snap.commitAppend(s, t, d.where(col("doc_id") % 3 === 0))
-      t
-    })
+    }
 
   /** Build-once TAIL-REPLICATED sink (X166, round-17): [[dvTableDir]]'s
     * history replayed into a fresh snapshot table by the checkpoint-free
@@ -178,13 +148,8 @@ object CurationQueries {
     * sink's newest publish and tails again: the heal path runs inside the
     * correctness gate itself, so the registered read passes its oracle
     * only if exactly-once held through the simulated crash. */
-  private val tailTableBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private[graft] def tailTableDir(s: SparkSession, dir: String): String =
-    tailTableBuilt.getOrElseUpdate(dir, {
-      val t = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_snaptail_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("snaptail", dir) { t =>
       val Snap = graft.operators.Snapshot
       val src = dvTableDir(s, dir)
       Snap.tailChangelog(s, src, t, keyCols = Seq("doc_id"))
@@ -192,8 +157,7 @@ object CurationQueries {
       assert(new java.io.File(s"$t/manifests/snap=$cur/_SUCCESS").delete(),
         "torn-sink-publish plant failed")
       Snap.tailChangelog(s, src, t, keyCols = Seq("doc_id"))
-      t
-    })
+    }
 
   /** Build-once COMPACTED table (X163, round-17): three small appends, a
     * keyed delete, one big append, then INCREMENTAL SEGMENT COMPACTION —
@@ -202,13 +166,8 @@ object CurationQueries {
     * equality delete) while the big segment stays byte-untouched. The
     * read after compaction must equal the plain relational truth — any
     * row the rewrite lost, resurrected, or double-kept breaks the hash. */
-  private val compactTableBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private[graft] def compactTableDir(s: SparkSession, dir: String): String =
-    compactTableBuilt.getOrElseUpdate(dir, {
-      val t = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_snapcompact_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("snapcompact", dir) { t =>
       val Snap = graft.operators.Snapshot
       val d = Sources.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -222,29 +181,22 @@ object CurationQueries {
       // post-delete segment stays untouched
       val n = Sources.documents(s, dir).count()
       Snap.commitCompactSegments(s, t, smallRowsMax = n / 6)
-      t
-    })
+    }
 
   /** Build-once SCHEMA-EVOLVED table (X164, round-17): the odd half of the
     * corpus commits with the base shape, the even half with an ADDED
     * quality_bp column — the read resolves the metadata-carried union
     * schema (no footer merging) and the pre-evolution rows surface the
     * new column as NULL. */
-  private val evolvedTableBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private[graft] def evolvedTableDir(s: SparkSession, dir: String): String =
-    evolvedTableBuilt.getOrElseUpdate(dir, {
-      val t = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_snapevolve_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("snapevolve", dir) { t =>
       val Snap = graft.operators.Snapshot
       val d = Sources.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("n_chars"))
       Snap.commitAppend(s, t, d.where(col("doc_id") % 2 === 1))
       Snap.commitAppend(s, t, d.where(col("doc_id") % 2 === 0)
         .withColumn("quality_bp", col("n_chars") % 100))
-      t
-    })
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -900,45 +852,28 @@ object CurationQueries {
   )
 
   /** Build-once-per-(process, corpus) shard export for the audit query. */
-  private val shardsBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private def shardsDir(s: SparkSession, dir: String): String =
-    shardsBuilt.getOrElseUpdate(dir, {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_shards_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("shards", dir) { out =>
       graft.operators.Export.writeShards(Sources.documents(s, dir),
         idCol = "doc_id", textCol = "text", nShards = 8, outDir = out)
-      out
-    })
+    }
 
   /** Build-once-per-(process, corpus) compacted rewrite of `documents` for
     * the executed-compaction query — the zorderDir convention: the layout
     * is written once and amortized over every scan (bench reps measure the
     * READ, the at-scale shape of a maintenance pass's output). */
-  private val compactionBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private def compactionDir(s: SparkSession, dir: String): String =
-    compactionBuilt.getOrElseUpdate(dir, {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_compact_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("compact", dir) { out =>
       graft.operators.Layout.compact(Sources.documents(s, dir),
         groupCol = "source", weightCol = "n_chars", idCol = "doc_id",
         targetWeight = 2000L, outDir = out, buckets = 8)
-      out
-    })
+    }
 
   /** Build-once-per-(process, corpus) rebalance-written corpus copy — the
     * compactionDir convention; the clone scopes a benchmark-scale advisory
     * so the skew split actually fires on KB-sized partitions. */
-  private val rebalanceBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private def rebalanceDir(s: SparkSession, dir: String): String =
-    rebalanceBuilt.getOrElseUpdate(dir, {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_rebalance_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("rebalance", dir) { out =>
       val c = Tuning.cloneWithRuntimeConf(s)
       c.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32KB")
       // pre-spread across 16 CHECKPOINTED mappers: split granularity is
@@ -948,19 +883,13 @@ object CurationQueries {
       graft.operators.Layout.rebalanceWrite(
         Sources.documents(c, dir).repartition(16).localCheckpoint(),
         byCol = "lang", outDir = out)
-      out
-    })
+    }
 
   /** Build-once-per-(process, corpus) two-schema snapshot pair for the
     * mergeSchema read query: v1 = the legacy write (even doc_ids, three
     * columns), v2 = the evolved write (odd doc_ids, five columns). */
-  private val evolutionBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private def evolutionDirs(s: SparkSession, dir: String): String =
-    evolutionBuilt.getOrElseUpdate(dir, {
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_evolve_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("evolve", dir) { base =>
       val d = Sources.documents(s, dir)
       d.where(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("text"), col("lang"))
@@ -969,30 +898,23 @@ object CurationQueries {
         .select(col("doc_id"), col("text"), col("lang"), col("source"),
           col("n_chars"))
         .write.mode("overwrite").parquet(s"$base/v2")
-      base
-    })
+    }
 
   /** Build-once-per-(process, corpus) bucketed orders/lineitem tables for
     * the co-located-join query — the compactionDir convention: the layout
     * amortizes once, bench reps measure the exchange-free JOIN (the
     * recurring at-scale operation). External tables; data under tmp. */
-  private val bucketedBuilt =
-    scala.collection.concurrent.TrieMap[String, (String, String)]()
-  private def bucketedTables(s: SparkSession, dir: String): (String, String) =
-    bucketedBuilt.getOrElseUpdate(dir, {
-      val pid = ProcessHandle.current().pid()
-      val tag = dir.replaceAll("[^A-Za-z0-9_]", "_")
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_bucketed_${pid}_$tag")
-      val (lt, ot) = (s"graft_li_b_${pid}_$tag", s"graft_ord_b_${pid}_$tag")
+  private def bucketedTables(s: SparkSession, dir: String): (String, String) = {
+    val tag = s"${ProcessHandle.current().pid()}_${dir.replaceAll("[^A-Za-z0-9_]", "_")}"
+    val (lt, ot) = (s"graft_li_b_$tag", s"graft_ord_b_$tag")
+    Artifacts.dir("bucketed", dir) { base =>
       graft.operators.Layout.writeBucketed(Sources.lineitem(s, dir), lt,
-        nBuckets = 16, key = "l_orderkey",
-        path = new java.io.File(base, "lineitem").getPath)
+        nBuckets = 16, key = "l_orderkey", path = s"$base/lineitem")
       graft.operators.Layout.writeBucketed(Sources.orders(s, dir), ot,
-        nBuckets = 16, key = "o_orderkey",
-        path = new java.io.File(base, "orders").getPath)
-      (lt, ot)
-    })
+        nBuckets = 16, key = "o_orderkey", path = s"$base/orders")
+    }
+    (lt, ot)
+  }
 
   private val ScrubBlocklist = Seq("spark", "stream")
 

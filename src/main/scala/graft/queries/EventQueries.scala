@@ -45,13 +45,8 @@ object EventQueries {
     * races), reused by every later invocation — bench reps measure the
     * pruned READ, which is the at-scale shape (a layout is written once
     * and amortized over every query that scans it). */
-  private val zorderBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private def zorderDir(s: SparkSession, dir: String): String =
-    zorderBuilt.getOrElseUpdate(dir, {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_zorder_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("zorder", dir) { out =>
       val df = Sources.events(s, dir)
         .select(col("event_id"),
           pmod(col("user_id"), lit(256L)).as("a"),
@@ -59,20 +54,14 @@ object EventQueries {
         .withColumn("z", graft.operators.Layout.zValue2(col("a"), col("b"), 8))
       graft.operators.Layout.zOrderBy(df, col("z"), numFiles = 64)
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** Memoized 3-dimension z-ordered copy of events (X143): user bucket ×
     * hour bucket × id bucket interleaved at 6 bits each (18-bit z), range-
     * partitioned into 64 per-z-run files — the multi-column OPTIMIZE
-    * ZORDER layout. Write-once-per-(process, sf) like [[zorderBuilt]]. */
-  private val zorder3Built =
-    scala.collection.concurrent.TrieMap[String, String]()
+    * ZORDER layout. Write-once-per-(process, sf) like [[zorderDir]]. */
   private def zorder3Dir(s: SparkSession, dir: String): String =
-    zorder3Built.getOrElseUpdate(dir, {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_zorder3_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("zorder3", dir) { out =>
       val df = Sources.events(s, dir)
         .select(col("event_id"),
           pmod(col("user_id"), lit(64L)).as("a"),
@@ -82,8 +71,7 @@ object EventQueries {
           Seq(col("a"), col("b"), col("c")), bits = 6))
       graft.operators.Layout.zOrderBy(df, col("z"), numFiles = 64)
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** Memoized two-generation layout + INCREMENTALLY maintained stats index
     * (X148): generation A written and indexed, generation B appended and
@@ -91,15 +79,9 @@ object EventQueries {
     * that scans ONLY the new files (returned counts pinned in LayoutSpec).
     * Both generations range-partition on the bucket column so the stored
     * stats actually prune. */
-  private val statsIncBuilt =
-    scala.collection.concurrent.TrieMap[String, (String, String)]()
-  private def statsIncDirs(s: SparkSession, dir: String): (String, String) =
-    statsIncBuilt.getOrElseUpdate(dir, {
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_statsinc_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      val data = new java.io.File(base, "data").getPath
-      val stats = new java.io.File(base, "stats").getPath
+  private def statsIncDirs(s: SparkSession, dir: String): (String, String) = {
+    val base = Artifacts.dir("statsinc", dir) { out =>
+      val (data, stats) = (s"$out/data", s"$out/stats")
       val ev = Sources.events(s, dir).select(col("event_id"),
         pmod(col("user_id"), lit(64L)).as("a"))
       def gen(pred: org.apache.spark.sql.Column, mode: String): Unit =
@@ -110,8 +92,9 @@ object EventQueries {
       graft.operators.Layout.updateFileStats(s, stats, data, Seq("a"))
       gen(col("event_id") % 3 =!= 0, "append")
       graft.operators.Layout.updateFileStats(s, stats, data, Seq("a"))
-      (data, stats)
-    })
+    }
+    (s"$base/data", s"$base/stats")
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -407,19 +390,9 @@ object EventQueries {
     // exactly-once NO-OPS (correct, but then nothing is measured).
     "stream_sink_parquet_roundtrip" -> q((s, dir) => {
       val (schema, norm) = eventsStreamLayout(s, dir)
-      // Path = pid + full sanitized data dir: two concurrent JVMs on the
-      // same dir (or different dirs whose hashCodes collide) must never
-      // race on the recursive delete / output / checkpoint below. Within
-      // one process the path is stable per dir, so re-runs still exercise
-      // the wipe-and-rewrite contract.
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_psink_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      if (base.exists()) rm(base)
+      // wiped on every call, stable per dir: re-runs exercise the
+      // wipe-and-rewrite contract
+      val base = new java.io.File(Artifacts.scratch("psink", dir))
       val out = new java.io.File(base, "out").getPath
       val ckpt = new java.io.File(base, "ckpt").getPath
       val src = s.readStream.schema(schema)
@@ -445,14 +418,7 @@ object EventQueries {
     // table, so the hash proves batch SEQUENCING (gen1 folded over gen0's
     // result) plus branch routing, through the real streaming runtime.
     "stream_cdc_apply" -> q((s, dir) => {
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_cdc_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      if (base.exists()) rm(base)
+      val base = new java.io.File(Artifacts.scratch("cdc", dir))
       val srcDir = new java.io.File(base, "src"); srcDir.mkdirs()
       val d = Sources.documents(s, dir)
       val gen0 = d.select(col("doc_id"), col("lang"), col("n_chars"),
@@ -507,14 +473,7 @@ object EventQueries {
     // stayed invisible — streaming appends with snapshot isolation, which
     // plain streaming parquet sinks cannot promise.
     "stream_snapshot_commits" -> q((s, dir) => {
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_snapstream_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      if (base.exists()) rm(base)
+      val base = new java.io.File(Artifacts.scratch("snapstream", dir))
       val srcDir = new java.io.File(base, "src"); srcDir.mkdirs()
       val d = Sources.documents(s, dir)
       val gen0 = d.where(col("doc_id") % 3 === 0)

@@ -95,7 +95,7 @@ object RefParityQueries {
     // against the original parquet source — proving the sink round-trips values
     // exactly (ints, strings with spaces) through the text representation.
     "sink_tab_roundtrip" -> q((s, dir) => {
-      val out = s"${sys.props("java.io.tmpdir")}/graft_tab_sink_${Integer.toHexString(dir.hashCode)}"
+      val out = Artifacts.scratch("tab_sink", dir)
       Sources.part(s, dir)
         .select(col("p_partkey"), col("p_brand"), col("p_type"))
         .write.mode("overwrite").option("sep", "\t").csv(out)
@@ -109,7 +109,7 @@ object RefParityQueries {
     // of the source/sink matrix — write ORC shards, read them back, prove
     // exact value round-trip against the parquet-derived oracle.
     "sink_orc_roundtrip" -> q((s, dir) => {
-      val out = s"${sys.props("java.io.tmpdir")}/graft_orc_sink_${Integer.toHexString(dir.hashCode)}"
+      val out = Artifacts.scratch("orc_sink", dir)
       Sources.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .write.mode("overwrite").orc(out)
@@ -122,7 +122,7 @@ object RefParityQueries {
     // unicode must round-trip exactly for the format to be usable as a
     // corpus sink.
     "sink_jsonl_roundtrip" -> q((s, dir) => {
-      val out = s"${sys.props("java.io.tmpdir")}/graft_jsonl_sink_${Integer.toHexString(dir.hashCode)}"
+      val out = Artifacts.scratch("jsonl_sink", dir)
       Sources.documents(s, dir)
         .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
         .write.mode("overwrite").json(out)
@@ -141,7 +141,7 @@ object RefParityQueries {
     // against the parquet source — long and full-unicode string columns
     // must round-trip the binary encoding exactly.
     "sink_avro_roundtrip" -> q((s, dir) => {
-      val out = s"${sys.props("java.io.tmpdir")}/graft_avro_sink_${Integer.toHexString(dir.hashCode)}"
+      val out = Artifacts.scratch("avro_sink", dir)
       Sources.documents(s, dir)
         .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
         .write.mode("overwrite").format("org.apache.spark.sql.avro.AvroFileFormat").save(out)

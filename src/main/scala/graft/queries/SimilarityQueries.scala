@@ -25,47 +25,44 @@ object SimilarityQueries {
     * non-trivial pair set (59 pairs at sf0.01). */
   val CosineThreshold = 0.4
 
-  /** IVF centroid memo: one trained quantizer per (sf dir, nCells, seed). */
-  private val centroidCache =
-    scala.collection.concurrent.TrieMap[(String, Int, Long), Array[Array[Double]]]()
+  private val Centroids = "centroids"
+  private val PqBooks = "pq_books"
+
+  /** The IVF quantizer (16 cells, seed 42): trained once per sf dir and
+    * shared by every IVF query, stored index and generated oracle. */
+  private def centroids(s: SparkSession, dir: String): Array[Array[Double]] =
+    Artifacts.once(Centroids, dir)(Similarity.trainIvfCentroids(
+      Sources.embeddings(s, dir), "embedding", nCells = 16, seed = 42L))
+
+  /** The PQ codebooks (16 subspaces × 64 codes, seed 42), once per sf dir —
+    * a corpus property like [[centroids]]. */
+  private def pqBooks(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
+    Artifacts.once(PqBooks, dir)(Similarity.trainPqCodebooks(
+      Sources.embeddings(s, dir), "embedding", m = 16, ksub = 64, seed = 42L))
 
   /** Build-once-per-(process, corpus) stored IVF index for the
     * stored-artifact ANN query — the bpeMergesDir/compactionDir convention:
     * the index is a build artifact; every probe run scans it. Reuses the
     * memoized quantizer so the stored index and sim_topk_ivf share one
     * training run (and therefore one oracle). */
-  private val ivfIndexBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private def ivfIndexDir(s: SparkSession, dir: String): String =
-    ivfIndexBuilt.getOrElseUpdate(dir, {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_ivf_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("ivf", dir) { out =>
       val emb = Sources.embeddings(s, dir)
-      val cents = centroidCache.getOrElseUpdate((dir, 16, 42L),
-        Similarity.trainIvfCentroids(emb, "embedding", nCells = 16, seed = 42L))
+      val cents = centroids(s, dir)
       Similarity.writeIvfIndex(emb, "vec_id", "embedding", nCells = 16,
         seed = 42L, outPath = out, centroids = Some(cents))
-      out
-    })
+    }
 
   /** Stored IVF-PQ index (compressed-code serving artifact) — build once
     * per (process, corpus), reusing BOTH memoized trained structures so the
     * indexed probe shares sim_topk_ivfpq's generated oracle. */
-  private val ivfPqIndexBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private def ivfPqIndexDir(s: SparkSession, dir: String): String =
-    ivfPqIndexBuilt.getOrElseUpdate(dir, {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_ivfpq_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("ivfpq", dir) { out =>
       val emb = Sources.embeddings(s, dir)
-      val cents = centroidCache.getOrElseUpdate((dir, 16, 42L),
-        Similarity.trainIvfCentroids(emb, "embedding", nCells = 16, seed = 42L))
+      val cents = centroids(s, dir)
       Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", outPath = out,
         centroids = cents, books = pqBooks(s, dir))
-      out
-    })
+    }
 
   /** Incrementally-maintained IVF index: base index over 90% of the corpus,
     * the remaining 10% appended later with [[Similarity.appendToIvfIndex]]
@@ -73,23 +70,16 @@ object SimilarityQueries {
     * artifact convention; appends never retrain). Probes over base+delta
     * must equal a full rebuild — the registered query shares the direct
     * ivfTopK oracle to pin exactly that. */
-  private val ivfIncrBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private def ivfIncrIndexDir(s: SparkSession, dir: String): String =
-    ivfIncrBuilt.getOrElseUpdate(dir, {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_ivfincr_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("ivfincr", dir) { out =>
       val emb = Sources.embeddings(s, dir)
-      val cents = centroidCache.getOrElseUpdate((dir, 16, 42L),
-        Similarity.trainIvfCentroids(emb, "embedding", nCells = 16, seed = 42L))
+      val cents = centroids(s, dir)
       Similarity.writeIvfIndex(emb.where(col("vec_id") % 10 =!= 0),
         "vec_id", "embedding", nCells = 16, seed = 42L, outPath = out,
         centroids = Some(cents))
       Similarity.appendToIvfIndex(s, out,
         emb.where(col("vec_id") % 10 === 0), "vec_id", "embedding")
-      out
-    })
+    }
 
   /** Tombstone-deleted index: full-corpus IVF index with every 10th vector
     * DELETED via [[Similarity.deleteFromIvfIndex]] — the deletion-vector
@@ -97,79 +87,52 @@ object SimilarityQueries {
     * through the broadcast anti-join, no partition rewrite on the critical
     * path ([[Similarity.vacuumIvfIndex]] is the amortized physical
     * removal, spec-pinned equivalent). */
-  private val ivfDelBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private def ivfDeletedIndexDir(s: SparkSession, dir: String): String =
-    ivfDelBuilt.getOrElseUpdate(dir, {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_ivfdel_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("ivfdel", dir) { out =>
       val emb = Sources.embeddings(s, dir)
-      val cents = centroidCache.getOrElseUpdate((dir, 16, 42L),
-        Similarity.trainIvfCentroids(emb, "embedding", nCells = 16, seed = 42L))
+      val cents = centroids(s, dir)
       Similarity.writeIvfIndex(emb, "vec_id", "embedding", nCells = 16,
         seed = 42L, outPath = out, centroids = Some(cents))
       Similarity.deleteFromIvfIndex(s, out,
         emb.where(col("vec_id") % 10 === 0), "vec_id")
-      out
-    })
+    }
 
   /** Incrementally-maintained COMPRESSED index: base IVF-PQ index over 90%
     * of the corpus, the rest appended with [[Similarity.appendToIvfPqIndex]]
     * — cells from the stored quantizer, codes from the stored codebooks,
     * never a retrain of either. Shares sim_topk_ivfpq's oracle: equality
     * proves compressed append ≡ compressed rebuild. */
-  private val ivfPqIncrBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private def ivfPqIncrIndexDir(s: SparkSession, dir: String): String =
-    ivfPqIncrBuilt.getOrElseUpdate(dir, {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_ivfpqincr_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("ivfpqincr", dir) { out =>
       val emb = Sources.embeddings(s, dir)
-      val cents = centroidCache.getOrElseUpdate((dir, 16, 42L),
-        Similarity.trainIvfCentroids(emb, "embedding", nCells = 16, seed = 42L))
+      val cents = centroids(s, dir)
       Similarity.writeIvfPqIndex(emb.where(col("vec_id") % 10 =!= 0),
         "vec_id", "embedding", outPath = out,
         centroids = cents, books = pqBooks(s, dir))
       Similarity.appendToIvfPqIndex(s, out,
         emb.where(col("vec_id") % 10 === 0), "vec_id", "embedding")
-      out
-    })
+    }
 
-  /** PQ codebook memo: same corpus-property rationale as [[centroidCache]]. */
-  private val pqCache =
-    scala.collection.concurrent.TrieMap[(String, Int, Int, Long), Array[Array[Array[Double]]]]()
-
-  /** Cosine pair-list memo (session-keyed, like DedupQueries.pairsCache):
-    * the exact block-matrix join feeds two registered queries — pin its
-    * (tiny, ~pairs-sized) output once instead of re-running the quadratic
-    * oracle-parity join per consumer. */
-  private val cosinePairsCache =
-    scala.collection.concurrent.TrieMap[(Int, String), org.apache.spark.sql.DataFrame]()
-  private def cosinePairs(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    cosinePairsCache.getOrElseUpdate((System.identityHashCode(s), dir),
+  /** Cosine pair list, pinned once per (session, sf dir) like
+    * DedupQueries.jaccardPairs: the exact block-matrix join feeds two
+    * registered queries — pin its (tiny, ~pairs-sized) output once instead
+    * of re-running the quadratic oracle-parity join per consumer. */
+  private def cosinePairs(s: SparkSession, dir: String): DataFrame =
+    Artifacts.once("cosine_pairs", (s, dir))(
       Similarity.cosineNearDupPairs(
         Sources.embeddings(s, dir), "vec_id", "embedding", CosineThreshold)
         .localCheckpoint())
-  private def pqBooks(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    pqCache.getOrElseUpdate((dir, 16, 64, 42L),
-      Similarity.trainPqCodebooks(Sources.embeddings(s, dir), "embedding",
-        m = 16, ksub = 64, seed = 42L))
 
-  /** Cell-restricted (SemDeDup) pair-list memo — feeds the pairs AND the
-    * survivors query; same session-keyed pinning as [[cosinePairsCache]]. */
-  private val semPairsCache =
-    scala.collection.concurrent.TrieMap[(Int, String), org.apache.spark.sql.DataFrame]()
-  private def semPairs(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    semPairsCache.getOrElseUpdate((System.identityHashCode(s), dir), {
+  /** Cell-restricted (SemDeDup) pair list — feeds the pairs AND the
+    * survivors query; pinned per (session, sf dir) like [[cosinePairs]]. */
+  private def semPairs(s: SparkSession, dir: String): DataFrame =
+    Artifacts.once("sem_pairs", (s, dir)) {
       val emb = Sources.embeddings(s, dir)
-      val cents = centroidCache.getOrElseUpdate((dir, 16, 42L),
-        Similarity.trainIvfCentroids(emb, "embedding", nCells = 16, seed = 42L))
+      val cents = centroids(s, dir)
       Similarity.cellNearDupPairs(emb, "vec_id", "embedding",
         CosineThreshold, nCells = 16, centroids = Some(cents))
         .localCheckpoint()
-    })
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -229,8 +192,7 @@ object SimilarityQueries {
     // query invocation).
     "sim_topk_ivf" -> q((s, dir) => {
       val emb = Sources.embeddings(s, dir)
-      val cents = centroidCache.getOrElseUpdate((dir, 16, 42L),
-        Similarity.trainIvfCentroids(emb, "embedding", nCells = 16, seed = 42L))
+      val cents = centroids(s, dir)
       Similarity.ivfTopK(
         corpus = emb, queries = emb.where(col("vec_id") < 10),
         idCol = "vec_id", vecCol = "embedding", k = 5,
@@ -389,8 +351,7 @@ object SimilarityQueries {
     // pipeline in SQL.
     "sim_topk_ivfpq" -> q((s, dir) => {
       val emb = Sources.embeddings(s, dir)
-      val cents = centroidCache.getOrElseUpdate((dir, 16, 42L),
-        Similarity.trainIvfCentroids(emb, "embedding", nCells = 16, seed = 42L))
+      val cents = centroids(s, dir)
       Similarity.ivfPqTopK(
         corpus = emb, queries = emb.where(col("vec_id") < 10),
         idCol = "vec_id", vecCol = "embedding",
@@ -407,8 +368,7 @@ object SimilarityQueries {
     // then exact cosine over the candidate set).
     "sim_topk_ivfpq_rerank" -> q((s, dir) => {
       val emb = Sources.embeddings(s, dir)
-      val cents = centroidCache.getOrElseUpdate((dir, 16, 42L),
-        Similarity.trainIvfCentroids(emb, "embedding", nCells = 16, seed = 42L))
+      val cents = centroids(s, dir)
       Similarity.ivfPqRerankTopK(
         corpus = emb, queries = emb.where(col("vec_id") < 10),
         idCol = "vec_id", vecCol = "embedding",
@@ -436,8 +396,7 @@ object SimilarityQueries {
     // sim_label_centroids convention).
     "sim_kmeans_refine" -> q((s, dir) => {
       val emb = Sources.embeddings(s, dir)
-      val cents = centroidCache.getOrElseUpdate((dir, 16, 42L),
-        Similarity.trainIvfCentroids(emb, "embedding", nCells = 16, seed = 42L))
+      val cents = centroids(s, dir)
       Similarity.kmeansRefine(emb, "vec_id", "embedding", cents)
         .select(col("cell"), col("pos"), col("n_vecs"),
           floor(col("mean") * 10000 + 0.5).cast("bigint").as("mean_bp"))
@@ -451,8 +410,7 @@ object SimilarityQueries {
     // the oracle embeds the identical literals.
     "sim_knn_graph" -> q((s, dir) => {
       val emb = Sources.embeddings(s, dir)
-      val cents = centroidCache.getOrElseUpdate((dir, 16, 42L),
-        Similarity.trainIvfCentroids(emb, "embedding", nCells = 16, seed = 42L))
+      val cents = centroids(s, dir)
       Similarity.cellKnnGraph(emb, "vec_id", "embedding", k = 3,
         nCells = 16, centroids = Some(cents))
         .orderBy(col("src_id"), col("rank"))
@@ -533,8 +491,7 @@ object SimilarityQueries {
     // the generated oracle embeds identical centroid literals.
     "sim_hard_negatives" -> q((s, dir) => {
       val emb = Sources.embeddings(s, dir)
-      val cents = centroidCache.getOrElseUpdate((dir, 16, 42L),
-        Similarity.trainIvfCentroids(emb, "embedding", nCells = 16, seed = 42L))
+      val cents = centroids(s, dir)
       Similarity.hardNegatives(emb, "vec_id", "embedding", "label",
         nCells = 16, centroids = Some(cents))
         .orderBy(col("src_id"))
@@ -549,8 +506,7 @@ object SimilarityQueries {
     // pipelines (embedded centroids) and the same overlap count.
     "sim_ann_recall" -> q((s, dir) => {
       val emb = Sources.embeddings(s, dir)
-      val cents = centroidCache.getOrElseUpdate((dir, 16, 42L),
-        Similarity.trainIvfCentroids(emb, "embedding", nCells = 16, seed = 42L))
+      val cents = centroids(s, dir)
       val qs = emb.where(col("vec_id") < 10)
       val truth = Similarity.bruteForceTopK(emb, qs, "vec_id", "embedding",
           k = 5)
@@ -573,8 +529,7 @@ object SimilarityQueries {
     // generated oracle over the same embedded centroids/planes.
     "sim_rrf_fusion" -> q((s, dir) => {
       val emb = Sources.embeddings(s, dir)
-      val cents = centroidCache.getOrElseUpdate((dir, 16, 42L),
-        Similarity.trainIvfCentroids(emb, "embedding", nCells = 16, seed = 42L))
+      val cents = centroids(s, dir)
       val qs = emb.where(col("vec_id") < 10)
       val iv = Similarity.ivfTopK(emb, qs, "vec_id", "embedding", k = 5,
           nCells = 16, nProbe = 4, centroids = Some(cents))
@@ -595,8 +550,7 @@ object SimilarityQueries {
     // triple join over identical centroid literals.
     "sim_knn_triangles" -> q((s, dir) => {
       val emb = Sources.embeddings(s, dir)
-      val cents = centroidCache.getOrElseUpdate((dir, 16, 42L),
-        Similarity.trainIvfCentroids(emb, "embedding", nCells = 16, seed = 42L))
+      val cents = centroids(s, dir)
       val edges = Similarity.cellKnnGraph(emb, "vec_id", "embedding", k = 3,
           nCells = 16, centroids = Some(cents))
         .select(col("src_id"), col("nbr_id"))
@@ -662,7 +616,7 @@ object SimilarityQueries {
   /** IVF oracle, generated AFTER the query has run: Verify executes every
     * registered query (training + memoizing the IVF centroids for its sf
     * dir) before dumping `oracleSql`, so by dump time the quantizer for
-    * exactly one dir sits in [[centroidCache]] and its centroid matrix can
+    * exactly one dir sits in [[centroids]] and its centroid matrix can
     * be embedded as SQL literals. The SQL then reproduces the full IVF
     * pipeline: per-vector distances to all 16 centroids (‖v‖² − 2·v·c +
     * ‖c‖², monotonic ≡ the Spark side's d² sort), argmin cell for the
@@ -685,7 +639,7 @@ object SimilarityQueries {
     * [[cosExpr]]. */
   private def screenIndexedOracle(
       arrivalWhere: String = "vec_id % 5 = 4"): Option[String] = {
-    val cached = centroidCache.readOnlySnapshot().toSeq
+    val cached = Artifacts.built[Array[Array[Double]]](Centroids)
     if (cached.size != 1) None else Some {
       val distList = centDistList(cached.head._2)
       s"""WITH vecs AS (
@@ -712,7 +666,7 @@ object SimilarityQueries {
     * passes the tombstone complement so equality proves tombstone
     * visibility ≡ physical absence. */
   private def ivfOracle(corpusWhere: String = "TRUE"): Option[String] = {
-    val cached = centroidCache.readOnlySnapshot().toSeq
+    val cached = Artifacts.built[Array[Array[Double]]](Centroids)
     if (cached.size != 1) None else Some {
       val distList = centDistList(cached.head._2)
       s"""WITH vecs AS (
@@ -743,7 +697,7 @@ object SimilarityQueries {
     * brute-force ground truth and the embedded-centroid IVF path — then the
     * same per-query overlap count and integer recall. */
   private def annRecallOracle: Option[String] = {
-    val cached = centroidCache.readOnlySnapshot().toSeq
+    val cached = Artifacts.built[Array[Array[Double]]](Centroids)
     if (cached.size != 1) None else Some {
       val distList = centDistList(cached.head._2)
       s"""WITH vecs AS (
@@ -788,7 +742,7 @@ object SimilarityQueries {
   /** RRF oracle: BOTH input pipelines (embedded-centroid IVF, embedded-
     * plane LSH) and the integer fusion replayed end to end. */
   private def rrfOracle: Option[String] = {
-    val cached = centroidCache.readOnlySnapshot().toSeq
+    val cached = Artifacts.built[Array[Array[Double]]](Centroids)
     if (cached.size != 1) None else Some {
       val distList = centDistList(cached.head._2)
       s"""WITH vecs AS (
@@ -845,7 +799,7 @@ object SimilarityQueries {
     * restriction, and (for survivors) the recursive component closure — the
     * whole approximate pipeline, not its output shape. */
   private def semDedupOracles: Map[String, String] = {
-    val cached = centroidCache.readOnlySnapshot().toSeq
+    val cached = Artifacts.built[Array[Array[Double]]](Centroids)
     if (cached.size != 1) Map.empty
     else {
       val distList = centDistList(cached.head._2)
@@ -945,7 +899,7 @@ object SimilarityQueries {
   }
 
   /** PQ oracles, generated AFTER the queries have run (the codebooks for
-    * exactly one sf dir then sit in [[pqCache]] — same contract as
+    * exactly one sf dir then sit in [[pqBooks]] — same contract as
     * [[ivfOracle]]). The SQL reproduces encode (per-subspace argmin over
     * embedded centroid literals, struct-sort tie-break on code), the
     * reconstruction error (Σ min subspace d²), and the full ADC ranking
@@ -988,7 +942,7 @@ object SimilarityQueries {
   }
 
   private def pqOracles: Map[String, String] = {
-    val cached = pqCache.readOnlySnapshot().toSeq
+    val cached = Artifacts.built[Array[Array[Array[Double]]]](PqBooks)
     if (cached.size != 1) Map.empty
     else {
       val PqSqlFragments(codesList, err2, luts, adcSum) = pqFragments(cached.head._2)
@@ -1024,8 +978,8 @@ object SimilarityQueries {
     * the embedded centroid matrix, candidate scoring from the embedded
     * codebooks — the full composed pipeline reproduced in SQL. */
   private def ivfPqOracle: Option[String] = {
-    val cents = centroidCache.readOnlySnapshot().toSeq
-    val books = pqCache.readOnlySnapshot().toSeq
+    val cents = Artifacts.built[Array[Array[Double]]](Centroids)
+    val books = Artifacts.built[Array[Array[Array[Double]]]](PqBooks)
     if (cents.size != 1 || books.size != 1) None
     else {
       val distList = centDistList(cents.head._2)
@@ -1058,8 +1012,8 @@ object SimilarityQueries {
     * candidates, stage 2 re-scores exactly with list_cosine_similarity over
     * the candidates' true vectors — the full two-stage replay. */
   private def ivfPqRerankOracle: Option[String] = {
-    val cents = centroidCache.readOnlySnapshot().toSeq
-    val books = pqCache.readOnlySnapshot().toSeq
+    val cents = Artifacts.built[Array[Array[Double]]](Centroids)
+    val books = Artifacts.built[Array[Array[Array[Double]]]](PqBooks)
     if (cents.size != 1 || books.size != 1) None
     else {
       val distList = centDistList(cents.head._2)

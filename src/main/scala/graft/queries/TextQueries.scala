@@ -396,49 +396,31 @@ object TextQueries {
     * slice (the trusted-reference stand-in for CCNet's Wikipedia LM),
     * persisted once per (process, corpus); every scoring rep reads the
     * stored artifact — the bpeMergesDir train-once convention. */
-  private val refLmBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private def refLmDir(s: SparkSession, dir: String): String =
-    refLmBuilt.getOrElseUpdate(dir, {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_reflm_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("reflm", dir) { out =>
       TextOps.writeUnigramLm(
         Sources.documents(s, dir).where(col("lang") === "en"), "text", out)
-      out
-    })
+    }
 
   /** Build-once-per-(process, corpus) persisted BPE merge table for the
     * stored-artifact encode query — the zorderDir/compactionDir
     * convention: the tokenizer trains once and every later encode scans
     * the stored parquet. */
-  private val bpeMergesBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private def bpeMergesDir(s: SparkSession, dir: String): String =
-    bpeMergesBuilt.getOrElseUpdate(dir, {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_bpe_merges_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("bpe_merges", dir) { out =>
       TextOps.writeBpeMerges(Sources.documents(s, dir), "doc_id", "text",
         nMerges = 6, outPath = out)
-      out
-    })
+    }
 
   /** The vocabulary half of the shipped tokenizer artifact pair — built
     * once per (process, corpus) from the stored merge table (so the two
     * artifacts are guaranteed consistent) and persisted for the decode
     * query. */
-  private val bpeVocabBuilt =
-    scala.collection.concurrent.TrieMap[String, String]()
   private def bpeVocabDir(s: SparkSession, dir: String): String =
-    bpeVocabBuilt.getOrElseUpdate(dir, {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_bpe_vocab_${ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath
+    Artifacts.dir("bpe_vocab", dir) { out =>
       TextOps.writeBpeVocab(Sources.documents(s, dir), "doc_id", "text",
         s.read.parquet(bpeMergesDir(s, dir)), outPath = out)
-      out
-    })
+    }
 
   // DuckDB twins. `len()` is BIGINT in DuckDB vs Spark size() INT → ::int.
   /** Empty/whitespace-only docs must tokenize to ZERO tokens like the

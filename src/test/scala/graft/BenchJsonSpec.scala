@@ -171,17 +171,21 @@ class BenchJsonSpec extends AnyFunSuite {
 
   test("regression gate: readPrevQueries keys on matching sf and degrades to empty") {
     val dir = java.nio.file.Files.createTempDirectory("benchprev")
-    val f = dir.resolve("prev.json").toFile
-    val w = new java.io.PrintWriter(f)
-    w.write("""{"queries":{"a":1.5,"b":-1},"sf":"/data/sf0.1"}"""); w.close()
-    assert(Bench.readPrevQueries(f.getPath, "/data/sf0.1") === Map("a" -> 1.5))
-    // mismatched sf (subset/alternate-scale file) must never gate
-    assert(Bench.readPrevQueries(f.getPath, "/data/sf1") === Map.empty)
-    // missing/corrupt file degrades to no evidence, not an exception
-    assert(Bench.readPrevQueries(dir.resolve("nope.json").toString, "/data/sf0.1") === Map.empty)
-    val g = dir.resolve("bad.json").toFile
-    val w2 = new java.io.PrintWriter(g); w2.write("{not json"); w2.close()
-    assert(Bench.readPrevQueries(g.getPath, "/data/sf0.1") === Map.empty)
+    try {
+      val f = dir.resolve("prev.json").toFile
+      val w = new java.io.PrintWriter(f)
+      w.write("""{"queries":{"a":1.5,"b":-1},"sf":"/data/sf0.1"}"""); w.close()
+      assert(Bench.readPrevQueries(f.getPath, "/data/sf0.1") === Map("a" -> 1.5))
+      // mismatched sf (subset/alternate-scale file) must never gate
+      assert(Bench.readPrevQueries(f.getPath, "/data/sf1") === Map.empty)
+      // missing/corrupt file degrades to no evidence, not an exception
+      assert(Bench.readPrevQueries(dir.resolve("nope.json").toString, "/data/sf0.1") === Map.empty)
+      val g = dir.resolve("bad.json").toFile
+      val w2 = new java.io.PrintWriter(g); w2.write("{not json"); w2.close()
+      assert(Bench.readPrevQueries(g.getPath, "/data/sf0.1") === Map.empty)
+    } finally {
+      new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
+    }
   }
 
   test("headline carries n_regressions only when nonzero") {

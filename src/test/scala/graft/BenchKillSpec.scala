@@ -73,22 +73,28 @@ class BenchKillSpec extends AnyFunSuite {
         .get("wall").asDouble() === 7.5)
     } finally {
       p.destroyForcibly()
+      p.waitFor()
+      new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
     }
   }
 
   test("abort hook never clobbers a committed detail file with an empty run") {
     val dir = java.nio.file.Files.createTempDirectory("benchkill2")
-    val f = dir.resolve("BENCH_SELF.json")
-    java.nio.file.Files.write(f, "{\"queries\":{\"a\":1.0}}".getBytes("UTF-8"))
-    val state = new Bench.RunState(reps = 3, sfDir = "x", parityOnly = Set.empty,
-      skipParity = false, hostAvailable = false, budgetS = 600.0)
-    val hook = Bench.installAbortHook(state, f.toString)
-    Runtime.getRuntime.removeShutdownHook(hook)
-    hook.run() // simulate the JVM firing it with zero queries completed
-    assert(state.headlinePrinted)
-    // committed evidence untouched — an empty shell must not replace it
-    assert(new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      .contains("\"a\":1.0"))
+    try {
+      val f = dir.resolve("BENCH_SELF.json")
+      java.nio.file.Files.write(f, "{\"queries\":{\"a\":1.0}}".getBytes("UTF-8"))
+      val state = new Bench.RunState(reps = 3, sfDir = "x", parityOnly = Set.empty,
+        skipParity = false, hostAvailable = false, budgetS = 600.0)
+      val hook = Bench.installAbortHook(state, f.toString)
+      Runtime.getRuntime.removeShutdownHook(hook)
+      hook.run() // simulate the JVM firing it with zero queries completed
+      assert(state.headlinePrinted)
+      // committed evidence untouched — an empty shell must not replace it
+      assert(new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        .contains("\"a\":1.0"))
+    } finally {
+      new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
+    }
   }
 
   test("printHeadlineOnce is exactly-once across the hook/normal-path race") {

@@ -301,15 +301,19 @@ class DedupSpec extends AnyFunSuite {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (10L, 12L), (20L, 21L))
       .toDF("id_a", "id_b")
     val ckptDir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
-    val reliable = Dedup.connectedComponents(pairs, "id_a", "id_b",
-      checkpointDir = Some(ckptDir))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(reliable == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
-    // reliable path actually wrote checkpoint data to the durable dir
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckptDir))
-      .filter(p => java.nio.file.Files.isRegularFile(p)).count()
-    assert(wrote > 0, "reliable checkpoint must materialize to the checkpoint dir")
+    try {
+      val reliable = Dedup.connectedComponents(pairs, "id_a", "id_b",
+        checkpointDir = Some(ckptDir))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert(reliable == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+        10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
+      // reliable path actually wrote checkpoint data to the durable dir
+      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckptDir))
+        .filter(p => java.nio.file.Files.isRegularFile(p)).count()
+      assert(wrote > 0, "reliable checkpoint must materialize to the checkpoint dir")
+    } finally {
+      new scala.reflect.io.Directory(new java.io.File(ckptDir)).deleteRecursively()
+    }
   }
 
   test("nearDedupSurvivors: drops non-min members of each component only") {

@@ -200,38 +200,42 @@ class LayoutSpec extends AnyFunSuite {
         pmod(col("event_id"), lit(16L)).as("b"))
       .withColumn("z", Layout.zValue2(col("a"), col("b"), 4))
     val total = e.count()
-    val zPath = s"$base/z"; val bPath = s"$base/b"
-    Layout.zOrderBy(e, col("z"), numFiles = 64)
-      .write.mode("overwrite").parquet(zPath)
-    // 1-D control layout: clustered on b alone — perfect stats for b,
-    // USELESS for a (every file spans the full a range).
-    e.repartitionByRange(64, col("b")).sortWithinPartitions(col("b"))
-      .write.mode("overwrite").parquet(bPath)
-    // sf0.001 only has user_id ∈ [0, 14], so the selective 1-D predicate
-    // here is a < 4 (the registered query at larger sf uses a < 32 over
-    // the full 0–255 range — same geometry).
-    def scannedRows(path: String): Long = {
-      val agg = spark.read.parquet(path).where(col("a") < 4)
-        .agg(count(lit(1)))
-      agg.collect()
-      def rows(p: SparkPlan): Long = p match {
-        case ad: AdaptiveSparkPlanExec => rows(ad.executedPlan)
-        case qs: QueryStageExec => rows(qs.plan) // stages hide their subtree
-        case s: FileSourceScanExec => s.metrics("numOutputRows").value
-        case other => other.children.map(rows).sum
+    try {
+      val zPath = s"$base/z"; val bPath = s"$base/b"
+      Layout.zOrderBy(e, col("z"), numFiles = 64)
+        .write.mode("overwrite").parquet(zPath)
+      // 1-D control layout: clustered on b alone — perfect stats for b,
+      // USELESS for a (every file spans the full a range).
+      e.repartitionByRange(64, col("b")).sortWithinPartitions(col("b"))
+        .write.mode("overwrite").parquet(bPath)
+      // sf0.001 only has user_id ∈ [0, 14], so the selective 1-D predicate
+      // here is a < 4 (the registered query at larger sf uses a < 32 over
+      // the full 0–255 range — same geometry).
+      def scannedRows(path: String): Long = {
+        val agg = spark.read.parquet(path).where(col("a") < 4)
+          .agg(count(lit(1)))
+        agg.collect()
+        def rows(p: SparkPlan): Long = p match {
+          case ad: AdaptiveSparkPlanExec => rows(ad.executedPlan)
+          case qs: QueryStageExec => rows(qs.plan) // stages hide their subtree
+          case s: FileSourceScanExec => s.metrics("numOutputRows").value
+          case other => other.children.map(rows).sum
+        }
+        rows(agg.queryExecution.executedPlan)
       }
-      rows(agg.queryExecution.executedPlan)
+      val zRead = scannedRows(zPath)
+      val bRead = scannedRows(bPath)
+      // min/max row-group stats on `a` are tight per z-run → the pushed
+      // a < 32 predicate skips most row groups; the b-sorted layout has no
+      // usable a-stats and reads the whole table.
+      assert(bRead == total,
+        s"control layout must read everything: $bRead of $total")
+      assert(zRead < total / 2,
+        s"z layout must skip most row groups: read $zRead of $total")
+      assert(zRead < bRead, s"z layout ($zRead) must beat 1-D layout ($bRead)")
+    } finally {
+      new scala.reflect.io.Directory(base).deleteRecursively()
     }
-    val zRead = scannedRows(zPath)
-    val bRead = scannedRows(bPath)
-    // min/max row-group stats on `a` are tight per z-run → the pushed
-    // a < 32 predicate skips most row groups; the b-sorted layout has no
-    // usable a-stats and reads the whole table.
-    assert(bRead == total,
-      s"control layout must read everything: $bRead of $total")
-    assert(zRead < total / 2,
-      s"z layout must skip most row groups: read $zRead of $total")
-    assert(zRead < bRead, s"z layout ($zRead) must beat 1-D layout ($bRead)")
   }
 
   test("compactionPlan: bins bounded by target + one row, contiguous ids, ≡ single-window reference") {

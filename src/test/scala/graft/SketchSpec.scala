@@ -59,26 +59,30 @@ class SketchSpec extends AnyFunSuite {
     // forced multi-batch slicing
     import org.apache.spark.sql.types._
     val dir = java.nio.file.Files.createTempDirectory("cms_stream").toFile.getAbsolutePath
-    val t = toks.localCheckpoint()
-    t.where(crc32(col("token")) % 3 === 0).coalesce(1).write.mode("append").parquet(dir)
-    t.where(crc32(col("token")) % 3 === 1).coalesce(1).write.mode("append").parquet(dir)
-    t.where(crc32(col("token")) % 3 === 2).coalesce(1).write.mode("append").parquet(dir)
-    val schema = StructType(Seq(StructField("token", StringType)))
-    var parts = Vector.empty[org.apache.spark.sql.DataFrame]
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        parts = parts :+ Sketch.cmsBuild(df, "token", 4, 64).localCheckpoint()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-    assert(parts.size >= 2, s"need multiple micro-batches, got ${parts.size}")
-    val merged = Sketch.cmsMerge(parts)
-    val direct = Sketch.cmsBuild(spark.read.parquet(dir), "token", 4, 64)
-    assert(merged.exceptAll(direct).count() == 0 &&
-      direct.exceptAll(merged).count() == 0,
-      "streamed partial sketches must merge to the one-pass corpus sketch exactly")
+    try {
+      val t = toks.localCheckpoint()
+      t.where(crc32(col("token")) % 3 === 0).coalesce(1).write.mode("append").parquet(dir)
+      t.where(crc32(col("token")) % 3 === 1).coalesce(1).write.mode("append").parquet(dir)
+      t.where(crc32(col("token")) % 3 === 2).coalesce(1).write.mode("append").parquet(dir)
+      val schema = StructType(Seq(StructField("token", StringType)))
+      var parts = Vector.empty[org.apache.spark.sql.DataFrame]
+      val q = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(dir)
+        .writeStream
+        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          parts = parts :+ Sketch.cmsBuild(df, "token", 4, 64).localCheckpoint()
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination(120000)
+      assert(parts.size >= 2, s"need multiple micro-batches, got ${parts.size}")
+      val merged = Sketch.cmsMerge(parts)
+      val direct = Sketch.cmsBuild(spark.read.parquet(dir), "token", 4, 64)
+      assert(merged.exceptAll(direct).count() == 0 &&
+        direct.exceptAll(merged).count() == 0,
+        "streamed partial sketches must merge to the one-pass corpus sketch exactly")
+    } finally {
+      new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
+    }
   }
 
   test("absent key with empty cells estimates 0; estimate preserves probe columns") {

@@ -14,15 +14,19 @@ class StorageSpec extends AnyFunSuite {
 
   test("partitioned parquet write → partition-pruned read") {
     val out = Files.createTempDirectory("graft_part").toString
-    val events = graft.engine.Sources.events(spark, dir)
-    events.write.mode("overwrite").partitionBy("event_type").parquet(out)
+    try {
+      val events = graft.engine.Sources.events(spark, dir)
+      events.write.mode("overwrite").partitionBy("event_type").parquet(out)
 
-    val one = spark.read.parquet(out).where(col("event_type") === "click")
-    val plan = one.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(event_type"),
-      s"expected partition pruning in:\n$plan")
-    val expected = events.where(col("event_type") === "click").count()
-    assert(one.count() == expected && expected > 0)
+      val one = spark.read.parquet(out).where(col("event_type") === "click")
+      val plan = one.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters: [isnotnull(event_type"),
+        s"expected partition pruning in:\n$plan")
+      val expected = events.where(col("event_type") === "click").count()
+      assert(one.count() == expected && expected > 0)
+    } finally {
+      new scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
+    }
   }
 
   test("bucketed tables: co-bucketed join plans without a shuffle exchange") {
@@ -58,12 +62,16 @@ class StorageSpec extends AnyFunSuite {
     val expected = base.orderBy("p_partkey").collect().toSeq
     for (fmt <- Seq("orc", "json", "csv")) {
       val out = Files.createTempDirectory(s"graft_$fmt").toString
-      base.write.mode("overwrite").format(fmt)
-        .option("header", "true").save(out)
-      val back = spark.read.format(fmt)
-        .option("header", "true").schema(base.schema).load(out)
-      assert(back.orderBy("p_partkey").collect().toSeq == expected,
-        s"$fmt round-trip diverged")
+      try {
+        base.write.mode("overwrite").format(fmt)
+          .option("header", "true").save(out)
+        val back = spark.read.format(fmt)
+          .option("header", "true").schema(base.schema).load(out)
+        assert(back.orderBy("p_partkey").collect().toSeq == expected,
+          s"$fmt round-trip diverged")
+      } finally {
+        new scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
+      }
     }
   }
 
@@ -72,21 +80,25 @@ class StorageSpec extends AnyFunSuite {
     // generation 1 writes (id, a); generation 2 adds column b — the
     // corpus-rebuild reality at 100 TB: old shards never get rewritten
     val out = java.nio.file.Files.createTempDirectory("schema_evo").toFile.getAbsolutePath
-    Seq((1L, "x")).toDF("id", "a").write.mode("append").parquet(out)
-    Seq((2L, "y", 7.5)).toDF("id", "a", "b").write.mode("append").parquet(out)
-    val merged = spark.read.option("mergeSchema", "true").parquet(out)
-    assert(merged.columns.sorted.toSeq == Seq("a", "b", "id"),
-      s"merged schema: ${merged.columns.toSeq}")
-    val rows = merged.orderBy("id").collect()
-      .map(r => (r.getLong(r.fieldIndex("id")),
-        r.getString(r.fieldIndex("a")),
-        if (r.isNullAt(r.fieldIndex("b"))) None else Some(r.getDouble(r.fieldIndex("b")))))
-    assert(rows.toSeq == Seq((1L, "x", None), (2L, "y", Some(7.5))),
-      s"old-generation rows read the new column as null: ${rows.toSeq}")
-    // column pruning still reaches the scan on the merged view
-    val pruned = merged.select("id").queryExecution.executedPlan.toString
-    assert(pruned.contains("ReadSchema: struct<id:bigint>"),
-      s"projection must prune to id alone:\n$pruned")
+    try {
+      Seq((1L, "x")).toDF("id", "a").write.mode("append").parquet(out)
+      Seq((2L, "y", 7.5)).toDF("id", "a", "b").write.mode("append").parquet(out)
+      val merged = spark.read.option("mergeSchema", "true").parquet(out)
+      assert(merged.columns.sorted.toSeq == Seq("a", "b", "id"),
+        s"merged schema: ${merged.columns.toSeq}")
+      val rows = merged.orderBy("id").collect()
+        .map(r => (r.getLong(r.fieldIndex("id")),
+          r.getString(r.fieldIndex("a")),
+          if (r.isNullAt(r.fieldIndex("b"))) None else Some(r.getDouble(r.fieldIndex("b")))))
+      assert(rows.toSeq == Seq((1L, "x", None), (2L, "y", Some(7.5))),
+        s"old-generation rows read the new column as null: ${rows.toSeq}")
+      // column pruning still reaches the scan on the merged view
+      val pruned = merged.select("id").queryExecution.executedPlan.toString
+      assert(pruned.contains("ReadSchema: struct<id:bigint>"),
+        s"projection must prune to id alone:\n$pruned")
+    } finally {
+      new scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
+    }
   }
 
   test("saltedJoin ≡ plain join row-for-row") {
