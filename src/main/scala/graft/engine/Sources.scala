@@ -2,7 +2,6 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
-import graft.functions.{CsvDataLine, StrictCsvLine}
 
 /** Schema-declared table readers.
   *
@@ -15,8 +14,9 @@ import graft.functions.{CsvDataLine, StrictCsvLine}
   *     (reference: MovieRank.java:58, MovieRating.java:59) and its hand-rolled
   *     header skip (MovieRank.java:40-41,61-63 → `option("header", true)`)
   *     and quoted-title reassembly (MovieRank.java:44-47 → RFC-4180 `quote`).
-  *     ratings.csv keeps the CSV reader's results but parses plain lines in
-  *     one pass of its own (see [[ratingsCsv]]).
+  *     ratings.csv keeps the CSV reader's results but is read by a file
+  *     source of its own, [[RatingsCsvFormat]], which parses each line once
+  *     and only into the columns a query reads (see [[ratingsCsv]]).
   *
   * At 100 TB the fact tables arrive as Parquet; keeping readers schema-declared
   * (never `inferSchema`) means one footer read, stable types for the oracle,
@@ -91,12 +91,12 @@ object Sources {
     StructField("rating", DoubleType, nullable = false),
     StructField("timestamp", LongType, nullable = true)))
 
-  /** Reader options shared by `movies.csv` and the per-line `ratings.csv`
-    * fallback: RFC-4180 escaping means a quote inside a quoted field is
-    * DOUBLED — Spark's default escape is backslash, so `escape` must be
-    * pinned to the quote char or `"Movie ""5"""` comes back with its raw
+  /** Reader options shared by `movies.csv` and the per-line fallback parser
+    * of [[RatingsCsvFormat]]: RFC-4180 escaping means a quote inside a quoted
+    * field is DOUBLED — Spark's default escape is backslash, so `escape` must
+    * be pinned to the quote char or `"Movie ""5"""` comes back with its raw
     * doubled quotes (DuckDB's read_csv is RFC-4180 natively). */
-  private val csvOptions = Map("escape" -> "\"")
+  private[engine] val csvOptions = Map("escape" -> "\"")
 
   /** MovieLens movies dimension. RFC-4180 quoting handles comma-in-title rows
     * that the reference re-joins by hand (MovieRank.java:44-47); unlike the
@@ -109,30 +109,16 @@ object Sources {
   /** MovieLens ratings fact table, row for row and type for type what
     * `spark.read.option("header", "true").option("escape", "\"")
     * .schema(ratingsSchema).csv(path)` returns, at a fraction of its parse
-    * cost. The reference splits each line once by position
-    * (`line.split(",")`, MovieRank.java:58, MovieRating.java:59); this does
-    * the same in three steps over Spark's `text` source:
-    *   1. [[CsvDataLine]] drops the lines the CSV reader skips: blank lines
-    *      and each file's header (the first non-blank line of the block that
-    *      starts at byte 0; header skip ≙ MovieRank.java:61-63);
-    *   2. [[StrictCsvLine]] parses a line of plain digit fields
-    *      (`int,int,digits[.digits],long`: ints of 1–9 digits, longs of
-    *      1–18, doubles of at most 15 digits, so no value overflows or
-    *      rounds apart from `String.toDouble`) in one pass over its bytes;
-    *   3. any other line (quotes, signs, spaces, `NaN`/`Inf`, overflow, empty
-    *      fields, too few or too many fields) goes to Spark's own parser,
-    *      `from_csv` with the reader's options, which keeps its PERMISSIVE
-    *      partial rows.
-    * The text scan counts the header line as an input record, which the CSV
-    * scan does not. */
-  def ratingsCsv(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, from_csv}
-    val line = col("value")
-    spark.read.text(path)
-      .where(CsvDataLine.csvDataLine(line))
-      .select(coalesce(
-        StrictCsvLine.strictCsvLine(line, ratingsSchema),
-        from_csv(line, ratingsSchema, csvOptions)).as("fields"))
-      .select("fields.*")
-  }
+    * cost. The reference splits each line once by position and reads only
+    * the fields it uses (`line.split(",")`, MovieRank.java:58,65,
+    * MovieRating.java:59,68); [[RatingsCsvFormat]] does the same as a file
+    * source: each line is parsed once, a plain digit line straight from its
+    * bytes, any other line by Spark's own CSV parser, and only into the
+    * columns the query reads, so the scan's `ReadSchema` is the query's
+    * columns and the join's `isnotnull(movieId)` tests an already-parsed
+    * value. Blank lines and each file's header (header skip ≙
+    * MovieRank.java:61-63) are dropped inside the scan, as the CSV reader
+    * drops them, so neither counts as an input record. */
+  def ratingsCsv(spark: SparkSession, path: String): DataFrame =
+    spark.read.format(classOf[RatingsCsvFormat].getName).schema(ratingsSchema).load(path)
 }

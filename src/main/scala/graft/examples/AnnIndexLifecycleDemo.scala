@@ -2,6 +2,7 @@ package graft.examples
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.Similarity
+import graft.queries.Artifacts
 
 /** End-to-end STORED ANN index lifecycle: the library's vector-store
   * operators composed in the order a production embedding service runs —
@@ -22,6 +23,7 @@ import graft.operators.Similarity
   * with the same day-0 quantizer: maintenance is invisible to serving.
   *
   * Usage: runMain graft.examples.AnnIndexLifecycleDemo [sfDir] [indexDir]
+  * (a given indexDir is kept; the default temp dir is deleted at JVM exit)
   */
 object AnnIndexLifecycleDemo {
 
@@ -53,8 +55,7 @@ object AnnIndexLifecycleDemo {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val indexDir = args.lift(1).getOrElse(
-      java.nio.file.Files.createTempDirectory("graft_ann_demo").toString)
+    val indexDir = args.lift(1).getOrElse(Artifacts.scratch("ann_demo", sfDir))
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", 4)
       .appName("ann-index-lifecycle-demo").getOrCreate()

@@ -2,19 +2,24 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
+import java.util.zip.GZIPOutputStream
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.functions.{col, from_csv}
-import graft.engine.Sources
-import graft.functions.{CsvDataLine, StrictCsvLine}
+import graft.engine.{MovieAnalysis, RatingsCsvFormat, Sources}
 import graft.queries.RefParityQueries
 
-/** `Sources.ratingsCsv` (text scan + header/blank filter + one-pass strict
-  * parse + `from_csv` fallback) ≡ Spark's CSV reader with the options it
-  * replaces, on seeded files built to hit every line the strict grammar
-  * refuses, at the default split size and with 64 KB splits; plus the guard
-  * that the fast path fires on plain MovieLens lines. */
+/** `Sources.ratingsCsv` (the `RatingsCsvFormat` file source: header/blank
+  * skip, one-pass strict parse of plain lines, Spark's own parser for the
+  * rest) ≡ Spark's CSV reader with the options it replaces, on seeded files
+  * built to hit every line the strict grammar refuses, at the default split
+  * size and with 64 KB splits, gzipped too, and for any set of selected
+  * columns; plus the guards that the strict grammar takes every plain
+  * MovieLens line and that the pipelines' ratings scans read only the
+  * columns they use. */
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -105,9 +110,10 @@ class SourcesSpec extends AnyFunSuite {
     got.count()
   }
 
-  test("ratingsCsv ≡ the CSV reader on seeded odd files, default and 64 KB splits") {
+  /** The seeded odd files, each edge case of line endings and file shape. */
+  private def oddFiles(): Seq[(String, String)] = {
     val rnd = new Random(20261017L)
-    val files = Seq(
+    Seq(
       "lf.csv" -> ratingsFile(rnd, 6000, "\n", trailingEol = true, leadingBlanks = 0),
       "crlf.csv" -> ratingsFile(rnd, 6000, "\r\n", trailingEol = true, leadingBlanks = 3),
       "cr.csv" -> ratingsFile(rnd, 6000, "\r", trailingEol = false, leadingBlanks = 1),
@@ -115,6 +121,10 @@ class SourcesSpec extends AnyFunSuite {
       "header_only.csv" -> header,
       "blank_only.csv" -> "\n  \n\t\n",
       "empty.csv" -> "")
+  }
+
+  test("ratingsCsv ≡ the CSV reader on seeded odd files, default and 64 KB splits") {
+    val files = oddFiles()
     val dir = writeDir(files)
     try {
       val rows = assertSameAsCsvReader(dir.toString)
@@ -138,24 +148,34 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
-  test("fast path: StrictCsvLine parses every plain MovieLens data line") {
+  test("fast path: strictLine parses every plain MovieLens data line") {
     Seq(s"${RefParityQueries.FixtureDir}/ratings.csv",
         SparkTestSession.resource("/movielens/ratings.csv")).foreach { p =>
-      val line = col("value")
-      val lines = spark.read.text(p).where(CsvDataLine.csvDataLine(line))
-      val parsed = lines.select(StrictCsvLine.strictCsvLine(line, Sources.ratingsSchema).as("s"))
-      assert(lines.count() > 0)
-      assert(parsed.where(col("s").isNull).count() == 0,
-        s"every data line of $p must take the one-pass path")
+      // the lines the CSV reader parses: non-blank, minus the header
+      val lines = Files.readAllLines(java.nio.file.Paths.get(p), UTF_8).asScala.toSeq
+        .filter(_.trim.nonEmpty).drop(1)
+      assert(lines.nonEmpty)
+      val refused = lines.zip(strict(lines)).collect { case (line, null) => line }
+      assert(refused.isEmpty, s"every data line of $p must take the one-pass path: $refused")
     }
   }
 
-  test("fast path: StrictCsvLine refuses each out-of-grammar case, accepts its edges") {
+  /** Each line through `RatingsCsvFormat.strictLine` over all four columns:
+    * its row, or null where the grammar refuses the line. */
+  private def strict(lines: Seq[String]): Seq[Row] = {
+    val schema = Sources.ratingsSchema
+    val kinds = RatingsCsvFormat.kinds(schema)
+    lines.map { line =>
+      val bytes = line.getBytes(UTF_8)
+      val out = new SpecificInternalRow(schema.map(_.dataType))
+      if (!RatingsCsvFormat.strictLine(bytes, bytes.length, kinds, Array(0, 1, 2, 3), out)) null
+      else Row(out.getInt(0), out.getInt(1), out.getDouble(2), out.getLong(3))
+    }
+  }
+
+  test("fast path: strictLine refuses each out-of-grammar case, accepts its edges") {
     import spark.implicits._
     val schema = Sources.ratingsSchema
-    def strict(lines: Seq[String]): Seq[org.apache.spark.sql.Row] =
-      lines.toDF("value").select(StrictCsvLine.strictCsvLine(col("value"), schema))
-        .collect().toSeq.map(_.getStruct(0))
     val refused = oddInts.map(v => s"$v,2,4.5,964982703") ++
       oddInts.map(v => s"1,$v,4.5,964982703") ++
       oddDoubles.map(v => s"1,2,$v,964982703") ++
@@ -174,5 +194,57 @@ class SourcesSpec extends AnyFunSuite {
       .select(from_csv(col("value"), schema, Map("escape" -> "\"")))
       .collect().toSeq.map(_.getStruct(0))
     assert(strict(accepted) == viaParser)
+  }
+
+  test("pruning: ratingsCsv(p).select(cols) ≡ the CSV reader's full rows projected to cols") {
+    val dir = writeDir(oddFiles())
+    def multiset(rows: Seq[Row]): Map[Row, Int] = rows.groupBy(identity).view.mapValues(_.size).toMap
+    try {
+      // all four columns, so the CSV reader parses every field of each line
+      val full = csvReader(dir.toString).collect().toSeq
+      val names = Sources.ratingsSchema.fieldNames
+      def check(): Unit = Seq(Seq("movieId"), Seq("movieId", "rating"), Seq("timestamp")).foreach {
+        cols =>
+          val idx = cols.map(names.indexOf(_))
+          val expected = full.map(r => Row.fromSeq(idx.map(r.get)))
+          val got = Sources.ratingsCsv(spark, dir.toString).select(cols.map(col): _*).collect().toSeq
+          assert(multiset(got) == multiset(expected), s"select(${cols.mkString(", ")})")
+      }
+      check()
+      withMaxPartitionBytes("64KB")(check())
+    } finally deleteDir(dir)
+  }
+
+  test("plan: the pipelines' ratings scans read only movieId (and rating), parsed in the scan") {
+    val movies = Sources.moviesCsv(spark, SparkTestSession.resource("/movielens/movies.csv"))
+    val ratings = Sources.ratingsCsv(spark, SparkTestSession.resource("/movielens/ratings.csv"))
+    Seq(MovieAnalysis.movieRank(movies, ratings) -> "struct<movieId:int>",
+        MovieAnalysis.movieRating(movies, ratings) -> "struct<movieId:int,rating:double>").foreach {
+      case (df, readSchema) =>
+        assert(df.collect().nonEmpty)
+        val plan = df.queryExecution.executedPlan.toString
+        val scans = plan.linesIterator.filter(_.contains("Format: RatingsCsv")).toSeq
+        assert(scans.nonEmpty, s"no RatingsCsv scan in:\n$plan")
+        scans.foreach(l => assert(l.contains(s"ReadSchema: $readSchema"), s"scan reads more than $readSchema:\n$l"))
+        Seq("from_csv", "strict_csv_line").foreach(f =>
+          assert(!plan.contains(f), s"the parse must stay inside the scan, found $f in:\n$plan"))
+    }
+  }
+
+  test("ratingsCsv ≡ the CSV reader on a gzipped file, which stays one split") {
+    val dir = writeDir(Nil)
+    val gz = dir.resolve("crlf.csv.gz")
+    val out = new GZIPOutputStream(Files.newOutputStream(gz))
+    try out.write(oddFiles().toMap.apply("crlf.csv").getBytes(UTF_8))
+    finally out.close()
+    try {
+      assert(Files.size(gz) > 64 * 1024, "the file must be larger than one 64 KB split")
+      val rows = assertSameAsCsvReader(gz.toString)
+      assert(rows > 5000)
+      withMaxPartitionBytes("64KB") {
+        assert(Sources.ratingsCsv(spark, gz.toString).rdd.getNumPartitions == 1)
+        assert(assertSameAsCsvReader(gz.toString) == rows)
+      }
+    } finally deleteDir(dir)
   }
 }
