@@ -2,98 +2,55 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Benchmark main: one JSON line of per-query wall-clock seconds.
   *
-  * Measurement protocol (reproducibility over optimism):
-  *   - every query is executed via the `noop` sink, not `.count()` — count
-  *     lets Catalyst elide final sorts/projections, noop materializes every
+  * Measurement protocol, the same for every query:
+  *   - a global warm-up first: every query once at sf0.001 (the benched sf
+  *     dir's sibling, when present), capped at [[WarmupCapS]]; queries past
+  *     the cap skip it and are counted in `warmup_truncated`;
+  *   - then per query: `System.gc()` outside the timed section, one warm
+  *     pass and one timed pass at the benched sf; the value is the timed
+  *     pass. The warm pass stays in `rep_times` (artifact builds and codegen
+  *     land there);
+  *   - every pass runs through the `noop` sink, not `.count()` — count lets
+  *     Catalyst elide final sorts/projections, noop materializes every
   *     output row of the full plan;
-  *   - every query's FIRST pass at the benched sf is its WARM-UP: recorded
-  *     in rep_times (forensics — artifact builds and codegen land there)
-  *     but excluded from the value whenever any later pass exists. Warming
-  *     at a smaller sf does not work — AQE/broadcast decisions differ
-  *     across scales, so the small-sf pass compiles different codegen and
-  *     the first timed rep still measures JIT (round-16 polluted-median
-  *     incident); first-pass-at-scale is what the old median-of-3
-  *     effectively measured (the median dropped cold rep 1) at ~2/3 wall;
-  *   - the value is the LOWER MEDIAN of the timed passes (warm + 2 timed
-  *     by default), so a single GC/JIT stall cannot define the number;
-  *   - a WALL BUDGET (SPARK_GRAFT_BENCH_BUDGET_S, default 600 s) degrades
-  *     the protocol DISCLOSED instead of losing the run to the driver's
-  *     timeout kill (BENCH_r15 was rc=124 with nothing parseable): past a
-  *     calibrated completion projection queries drop to warm + 1 timed
-  *     pass (`n_budget_cut`), past 1.5× the budget to one COLD pass
-  *     (`n_cold_single` — the floor sits at 1.5×, not 1×, because a cold
-  *     value runs 1.5-3× its warm twin: falling cold AT the budget line
-  *     would buy little wall while poisoning the number; cold-but-present
-  *     beats nothing only once the run is deep in SIGTERM territory), the
-  *     sweep is skipped past 95% (`sweep_skipped`), and `stream_*` entries always
-  *     cap at 2 passes (their values are trigger/commit constants);
+  *   - every pass records host/process counters alongside wall time (see
+  *     [[Rep]]) into BENCH_SELF.json `rep_times`;
   *   - the run is KILL-SAFE: the detail file is rewritten incrementally
   *     after every query, and a shutdown hook prints an `aborted:true`
   *     headline (stdout + stderr, drain pause) the moment a SIGTERM lands
   *     — a context stopped mid-query is recorded as the abort it is
   *     (`aborted_at`, first exception verbatim), never as per-query
   *     failures;
-  *   - every rep records independent host/process counters alongside wall
-  *     time: JVM GC time delta (GarbageCollectorMXBean), /proc/stat steal
-  *     and iowait deltas (each normalized to per-CPU seconds using the host
-  *     CPU count parsed from /proc/stat's cpuN lines — container-safe, the
-  *     aggregate line is host-wide while availableProcessors can be
-  *     cgroup-limited), and process CPU seconds — all of it lands in
-  *     BENCH_SELF.json `rep_times` as JSON objects;
-  *   - host-stall guard, EVIDENCE-GATED: a bimodal rep set (median > 5× min)
-  *     only reports the unstalled min when every slow rep's measured CPU
-  *     STEAL covers ≥30% of its excess over the min — i.e. the stall is
-  *     CORROBORATED by a truly-external host signal, not inferred from
-  *     shape (round-4/5 advice). iowait is recorded for diagnosis but does
-  *     NOT qualify as evidence: a query's own disk reads and spills accrue
-  *     iowait, so an I/O-bound query could otherwise self-certify its cold
-  *     reps as "stalled". JVM GC time likewise does not qualify (GC churn
-  *     is the query's own allocation behavior). A bimodal set WITHOUT steal
-  *     evidence keeps its median (the slowness is charged to the query) and
-  *     is listed in `guard_vetoed` / counted in `n_guard_vetoed` (the
-  *     headline omits zero-valued counters — omitted ≡ 0, presence means
-  *     nonzero; BENCH_SELF.json always carries every field). When
-  *     /proc/stat is unreadable (non-Linux host) no evidence exists, so the
-  *     guard can never fire; that state is disclosed as
-  *     `host_counters_available:false` rather than silently zeroed.
-  *     Guarded queries count in `n_stalls`; raw reps + counters always land
-  *     in BENCH_SELF.json — disclosed outlier rejection, never silent;
-  *   - a failed detail write is disclosed too: stderr warning +
+  *   - each query is gated against the previously committed full-surface
+  *     value ([[computeRegressions]]);
+  *   - a failed detail write is disclosed: stderr warning +
   *     `detail_write_failed:true` in the stdout headline;
-  *   - failures are never silently folded into timings: a failed query
-  *     reports -1 in `queries` and its exception in `errors`.
+  *   - failures are never folded into timings: a failed query reports -1
+  *     in `queries` and its exception in `errors`.
   */
 object Bench {
-  /** Per-rep counters. wall: rep seconds. gc: JVM GC time delta (stop-the-
-    * world cost — ours). steal: /proc/stat steal delta in per-CPU seconds
-    * (external interference — not ours; the ONLY stall-guard evidence).
-    * iowait: /proc/stat iowait delta in per-CPU seconds (diagnostic only —
-    * the query's own reads/spills land here). cpu: process CPU seconds.
-    *
-    * Round-15 forensic counters (the round-14 verdict's 8 driver-machine
-    * regressions showed 4-9x CPU-second inflation with gc=steal=iowait=
-    * other_cpu≈0 — these discriminate the remaining hypotheses):
-    *   - readBytes: /proc/self/io read_bytes delta — ACTUAL storage reads
-    *     charged to this process; page-cache hits don't count, so a
-    *     cold-parquet first-touch shows up here and nowhere else;
-    *   - majflt: /proc/self/stat major-fault delta — mmap'd pages faulted
-    *     from disk (the parquet reader path the io counter can miss);
-    *   - jit: HotSpot total compilation time delta (CompilationMXBean,
-    *     seconds) — a JIT-recompile storm inflates CPU with clean GC;
-    *   - codegenN: whole-stage-codegen compilation COUNT delta
-    *     (CodegenMetrics) — nonzero during timed reps means the Janino
-    *     class cache evicted this query's generated code (the round-8
-    *     failure mode returning at a larger registry);
-    *   - mhz: CPU frequency sampled AFTER the rep (cpu0 scaling_cur_freq,
-    *     falling back to /proc/cpuinfo mean) — a thermal/governor downclock
-    *     inflates both wall and CPU seconds with every other counter clean,
-    *     which is exactly the unexplained signature. */
+  /** Passes per query at the benched sf: one warm, one timed. */
+  val Passes = 2
+  /** Wall cap of the global sf0.001 warm-up, seconds from the run's start. */
+  val WarmupCapS = 240.0
+
+  /** Per-pass counters. wall: pass seconds. gc: JVM GC time delta (stop-
+    * the-world cost — ours). steal: /proc/stat steal delta in per-CPU
+    * seconds (external interference — not ours; the regression gate's
+    * host evidence). iowait: /proc/stat iowait delta in per-CPU seconds
+    * (diagnostic only — the query's own reads/spills land here). cpu:
+    * process CPU seconds. otherCpu: host busy seconds minus ours (co-located
+    * load). jit: HotSpot compilation seconds — a JIT storm inflates CPU
+    * with clean GC. codegenN: whole-stage-codegen compilations — nonzero in
+    * a timed pass means the Janino class cache evicted this query's code. */
   final case class Rep(wall: Double, gc: Double, steal: Double,
                        iowait: Double, cpu: Double, otherCpu: Double,
-                       readBytes: Long = -1L, majflt: Long = -1L,
-                       jit: Double = -1.0, codegenN: Long = -1L,
-                       mhz: Double = -1.0)
+                       jit: Double = -1.0, codegenN: Long = -1L)
 
+  /** JSON string literal. Escapes quote, backslash and ALL control chars
+    * (<0x20): a raw tab or CR in a query name, an exception message or
+    * oracle SQL makes a strict parser (Python's json.load, Jackson) reject
+    * the whole file. */
   private[graft] def jstr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
@@ -103,18 +60,12 @@ object Bench {
   private[graft] def jd(v: Double): String =
     if (v.isNaN || v.isInfinite) "null" else v.toString
   private[graft] def repJson(r: Rep): String =
-    s"""{"wall":${jd(r.wall)},"gc":${jd(r.gc)},"steal":${jd(r.steal)},"iowait":${jd(r.iowait)},"cpu":${jd(r.cpu)},"other_cpu":${jd(r.otherCpu)},"read_bytes":${r.readBytes},"majflt":${r.majflt},"jit":${jd(r.jit)},"codegen_n":${r.codegenN},"mhz":${jd(r.mhz)}}"""
+    s"""{"wall":${jd(r.wall)},"gc":${jd(r.gc)},"steal":${jd(r.steal)},"iowait":${jd(r.iowait)},"cpu":${jd(r.cpu)},"other_cpu":${jd(r.otherCpu)},"jit":${jd(r.jit)},"codegen_n":${r.codegenN}}"""
   private[graft] def repsJson(reps: collection.Seq[(String, Seq[Rep])]): String =
     reps.map { case (k, ts) =>
       jstr(k) + ":" + ts.map(repJson).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
 
-  /** (steal ticks, iowait ticks, host CPU count) from /proc/stat, summed
-    * over all CPUs in USER_HZ (=100) ticks; None when unreadable (non-Linux
-    * or restricted /proc) so the caller can disclose "no host counters"
-    * instead of silently reading zeros. CPU count comes from the cpuN lines
-    * — the aggregate line is host-wide, and normalizing it by a
-    * cgroup-limited availableProcessors would overstate per-CPU seconds. */
   /** Per-query regression gate: a query regresses when its median is >
     * `factor`× the previously committed full-surface median AND the
     * slowness is NOT host-explained — the median rep's own GC plus
@@ -175,47 +126,6 @@ object Bench {
       }
     } catch { case _: Throwable => Map.empty }
 
-  /** (read_bytes, majflt) for THIS process; (-1,-1) when /proc is absent.
-    * read_bytes counts storage-layer reads (page-cache hits excluded);
-    * majflt counts disk-backed page faults — together they answer "did this
-    * rep actually touch disk" for the cold-parquet hypothesis. */
-  private[graft] def procIo(): (Long, Long) =
-    try {
-      val io = scala.io.Source.fromFile("/proc/self/io")
-      val rb = try io.getLines()
-          .collectFirst { case l if l.startsWith("read_bytes:") =>
-            l.split(":\\s*")(1).trim.toLong }.getOrElse(-1L)
-        finally io.close()
-      val st = scala.io.Source.fromFile("/proc/self/stat")
-      val mf = try {
-        val line = st.getLines().next()
-        // fields after the parenthesized comm (which can embed spaces):
-        // state=1 ... majflt is the 10th post-comm field
-        val rest = line.substring(line.lastIndexOf(')') + 2).split(" ")
-        rest(9).toLong
-      } finally st.close()
-      (rb, mf)
-    } catch { case _: Throwable => (-1L, -1L) }
-
-  /** Current CPU frequency in MHz — cpu0's cpufreq view when the kernel
-    * exposes it, else the /proc/cpuinfo mean; -1 when neither exists. */
-  private[graft] def cpuMhz(): Double =
-    try {
-      val f = new java.io.File(
-        "/sys/devices/system/cpu/cpu0/cpufreq/scaling_cur_freq")
-      if (f.isFile) {
-        val s = scala.io.Source.fromFile(f)
-        try s.getLines().next().trim.toDouble / 1000.0 finally s.close()
-      } else {
-        val s = scala.io.Source.fromFile("/proc/cpuinfo")
-        try {
-          val ms = s.getLines().filter(_.startsWith("cpu MHz"))
-            .map(_.split(":")(1).trim.toDouble).toVector
-          if (ms.isEmpty) -1.0 else ms.sum / ms.size
-        } finally s.close()
-      }
-    } catch { case _: Throwable => -1.0 }
-
   /** HotSpot total JIT compilation milliseconds (monotonic). */
   private[graft] def jitMillis(): Long =
     try {
@@ -232,6 +142,13 @@ object Bench {
       .METRIC_COMPILATION_TIME.getCount
     catch { case _: Throwable => -1L }
 
+  /** (steal ticks, iowait ticks, host CPU count, busy ticks) from
+    * /proc/stat, summed over all CPUs in USER_HZ (=100) ticks; None when
+    * unreadable (non-Linux or restricted /proc) so the caller can disclose
+    * "no host counters" instead of silently reading zeros. CPU count comes
+    * from the cpuN lines — the aggregate line is host-wide, and normalizing
+    * it by a cgroup-limited availableProcessors would overstate per-CPU
+    * seconds. */
   private[graft] def hostCounters(): Option[(Long, Long, Int, Long)] =
     try {
       val src = scala.io.Source.fromFile("/proc/stat")
@@ -256,6 +173,21 @@ object Bench {
       } finally src.close()
     } catch { case _: Throwable => None }
 
+  private def gcMillis(): Long = {
+    val it = java.lang.management.ManagementFactory
+      .getGarbageCollectorMXBeans.iterator()
+    var s = 0L
+    while (it.hasNext) s += math.max(it.next().getCollectionTime, 0L)
+    s
+  }
+
+  private def cpuSeconds(): Double =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
+      case os: com.sun.management.OperatingSystemMXBean =>
+        os.getProcessCpuTime / 1e9
+      case _ => 0.0
+    }
+
   /** All mutable run evidence, shared between the bench loop, the
     * incremental detail writer, and the SIGTERM shutdown hook. Every
     * mutation and serialization takes the object lock so the hook can never
@@ -266,29 +198,19 @@ object Bench {
     * rewrites it after every query) and (b) an `aborted:true` stdout
     * headline printed from the hook, which touches no Spark state and so
     * races Spark's own shutdown hook safely. */
-  private[graft] final class RunState(val reps: Int, val sfDir: String,
+  private[graft] final class RunState(val sfDir: String,
       val parityOnly: Set[String], val skipParity: Boolean,
-      val hostAvailable: Boolean, val budgetS: Double) {
+      val hostAvailable: Boolean) {
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val repDetail = scala.collection.mutable.LinkedHashMap[String, Seq[Rep]]()
-    val stalls = scala.collection.mutable.ArrayBuffer[String]()
-    val guardVetoed = scala.collection.mutable.ArrayBuffer[String]()
     var regressions: Seq[(String, Double, Double)] = Seq.empty
-    var sweepJson: String = "{}"
-    var sweepSkipped = false
-    var nColdSingle = 0      // 1 pass: run already past budget — value is COLD
-    var nBudgetCut = 0       // 2 passes (warm + 1): projection over 90% budget
-    var nStreamCapped = 0    // capped at 2 passes: stream fixed costs dominate
-    var warmupTruncated = 0  // global sf0.001 warm-ups skipped for budget
-    var budgetExceeded = false
+    var warmupTruncated = 0  // global sf0.001 warm-ups skipped past WarmupCapS
     var abortedAt: Option[String] = None
     var abortException: Option[String] = None
     var detailWriteFailed = false
     var nTotal = 0
     @volatile var headlinePrinted = false
-
-    def repsReduced: Int = nColdSingle + nBudgetCut + nStreamCapped
 
     /** Deviation-only disclosure fields for the stdout headline (zero/false
       * omitted ≡ absent, presence means nonzero — protects the tail-window
@@ -299,17 +221,12 @@ object Bench {
         b ++= s""""aborted":true,"n_done":${results.size},"n_total":$nTotal,"""
         abortedAt.foreach(q => b ++= s""""aborted_at":${jstr(q)},""")
       }
-      if (repsReduced > 0) b ++= s""""reps_reduced":$repsReduced,"""
-      if (nColdSingle > 0) b ++= s""""n_cold_single":$nColdSingle,"""
-      if (sweepSkipped) b ++= s""""sweep_skipped":true,"""
       if (warmupTruncated > 0) b ++= s""""warmup_truncated":$warmupTruncated,"""
-      if (budgetExceeded) b ++= s""""budget_exceeded":true,"""
       b.result()
     }
 
     def headline(aborted: Boolean): String = synchronized {
-      chooseHeadline(results.toSeq, errors.toSeq, stalls.size,
-        guardVetoed.size, reps, sfDir, detailWriteFailed,
+      chooseHeadline(results.toSeq, errors.toSeq, sfDir, detailWriteFailed,
         parityOnly = parityOnly, nRegressions = regressions.size,
         extra = extraFields(aborted))
     }
@@ -327,7 +244,7 @@ object Bench {
       val regJson = regressions.map { case (n, p, v) =>
         jstr(n) + s""":{"prev":${jd(p)},"now":${jd(v)}}"""
       }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${jd(total)},"value_at_scale":${jd(totalAtScale)},"unit":"sec","partial":$partial,"n_done":${results.size},"n_total":$nTotal,"aborted_at":${abortedAt.map(jstr).getOrElse("null")},"abort_exception":${abortException.map(jstr).getOrElse("null")},"budget_s":${jd(budgetS)},"budget_exceeded":$budgetExceeded,"n_cold_single":$nColdSingle,"n_budget_cut":$nBudgetCut,"n_stream_capped":$nStreamCapped,"warmup_truncated":$warmupTruncated,"sweep_skipped":$sweepSkipped,"queries":$qsFull,"errors":$errs,"n_failed":${errors.size},"stalls":${stalls.map(jstr).mkString("[", ",", "]")},"guard_vetoed":${guardVetoed.map(jstr).mkString("[", ",", "]")},"regressions":$regJson,"n_regressions":${regressions.size},"oracle_parity_only":$parityJson,"skip_parity_only":$skipParity,"host_counters_available":$hostAvailable,"rep_times":${repsJson(repDetail.toSeq)},"reps":$reps,"sweep_partitions":$sweepJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${jd(total)},"value_at_scale":${jd(totalAtScale)},"unit":"sec","partial":$partial,"n_done":${results.size},"n_total":$nTotal,"aborted_at":${abortedAt.map(jstr).getOrElse("null")},"abort_exception":${abortException.map(jstr).getOrElse("null")},"warmup_truncated":$warmupTruncated,"queries":$qsFull,"errors":$errs,"n_failed":${errors.size},"regressions":$regJson,"n_regressions":${regressions.size},"oracle_parity_only":$parityJson,"skip_parity_only":$skipParity,"host_counters_available":$hostAvailable,"rep_times":${repsJson(repDetail.toSeq)},"reps":$Passes,"sf":"$sfDir"}"""
     }
 
     /** Best-effort detail write; failures are disclosed, never thrown. */
@@ -377,7 +294,8 @@ object Bench {
     * unless nothing ran yet, in which case the committed full-surface
     * detail must not be clobbered by an empty shell. No Spark objects are
     * touched: this hook runs concurrently with Spark's own shutdown hook
-    * and must not block on a stopping context. */
+    * and must not block on a stopping context. Once the headline has
+    * printed, the hook does nothing. */
   private[graft] def installAbortHook(state: RunState, detailFile: String): Thread = {
     val t = new Thread(() => {
       if (state.printHeadlineOnce(aborted = true) &&
@@ -388,23 +306,11 @@ object Bench {
     t
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** The bench's session shape, shared with [[PlanDump]] so a dumped plan
+    * is the plan the bench runs: `local[SPARK_GRAFT_CPUS]` (default 4) with
+    * as many shuffle partitions. */
+  def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Wall budget for the WHOLE bench process (session boot + warm-up +
-    // timed reps + sweep), seconds. The r15 driver run was SIGTERM'd at its
-    // window with the headline still unprinted: the full protocol (warm-up
-    // + median-of-3 × 217 + sweep) outgrew the wall on a 1.4×-plateau boot
-    // (BASELINE.md). The budget degrades the protocol DISCLOSED instead of
-    // losing the run: warm-up truncates past 35% of budget, extra reps stop
-    // when the calibrated single-rep completion projection crosses 90%, the
-    // sweep is skipped past 95%. First reps always run to completion — an
-    // overrun is reported (`budget_exceeded`), never enforced by dropping
-    // queries; the SIGTERM hook covers the case where the wall is shorter
-    // than even that.
-    val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "600").toDouble
-    val benchT0 = System.nanoTime()
-    def elapsedS: Double = (System.nanoTime() - benchT0) / 1e9
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -421,10 +327,137 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
-    def runOnce(fn: (SparkSession, String) => DataFrame, dir: String): Unit =
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
+  private def runOnce(spark: SparkSession,
+      fn: (SparkSession, String) => DataFrame, dir: String): Unit =
+    fn(spark, dir).write.format("noop").mode("overwrite").save()
 
+  /** One pass of `fn` at `dir` with its counters; throws what the query
+    * throws. */
+  private def measure(spark: SparkSession,
+      fn: (SparkSession, String) => DataFrame, dir: String): Rep = {
+    val gc0 = gcMillis(); val h0 = hostCounters(); val c0 = cpuSeconds()
+    val j0 = jitMillis(); val cg0 = codegenCount()
+    val t0 = System.nanoTime()
+    runOnce(spark, fn, dir)
+    val wall = (System.nanoTime() - t0) / 1e9
+    val procCpu = cpuSeconds() - c0
+    // Both /proc/stat reads must succeed for a host delta; a one-sided read
+    // would fabricate a huge (or negative) delta.
+    val (steal, iowait, other) = (h0, hostCounters()) match {
+      case (Some((s0, i0, _, b0)), Some((s1, i1, n, b1))) =>
+        (math.max(s1 - s0, 0L).toDouble / 100.0 / n,
+          math.max(i1 - i0, 0L).toDouble / 100.0 / n,
+          math.max((b1 - b0).toDouble / 100.0 - procCpu, 0.0))
+      case _ => (0.0, 0.0, 0.0)
+    }
+    val j1 = jitMillis(); val cg1 = codegenCount()
+    Rep(wall, gc = (gcMillis() - gc0) / 1e3, steal = steal, iowait = iowait,
+      cpu = procCpu, otherCpu = other,
+      jit = if (j0 < 0 || j1 < 0) -1.0 else (j1 - j0) / 1e3,
+      codegenN = if (cg0 < 0 || cg1 < 0) -1L else cg1 - cg0)
+  }
+
+  /** Runs the protocol (see the object doc) over `queries` at `sfDir` and
+    * returns the evidence. Writes `detailFile` after every query and once
+    * at the end (`partial:false` unless the context was stopped under the
+    * run), and arms the abort hook; the caller prints the headline. Never
+    * stops `spark`. `prev` feeds the regression gate; `skipParity` is
+    * disclosed as `skip_parity_only`. */
+  private[graft] def run(spark: SparkSession,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      sfDir: String, detailFile: String,
+      prev: Map[String, Double] = Map.empty,
+      skipParity: Boolean = false): RunState = {
+    val t0 = System.nanoTime()
+    val state = new RunState(sfDir, SparkEntry.oracleParityOnly, skipParity,
+      hostAvailable = hostCounters().isDefined)
+    state.nTotal = queries.size
+    installAbortHook(state, detailFile)
+
+    // GLOBAL HotSpot warm-up at the smallest sf, run once before anything
+    // is timed. This is deliberately IN ADDITION to each query's warm pass
+    // at scale below — the two warm different layers:
+    //   - HotSpot's tiered JIT compiles ~50k METHODS for this surface and
+    //     needs invocations spread over minutes to reach C2; method
+    //     bytecode is scale-independent, so one cheap sf0.001 pass buys
+    //     that convergence. Dropping this pass (tried in round 16) pushed
+    //     a 500-700 CPU-second compile storm into the first ~50 queries'
+    //     at-scale passes — measured: timed reps carrying 9-12 s of
+    //     concurrent compiler CPU each, values 2-6× their steady state;
+    //   - the per-query warm pass at scale covers what this pass cannot:
+    //     whole-stage-codegen classes are PLAN-specific and AQE/broadcast
+    //     decisions differ across scales (warming only at a smaller sf
+    //     left 3-9 s of JIT in the first timed pass, round 16).
+    // Capped at WarmupCapS: a truncated tail is bounded harm — those
+    // queries' warm pass at scale still absorbs the residual compile cost.
+    val warmDir = new java.io.File(sfDir).getParentFile match {
+      case p: java.io.File if new java.io.File(p, "sf0.001").isDirectory =>
+        Some(new java.io.File(p, "sf0.001").getPath)
+      case _ => None
+    }
+    warmDir.foreach { d =>
+      queries.foreach { case (_, fn) =>
+        if ((System.nanoTime() - t0) / 1e9 > WarmupCapS)
+          state.synchronized { state.warmupTruncated += 1 }
+        else try runOnce(spark, fn, d) catch { case _: Throwable => () }
+      }
+    }
+
+    queries.iterator.takeWhile(_ => state.abortedAt.isEmpty).foreach {
+      case (name, _) if spark.sparkContext.isStopped =>
+        state.synchronized { state.abortedAt = Some(name) }
+      case (name, fn) =>
+        // Collect the GC debt of prior queries OUTSIDE the timed section —
+        // dead checkpoint blocks and array garbage otherwise land as a
+        // 10-20s full-GC pause inside whichever query runs next (the
+        // round-2/3 roaming-outlier variance).
+        System.gc()
+        val reps = scala.collection.mutable.ArrayBuffer[Rep]()
+        try while (reps.size < Passes) reps += measure(spark, fn, sfDir)
+        catch { case e: Throwable =>
+          val msg = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}"
+          if (spark.sparkContext.isStopped) {
+            // The kill landed mid-query: an ABORT, not a per-query failure
+            // — r15 recorded three misleading "stopped SparkContext"
+            // failures this way. The first exception is kept verbatim: it
+            // is usually the only real signal of what the shutdown
+            // interrupted.
+            state.synchronized {
+              state.abortedAt = Some(name)
+              if (state.abortException.isEmpty) state.abortException = Some(msg)
+            }
+          } else state.synchronized { state.errors.getOrElseUpdate(name, msg) }
+        }
+        if (state.abortedAt.isEmpty) {
+          state.synchronized {
+            state.repDetail(name) = reps.toSeq // incl. the warm pass
+            state.results(name) = if (reps.size == Passes) reps.last.wall else -1.0
+          }
+          // Incremental detail write: a SIGKILL (no hooks) still leaves a
+          // parseable partial BENCH_SELF.json current to the last query.
+          state.writeDetail(detailFile, partial = true)
+        }
+    }
+
+    // Per-query regression gate vs the previously committed run (always
+    // present in the detail — empty object IS the clean-run evidence).
+    val regressions = state.synchronized {
+      computeRegressions(prev, state.results.toSeq, state.repDetail.toMap)
+    }
+    state.synchronized { state.regressions = regressions }
+    regressions.foreach { case (n, p, v) =>
+      System.err.println(f"[bench] REGRESSION $n: $p%.2f s -> $v%.2f s (clean gc/steal)")
+    }
+    state.writeDetail(detailFile, partial = state.abortedAt.isDefined)
+    state
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session()
     // Optional family-subset run (scaling experiments): SPARK_GRAFT_ONLY is
     // a regex over query names — e.g. '^(dedup|sim)_' benches just the
     // dedup + ANN families at a larger sf. A filtered run writes its detail
@@ -435,19 +468,9 @@ object Bench {
     // (SparkEntry.oracleParityOnly) are super-linear BY DESIGN and a run at
     // sf≥1 should drop them deliberately, not discover it.
     val skipParity = sys.env.get("SPARK_GRAFT_SKIP_PARITY_ONLY").contains("1")
-    val parityOnly = SparkEntry.oracleParityOnly
-    val queries: Seq[(String, (SparkSession, String) => DataFrame)] =
-      (onlyRe match {
-        case Some(re) => SparkEntry.queries.toSeq
-          .filter { case (n, _) => re.findFirstIn(n).isDefined }
-        case None => SparkEntry.queries.toSeq
-      }).filterNot { case (n, _) => skipParity && parityOnly(n) }
-
-    val Reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val hostAvailable = hostCounters().isDefined
-    val state = new RunState(Reps, sfDir, parityOnly, skipParity,
-      hostAvailable, budgetS)
-    state.nTotal = queries.size
+    val queries = SparkEntry.queries.toSeq
+      .filter { case (n, _) => onlyRe.forall(_.findFirstIn(n).isDefined) }
+      .filterNot { case (n, _) => skipParity && SparkEntry.oracleParityOnly(n) }
     // SPARK_GRAFT_DETAIL_FILE names the detail artifact explicitly — scale
     // runs (10× scaling evidence) and isolated A/B runs are DIFFERENT
     // experiments and must not overwrite each other (round 10 lost the
@@ -457,287 +480,21 @@ object Bench {
       .filter(_.nonEmpty)
       .getOrElse(if (onlyRe.isDefined) "BENCH_SELF_ONLY.json"
                  else "BENCH_SELF.json")
-    // Previous committed full-surface medians, read BEFORE this run's
+    // Previous committed full-surface values, read BEFORE this run's
     // incremental writes overwrite the file. Subset runs (SPARK_GRAFT_ONLY)
     // never gate: they write BENCH_SELF_ONLY.json and interference profiles
-    // differ. Doubles as the budget planner's per-query forecast.
-    val prevQueries: Map[String, Double] =
-      if (onlyRe.isDefined) Map.empty
+    // differ.
+    val prev =
+      if (onlyRe.isDefined) Map.empty[String, Double]
       else readPrevQueries("BENCH_SELF.json", sfDir)
-    val hook = installAbortHook(state, detailFile)
-
-    // GLOBAL HotSpot warm-up at the smallest sf, run once before anything
-    // is timed. This is deliberately IN ADDITION to each query's
-    // first-pass-at-scale warm-up below — the two warm different layers:
-    //   - HotSpot's tiered JIT compiles ~50k METHODS for this surface and
-    //     needs invocations spread over minutes to reach C2; method
-    //     bytecode is scale-independent, so one cheap sf0.001 pass buys
-    //     that convergence. Dropping this pass (tried in round 16) pushed
-    //     a 500-700 CPU-second compile storm into the first ~50 queries'
-    //     at-scale passes — measured: timed reps carrying 9-12 s of
-    //     concurrent compiler CPU each, values 2-6× their steady state,
-    //     NOT converging within one query's own passes (tier thresholds
-    //     span many executions);
-    //   - the per-query at-scale pass then covers what this pass cannot:
-    //     whole-stage-codegen classes are PLAN-specific and AQE/broadcast
-    //     decisions differ across scales.
-    // Budget-capped at 40% (disclosed as warmup_truncated): a truncated
-    // tail is bounded harm — those queries' at-scale warm pass still
-    // absorbs the residual compile cost before their timed reps.
-    val warmDir = new java.io.File(sfDir).getParentFile match {
-      case p: java.io.File if new java.io.File(p, "sf0.001").isDirectory =>
-        Some(new java.io.File(p, "sf0.001").getPath)
-      case _ => None
-    }
-    warmDir.foreach { d =>
-      queries.foreach { case (_, fn) =>
-        if (elapsedS > 0.4 * budgetS)
-          state.synchronized { state.warmupTruncated += 1 }
-        else try runOnce(fn, d) catch { case _: Throwable => () }
-      }
-    }
-
-    def gcMillis(): Long = {
-      val it = java.lang.management.ManagementFactory
-        .getGarbageCollectorMXBeans.iterator()
-      var s = 0L
-      while (it.hasNext) s += math.max(it.next().getCollectionTime, 0L)
-      s
-    }
-    def cpuSeconds(): Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-        case os: com.sun.management.OperatingSystemMXBean =>
-          os.getProcessCpuTime / 1e9
-        case _ => 0.0
-      }
-
-    // Budget planner forecast: previous committed medians (0.3 s default
-    // for queries without one), CALIBRATED on the fly by the ratio of
-    // observed first-rep walls to their own forecasts — a 1.4×-plateau
-    // boot scales the projection instead of blowing through it.
-    val forecast: Seq[Double] =
-      queries.map { case (n, _) => prevQueries.getOrElse(n, 0.3) }
-    val suffixAfter: Seq[Double] = forecast.scanRight(0.0)(_ + _).drop(1)
-    var sumWallSeen = 0.0
-    var sumForecastSeen = 0.0
-    var ctxDead = false
-    var i = 0
-    while (i < queries.size && !ctxDead) {
-      val (name, fn) = queries(i)
-      if (spark.sparkContext.isStopped) {
-        state.synchronized { state.abortedAt = Some(name) }
-        ctxDead = true
-      } else {
-        val qT0 = System.nanoTime() // the query's full cost feeds calibration
-        // Collect the GC debt of prior queries OUTSIDE the timed section —
-        // dead checkpoint blocks and array garbage otherwise land as a
-        // 10-20s full-GC pause inside whichever query runs next (the
-        // round-2/3 roaming-outlier variance).
-        System.gc()
-        val repsBuf = scala.collection.mutable.ArrayBuffer[Rep]()
-        // PASS PLAN, decided up front from the budget projection. Every
-        // query's FIRST pass at the benched sf is its WARM-UP (recorded in
-        // rep_times for forensics — artifact-build and codegen costs show
-        // there — but EXCLUDED from the value when any later pass exists).
-        // A warm-up at a smaller sf does not work: AQE/broadcast decisions
-        // differ across scales, so the small-sf pass compiles DIFFERENT
-        // codegen and the "warmed" first timed rep still measured 3-9 s of
-        // JIT (the polluted-median incident this protocol replaces); the
-        // first-pass-at-scale form is also what the old median-of-3
-        // effectively measured (rep 1 paid the cold costs, the median
-        // dropped it) at two-thirds the wall. Ladder:
-        //   Reps passes (warm + Reps-1 timed)  — default; streams cap at 2
-        //     (their values are trigger/commit constants across rounds)
-        //   2 passes (warm + 1 timed)          — projection > 90% of budget
-        //   1 pass (COLD single — the value IS the cold pass, disclosed
-        //     via n_cold_single)               — already past the budget
-        val calib =
-          if (sumForecastSeen > 0) math.max(1.0, sumWallSeen / sumForecastSeen)
-          else 2.5 // no evidence yet: ~2 passes + per-query overhead
-        val maxPasses =
-          if (name.startsWith("stream_") && Reps > 2) 2 else Reps
-        // The cold-single floor sits at 1.5× budget, not 1×: a cold value
-        // runs 1.5-3× its warm twin, so falling cold at the budget line
-        // turned a 10% slow first half into a self-amplifying cold tail
-        // (observed: 79 cold singles and a +56% total on a same-code rerun).
-        // Past the budget the run is already in SIGTERM-insurance territory
-        // — the hook yields a parseable partial if the wall is shorter —
-        // so warm+1 passes stay the floor until the run is deeply over.
-        val repsPlanned =
-          if (elapsedS > 1.5 * budgetS) {
-            state.synchronized { state.nColdSingle += 1 }; 1
-          } else {
-            if (maxPasses < Reps) state.synchronized { state.nStreamCapped += 1 }
-            if (maxPasses > 2 &&
-                elapsedS + (forecast(i) + suffixAfter(i)) * calib > 0.9 * budgetS) {
-              state.synchronized { state.nBudgetCut += 1 }; 2
-            } else maxPasses
-          }
-        var failed = false
-        var r = 0
-        while (r < repsPlanned && !failed && !ctxDead) {
-          val gc0 = gcMillis(); val h0 = hostCounters(); val c0 = cpuSeconds()
-          val io0 = procIo(); val j0 = jitMillis(); val cg0 = codegenCount()
-          val t0 = System.nanoTime()
-          try {
-            runOnce(fn, sfDir)
-            val wall = (System.nanoTime() - t0) / 1e9
-            // Both /proc/stat reads must succeed for a host delta; a
-            // one-sided read would fabricate a huge (or negative) delta.
-            val procCpu = cpuSeconds() - c0
-            val (st, io, other) = (h0, hostCounters()) match {
-              case (Some((s0, i0, _, b0)), Some((s1, i1, n, b1))) =>
-                (math.max(s1 - s0, 0L).toDouble / 100.0 / n,
-                  math.max(i1 - i0, 0L).toDouble / 100.0 / n,
-                  // host busy seconds minus ours: CPU other processes
-                  // burned during this rep — the co-located-contention
-                  // signal
-                  math.max((b1 - b0).toDouble / 100.0 - procCpu, 0.0))
-              case _ => (0.0, 0.0, 0.0)
-            }
-            val io1 = procIo(); val j1 = jitMillis(); val cg1 = codegenCount()
-            def delta(a: Long, b: Long): Long = if (a < 0 || b < 0) -1L else b - a
-            repsBuf += Rep(wall, gc = (gcMillis() - gc0) / 1e3, steal = st,
-              iowait = io, cpu = procCpu, otherCpu = other,
-              readBytes = delta(io0._1, io1._1),
-              majflt = delta(io0._2, io1._2),
-              jit = if (j0 < 0 || j1 < 0) -1.0 else (j1 - j0) / 1e3,
-              codegenN = delta(cg0, cg1),
-              mhz = cpuMhz())
-          } catch { case e: Throwable =>
-            val msg = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}"
-            if (spark.sparkContext.isStopped) {
-              // The kill landed mid-query: an ABORT, not a per-query
-              // failure — r15 recorded three misleading "stopped
-              // SparkContext" failures this way. The first exception is
-              // kept verbatim: it is usually the only real signal of what
-              // the shutdown interrupted.
-              state.synchronized {
-                state.abortedAt = Some(name)
-                if (state.abortException.isEmpty)
-                  state.abortException = Some(msg)
-              }
-              ctxDead = true
-            } else {
-              state.synchronized { state.errors.getOrElseUpdate(name, msg) }
-              failed = true
-            }
-          }
-          r += 1
-        }
-        // calibration: this query's FULL cost (System.gc + all passes) per
-        // unit of its forecast — the remaining-work projection then prices
-        // warm-ups and rep counts implicitly
-        sumWallSeen += (System.nanoTime() - qT0) / 1e9
-        sumForecastSeen += forecast(i)
-        if (!ctxDead) {
-          val all = repsBuf.toSeq
-          // pass 0 is the warm-up: excluded from the value whenever any
-          // timed pass exists; a 1-pass (cold-single) query keeps it —
-          // disclosed, cold-but-present
-          val reps = if (all.size >= 2) all.drop(1) else all
-          // Evidence-gated stall guard (disclosed outlier rejection): this
-          // host occasionally freezes queries for ~a minute (CPU steal; see
-          // BASELINE.md). A bimodal rep set (median > 5× min) reports the
-          // unstalled min ONLY when every slow rep's measured STEAL covers
-          // ≥30% of its excess wall time over the min — otherwise the
-          // median stands (bimodality without external evidence means the
-          // query itself is bimodal — e.g. its own cold-cache I/O — and
-          // must own its cost; the veto is recorded in `guard_vetoed`).
-          // iowait and GC time never qualify as evidence. Without
-          // /proc/stat the guard can never fire; `host_counters_available:
-          // false` in BENCH_SELF.json discloses why.
-          val value = reps.map(_.wall).sorted match {
-            case s if s.isEmpty => -1.0
-            case s =>
-              // LOWER median: for the 2-rep sets the stream cap and budget
-              // mode produce, the upper median would record the MAX of two
-              // (a strict pessimization the old 3-rep protocol never had);
-              // odd sizes are unchanged
-              val median = s((s.size - 1) / 2)
-              if (median > 5 * s.head && s.head > 0.05) {
-                val slow = reps.filter(_.wall > 5 * s.head)
-                val evidenced = hostAvailable && slow.nonEmpty &&
-                  slow.forall(r => r.steal >= 0.3 * (r.wall - s.head))
-                if (evidenced) {
-                  state.synchronized { state.stalls += name }; s.head
-                } else {
-                  state.synchronized { state.guardVetoed += name }; median
-                }
-              } else median
-          }
-          state.synchronized {
-            state.repDetail(name) = all // incl. the warm pass — forensics
-            state.results(name) = value
-          }
-          // Incremental detail write: a SIGKILL (no hooks) still leaves a
-          // parseable partial BENCH_SELF.json current to the last query.
-          state.writeDetail(detailFile, partial = true)
-        }
-      }
-      i += 1
-    }
-
-    // Shuffle-partitions sweep over the headline pipelines — the Spark twin
-    // of the reference's only tuning experiment (reducer counts per job via
-    // CLI args, MovieRank.java:174-177,200-203). Opt out with
-    // SPARK_GRAFT_SWEEP=""; skipped (disclosed) only when ITS OWN estimated
-    // cost — sweep points × the two pipelines' measured values, known
-    // exactly by now — can't fit inside 1.5× budget. The first budget
-    // implementation gated it on the global 95% mark and skipped a ~3 s
-    // sweep at the end of a 635 s run — the X28 evidence lost to protect
-    // seconds. q1/q2 measure sub-1 s at every sf this harness runs, so in
-    // practice the sweep only skips on a pathological scale-up.
-    if (!ctxDead) {
-      val sweepCost = 2.0 * Seq("q1_movierank", "q2_movierating")
-        .flatMap(state.synchronized(state.results.get(_))).filter(_ > 0).sum
-      if (elapsedS + sweepCost < 1.5 * budgetS) {
-        val sweepCounts = sys.env.getOrElse("SPARK_GRAFT_SWEEP", "8,32")
-          .split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
-        val sweep = sweepCounts.map { n =>
-          spark.conf.set("spark.sql.shuffle.partitions", n)
-          val per = Seq("q1_movierank", "q2_movierating").flatMap { name =>
-            queries.collectFirst { case (`name`, fn) => fn }.map { fn =>
-              val t0 = System.nanoTime()
-              try runOnce(fn, sfDir) catch { case _: Throwable => () }
-              name -> (System.nanoTime() - t0) / 1e9
-            }
-          }
-          n -> per
-        }
-        spark.conf.set("spark.sql.shuffle.partitions", cpus)
-        val sweepJson = sweep.map { case (n, per) =>
-          jstr(n.toString) + ":" +
-            per.map { case (k, v) => jstr(k) + ":" + jd(v) }.mkString("{", ",", "}")
-        }.mkString("{", ",", "}")
-        state.synchronized { state.sweepJson = sweepJson }
-      } else state.synchronized { state.sweepSkipped = true }
-    }
-    state.synchronized { state.budgetExceeded = elapsedS > budgetS }
-
-    // Per-query regression gate vs the previously committed run (always
-    // present in the detail — empty object IS the clean-run evidence).
-    // Cold singles (one pass, value includes JIT/artifact builds) are
-    // disclosed, not comparable — gating them against warm prior medians
-    // produced 15 phantom flags on the cold-tail run. Only queries with a
-    // real warm-up pass enter the gate.
-    val regressions = computeRegressions(prevQueries,
-      state.results.toSeq.filter { case (n, _) =>
-        state.repDetail.get(n).exists(_.size >= 2) },
-      state.repDetail.toMap)
-    state.synchronized { state.regressions = regressions }
-    regressions.foreach { case (n, p, v) =>
-      System.err.println(f"[bench] REGRESSION $n: $p%.2f s -> $v%.2f s (clean gc/steal)")
-    }
-    state.writeDetail(detailFile, partial = ctxDead)
-    if (!ctxDead) spark.stop()
+    val state = run(spark, queries, sfDir, detailFile, prev, skipParity)
+    val aborted = state.abortedAt.isDefined
+    if (!aborted) spark.stop()
     // Normal path prints LAST (after spark.stop()'s shutdown logging) so
     // the line sits inside the consumer's ~2000-char tail window — see
     // chooseHeadline. A context killed under us prints the aborted form;
-    // a SIGTERM that lands anywhere else is covered by the hook.
-    state.printHeadlineOnce(aborted = ctxDead)
-    try Runtime.getRuntime.removeShutdownHook(hook)
-    catch { case _: Throwable => () }
+    // a SIGTERM that lands anywhere else is covered by the abort hook.
+    state.printHeadlineOnce(aborted)
   }
 
   /** The stdout contract line, degraded to fit the consumer's tail window.
@@ -758,7 +515,6 @@ object Bench {
     * limit at pessimistic (3-digit) per-query values. */
   private[graft] def chooseHeadline(results: Seq[(String, Double)],
                                     errors: Seq[(String, String)],
-                                    nStalls: Int, nVetoed: Int, reps: Int,
                                     sfDir: String,
                                     detailWriteFailed: Boolean,
                                     parityOnly: Set[String] = Set.empty,
@@ -798,17 +554,15 @@ object Bench {
       val qs = kept.map { case (k, v) => jstr(k) + ":" + jnum(v, dp) }.mkString("{", ",", "}")
       // ZERO-valued disclosure counters are omitted (omitted ≡ 0; presence
       // means nonzero), as are empty `errors` and false
-      // `detail_write_failed` — at 84 queries the three ":0" counters alone
-      // (32 chars) are the difference between a full dp=0 per-query map and
-      // a truncated one. BENCH_SELF.json always carries every field.
+      // `detail_write_failed` — at 84 queries a few ":0" counters are the
+      // difference between a full dp=0 per-query map and a truncated one.
+      // BENCH_SELF.json always carries every field.
       val err = if (errors.isEmpty) "" else s""""errors":$errs,"n_failed":${errors.size},"""
-      val stl = if (nStalls == 0) "" else s""""n_stalls":$nStalls,"""
-      val vet = if (nVetoed == 0) "" else s""""n_guard_vetoed":$nVetoed,"""
       val reg = if (nRegressions == 0) "" else s""""n_regressions":$nRegressions,"""
       val dwf = if (detailWriteFailed) s""""detail_write_failed":true,""" else ""
       // sf as basename: the directory prefix is invariant noise.
       val sfShort = new java.io.File(sfDir).getName
-      s"""{"metric":"total",$extra"value":${jnum(total, 2)},$atScale"unit":"sec","queries":$qs,$omitted$err$stl$vet$reg$dwf"reps":$reps,"sf":"$sfShort"}"""
+      s"""{"metric":"total",$extra"value":${jnum(total, 2)},$atScale"unit":"sec","queries":$qs,$omitted$err$reg$dwf"reps":$Passes,"sf":"$sfShort"}"""
     }
     // 1700 is the comfortable target; a FULL per-query map is worth
     // stretching right up to the ~1930 hard limit (tail window 2000 minus
@@ -841,9 +595,8 @@ object Bench {
   * JVM needs only the production classpath. */
 private[graft] object BenchKillDemo {
   def main(args: Array[String]): Unit = {
-    val state = new Bench.RunState(reps = 3, sfDir = "/root/testdata/sf0.1",
-      parityOnly = Set.empty, skipParity = false, hostAvailable = false,
-      budgetS = 600.0)
+    val state = new Bench.RunState(sfDir = "/root/testdata/sf0.1",
+      parityOnly = Set.empty, skipParity = false, hostAvailable = false)
     state.synchronized {
       state.nTotal = 4
       state.results("q_done_fast") = 0.25

@@ -11,19 +11,14 @@ import graft.queries.DedupQueries.JaccardThreshold
   *
   * e.g. `runMain graft.PlanDump plans/r17 before dedup_weighted_jaccard_pairs`.
   * No query names → all registered queries. Plans print against
-  * SPARK_GRAFT_SF_DIR (default sf0.1 — the benched scale) under the same
-  * session shape as [[Bench]] (local[cpus], shuffle.partitions=cpus) so the
-  * dumped plan is the one the bench actually runs.
+  * SPARK_GRAFT_SF_DIR (default sf0.1 — the benched scale) in the session
+  * [[Bench.session]] builds, so the dumped plan is the one the bench runs.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     new java.io.File(outDir).mkdirs()
     val names =

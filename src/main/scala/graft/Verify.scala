@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicBoolean
+import Bench.jstr
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -55,19 +56,6 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
     // Atomic publish for every metadata file: a kill mid-write must never
     // leave the driver a torn JSON (the same _SUCCESS-last discipline the
     // snapshot protocol runs, at file granularity via rename).
@@ -81,7 +69,7 @@ object Verify {
     val oracleLock = new Object
     def writeOracles(): Unit = oracleLock.synchronized {
       val json = SparkEntry.oracleSql
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+        .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
       writeAtomic(s"$outDir/oracle_sql.json", json)
     }
 
@@ -96,15 +84,15 @@ object Verify {
 
     def writeStatus(): Unit = {
       val done = status.toSeq.sortBy(_._1)
-      val qs = done.collect { case (n, ("ok", s, _)) => s"${q(n)}:${f"$s%.2f"}" }
-      val failed = done.collect { case (n, ("fail", _, m)) => s"${q(n)}:${q(m)}" }
-      val skipped = done.collect { case (n, ("skip", _, _)) => q(n) }
+      val qs = done.collect { case (n, ("ok", s, _)) => s"${jstr(n)}:${f"$s%.2f"}" }
+      val failed = done.collect { case (n, ("fail", _, m)) => s"${jstr(n)}:${jstr(m)}" }
+      val skipped = done.collect { case (n, ("skip", _, _)) => jstr(n) }
       writeAtomic(s"$outDir/verify_status.json",
         s"""{"n_total":${names.size},"n_done":${qs.size},""" +
           s""""n_failed":${failed.size},"n_skipped":${skipped.size},""" +
           s""""aborted":${aborted.get},"budget_s":$budgetS,""" +
           s""""elapsed_s":${f"$elapsedS%.2f"},"threads":$nThreads,"cpus":$cpus,""" +
-          s""""sf":${q(sfDir)},"queries":{${qs.mkString(",")}},""" +
+          s""""sf":${jstr(sfDir)},"queries":{${qs.mkString(",")}},""" +
           s""""failed":{${failed.mkString(",")}},""" +
           s""""skipped":[${skipped.mkString(",")}]}""")
     }

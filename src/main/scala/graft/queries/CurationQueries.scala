@@ -417,7 +417,7 @@ object CurationQueries {
           concat(col("text"), lit(" v2"))).otherwise(col("text")))
         .select(col("doc_id"), col("text"))
       // the delta feeds BOTH applyDelta branches (anti + upsert) — pin it
-      // so the full-outer diff computes once (ExplainAudit showed the
+      // so the full-outer diff computes once (the physical plan showed the
       // unpinned lineage planning twice)
       val delta = Versioning.diffWithPayload(oldSnap, newSnap, "doc_id", "text")
         .localCheckpoint(eager = false)

@@ -6,39 +6,29 @@ import com.fasterxml.jackson.databind.ObjectMapper
 /** Pins the bench evidence serialization: round 5 shipped BENCH_SELF.json
   * with Scala `Rep(...)` toString literals in `rep_times`, making the whole
   * detail file unparseable — the machine-readable per-rep evidence the
-  * stall-guard design depends on was silently defeated. These tests parse
+  * regression gate depends on was silently defeated. These tests parse
   * the emitted JSON with Jackson (strict), not string matching. */
 class BenchJsonSpec extends AnyFunSuite {
   private val mapper = new ObjectMapper()
 
-  test("repJson emits a strict-JSON object with all eleven counters") {
+  test("repJson emits a strict-JSON object with all eight counters") {
     val node = mapper.readTree(
       Bench.repJson(Bench.Rep(1.187529307, 0.046, 3.125e-4, 0.0021875, 8.82,
-        0.37, readBytes = 1048576L, majflt = 3L, jit = 0.125,
-        codegenN = 2L, mhz = 3201.5)))
+        0.37, jit = 0.125, codegenN = 2L)))
     assert(node.get("wall").asDouble() === 1.187529307)
     assert(node.get("gc").asDouble() === 0.046)
     assert(node.get("steal").asDouble() === 3.125e-4)
     assert(node.get("iowait").asDouble() === 0.0021875)
     assert(node.get("cpu").asDouble() === 8.82)
     assert(node.get("other_cpu").asDouble() === 0.37)
-    assert(node.get("read_bytes").asLong() === 1048576L)
-    assert(node.get("majflt").asLong() === 3L)
     assert(node.get("jit").asDouble() === 0.125)
     assert(node.get("codegen_n").asLong() === 2L)
-    assert(node.get("mhz").asDouble() === 3201.5)
+    assert(node.size() === 8)
   }
 
   test("forensic counter readers return plausible values on this host") {
-    assume(new java.io.File("/proc/self/io").canRead)
-    val (rb, mf) = Bench.procIo()
-    assert(rb >= 0L, s"read_bytes $rb")
-    assert(mf >= 0L, s"majflt $mf")
     // jit is monotonic and this JVM has compiled SOMETHING by now
     assert(Bench.jitMillis() > 0L)
-    // mhz: either unavailable (-1) or a sane clock
-    val mhz = Bench.cpuMhz()
-    assert(mhz == -1.0 || (mhz > 100 && mhz < 10000), s"mhz $mhz")
     // codegen counter is readable (may be 0 if no SQL ran yet in this JVM)
     assert(Bench.codegenCount() >= 0L)
   }
@@ -51,6 +41,11 @@ class BenchJsonSpec extends AnyFunSuite {
     assert(node.get("q\"weird\nname").size() === 2)
     assert(node.get("q\"weird\nname").get(1).get("wall").asDouble() === 0.3)
     assert(node.get("empty_query").size() === 0)
+  }
+
+  test("jstr round-trips quotes, backslashes and control chars through a strict parse") {
+    val s = "a\"b\\c\nd\re\tf\u0001g"
+    assert(mapper.readTree(Bench.jstr(s)).asText() === s)
   }
 
   test("jd maps non-finite doubles to null (JSON has no NaN/Infinity)") {
@@ -74,7 +69,7 @@ class BenchJsonSpec extends AnyFunSuite {
     // the pre-degradation 1-decimal form measured 1959 and would have cost
     // the round its bench.
     val results = SparkEntry.queries.keys.toSeq.sorted.map(_ -> 123.456789)
-    val line = Bench.chooseHeadline(results, Seq.empty, 0, 0, 3,
+    val line = Bench.chooseHeadline(results, Seq.empty,
       "/root/testdata/sf0.1", detailWriteFailed = false)
     assert(line.length <= 1930,
       s"headline ${line.length} chars exceeds the ~1930 tail-window budget")
@@ -94,21 +89,14 @@ class BenchJsonSpec extends AnyFunSuite {
       assert(math.abs(accounted - total) <= 0.5 * (node.get("queries").size() + 1),
         s"headline accounting broken: kept+omitted=$accounted vs total=$total")
     }
-    // zero-valued counters are omitted (omitted ≡ 0, presence means nonzero)
-    assert(node.get("n_guard_vetoed") == null && node.get("n_stalls") == null)
     assert(node.get("sf").asText() === "sf0.1")
-    // nonzero counters must appear
-    val busy = mapper.readTree(Bench.chooseHeadline(results, Seq.empty, 2, 1, 3,
-      "/root/testdata/sf0.1", detailWriteFailed = false))
-    assert(busy.get("n_stalls").asInt() === 2)
-    assert(busy.get("n_guard_vetoed").asInt() === 1)
     // realistic values (sub-10s queries) must keep the FULL per-query map
     // while it can possibly fit: the 87-query dp=0 map measures ~1915 of
     // the 1925 stretch budget. If the registry outgrows ~88 current-shape
     // names the full map physically exceeds the tail window — truncation
     // then becomes legal but must stay disclosed (accounting assert).
     val realistic = SparkEntry.queries.keys.toSeq.sorted.map(_ -> 1.234567)
-    val rline = Bench.chooseHeadline(realistic, Seq.empty, 0, 0, 3,
+    val rline = Bench.chooseHeadline(realistic, Seq.empty,
       "/root/testdata/sf0.1", detailWriteFailed = false)
     assert(rline.length <= 1930)
     val rnode = mapper.readTree(rline)
@@ -128,7 +116,7 @@ class BenchJsonSpec extends AnyFunSuite {
       "dedup_minhash_xxhash", "stream_docs_neardup_banded")
       .foreach(t => assert(SparkEntry.queries.contains(t), s"missing twin $t"))
     val results = SparkEntry.queries.keys.toSeq.sorted.map(_ -> 2.0)
-    val line = Bench.chooseHeadline(results, Seq.empty, 0, 0, 3,
+    val line = Bench.chooseHeadline(results, Seq.empty,
       "/root/testdata/sf0.1", detailWriteFailed = false, parityOnly = tags)
     val node = mapper.readTree(line)
     assert(node.get("value_at_scale") != null, s"no value_at_scale in: $line")
@@ -138,7 +126,7 @@ class BenchJsonSpec extends AnyFunSuite {
     // with no tagged query in the run (e.g. SPARK_GRAFT_SKIP_PARITY_ONLY=1
     // or a filtered subset), the field is omitted — total IS at-scale
     val skipped = results.filterNot(r => tags(r._1))
-    val sline = Bench.chooseHeadline(skipped, Seq.empty, 0, 0, 3,
+    val sline = Bench.chooseHeadline(skipped, Seq.empty,
       "/root/testdata/sf0.1", detailWriteFailed = false, parityOnly = tags)
     assert(mapper.readTree(sline).get("value_at_scale") == null)
   }
@@ -190,10 +178,10 @@ class BenchJsonSpec extends AnyFunSuite {
 
   test("headline carries n_regressions only when nonzero") {
     val results = Seq("a" -> 1.0, "b" -> 2.0)
-    val clean = mapper.readTree(Bench.chooseHeadline(results, Seq.empty, 0, 0, 3,
+    val clean = mapper.readTree(Bench.chooseHeadline(results, Seq.empty,
       "/root/testdata/sf0.1", detailWriteFailed = false))
     assert(clean.get("n_regressions") == null)
-    val dirty = mapper.readTree(Bench.chooseHeadline(results, Seq.empty, 0, 0, 3,
+    val dirty = mapper.readTree(Bench.chooseHeadline(results, Seq.empty,
       "/root/testdata/sf0.1", detailWriteFailed = false, nRegressions = 2))
     assert(dirty.get("n_regressions").asInt() === 2)
   }
@@ -212,15 +200,12 @@ class BenchJsonSpec extends AnyFunSuite {
   test("budget/abort disclosure fields ride the headline and stay within the tail window") {
     // worst case: full current registry AND every deviation counter present
     val results = SparkEntry.queries.keys.toSeq.sorted.map(_ -> 123.456789)
-    val state = new Bench.RunState(reps = 3, sfDir = "/root/testdata/sf0.1",
-      parityOnly = Set.empty, skipParity = false, hostAvailable = true,
-      budgetS = 600.0)
+    val state = new Bench.RunState(sfDir = "/root/testdata/sf0.1",
+      parityOnly = Set.empty, skipParity = false, hostAvailable = true)
     state.synchronized {
       state.nTotal = results.size
       results.foreach { case (k, v) => state.results(k) = v }
-      state.nColdSingle = 91; state.nBudgetCut = 20; state.nStreamCapped = 15
-      state.sweepSkipped = true
-      state.budgetExceeded = true
+      state.warmupTruncated = 240
       state.abortedAt = Some("dedup_exact_rows")
     }
     val line = state.headline(aborted = true)
@@ -229,34 +214,30 @@ class BenchJsonSpec extends AnyFunSuite {
     val node = mapper.readTree(line)
     assert(node.get("aborted").asBoolean())
     assert(node.get("aborted_at").asText() === "dedup_exact_rows")
-    assert(node.get("reps_reduced").asInt() === 126)
-    assert(node.get("n_cold_single").asInt() === 91)
-    assert(node.get("sweep_skipped").asBoolean())
-    assert(node.get("budget_exceeded").asBoolean())
+    assert(node.get("warmup_truncated").asInt() === 240)
     // clean run: zero-valued disclosures are omitted entirely
-    val clean = mapper.readTree(Bench.chooseHeadline(results, Seq.empty, 0, 0, 3,
+    val clean = mapper.readTree(Bench.chooseHeadline(results, Seq.empty,
       "/root/testdata/sf0.1", detailWriteFailed = false))
-    Seq("aborted", "reps_reduced", "sweep_skipped", "n_cold_single",
-      "budget_exceeded").foreach(f => assert(clean.get(f) == null, f))
+    Seq("aborted", "warmup_truncated")
+      .foreach(f => assert(clean.get(f) == null, f))
   }
 
   test("RunState.detailJson is strict JSON carrying the full budget evidence") {
-    val state = new Bench.RunState(reps = 3, sfDir = "/data/sf0.1",
-      parityOnly = Set("q_parity"), skipParity = false, hostAvailable = true,
-      budgetS = 420.0)
+    val state = new Bench.RunState(sfDir = "/data/sf0.1",
+      parityOnly = Set("q_parity"), skipParity = false, hostAvailable = true)
     state.synchronized {
       state.nTotal = 3
       state.results("q_parity") = 2.0
       state.results("q_real") = 1.5
       state.repDetail("q_real") = Seq(Bench.Rep(1.5, 0.01, 0, 0, 1.6, 0))
       state.errors("q_bad") = "boom: \"quoted\""
-      state.nColdSingle = 1
+      state.warmupTruncated = 1
       state.regressions = Seq(("q_real", 0.5, 1.5))
     }
     val node = mapper.readTree(state.detailJson(partial = true))
     assert(node.get("partial").asBoolean())
-    assert(node.get("budget_s").asDouble() === 420.0)
-    assert(node.get("n_cold_single").asInt() === 1)
+    assert(node.get("warmup_truncated").asInt() === 1)
+    assert(node.get("reps").asInt() === Bench.Passes)
     assert(node.get("n_done").asInt() === 2 && node.get("n_total").asInt() === 3)
     assert(node.get("aborted_at").isNull && node.get("abort_exception").isNull)
     // at-scale total excludes the parity twin
@@ -271,7 +252,6 @@ class BenchJsonSpec extends AnyFunSuite {
     assume(f.isFile)
     val node = mapper.readTree(f)
     assert(node.get("rep_times") != null, "detail must carry per-rep evidence")
-    assert(node.get("guard_vetoed") != null, "vetoed guards must be disclosed")
     assert(node.get("host_counters_available") != null)
     val it = node.get("rep_times").elements()
     while (it.hasNext) {

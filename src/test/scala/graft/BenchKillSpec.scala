@@ -83,8 +83,8 @@ class BenchKillSpec extends AnyFunSuite {
     try {
       val f = dir.resolve("BENCH_SELF.json")
       java.nio.file.Files.write(f, "{\"queries\":{\"a\":1.0}}".getBytes("UTF-8"))
-      val state = new Bench.RunState(reps = 3, sfDir = "x", parityOnly = Set.empty,
-        skipParity = false, hostAvailable = false, budgetS = 600.0)
+      val state = new Bench.RunState(sfDir = "x", parityOnly = Set.empty,
+        skipParity = false, hostAvailable = false)
       val hook = Bench.installAbortHook(state, f.toString)
       Runtime.getRuntime.removeShutdownHook(hook)
       hook.run() // simulate the JVM firing it with zero queries completed
@@ -98,8 +98,8 @@ class BenchKillSpec extends AnyFunSuite {
   }
 
   test("printHeadlineOnce is exactly-once across the hook/normal-path race") {
-    val state = new Bench.RunState(reps = 3, sfDir = "x", parityOnly = Set.empty,
-      skipParity = false, hostAvailable = false, budgetS = 600.0)
+    val state = new Bench.RunState(sfDir = "x", parityOnly = Set.empty,
+      skipParity = false, hostAvailable = false)
     state.synchronized { state.results("q") = 1.0 }
     assert(state.printHeadlineOnce(aborted = false))
     assert(!state.printHeadlineOnce(aborted = true))
