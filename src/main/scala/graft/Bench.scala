@@ -66,14 +66,16 @@ object Bench {
       jstr(k) + ":" + ts.map(repJson).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
 
-  /** Per-query regression gate: a query regresses when its median is >
-    * `factor`× the previously committed full-surface median AND the
-    * slowness is NOT host-explained — the median rep's own GC plus
+  /** Per-query regression gate: a query regresses when its value is >
+    * `factor`× the previously committed full-surface value AND the
+    * slowness is NOT host-explained — the timed pass's own GC plus
     * measured CPU steal must cover < 30% of the excess over the previous
     * number, otherwise the slowness is charged to the host/GC, not the
-    * code. Sub-`floor` walls are skipped (fixed job overhead jitters
-    * 2–3× run-to-run at the 0.1 s scale without meaning anything), and the
-    * absolute excess over the previous median must reach `minExcess` —
+    * code. The evidence is the pass whose wall is the value (the last of
+    * `reps`), never a faster warm pass's counters. Sub-`floor` walls are
+    * skipped (fixed job overhead jitters 2–3× run-to-run at the 0.1 s
+    * scale without meaning anything), and the absolute excess over the
+    * previous value must reach `minExcess` —
     * without that term, consecutive clean full runs each flagged a
     * DIFFERENT sub-1.5 s query on ±0.8 s cross-window jitter (the
     * host-oscillation regime BASELINE.md documents), while every true
@@ -92,10 +94,8 @@ object Bench {
       prev.get(name) match {
         case Some(p) if p > 0 && v >= factor * p && v >= floor &&
             v - p >= minExcess =>
-          val rs = reps.getOrElse(name, Seq.empty).sortBy(_.wall)
-          val med = rs.lift(math.max(rs.size - 1, 0) / 2)
-          val hostExplained =
-            med.exists(r => r.gc + r.steal >= 0.3 * (r.wall - p))
+          val hostExplained = reps.get(name).flatMap(_.lastOption)
+            .exists(r => r.gc + r.steal >= 0.3 * (r.wall - p))
           if (hostExplained) None else Some((name, p, v))
         case _ => None
       }

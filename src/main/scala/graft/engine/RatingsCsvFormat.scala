@@ -1,6 +1,7 @@
 package graft.engine
 
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FileStatus
 import org.apache.hadoop.io.Text
@@ -9,18 +10,21 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityParser}
-import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.util.FailureSafeParser
-import org.apache.spark.sql.execution.datasources.{HadoopFileLinesReader, OutputWriterFactory,
-  PartitionedFile, TextBasedFileFormat}
+import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFileLinesReader,
+  OutputWriterFactory, PartitionedFile, TextBasedFileFormat}
+import org.apache.spark.sql.execution.vectorized.{ColumnVectorUtils, ConstantColumnVector,
+  OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.util.SerializableConfiguration
 
-/** Read-only file source for MovieLens-format `ratings.csv`: for a schema of
-  * INT, BIGINT and DOUBLE columns it returns, row for row and value for
-  * value, what `spark.read.option("header", "true").option("escape", "\"")
+/** Read-only columnar file source for MovieLens-format `ratings.csv`: for a
+  * schema of INT, BIGINT and DOUBLE columns it returns, row for row and value
+  * for value, what `spark.read.option("header", "true").option("escape", "\"")
   * .schema(schema).csv(path)` returns, but parses each line once and only
   * into the columns the query reads. The reference does the same with one
   * positional `line.split(",")` per line (MovieRank.java:58,
@@ -33,12 +37,20 @@ import org.apache.spark.util.SerializableConfiguration
   *     block that starts at byte 0, the first non-blank line (the header) are
   *     dropped: the lines the CSV reader with `header=true` skips
   *     (CSVHeaderChecker, CSVExprUtils);
+  *   - the lines left fill one reused [[ColumnarBatch]] of [[BatchRows]]
+  *     rows at a time: an [[OnHeapColumnVector]] per required column, plus a
+  *     [[ConstantColumnVector]] per partition column;
   *   - [[RatingsCsvFormat.strictLine]] parses a plain line straight from its
-  *     bytes into the required columns;
+  *     bytes into the vectors at its row id;
   *   - any other line goes to Spark's own parser as `from_csv` runs it: a
   *     [[UnivocityParser]] under a PERMISSIVE [[FailureSafeParser]] over the
   *     full nullable data schema, projected to the required columns after
   *     the parse, so no value depends on which columns a query selects.
+  *
+  * `supportBatch` is true, so whole-stage codegen reads the vectors through
+  * `ColumnarToRow`. Where Spark asks for rows instead (without whole-stage
+  * codegen), the same batches are read through `ColumnarBatch.rowIterator()`
+  * and projected to `UnsafeRow`s, as every file source's rows are.
   *
   * Use: `spark.read.format(classOf[RatingsCsvFormat].getName).schema(s)
   * .load(path)` ([[Sources.ratingsCsv]]). */
@@ -54,22 +66,32 @@ class RatingsCsvFormat extends TextBasedFileFormat {
   override def supportDataType(dataType: DataType): Boolean =
     RatingsCsvFormat.kind(dataType) >= 0
 
-  override def buildReader(spark: SparkSession, dataSchema: StructType,
-                           partitionSchema: StructType, requiredSchema: StructType,
-                           filters: Seq[Filter], options: Map[String, String],
-                           hadoopConf: Configuration): PartitionedFile => Iterator[InternalRow] = {
+  override def supportBatch(spark: SparkSession, dataSchema: StructType): Boolean = true
+
+  override def vectorTypes(requiredSchema: StructType, partitionSchema: StructType,
+                           sqlConf: SQLConf): Option[Seq[String]] =
+    Some(Seq.fill(requiredSchema.length)(classOf[OnHeapColumnVector].getName) ++
+      Seq.fill(partitionSchema.length)(classOf[ConstantColumnVector].getName))
+
+  override def buildReaderWithPartitionValues(
+      spark: SparkSession, dataSchema: StructType, partitionSchema: StructType,
+      requiredSchema: StructType, filters: Seq[Filter], options: Map[String, String],
+      hadoopConf: Configuration): PartitionedFile => Iterator[InternalRow] = {
     val conf = spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
     val schema = StructType(dataSchema.map(_.copy(nullable = true)))
-    val required = requiredSchema.fieldNames
-    val ordinals = schema.fieldNames.map(n => required.indexOf(n))
-    val rowTypes = requiredSchema.map(_.dataType)
+    val returningBatch = options.get(FileFormat.OPTION_RETURNING_BATCH).contains("true")
     val csvOptions = new CSVOptions(Sources.csvOptions, columnPruning = true,
       SQLConf.get.sessionLocalTimeZone)
     (file: PartitionedFile) => {
       val lines = new HadoopFileLinesReader(file, conf.value.value)
       Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => lines.close()))
-      RatingsCsvFormat.dataRows(lines, file.start == 0, schema, ordinals,
-        new SpecificInternalRow(rowTypes), csvOptions)
+      val batches = new RatingsCsvFormat.Batches(lines, file.start == 0, schema,
+        requiredSchema, partitionSchema, file.partitionValues, csvOptions)
+      if (returningBatch) batches.asInstanceOf[Iterator[InternalRow]]
+      else {
+        val toUnsafe = UnsafeProjection.create(StructType(requiredSchema ++ partitionSchema))
+        batches.flatMap(_.rowIterator().asScala).map(toUnsafe)
+      }
     }
   }
 
@@ -79,6 +101,10 @@ class RatingsCsvFormat extends TextBasedFileFormat {
 }
 
 object RatingsCsvFormat {
+  /** Rows per [[ColumnarBatch]], Spark's own default batch size for its
+    * columnar readers (`spark.sql.parquet.columnarReaderBatchSize`). */
+  val BatchRows = 4096
+
   private val IntKind: Byte = 0
   private val LongKind: Byte = 1
   private val DoubleKind: Byte = 2
@@ -105,13 +131,13 @@ object RatingsCsvFormat {
     *     `mantissa / 10^scale`: both operands are exact doubles and IEEE
     *     division rounds correctly, so it equals `Double.parseDouble`
     *     (Clinger's fast path).
-    * Field `f` is written to `out` at `ordinals(f)` as a primitive, or not at
-    * all when that is -1. Returns false, with `out` partly written, for a
-    * line outside the grammar. On its grammar the values equal what Spark's
-    * CSV parser makes of the line (`String.toInt`/`toLong`/`toDouble` per
-    * token). */
+    * Field `f` is written as a primitive to `out(f)` at `rowId`, or not at
+    * all when `out(f)` is null. Returns false, with the row partly written,
+    * for a line outside the grammar. On its grammar the values equal what
+    * Spark's CSV parser makes of the line (`String.toInt`/`toLong`/
+    * `toDouble` per token). */
   def strictLine(bytes: Array[Byte], length: Int, kinds: Array[Byte],
-                 ordinals: Array[Int], out: InternalRow): Boolean = {
+                 out: Array[WritableColumnVector], rowId: Int): Boolean = {
     var pos = 0
     var f = 0
     while (f < kinds.length) {
@@ -139,11 +165,11 @@ object RatingsCsvFormat {
         } else more = false
       }
       if (digits == 0 || scale == 0) return false
-      val o = ordinals(f)
-      if (o >= 0) {
-        if (k == IntKind) out.setInt(o, mantissa.toInt)
-        else if (k == LongKind) out.setLong(o, mantissa)
-        else out.setDouble(o, if (scale < 0) mantissa.toDouble else mantissa.toDouble / Pow10(scale))
+      val v = out(f)
+      if (v != null) {
+        if (k == IntKind) v.putInt(rowId, mantissa.toInt)
+        else if (k == LongKind) v.putLong(rowId, mantissa)
+        else v.putDouble(rowId, if (scale < 0) mantissa.toDouble else mantissa.toDouble / Pow10(scale))
       }
       f += 1
     }
@@ -160,29 +186,76 @@ object RatingsCsvFormat {
     true
   }
 
-  /** The rows of one file block, all written into `out`: one per line that
-    * the CSV reader with `header=true` parses (see [[RatingsCsvFormat]]). */
-  private def dataRows(lines: Iterator[Text], atFileStart: Boolean, schema: StructType,
-                       ordinals: Array[Int], out: InternalRow,
-                       csvOptions: CSVOptions): Iterator[InternalRow] = {
-    val kinds = this.kinds(schema)
-    lazy val fallback = {
+  /** The batches of one file block: every line that the CSV reader with
+    * `header=true` parses (see [[RatingsCsvFormat]]) becomes one row of the
+    * reused batch. `schema` is the full nullable data schema. */
+  private final class Batches(lines: Iterator[Text], atFileStart: Boolean, schema: StructType,
+                              requiredSchema: StructType, partitionSchema: StructType,
+                              partitionValues: InternalRow, csvOptions: CSVOptions)
+      extends Iterator[ColumnarBatch] {
+    private val kinds = RatingsCsvFormat.kinds(schema)
+    private val vectors = OnHeapColumnVector.allocateColumns(BatchRows, requiredSchema)
+    /** Per data column, its vector, or null when the query does not read it. */
+    private val out: Array[WritableColumnVector] =
+      schema.fieldNames.map { n =>
+        val i = requiredSchema.fieldNames.indexOf(n)
+        if (i >= 0) vectors(i) else null
+      }
+    private val constants = partitionSchema.fields.indices.map { i =>
+      val c = new ConstantColumnVector(BatchRows, partitionSchema(i).dataType)
+      ColumnVectorUtils.populate(c, partitionValues, i)
+      c
+    }
+    private val batch = new ColumnarBatch((vectors ++ constants).toArray[ColumnVector])
+    private lazy val fallback = {
       val parser = new UnivocityParser(schema, schema, csvOptions)
       new FailureSafeParser[String](s => parser.parse(s), csvOptions.parseMode, schema,
         csvOptions.columnNameOfCorruptRecord)
     }
-    var headerPending = atFileStart
-    lines.filter { line =>
-      if (isBlank(line)) false
-      else if (headerPending) { headerPending = false; false }
-      else true
-    }.map { line =>
-      if (!strictLine(line.getBytes, line.getLength, kinds, ordinals, out)) {
-        val row = fallback.parse(new String(line.getBytes, 0, line.getLength, UTF_8)).next()
-        for (f <- kinds.indices if ordinals(f) >= 0)
-          out.update(ordinals(f), row.get(f, schema(f).dataType))
+    private var headerPending = atFileStart
+    private var filled = false
+
+    /** Parses Spark's way a line [[strictLine]] refused, into row `rowId`. */
+    private def fallbackLine(line: Text, rowId: Int): Unit = {
+      val row = fallback.parse(new String(line.getBytes, 0, line.getLength, UTF_8)).next()
+      var f = 0
+      while (f < kinds.length) {
+        val v = out(f)
+        if (v != null) {
+          if (row.isNullAt(f)) v.putNull(rowId)
+          else if (kinds(f) == IntKind) v.putInt(rowId, row.getInt(f))
+          else if (kinds(f) == LongKind) v.putLong(rowId, row.getLong(f))
+          else v.putDouble(rowId, row.getDouble(f))
+        }
+        f += 1
       }
-      out
+    }
+
+    override def hasNext: Boolean = {
+      if (!filled) {
+        vectors.foreach(_.reset())
+        var n = 0
+        while (n < BatchRows && lines.hasNext) {
+          val line = lines.next()
+          if (!isBlank(line)) {
+            if (headerPending) headerPending = false
+            else {
+              if (!strictLine(line.getBytes, line.getLength, kinds, out, n)) fallbackLine(line, n)
+              n += 1
+            }
+          }
+        }
+        batch.setNumRows(n)
+        filled = true
+        if (n == 0) batch.close() // the block is done
+      }
+      batch.numRows > 0
+    }
+
+    override def next(): ColumnarBatch = {
+      if (!hasNext) throw new NoSuchElementException("no more ratings batches")
+      filled = false
+      batch
     }
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * physical plan is:
   *   Scan(fact) → partial HashAggregate(factKey) → Exchange(hash) →
   *   final HashAggregate → BroadcastHashJoin(dim) → HashAggregate(key, title) →
-  *   Filter(HAVING) → Exchange(range) → Sort
+  *   Filter(HAVING) → Exchange(single partition) → Sort
   * i.e. exactly two in-flight shuffles and zero durable intermediates; the
   * DistributedCache replicated-HashMap join (MovieRank.java:30-51,67) becomes
   * `broadcast(dim)` → BroadcastExchangeExec.
@@ -32,8 +32,14 @@ import org.apache.spark.sql.functions._
   *     and only that reaches the join;
   *   - the (key, title) re-aggregate adds no exchange: the broadcast join's
   *     output partitioning, hashed on factKey, also covers dimKey;
-  *   - the final global sort range-partitions only the aggregated rows
-  *     (|dim|-sized), never the fact.
+  *   - the final global sort runs in one partition: `repartition(1)` moves
+  *     only the aggregated rows (at most one per dimension row, and the
+  *     dimension is already broadcast whole to every task), never the fact.
+  *     A range-partitioned sort would first launch a sampling job that
+  *     recomputes the aggregate, the join and the re-aggregate, and then
+  *     compute them all again for the exchange. `coalesce(1)` would not do:
+  *     it pulls the fact-key final aggregate, bounded by distinct fact keys
+  *     and not by |dim|, into one task.
   */
 object RefQueries {
 
@@ -54,7 +60,7 @@ object RefQueries {
     val agg = perMember(fact, dim, factKey, dimKey, titleCol, measure = None)
       .withColumnRenamed("n", "cnt")
     val cntOrder = if (asc) col("cnt").asc else col("cnt").desc
-    agg.orderBy(cntOrder, col("key").asc)
+    agg.repartition(1).orderBy(cntOrder, col("key").asc)
   }
 
   /** Q2 "MovieRating" (MovieRating.java:140-210; README.md:13): per-dimension
@@ -77,7 +83,7 @@ object RefQueries {
       .drop("avg_raw")
     val avgOrder = if (asc) col("avg_rating").asc else col("avg_rating").desc
     agg.select(col("key"), col("title"), col("avg_rating"), col("num_ratings"))
-      .orderBy(avgOrder, col("key").asc)
+      .repartition(1).orderBy(avgOrder, col("key").asc)
   }
 
   /** The shared aggregate-before-join core: (key, title, n[, avg_raw]) per

@@ -14,9 +14,10 @@ import org.apache.spark.sql.types._
   *     (reference: MovieRank.java:58, MovieRating.java:59) and its hand-rolled
   *     header skip (MovieRank.java:40-41,61-63 → `option("header", true)`)
   *     and quoted-title reassembly (MovieRank.java:44-47 → RFC-4180 `quote`).
-  *     ratings.csv keeps the CSV reader's results but is read by a file
-  *     source of its own, [[RatingsCsvFormat]], which parses each line once
-  *     and only into the columns a query reads (see [[ratingsCsv]]).
+  *     ratings.csv keeps the CSV reader's results but is read by a columnar
+  *     file source of its own, [[RatingsCsvFormat]], which parses each line
+  *     once and only into the column vectors a query reads (see
+  *     [[ratingsCsv]]).
   *
   * At 100 TB the fact tables arrive as Parquet; keeping readers schema-declared
   * (never `inferSchema`) means one footer read, stable types for the oracle,
@@ -111,14 +112,16 @@ object Sources {
     * .schema(ratingsSchema).csv(path)` returns, at a fraction of its parse
     * cost. The reference splits each line once by position and reads only
     * the fields it uses (`line.split(",")`, MovieRank.java:58,65,
-    * MovieRating.java:59,68); [[RatingsCsvFormat]] does the same as a file
-    * source: each line is parsed once, a plain digit line straight from its
-    * bytes, any other line by Spark's own CSV parser, and only into the
-    * columns the query reads, so the scan's `ReadSchema` is the query's
-    * columns and the join's `isnotnull(movieId)` tests an already-parsed
-    * value. Blank lines and each file's header (header skip ≙
-    * MovieRank.java:61-63) are dropped inside the scan, as the CSV reader
-    * drops them, so neither counts as an input record. */
+    * MovieRating.java:59,68); [[RatingsCsvFormat]] does the same as a
+    * columnar file source: each line is parsed once, a plain digit line
+    * straight from its bytes, any other line by Spark's own CSV parser, and
+    * only into the column vectors of the columns the query reads, a batch of
+    * [[RatingsCsvFormat.BatchRows]] rows at a time. The scan's `ReadSchema`
+    * is the query's columns, it shows `Batched: true`, and whole-stage
+    * codegen reads the vectors directly, so the join's `isnotnull(movieId)`
+    * tests an already-parsed value. Blank lines and each file's header
+    * (header skip ≙ MovieRank.java:61-63) are dropped inside the scan, as
+    * the CSV reader drops them, so neither counts as an input record. */
   def ratingsCsv(spark: SparkSession, path: String): DataFrame =
     spark.read.format(classOf[RatingsCsvFormat].getName).schema(ratingsSchema).load(path)
 }

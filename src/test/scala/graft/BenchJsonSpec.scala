@@ -157,6 +157,20 @@ class BenchJsonSpec extends AnyFunSuite {
     assert(Bench.computeRegressions(Map("a" -> 1.0), Seq("a" -> -1.0), Map.empty).isEmpty)
   }
 
+  test("regression gate: host evidence comes from the timed pass, not a faster warm pass") {
+    def rep(wall: Double, gc: Double = 0.0, steal: Double = 0.0) =
+      Bench.Rep(wall, gc, steal, 0.0, wall, 0.0)
+    val prev = Map("q" -> 1.0)
+    // the warm pass is faster and its gc+steal would excuse the 3 s value,
+    // but the timed pass (the value) ran clean: the regression flags
+    assert(Bench.computeRegressions(prev, Seq("q" -> 3.0),
+      Map("q" -> Seq(rep(2.5, gc = 0.8, steal = 0.2), rep(3.0)))).map(_._1) === Seq("q"))
+    // mirror: the faster warm pass ran clean, the timed pass's own gc+steal
+    // covers 30% of its excess: charged to the host
+    assert(Bench.computeRegressions(prev, Seq("q" -> 3.0),
+      Map("q" -> Seq(rep(2.5), rep(3.0, gc = 0.5, steal = 0.2)))).isEmpty)
+  }
+
   test("regression gate: readPrevQueries keys on matching sf and degrades to empty") {
     val dir = java.nio.file.Files.createTempDirectory("benchprev")
     try {

@@ -37,6 +37,16 @@ class MovieAnalysisSpec extends AnyFunSuite {
     assert(got.toSeq == Seq((2, 4.2273, 11L), (1, 4.5, 12L), (6, 4.5, 12L)))
   }
 
+  test("plan: each pipeline sorts its result in one partition, with no range sort") {
+    Seq(MovieAnalysis.movieRank(movies, ratings), MovieAnalysis.movieRating(movies, ratings))
+      .foreach { df =>
+        val plan = df.queryExecution.executedPlan.toString
+        assert(!plan.contains("rangepartitioning"), s"the final sort must not range-partition:\n$plan")
+        assert("Exchange SinglePartition".r.findAllMatchIn(plan).size == 1,
+          s"expected exactly one single-partition exchange in:\n$plan")
+      }
+  }
+
   test("comma-in-title parsed per RFC-4180 with quotes stripped (P3 delta)") {
     val titles = movies.where(col("movieId") === 2).select("title").collect()
     assert(titles.head.getString(0) == "Heat, The (1995)")

@@ -35,6 +35,7 @@ class RefParityQueriesSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join in:\n$plan")
     assert(!plan.contains("SortMergeJoin"), "dimension join must not shuffle the fact side")
     assertFactAggregatedBeforeJoin(plan)
+    assertSortedInOnePartition(plan)
   }
 
   test("q2_movierating plan: broadcast join + two-phase aggregate, no extra shuffle") {
@@ -43,6 +44,7 @@ class RefParityQueriesSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join in:\n$plan")
     assert(!plan.contains("SortMergeJoin"), "dimension join must not shuffle the fact side")
     assertFactAggregatedBeforeJoin(plan)
+    assertSortedInOnePartition(plan)
   }
 
   /** The lineitem side is counted per l_partkey below the part join, and the
@@ -54,6 +56,14 @@ class RefParityQueriesSpec extends AnyFunSuite {
     assert(factAggIdx > joinIdx, s"fact aggregate must sit below the join in:\n$plan")
     assert("Exchange hashpartitioning".r.findAllMatchIn(plan).size == 1,
       s"expected only the fact aggregate's hash exchange in:\n$plan")
+  }
+
+  /** The final sort runs in one partition: no range-partitioned sort (and
+    * so no sampling job), one single-partition exchange. */
+  private def assertSortedInOnePartition(plan: String): Unit = {
+    assert(!plan.contains("rangepartitioning"), s"the final sort must not range-partition:\n$plan")
+    assert("Exchange SinglePartition".r.findAllMatchIn(plan).size == 1,
+      s"expected exactly one single-partition exchange in:\n$plan")
   }
 
   test("q1_movielens_csv plan: aggregate below the join, dimension broadcast") {

@@ -7,19 +7,22 @@ import scala.jdk.CollectionConverters._
 import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
+import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.functions.{col, from_csv}
+import org.apache.spark.sql.types.{IntegerType, StringType}
 import graft.engine.{MovieAnalysis, RatingsCsvFormat, Sources}
 import graft.queries.RefParityQueries
 
-/** `Sources.ratingsCsv` (the `RatingsCsvFormat` file source: header/blank
-  * skip, one-pass strict parse of plain lines, Spark's own parser for the
-  * rest) ≡ Spark's CSV reader with the options it replaces, on seeded files
-  * built to hit every line the strict grammar refuses, at the default split
-  * size and with 64 KB splits, gzipped too, and for any set of selected
-  * columns; plus the guards that the strict grammar takes every plain
-  * MovieLens line and that the pipelines' ratings scans read only the
-  * columns they use. */
+/** `Sources.ratingsCsv` (the columnar `RatingsCsvFormat` file source:
+  * header/blank skip, one-pass strict parse of plain lines, Spark's own
+  * parser for the rest, 4096-row column batches) ≡ Spark's CSV reader with
+  * the options it replaces, on seeded files built to hit every line the
+  * strict grammar refuses, at the default split size and with 64 KB splits,
+  * gzipped too, for any set of selected columns, with partition and
+  * `_metadata` columns, across batch edges and through the row adapter
+  * (no whole-stage codegen); plus the guards that the strict grammar takes
+  * every plain MovieLens line and that the pipelines' ratings scans are
+  * batched and read only the columns they use. */
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -83,17 +86,20 @@ class SourcesSpec extends AnyFunSuite {
 
   private def writeDir(files: Seq[(String, String)]): Path = {
     val dir = Files.createTempDirectory("graft_sources")
-    files.foreach { case (name, text) => Files.write(dir.resolve(name), text.getBytes(UTF_8)) }
+    files.foreach { case (name, text) =>
+      val f = dir.resolve(name)
+      Files.createDirectories(f.getParent)
+      Files.write(f, text.getBytes(UTF_8))
+    }
     dir
   }
 
   private def deleteDir(dir: Path): Unit =
     new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
 
-  private def withMaxPartitionBytes[T](bytes: String)(body: => T): T = {
-    val key = "spark.sql.files.maxPartitionBytes"
+  private def withConf[T](key: String, value: String)(body: => T): T = {
     val before = spark.conf.getOption(key)
-    spark.conf.set(key, bytes)
+    spark.conf.set(key, value)
     try body
     finally before match {
       case Some(v) => spark.conf.set(key, v)
@@ -101,12 +107,22 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  private def withMaxPartitionBytes[T](bytes: String)(body: => T): T =
+    withConf("spark.sql.files.maxPartitionBytes", bytes)(body)
+
+  /** Without whole-stage codegen Spark reads the scan as rows. */
+  private def withoutWholeStageCodegen[T](body: => T): T =
+    withConf("spark.sql.codegen.wholeStage", "false")(body)
+
+  private def assertSameRows(got: DataFrame, expected: DataFrame, what: String): Unit = {
+    assert(got.schema == expected.schema, what)
+    assert(got.exceptAll(expected).count() == 0, s"rows only in ratingsCsv: $what")
+    assert(expected.exceptAll(got).count() == 0, s"rows only in the CSV reader: $what")
+  }
+
   private def assertSameAsCsvReader(path: String): Long = {
     val got = Sources.ratingsCsv(spark, path)
-    val expected = csvReader(path)
-    assert(got.schema == expected.schema)
-    assert(got.exceptAll(expected).count() == 0, s"rows only in ratingsCsv($path)")
-    assert(expected.exceptAll(got).count() == 0, s"rows only in the CSV reader's $path")
+    assertSameRows(got, csvReader(path), path)
     got.count()
   }
 
@@ -160,16 +176,20 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
-  /** Each line through `RatingsCsvFormat.strictLine` over all four columns:
-    * its row, or null where the grammar refuses the line. */
+  /** Each line through `RatingsCsvFormat.strictLine` over all four columns,
+    * written into column vectors at row id 1: its row, or null where the
+    * grammar refuses the line. */
   private def strict(lines: Seq[String]): Seq[Row] = {
     val schema = Sources.ratingsSchema
     val kinds = RatingsCsvFormat.kinds(schema)
+    val vectors = OnHeapColumnVector.allocateColumns(2, schema)
+    val out = vectors.toArray[WritableColumnVector]
     lines.map { line =>
       val bytes = line.getBytes(UTF_8)
-      val out = new SpecificInternalRow(schema.map(_.dataType))
-      if (!RatingsCsvFormat.strictLine(bytes, bytes.length, kinds, Array(0, 1, 2, 3), out)) null
-      else Row(out.getInt(0), out.getInt(1), out.getDouble(2), out.getLong(3))
+      vectors.foreach(_.reset())
+      if (!RatingsCsvFormat.strictLine(bytes, bytes.length, kinds, out, 1)) null
+      else Row(vectors(0).getInt(1), vectors(1).getInt(1), vectors(2).getDouble(1),
+        vectors(3).getLong(1))
     }
   }
 
@@ -226,6 +246,7 @@ class SourcesSpec extends AnyFunSuite {
         val scans = plan.linesIterator.filter(_.contains("Format: RatingsCsv")).toSeq
         assert(scans.nonEmpty, s"no RatingsCsv scan in:\n$plan")
         scans.foreach(l => assert(l.contains(s"ReadSchema: $readSchema"), s"scan reads more than $readSchema:\n$l"))
+        scans.foreach(l => assert(l.contains("Batched: true"), s"the scan must return batches:\n$l"))
         Seq("from_csv", "strict_csv_line").foreach(f =>
           assert(!plan.contains(f), s"the parse must stay inside the scan, found $f in:\n$plan"))
     }
@@ -245,6 +266,74 @@ class SourcesSpec extends AnyFunSuite {
         assert(Sources.ratingsCsv(spark, gz.toString).rdd.getNumPartitions == 1)
         assert(assertSameAsCsvReader(gz.toString) == rows)
       }
+    } finally deleteDir(dir)
+  }
+
+  test("ratingsCsv ≡ the CSV reader on a Hive-partitioned directory, int and string partitions") {
+    val rnd = new Random(20261018L)
+    def file(n: Int) = ratingsFile(rnd, n, "\n", trailingEol = true, leadingBlanks = 0)
+    val dir = writeDir(Seq("part=1/tag=a/r.csv" -> file(3000), "part=1/tag=b/r.csv" -> file(2000),
+      "part=2/tag=a/r.csv" -> file(2500)))
+    try {
+      val got = Sources.ratingsCsv(spark, dir.toString)
+      assert(got.schema("part").dataType == IntegerType && got.schema("tag").dataType == StringType)
+      assert(assertSameAsCsvReader(dir.toString) > 6000)
+      Seq(Seq("movieId", "tag"), Seq("part"), Seq("tag", "rating", "part")).foreach { cols =>
+        assertSameRows(got.select(cols.map(col): _*),
+          csvReader(dir.toString).select(cols.map(col): _*), s"select(${cols.mkString(", ")})")
+      }
+      assertSameRows(got.where(col("part") === 2 && col("tag") === "a").select("userId", "tag"),
+        csvReader(dir.toString).where(col("part") === 2 && col("tag") === "a").select("userId", "tag"),
+        "part=2/tag=a")
+    } finally deleteDir(dir)
+  }
+
+  test("ratingsCsv ≡ the CSV reader with a _metadata column, default and 64 KB splits") {
+    val dir = writeDir(oddFiles())
+    def check(): Unit = {
+      val cols = Seq(col("movieId"), col("_metadata.file_name"))
+      assertSameRows(Sources.ratingsCsv(spark, dir.toString).select(cols: _*),
+        csvReader(dir.toString).select(cols: _*), "select(movieId, _metadata.file_name)")
+    }
+    try {
+      check()
+      withMaxPartitionBytes("64KB")(check())
+    } finally deleteDir(dir)
+  }
+
+  test("ratingsCsv ≡ the CSV reader on seeded odd files through the row adapter") {
+    val dir = writeDir(oddFiles())
+    try withoutWholeStageCodegen {
+      val scan = Sources.ratingsCsv(spark, dir.toString).queryExecution.executedPlan.toString
+      assert(scan.contains("Batched: false"), s"without whole-stage codegen the scan reads rows:\n$scan")
+      val rows = assertSameAsCsvReader(dir.toString)
+      assert(rows > 17000)
+      withMaxPartitionBytes("64KB")(assert(assertSameAsCsvReader(dir.toString) == rows))
+    } finally deleteDir(dir)
+  }
+
+  test("ratingsCsv ≡ the CSV reader across batch edges: fallback, blank and header lines at the seams") {
+    val rows = RatingsCsvFormat.BatchRows
+    val rnd = new Random(20261019L)
+    // data row i is the i-th line the CSV reader parses
+    val data = Array.fill(2 * rows + 900)(plainLine(rnd))
+    data(rows - 1) = "1,2,,964982703"               // last row of batch 1: fallback, null rating
+    data(rows) = header                              // first row of batch 2: a repeated header
+    data(2 * rows - 1) = "424242,4242,4.25,1234567890123" // last row of batch 2: strict
+    data(2 * rows + 17) = "\"3\",5,4.0,964982703"    // a fallback line in batch 3
+    val lines = (header +: data.take(rows)) ++ Seq("", "  ") ++ data.slice(rows, rows + 1) ++
+      Seq("\t", "") ++ data.drop(rows + 1)
+    val dir = writeDir(Seq("edges.csv" -> lines.mkString("", "\n", "\n")))
+    val path = dir.resolve("edges.csv").toString
+    try {
+      assert(Sources.ratingsCsv(spark, path).rdd.getNumPartitions == 1, "the file must be one block")
+      assert(assertSameAsCsvReader(path) == data.length)
+      withoutWholeStageCodegen(assert(assertSameAsCsvReader(path) == data.length))
+      val got = Sources.ratingsCsv(spark, path)
+      assert(got.where(col("userId") === 424242).collect().toSeq ==
+        Seq(Row(424242, 4242, 4.25, 1234567890123L)))
+      assert(got.where(col("userId") === 1 && col("movieId") === 2 && col("rating").isNull)
+        .count() == 1)
     } finally deleteDir(dir)
   }
 }
