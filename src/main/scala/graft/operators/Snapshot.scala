@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 /** ATOMIC SNAPSHOT-COMMIT protocol over plain parquet — the binder the
   * round-14 verdict named as the missing piece: the lakehouse operators
@@ -28,9 +30,10 @@ import org.apache.spark.sql.functions._
   *                                      append-only, never rewritten
   *     manifests/snap=<id>/… + _SUCCESS the snapshot's manifest LIST: one
   *                                      row per live segment (dir, seq,
-  *                                      n_files, n_rows, segment-level
-  *                                      min_<c>/max_<c> envelopes) + the
-  *                                      snapshot's delete metadata
+  *                                      n_files, n_rows, write schema,
+  *                                      segment-level min_<c>/max_<c>
+  *                                      envelopes) + the snapshot's commit
+  *                                      op and delete metadata
   *     dv/c=<id>/                       positional delete DELTA vectors
   *     eqdv/c=<id>/                     equality-delete key tables
   *     refs/<name>/r=<k>/               versioned named-ref pointers
@@ -49,6 +52,11 @@ import org.apache.spark.sql.functions._
   *      millions of data files). `_SUCCESS` lands LAST and is the atomic
   *      publish: a crash before it leaves torn segments or orphan data
   *      files, both invisible to every reader.
+  *
+  * A reader or commit call collects each manifest list it needs ONCE,
+  * into one driver-side value, and derives segments, delete metadata, op
+  * and schema from those rows; a list that lacks a column of this layout
+  * is refused.
   *
   * What this buys, spec-pinned in SnapshotSpec:
   *   - SNAPSHOT ISOLATION: a reader resolves one list and sees exactly
@@ -118,17 +126,23 @@ object Snapshot {
     * strictly under it — the replay-idempotence cutoff a streaming batch
     * commit resolves its predecessor with ([[commitAppendAt]]). */
   def currentSnapshotId(spark: SparkSession, tableDir: String,
-                        below: Long = Long.MaxValue): Option[Long] = {
-    val (fs, _) = hadoopFs(spark, tableDir)
-    val dir = new org.apache.hadoop.fs.Path(s"$tableDir/manifests")
-    if (!fs.exists(dir)) None
-    else fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("snap=") &&
+                        below: Long = Long.MaxValue): Option[Long] =
+    committedIds(spark, s"$tableDir/manifests", "snap=")
+      .filter(_ < below).lastOption
+
+  /** The `n` of every `<prefix><n>` subdirectory of `dir` that carries
+    * `_SUCCESS`, ascending — the one listing rule behind snapshot ids and
+    * ref versions. */
+  private def committedIds(spark: SparkSession, dir: String,
+                           prefix: String): Seq[Long] = {
+    val (fs, p) = hadoopFs(spark, dir)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix) &&
         fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
       .flatMap(st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("snap=").toLong).toOption)
-      .filter(_ < below)
-      .sorted.lastOption
+        scala.util.Try(st.getPath.getName.stripPrefix(prefix).toLong).toOption)
+      .sorted
   }
 
   // ------------------------------------------------------------------
@@ -136,156 +150,140 @@ object Snapshot {
   // ------------------------------------------------------------------
 
   /** The raw manifest LIST of snapshot `id`: one row per segment
-    * (segment, seq, n_files, n_rows, segment-level min_<c>/max_<c>) plus the
-    * snapshot's delete metadata columns (dv_dirs, eq_dirs, eq_seqs —
-    * constant across rows).
+    * (segment, seq, n_files, n_rows, schema_json, segment-level
+    * min_<c>/max_<c>) plus the snapshot's commit `op` and delete metadata
+    * columns (dv_dirs, eq_dirs, eq_seqs — constant across rows).
     *
-    * Returned LOCALIZED (collected once, rebuilt as a LocalRelation): a
-    * manifest list is |segments|-sized metadata, and every reader peeks at
-    * it several times (segment dirs, delete metadata, carried schema, op,
-    * stats envelopes). Against the lazy file-backed frame each peek was
-    * its own distributed job over a KB parquet — per-snapshot reads paid
-    * 3-6 metadata jobs before touching data (round-17 optimization,
-    * guide §5/§7.3: metadata decisions should not be cluster jobs). Over
-    * a LocalRelation, projections/filters fold at optimization time
-    * (ConvertToLocalRelation) so the peeks cost zero jobs, and the
-    * driver-side copy is bounded by manifest-list cardinality — the same
-    * boundedness contract the collects themselves already relied on. */
+    * Returned LOCALIZED: the list is collected once and rebuilt as a
+    * LocalRelation, so projections and filters over it fold at
+    * optimization time and launch no job. A manifest list is
+    * |segments|-sized metadata, the bound every driver-side collect of
+    * this protocol relies on. */
   def readManifestList(spark: SparkSession, tableDir: String,
-                       id: Long): DataFrame = {
-    val df = spark.read.parquet(s"$tableDir/manifests/snap=$id")
-    spark.createDataFrame(df.collectAsList(), df.schema)
+                       id: Long): DataFrame =
+    manifestList(spark, tableDir, id).rows
+
+  /** One live segment of a manifest list. */
+  private final case class Segment(dir: String, seq: Long, nFiles: Long,
+                                   nRows: Long)
+
+  /** A snapshot's manifest list, collected ONCE. `rows` is the localized
+    * list, kept for [[readPruned]]'s `keep` predicate and the commits'
+    * unions; every other field is derived on the driver from the same
+    * collected rows. `dv` holds the positional delta-vector dirs and `eq`
+    * the (equality-delete dir, seq) pairs, distinct, first-occurrence
+    * order. */
+  private final class ManifestList(val rows: DataFrame,
+                                   val segments: IndexedSeq[Segment],
+                                   val dv: Seq[String],
+                                   val eq: Seq[(String, Long)],
+                                   val op: String,
+                                   schemaJsons: Seq[String]) {
+    def dirs: IndexedSeq[String] = segments.map(_.dir)
+
+    /** METADATA-CARRIED TABLE SCHEMA (the Iceberg schema-evolution
+      * answer): every list row stores its segment's write schema as JSON,
+      * and the table's read schema is the NAME-BASED UNION of all segment
+      * schemas in seq order — so `read` needs no footer merging (O(1)
+      * schema resolution at any file count), a later append may ADD
+      * columns, and earlier files read the new columns as null (the
+      * parquet missing-column contract). Type conflicts across generations
+      * are refused loudly; dropping/renaming columns is out of scope
+      * (unions only grow — the Iceberg default behavior without an
+      * explicit schema update op). Lazy: commits never evaluate it, so a
+      * conflicting append lands and the READ refuses it. */
+    lazy val schema: StructType = {
+      val fields = scala.collection.mutable.LinkedHashMap[String, StructField]()
+      schemaJsons.foreach(j => DataType.fromJson(j).asInstanceOf[StructType]
+        .foreach { f =>
+          fields.get(f.name) match {
+            case Some(prev) =>
+              require(prev.dataType == f.dataType,
+                s"schema evolution type conflict on '${f.name}': " +
+                  s"${prev.dataType} vs ${f.dataType}")
+            case None => fields(f.name) = f.copy(nullable = true)
+          }
+        })
+      StructType(fields.values.toIndexedSeq)
+    }
   }
 
-  /** Manifest-list reads scoped to ONE reader call: a window reader
-    * ([[readChangelog]], [[readIncremental]], [[history]],
-    * [[tailChangelog]]) touches the same snapshot's list several times —
-    * commit id's list is also commit id+1's PARENT list, and [[commitOp]]
-    * classification reads it again — each a separate localization job
-    * without this. Deliberately NOT module-level: the cache lives and dies
-    * inside a single reader invocation, so every bench/oracle run still
-    * reads all metadata from disk (no cross-run memoization). */
+  /** The columns every manifest list of this layout carries. */
+  private val listColumns = Seq("segment", "seq", "n_files", "n_rows",
+    "schema_json", "op", "dv_dirs", "eq_dirs", "eq_seqs")
+
+  /** Collect snapshot `id`'s manifest list (one Spark action) and derive
+    * its [[ManifestList]] fields. A list lacking any of [[listColumns]] is
+    * refused: it was not written by this protocol's commits. */
+  private def manifestList(spark: SparkSession, tableDir: String,
+                           id: Long): ManifestList = {
+    val df = spark.read.parquet(s"$tableDir/manifests/snap=$id")
+    listColumns.find(c => !df.columns.contains(c)).foreach(c =>
+      throw new IllegalStateException(
+        s"snapshot $id under $tableDir: manifest list lacks column '$c'"))
+    val collected = df.collectAsList()
+    val rs = collected.asScala.toIndexedSeq
+    require(rs.nonEmpty, s"snapshot $id has an empty manifest list")
+    def arr[T](r: Row, c: String): Seq[T] = {
+      val i = r.fieldIndex(c)
+      if (r.isNullAt(i)) Nil else r.getSeq[T](i)
+    }
+    new ManifestList(spark.createDataFrame(collected, df.schema),
+      rs.map(r => Segment(r.getAs[String]("segment"), r.getAs[Long]("seq"),
+        r.getAs[Long]("n_files"), r.getAs[Long]("n_rows"))),
+      rs.flatMap(arr[String](_, "dv_dirs")).distinct,
+      rs.flatMap(r => arr[String](r, "eq_dirs").zip(arr[Long](r, "eq_seqs")))
+        .distinct,
+      rs.head.getAs[String]("op"),
+      rs.sortBy(_.getAs[Long]("seq")).map(_.getAs[String]("schema_json")))
+  }
+
+  /** Manifest lists scoped to ONE reader call: a window reader
+    * ([[readChangelog]], [[readIncremental]], [[tailChangelog]]) needs the
+    * same snapshot's list several times — commit id's list is also commit
+    * id+1's PARENT list. Deliberately NOT module-level: the cache lives and
+    * dies inside a single reader invocation, so every bench/oracle run
+    * still reads all metadata from disk (no cross-run memoization). */
   private final class ManifestLists(spark: SparkSession, tableDir: String) {
-    private val cached = scala.collection.mutable.Map.empty[Long, DataFrame]
-    def apply(id: Long): DataFrame =
-      cached.getOrElseUpdate(id, readManifestList(spark, tableDir, id))
+    private val cached = scala.collection.mutable.Map.empty[Long, ManifestList]
+    def apply(id: Long): ManifestList =
+      cached.getOrElseUpdate(id, manifestList(spark, tableDir, id))
   }
 
   /** The FILE-level manifest view of snapshot `id`: (file, n_rows,
-    * min_<c>/max_<c>) rows flattened from its segments — what the legacy
-    * single-manifest layout stored directly. `n_rows` is the PHYSICAL
-    * (pre-deletion-vector) row count of the file: positional/equality
-    * deletes are merge-on-read metadata and never touch these rows
-    * (ADVICE round-16: the manifest counts files' bytes, not live
-    * cardinality — live counts come from reading the table). Segments may
-    * carry different stats generations; the view merges their schemas
-    * with null envelopes for the missing columns. */
+    * min_<c>/max_<c>) rows flattened from its segments. `n_rows` is the
+    * PHYSICAL (pre-deletion-vector) row count of the file:
+    * positional/equality deletes are merge-on-read metadata and never
+    * touch these rows (ADVICE round-16: the manifest counts files' bytes,
+    * not live cardinality — live counts come from reading the table).
+    * Segments may carry different stats generations; the view merges
+    * their schemas with null envelopes for the missing columns. */
   def readManifest(spark: SparkSession, tableDir: String,
-                   id: Long): DataFrame = {
-    val segs = segmentDirs(readManifestList(spark, tableDir, id))
-    require(segs.nonEmpty, s"snapshot $id has an empty manifest list")
-    spark.read.option("mergeSchema", "true").parquet(segs: _*)
-  }
-
-  private def segmentDirs(list: DataFrame): Seq[String] =
-    list.select(col("segment")).collect().map(_.getString(0)).toIndexedSeq
+                   id: Long): DataFrame =
+    spark.read.option("mergeSchema", "true")
+      .parquet(manifestList(spark, tableDir, id).dirs: _*)
 
   /** Data-file names under segment manifests, read with an EXPLICIT
-    * one-column schema: the mergeSchema read this replaces ran a
-    * distributed footer-merge job over every segment manifest before the
-    * file-name collect — pure schema-inference cost on a path that only
-    * ever needs the `file` column (present in every manifest generation;
-    * stats columns differ across generations, which is exactly why the
-    * readers that DO need stats keep mergeSchema). Round-17 optimization:
-    * one metadata job per read instead of two. */
+    * one-column schema: a mergeSchema read would run a distributed
+    * footer-merge job over every segment manifest before the file-name
+    * collect — pure schema-inference cost on a path that only ever needs
+    * the `file` column (present in every manifest generation; stats
+    * columns differ across generations, which is exactly why the readers
+    * that DO need stats keep mergeSchema). */
   private def manifestFiles(spark: SparkSession,
-                            segs: Seq[String]): IndexedSeq[String] = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("file",
-        org.apache.spark.sql.types.StringType)))
-    spark.read.schema(schema).parquet(segs: _*)
+                            segs: Seq[String]): IndexedSeq[String] =
+    spark.read.schema(StructType(Seq(StructField("file", StringType))))
+      .parquet(segs: _*)
       .select(col("file")).collect().map(_.getString(0)).toIndexedSeq
-  }
 
-  /** Delete metadata carried by a manifest list (constant across its
-    * rows): positional delta-vector dirs, and (equality-delete dir, seq)
-    * pairs. Missing columns (older lists) read as empty. */
-  private def deleteMeta(list: DataFrame): (Seq[String], Seq[(String, Long)]) = {
-    // Pure driver computation over the (localized) list rows — the explode/
-    // distinct frame this replaced ran a Generate job per peek even over a
-    // LocalRelation (Generate does not constant-fold). Same outputs: the
-    // distinct dv dirs and (eq dir, seq) pairs, first-occurrence order.
-    val cols = list.columns.toSet
-    val dv =
-      if (!cols.contains("dv_dirs")) Seq.empty[String]
-      else list.select(col("dv_dirs")).collect().toIndexedSeq
-        .flatMap(r => if (r.isNullAt(0)) Nil else r.getSeq[String](0))
-        .distinct
-    val eq =
-      if (!cols.contains("eq_dirs")) Seq.empty[(String, Long)]
-      else list.select(col("eq_dirs"), col("eq_seqs")).collect().toIndexedSeq
-        .flatMap { r =>
-          if (r.isNullAt(0)) Nil
-          else r.getSeq[String](0).zip(r.getSeq[Long](1))
-        }.distinct
-    (dv, eq)
-  }
-
-  /** METADATA-CARRIED TABLE SCHEMA (the Iceberg schema-evolution answer):
-    * every list row stores its segment's write schema as JSON, and the
-    * table's read schema is the NAME-BASED UNION of all segment schemas in
-    * seq order — so `read` needs no footer merging (O(1) schema
-    * resolution at any file count), a later append may ADD columns, and
-    * earlier files read the new columns as null (the parquet
-    * missing-column contract). Type conflicts across generations are
-    * refused loudly; dropping/renaming columns is out of scope (unions
-    * only grow — the Iceberg default behavior without an explicit schema
-    * update op). Lists written before schemas were carried (or merged in
-    * with nulls) fall back to footer-merge. */
-  private def tableSchema(list: DataFrame)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    if (!list.columns.contains("schema_json")) return None
-    val jsons = list.select(col("seq"), col("schema_json"))
-      .where(col("schema_json").isNotNull)
-      .collect().sortBy(_.getLong(0)).map(_.getString(1))
-    if (jsons.isEmpty) return None
-    val schemas = jsons.map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    val fields = scala.collection.mutable.LinkedHashMap[String,
-      org.apache.spark.sql.types.StructField]()
-    schemas.foreach(_.foreach { f =>
-      fields.get(f.name) match {
-        case Some(prev) =>
-          require(prev.dataType == f.dataType,
-            s"schema evolution type conflict on '${f.name}': " +
-              s"${prev.dataType} vs ${f.dataType}")
-        case None => fields(f.name) = f.copy(nullable = true)
-      }
-    })
-    Some(org.apache.spark.sql.types.StructType(fields.values.toIndexedSeq))
-  }
-
-  /** Scan `files` with the list's carried schema when present (evolution-
-    * correct and footer-free), falling back to a footer-merge read for
-    * pre-schema lists. */
-  private def scanFiles(spark: SparkSession, list: DataFrame,
+  /** Scan `files` with the list's carried schema: evolution-correct and
+    * footer-free. */
+  private def scanFiles(spark: SparkSession, list: ManifestList,
                         files: Seq[String]): DataFrame =
-    tableSchema(list) match {
-      case Some(s) => spark.read.schema(s).parquet(files: _*)
-      case None =>
-        spark.read.option("mergeSchema", "true").parquet(files: _*)
-    }
+    spark.read.schema(list.schema).parquet(files: _*)
 
-  /** The operation KIND that produced a snapshot — carried as a constant
-    * `op` column on its manifest list (the Iceberg snapshot-summary
-    * `operation` field). [[readIncremental]] / [[readChangelog]] classify
-    * window commits from it; lists written before the column existed fall
-    * back to a structural inference ([[inferOp]]). */
-  private def listOp(list: DataFrame): Option[String] =
-    if (!list.columns.contains("op")) None
-    else list.select(col("op")).where(col("op").isNotNull)
-      .limit(1).collect().headOption.map(_.getString(0))
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   private def withOp(list: DataFrame, op: String): DataFrame =
     list.drop("op").withColumn("op", lit(op))
@@ -320,10 +318,8 @@ object Snapshot {
            asOf: Option[Long] = None): DataFrame = {
     val id = asOf.orElse(currentSnapshotId(spark, tableDir)).getOrElse(
       throw new IllegalStateException(s"no committed snapshot under $tableDir"))
-    val list = readManifestList(spark, tableDir, id)
-    val segs = segmentDirs(list)
-    require(segs.nonEmpty, s"snapshot $id has an empty manifest list")
-    val files = manifestFiles(spark, segs)
+    val list = manifestList(spark, tableDir, id)
+    val files = manifestFiles(spark, list.dirs)
     require(files.nonEmpty, s"snapshot $id has an empty manifest")
     applyDeletes(spark, list, scanFiles(spark, list, files))
   }
@@ -362,7 +358,7 @@ object Snapshot {
     * the delete's commit survive even on key match — the Iceberg-v2
     * sequence rule that makes keyed upsert-then-reinsert correct. NULL
     * keys never match (SQL join semantics). */
-  private def applyDeletes(spark: SparkSession, list: DataFrame,
+  private def applyDeletes(spark: SparkSession, list: ManifestList,
                            scan: DataFrame): DataFrame =
     liveView(spark, list, scan).drop("__f", "__p", "__seq")
 
@@ -370,9 +366,8 @@ object Snapshot {
     * `__f` (scheme-less file path), `__p` (row position), `__seq` (commit
     * sequence parsed from the path) — so [[readChangelog]] can join delete
     * deltas back to the surviving-at-parent rows they killed. */
-  private def liveView(spark: SparkSession, list: DataFrame,
+  private def liveView(spark: SparkSession, list: ManifestList,
                        scan: DataFrame): DataFrame = {
-    val (dvDirs, eqs) = deleteMeta(list)
     val seqed = scan
       .withColumn("__f", regexp_replace(
         col("_metadata.file_path"), "^[a-z]+:/+", "/"))
@@ -380,22 +375,31 @@ object Snapshot {
       .withColumn("__seq",
         regexp_extract(col("__f"), "/data/c=(\\d+)/", 1).cast("long"))
     val afterDv =
-      if (dvDirs.isEmpty) seqed
+      if (list.dv.isEmpty) seqed
       else {
-        val dv = spark.read.parquet(dvDirs: _*)
+        val dv = spark.read.parquet(list.dv: _*)
           .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
-        seqed.join(gated(spark, dv, dvDirs),
+        seqed.join(gated(spark, dv, list.dv),
           col("__f") === col("__dv_file") && col("__p") === col("__dv_pos"),
           "left_anti")
       }
-    eqs.foldLeft(afterDv) { case (df, (dir, seq)) =>
-      val keys = spark.read.parquet(dir)
-      val renamed = keys.columns.foldLeft(keys)((k, c) =>
-        k.withColumnRenamed(c, s"__eq_$c"))
-      val cond = keys.columns.map(c => df(c) === renamed(s"__eq_$c"))
-        .reduce(_ && _) && col("__seq") < lit(seq)
-      df.join(gated(spark, renamed, Seq(dir)), cond, "left_anti")
+    list.eq.foldLeft(afterDv) { case (df, (dir, seq)) =>
+      eqDeleteJoin(spark, df, dir, seq, "left_anti")
     }
+  }
+
+  /** Join a [[liveView]] frame against the equality-delete key table `dir`
+    * committed at `seq`: a row matches when every key column equals a key
+    * row's and its `__seq` precedes `seq`. `how` is `left_anti` (drop the
+    * deleted rows) or `left_semi` (keep only them). */
+  private def eqDeleteJoin(spark: SparkSession, df: DataFrame, dir: String,
+                           seq: Long, how: String): DataFrame = {
+    val keys = spark.read.parquet(dir)
+    val renamed = keys.columns.foldLeft(keys)((k, c) =>
+      k.withColumnRenamed(c, s"__eq_$c"))
+    val cond = keys.columns.map(c => df(c) === renamed(s"__eq_$c"))
+      .reduce(_ && _) && col("__seq") < lit(seq)
+    df.join(gated(spark, renamed, Seq(dir)), cond, how)
   }
 
   /** STATS-PRUNED snapshot read — the Iceberg/Delta data-skipping ladder:
@@ -423,36 +427,25 @@ object Snapshot {
     * `segmentPruning = false` to evaluate such predicates per file only.
     * Both layer evaluations are |segments|- / |files|-sized driver
     * collects — metadata cardinality, the protocol's standing discipline.
-    * Empty selections return the empty frame with the snapshot's schema
-    * (read from ONE data file's footer, not the whole scan — ADVICE
-    * round-16). */
+    * The segment layer evaluates `keep` over the list collected once by
+    * this read. Empty selections return the empty frame with the list's
+    * carried schema, opening no data file. */
   def readPruned(spark: SparkSession, tableDir: String,
                  keep: org.apache.spark.sql.Column,
                  asOf: Option[Long] = None,
                  segmentPruning: Boolean = true): DataFrame = {
     val id = asOf.orElse(currentSnapshotId(spark, tableDir)).getOrElse(
       throw new IllegalStateException(s"no committed snapshot under $tableDir"))
-    val list = readManifestList(spark, tableDir, id)
-    val statCols = list.columns.filter(c =>
+    val list = manifestList(spark, tableDir, id)
+    val statCols = list.rows.columns.filter(c =>
       c.startsWith("min_") || c.startsWith("max_")).toSeq
-    def emptyFrame: DataFrame = tableSchema(list) match {
-      case Some(s) => // carried schema: no file footer touched at all
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case None => // pre-schema list: ONE file's footer (ADVICE round-16)
-        val one = readManifest(spark, tableDir, id)
-          .select(col("file")).limit(1).collect().head.getString(0)
-        spark.read.parquet(one).where(lit(false))
-    }
     val liveSegs =
-      if (!segmentPruning) segmentDirs(list)
-      else {
-        val rows = list
-          .select(col("segment"), keep.cast("boolean").as("__keep")).collect()
-        require(rows.nonEmpty, s"snapshot $id has an empty manifest list")
-        rows.filter(r => r.isNullAt(1) || r.getBoolean(1))
-          .map(_.getString(0)).toIndexedSeq
-      }
-    if (liveSegs.isEmpty) return emptyFrame
+      if (!segmentPruning) list.dirs
+      else list.rows
+        .select(col("segment"), keep.cast("boolean").as("__keep")).collect()
+        .filter(r => r.isNullAt(1) || r.getBoolean(1))
+        .map(_.getString(0)).toIndexedSeq
+    if (liveSegs.isEmpty) return emptyFrame(spark, list.schema)
     // align the file view to the list's stats schema: a surviving
     // stats-less segment must expose null envelopes for the columns the
     // predicate names (unknown ≠ skippable)
@@ -464,7 +457,7 @@ object Snapshot {
       .select(col("file"), keep.cast("boolean").as("__keep")).collect()
     val files = rows.filter(r => r.isNullAt(1) || r.getBoolean(1))
       .map(_.getString(0)).toIndexedSeq
-    if (files.isEmpty) emptyFrame
+    if (files.isEmpty) emptyFrame(spark, list.schema)
     else applyDeletes(spark, list, scanFiles(spark, list, files))
   }
 
@@ -472,36 +465,16 @@ object Snapshot {
   // Incremental reads (append scan + CDC changelog)
   // ------------------------------------------------------------------
 
-  /** Classify the commit that produced snapshot `id` — the carried `op`
-    * column ([[withOp]]) when present, else a structural inference against
-    * the parent list (pre-op tables: grown dv_dirs → delete, grown eq
-    * lists → eqdelete, segments only added → append; a pre-op commit that
-    * DROPPED segments is ambiguous between compact/rewrite/merge and is
-    * refused — recommit once on the op-carrying code, or use the full
-    * [[Versioning]] diff). */
+  /** The operation KIND that produced snapshot `id` — the constant `op`
+    * column every commit writes on its manifest list ([[withOp]]; the
+    * Iceberg snapshot-summary `operation` field), read from the list this
+    * reader call already collected. Refuses an id that is not committed. */
   private def commitOp(spark: SparkSession, tableDir: String,
                        id: Long, lists: ManifestLists): String = {
     require(currentSnapshotId(spark, tableDir, below = id + 1).contains(id),
       s"snapshot $id is not committed (or was vacuumed) — incremental " +
         "reads need every window manifest retained")
-    val list = lists(id)
-    listOp(list).getOrElse {
-      val parent = currentSnapshotId(spark, tableDir, below = id)
-      parent match {
-        case None => "append"
-        case Some(p) =>
-          val pl = lists(p)
-          val (dv, eq) = deleteMeta(list)
-          val (pdv, peq) = deleteMeta(pl)
-          val dropped = segmentDirs(pl).toSet -- segmentDirs(list).toSet
-          if (dv.size > pdv.size) "delete"
-          else if (eq.size > peq.size) "eqdelete"
-          else if (dropped.isEmpty) "append"
-          else throw new IllegalStateException(
-            s"cannot classify pre-op snapshot $id (segments were dropped: " +
-              "compact, rewrite or merge) — not changelog-trackable")
-      }
-    }
+    lists(id).op
   }
 
   /** INCREMENTAL APPEND SCAN (Iceberg `incremental read` / Delta
@@ -535,13 +508,9 @@ object Snapshot {
       s"incremental window contains non-append history: ${bad.mkString(", ")}" +
         " — read the snapshots directly (readAt) or diff them")
     val list = lists(toId)
-    val segs = segmentDirs(list.where(col("seq") > fromId))
-    if (segs.isEmpty) { // delete-only window: nothing was appended
-      val schema = tableSchema(list).getOrElse(
-        read(spark, tableDir, asOf = Some(toId)).schema)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    val segs = list.segments.filter(_.seq > fromId).map(_.dir)
+    // delete-only window: nothing was appended
+    if (segs.isEmpty) return emptyFrame(spark, list.schema)
     val files = manifestFiles(spark, segs)
     applyDeletes(spark, list, scanFiles(spark, list, files))
   }
@@ -588,8 +557,7 @@ object Snapshot {
             .withColumn("_change_type", lit("insert"))
             .withColumn("_commit_id", lit(id)))
         case "delete" =>
-          val parent = currentSnapshotId(spark, tableDir, below = id).get
-          val pl = lists(parent)
+          val pl = lists(parentBelow(spark, tableDir, id))
           val dvDir = s"$tableDir/dv/c=$id"
           val delta = spark.read.parquet(dvDir)
             .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
@@ -614,17 +582,11 @@ object Snapshot {
               .withColumn("_change_type", lit("delete"))
               .withColumn("_commit_id", lit(id)))
         case "eqdelete" =>
-          val parent = currentSnapshotId(spark, tableDir, below = id).get
-          val pl = lists(parent)
-          val files = manifestFiles(spark, segmentDirs(pl))
-          val dir = s"$tableDir/eqdv/c=$id"
-          val keys = spark.read.parquet(dir)
-          val renamed = keys.columns.foldLeft(keys)((k, c) =>
-            k.withColumnRenamed(c, s"__eq_$c"))
+          val pl = lists(parentBelow(spark, tableDir, id))
+          val files = manifestFiles(spark, pl.dirs)
           val live = liveView(spark, pl, scanFiles(spark, pl, files))
-          val cond = keys.columns.map(c => live(c) === renamed(s"__eq_$c"))
-            .reduce(_ && _) && col("__seq") < lit(id)
-          Some(live.join(gated(spark, renamed, Seq(dir)), cond, "left_semi")
+          Some(eqDeleteJoin(spark, live, s"$tableDir/eqdv/c=$id", id,
+              "left_semi")
             .drop("__f", "__p", "__seq")
             .withColumn("_change_type", lit("delete"))
             .withColumn("_commit_id", lit(id)))
@@ -634,16 +596,10 @@ object Snapshot {
             "rewrites are not row-level trackable; diff the snapshots")
       }
     }
-    if (frames.isEmpty) { // e.g. a delete that matched nothing, or compacts
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val base = tableSchema(toList).getOrElse(
-        read(spark, tableDir, asOf = Some(toId)).schema)
-      val schema = StructType(base.fields :+
+    if (frames.isEmpty) // e.g. a delete that matched nothing, or compacts
+      return emptyFrame(spark, StructType(toList.schema.fields :+
         StructField("_change_type", StringType) :+
-        StructField("_commit_id", LongType, nullable = false))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+        StructField("_commit_id", LongType, nullable = false)))
     frames.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
   }
 
@@ -686,32 +642,17 @@ object Snapshot {
     * |segments| metadata rows, zero data files opened, at any table size.
     * `n_rows`/`n_files` are the PHYSICAL manifest totals (pre-deletion-
     * vector, the [[readManifest]] contract); `op` is the carried commit
-    * kind (inferred for pre-op lists, "unknown" when inference is
-    * ambiguous — history is observability, so unlike the incremental
-    * readers it never refuses). */
+    * kind. Each snapshot's list is collected once; every column derives
+    * from those rows on the driver. */
   def history(spark: SparkSession, tableDir: String): DataFrame = {
-    val cur = currentSnapshotId(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $tableDir"))
+    val ids = committedIds(spark, s"$tableDir/manifests", "snap=")
+    if (ids.isEmpty)
+      throw new IllegalStateException(s"no committed snapshot under $tableDir")
     import spark.implicits._
-    val lists = new ManifestLists(spark, tableDir)
-    val rows = (0L to cur).flatMap { id =>
-      if (!currentSnapshotId(spark, tableDir, below = id + 1).contains(id))
-        None // vacuumed or never-published id
-      else {
-        val list = lists(id)
-        val op = listOp(list).getOrElse(
-          scala.util.Try(commitOp(spark, tableDir, id, lists))
-            .getOrElse("unknown"))
-        // driver-side totals over the localized list rows — the per-id
-        // Aggregate job this replaced cost one cluster round-trip per
-        // snapshot (round-17 optimization)
-        val lrs = list.select(col("n_files"), col("n_rows")).collect()
-        val nFiles = lrs.map(r => if (r.isNullAt(0)) 0L else r.getLong(0)).sum
-        val nRows = lrs.map(r => if (r.isNullAt(1)) 0L else r.getLong(1)).sum
-        val (dv, eq) = deleteMeta(list)
-        Some((id, op, lrs.length.toLong, nFiles, nRows,
-          dv.size.toLong, eq.size.toLong))
-      }
+    val rows = ids.map { id =>
+      val l = manifestList(spark, tableDir, id)
+      (id, l.op, l.segments.size.toLong, l.segments.map(_.nFiles).sum,
+        l.segments.map(_.nRows).sum, l.dv.size.toLong, l.eq.size.toLong)
     }
     rows.toDF("snapshot_id", "op", "n_segments", "n_files", "n_rows",
       "n_dv_dirs", "n_eq_dirs")
@@ -756,9 +697,8 @@ object Snapshot {
         case "append" =>
           val segDir = s"$srcDir/segments/seg=$id"
           val files = manifestFiles(spark, Seq(segDir))
-          val list = lists(id)
           commitAppendAt(spark, sinkDir, id,
-            scanFiles(spark, list, files), statsCols)
+            scanFiles(spark, lists(id), files), statsCols)
           Some(id)
         case "delete" | "eqdelete" =>
           val keys = readChangelog(spark, srcDir, id - 1, id)
@@ -784,16 +724,13 @@ object Snapshot {
     require(keys.columns.nonEmpty, "equality delete needs ≥1 key column")
     if (currentSnapshotId(spark, tableDir, below = id + 1).contains(id))
       return id
-    val cur = currentSnapshotId(spark, tableDir, below = id).getOrElse(
-      throw new IllegalStateException(
-        s"no committed snapshot under $tableDir below $id"))
-    val list = readManifestList(spark, tableDir, cur)
+    val list = manifestList(spark, tableDir, parentBelow(spark, tableDir, id))
     val dir = s"$tableDir/eqdv/c=$id"
     keys.distinct().repartition(col(keys.columns.head))
       .write.mode("overwrite").parquet(dir)
-    val (dv, eq) = deleteMeta(list)
     publishList(tableDir, id,
-      withOp(withDeleteMeta(list, dv, eq :+ (dir, id)), "eqdelete"))
+      withOp(withDeleteMeta(list.rows, list.dv, list.eq :+ (dir, id)),
+        "eqdelete"))
   }
 
   // ------------------------------------------------------------------
@@ -858,6 +795,27 @@ object Snapshot {
 
   private def nextId(spark: SparkSession, tableDir: String): Long =
     currentSnapshotId(spark, tableDir).map(_ + 1L).getOrElse(0L)
+
+  /** The committed parent of a commit at `id`: the newest committed
+    * snapshot strictly below it. */
+  private def parentBelow(spark: SparkSession, tableDir: String,
+                          id: Long): Long =
+    currentSnapshotId(spark, tableDir, below = id).getOrElse(
+      throw new IllegalStateException(
+        s"no committed snapshot under $tableDir below $id"))
+
+  /** Publish an APPEND at `id`: `parent`'s list ∪ the new segment's row
+    * `newRow`, carrying the parent's delete metadata, or `newRow` alone
+    * for the table's first commit. */
+  private def publishAppend(spark: SparkSession, tableDir: String, id: Long,
+                            parent: Option[Long], newRow: DataFrame): Long = {
+    val (rows, dv, eq) = parent.map(manifestList(spark, tableDir, _)) match {
+      case Some(pl) =>
+        (pl.rows.unionByName(newRow, allowMissingColumns = true), pl.dv, pl.eq)
+      case None => (newRow, Nil, Nil)
+    }
+    publishList(tableDir, id, withOp(withDeleteMeta(rows, dv, eq), "append"))
+  }
 
   /** Atomic create of a claim marker. `create(overwrite=false)` is atomic
     * on HDFS (namenode) and precondition-capable object stores; on the
@@ -940,18 +898,8 @@ object Snapshot {
         s"append parent $p is not a committed snapshot"))
     claimCommit(spark, tableDir) { id =>
       val newRow = writeSegment(spark, tableDir, id, df, statsCols)
-      parent.orElse(currentSnapshotId(spark, tableDir, below = id)) match {
-        case Some(prev) =>
-          val pl = readManifestList(spark, tableDir, prev)
-          val (dv, eq) = deleteMeta(pl)
-          val merged = pl.drop("dv_dirs", "eq_dirs", "eq_seqs")
-            .unionByName(newRow, allowMissingColumns = true)
-          publishList(tableDir, id,
-            withOp(withDeleteMeta(merged, dv, eq), "append"))
-        case None =>
-          publishList(tableDir, id,
-            withOp(withDeleteMeta(newRow, Nil, Nil), "append"))
-      }
+      publishAppend(spark, tableDir, id,
+        parent.orElse(currentSnapshotId(spark, tableDir, below = id)), newRow)
     }
   }
 
@@ -982,18 +930,8 @@ object Snapshot {
     if (currentSnapshotId(spark, tableDir, below = id + 1).contains(id))
       return id
     val newRow = writeSegment(spark, tableDir, id, df, statsCols)
-    currentSnapshotId(spark, tableDir, below = id) match {
-      case Some(prev) =>
-        val pl = readManifestList(spark, tableDir, prev)
-        val (dv, eq) = deleteMeta(pl)
-        val merged = pl.drop("dv_dirs", "eq_dirs", "eq_seqs")
-          .unionByName(newRow, allowMissingColumns = true)
-        publishList(tableDir, id,
-          withOp(withDeleteMeta(merged, dv, eq), "append"))
-      case None =>
-        publishList(tableDir, id,
-          withOp(withDeleteMeta(newRow, Nil, Nil), "append"))
-    }
+    publishAppend(spark, tableDir, id,
+      currentSnapshotId(spark, tableDir, below = id), newRow)
   }
 
   /** FULL-REWRITE commit (compaction / global transform): new snapshot =
@@ -1046,11 +984,8 @@ object Snapshot {
   def commitDelete(spark: SparkSession, tableDir: String,
                    pred: org.apache.spark.sql.Column): Long =
     claimCommit(spark, tableDir) { id =>
-      val cur = currentSnapshotId(spark, tableDir, below = id).getOrElse(
-        throw new IllegalStateException(
-          s"no committed snapshot under $tableDir"))
-      val list = readManifestList(spark, tableDir, cur)
-      val files = manifestFiles(spark, segmentDirs(list))
+      val list = manifestList(spark, tableDir, parentBelow(spark, tableDir, id))
+      val files = manifestFiles(spark, list.dirs)
       val delta = spark.read.parquet(files: _*)
         .withColumn("__f", regexp_replace(
           col("_metadata.file_path"), "^[a-z]+:/+", "/"))
@@ -1059,10 +994,8 @@ object Snapshot {
         .select(col("__f").as("file"), col("__p").as("pos"))
       delta.repartition(col("file"))
         .write.mode("overwrite").parquet(s"$tableDir/dv/c=$id")
-      val (dv, eq) = deleteMeta(list)
-      publishList(tableDir, id,
-        withOp(withDeleteMeta(list, dv :+ s"$tableDir/dv/c=$id", eq),
-          "delete"))
+      publishList(tableDir, id, withOp(withDeleteMeta(list.rows,
+        list.dv :+ s"$tableDir/dv/c=$id", list.eq), "delete"))
     }
 
   /** EQUALITY DELETE — the Iceberg-v2 sibling of [[commitDelete]]: a keyed
@@ -1080,18 +1013,9 @@ object Snapshot {
   def commitEqDelete(spark: SparkSession, tableDir: String,
                      keys: DataFrame): Long = {
     require(keys.columns.nonEmpty, "equality delete needs ≥1 key column")
-    claimCommit(spark, tableDir) { id =>
-      val cur = currentSnapshotId(spark, tableDir, below = id).getOrElse(
-        throw new IllegalStateException(
-          s"no committed snapshot under $tableDir"))
-      val list = readManifestList(spark, tableDir, cur)
-      val dir = s"$tableDir/eqdv/c=$id"
-      keys.distinct().repartition(col(keys.columns.head))
-        .write.mode("overwrite").parquet(dir)
-      val (dv, eq) = deleteMeta(list)
-      publishList(tableDir, id,
-        withOp(withDeleteMeta(list, dv, eq :+ (dir, id)), "eqdelete"))
-    }
+    // inside a claim the id is unpublished, so commitEqDeleteAt's replay
+    // short-circuit never fires
+    claimCommit(spark, tableDir)(commitEqDeleteAt(spark, tableDir, _, keys))
   }
 
   /** INCREMENTAL SEGMENT COMPACTION — Iceberg's `rewriteDataFiles` in the
@@ -1119,26 +1043,17 @@ object Snapshot {
                             smallRowsMax: Long,
                             statsCols: Seq[String] = Nil): Option[Long] =
     claimCommit(spark, tableDir) { id =>
-      val cur = currentSnapshotId(spark, tableDir, below = id).getOrElse(
-        throw new IllegalStateException(
-          s"no committed snapshot under $tableDir"))
-      val list = readManifestList(spark, tableDir, cur)
-      val (dv, eq) = deleteMeta(list)
-      val segRows = list.select(col("segment"), col("n_rows")).collect()
-      val small = segRows.filter(_.getLong(1) <= smallRowsMax)
-        .map(_.getString(0)).toIndexedSeq
+      val list = manifestList(spark, tableDir, parentBelow(spark, tableDir, id))
+      val small = list.segments.filter(_.nRows <= smallRowsMax).map(_.dir)
       if (small.size < 2) None
       else {
-        val files = spark.read.option("mergeSchema", "true")
-          .parquet(small: _*)
-          .select(col("file")).collect().map(_.getString(0)).toIndexedSeq
+        val files = manifestFiles(spark, small)
         val live = applyDeletes(spark, list, scanFiles(spark, list, files))
         val newRow = writeSegment(spark, tableDir, id, live, statsCols)
-        val kept = list.drop("dv_dirs", "eq_dirs", "eq_seqs")
-          .where(!col("segment").isin(small: _*))
+        val kept = list.rows.where(!col("segment").isin(small: _*))
         Some(publishList(tableDir, id, withOp(withDeleteMeta(
-          kept.unionByName(newRow, allowMissingColumns = true), dv, eq),
-          "compact")))
+          kept.unionByName(newRow, allowMissingColumns = true),
+          list.dv, list.eq), "compact")))
       }
     }
 
@@ -1180,17 +1095,8 @@ object Snapshot {
   /** Committed pointer versions of a ref, ascending (the `snap=` listing
     * rule applied to `r=` dirs). */
   private def refVersions(spark: SparkSession, tableDir: String,
-                          name: String): Seq[Long] = {
-    val (fs, _) = hadoopFs(spark, tableDir)
-    val dir = new org.apache.hadoop.fs.Path(s"$tableDir/refs/$name")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("r=") &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .flatMap(st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("r=").toLong).toOption)
-      .sorted
-  }
+                          name: String): Seq[Long] =
+    committedIds(spark, s"$tableDir/refs/$name", "r=")
 
   /** Every ref name under the table (committed pointer or not — names
     * with only torn versions resolve to None via [[readRef]]). */
@@ -1247,28 +1153,18 @@ object Snapshot {
     def norm(u: String): String = new java.net.URI(u).getPath
     val mDir = new org.apache.hadoop.fs.Path(s"$tableDir/manifests")
     if (!fs.exists(mDir)) return (0, 0)
-    val committed = fs.listStatus(mDir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("snap=") &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .flatMap(st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("snap=").toLong).toOption)
-      .sorted
+    val committed = committedIds(spark, s"$tableDir/manifests", "snap=")
     val refIds = refNames(spark, tableDir)
       .flatMap(n => readRef(spark, tableDir, n)).toSet
     val keepIds = (committed.takeRight(retainLast).toSet ++ refIds)
       .intersect(committed.toSet)
     val dropIds = committed.filterNot(keepIds)
-    val keepLists = keepIds.toSeq.sorted
-      .map(id => readManifestList(spark, tableDir, id))
-    val refSegs: Set[String] =
-      keepLists.flatMap(segmentDirs).map(norm).toSet
+    val keepLists = keepIds.toSeq.sorted.map(manifestList(spark, tableDir, _))
+    val refSegs: Set[String] = keepLists.flatMap(_.dirs).map(norm).toSet
     val referenced: Set[String] = keepLists.flatMap(l =>
-      manifestFiles(spark, segmentDirs(l))).map(norm).toSet
-    val (refDv, refEq) = {
-      val metas = keepLists.map(deleteMeta)
-      (metas.flatMap(_._1).map(norm).toSet,
-        metas.flatMap(_._2.map(_._1)).map(norm).toSet)
-    }
+      manifestFiles(spark, l.dirs)).map(norm).toSet
+    val refDv = keepLists.flatMap(_.dv).map(norm).toSet
+    val refEq = keepLists.flatMap(_.eq.map(_._1)).map(norm).toSet
     var deleted = 0
     // physical data files not referenced by any retained snapshot
     val dataRoot = new org.apache.hadoop.fs.Path(s"$tableDir/data")

@@ -681,4 +681,57 @@ class SnapshotSpec extends AnyFunSuite {
       assert(rows(Snapshot.read(spark, snk)) == rows(Snapshot.read(spark, src)))
     } finally { cleanup(src); cleanup(snk) }
   }
+
+  test("ONE COLLECT PER LIST: building read and a three-commit readChangelog runs 2 and 6 Spark actions") {
+    import spark.implicits._
+    val t = tmpTable()
+    try {
+      Snapshot.commitAppend(spark, t, Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+      Snapshot.commitAppend(spark, t, Seq((3L, "c")).toDF("id", "v"))
+      Snapshot.commitDelete(spark, t, col("id") === 1L)
+      Snapshot.commitAppend(spark, t, Seq((4L, "d")).toDF("id", "v"))
+      // query executions fired while BUILDING the frame (nothing is run)
+      def actions(build: => org.apache.spark.sql.DataFrame): Int = {
+        import org.apache.spark.sql.execution.QueryExecution
+        val n = new java.util.concurrent.atomic.AtomicInteger
+        val counter = new org.apache.spark.sql.util.QueryExecutionListener {
+          def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+            n.incrementAndGet()
+          def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+            n.incrementAndGet()
+        }
+        org.apache.spark.SparkTestBus.drain(spark.sparkContext)
+        spark.listenerManager.register(counter)
+        try { build; org.apache.spark.SparkTestBus.drain(spark.sparkContext) }
+        finally spark.listenerManager.unregister(counter)
+        n.get
+      }
+      // the list collect, then the file-name collect
+      assert(actions(Snapshot.read(spark, t)) == 2)
+      // lists 3, 1 and 2 (list 1 doubles as the delete's parent); segment
+      // 1's and 3's file names; the delete vector's file names
+      assert(actions(Snapshot.readChangelog(spark, t, 0L, 3L)) == 6)
+    } finally cleanup(t)
+  }
+
+  test("REFUSAL: a manifest list without op or schema_json is refused by read, readChangelog and history, naming the column") {
+    import spark.implicits._
+    val t = tmpTable()
+    try {
+      Snapshot.commitAppend(spark, t, Seq((1L, "a")).toDF("id", "v"))
+      val list0 = s"$t/manifests/snap=0"
+      spark.read.parquet(list0).write.parquet(s"$t/list0_copy")
+      for (c <- Seq("op", "schema_json")) {
+        spark.read.parquet(s"$t/list0_copy").drop(c)
+          .write.mode("overwrite").parquet(list0)
+        def refused(call: => Any): Unit = {
+          val e = intercept[IllegalStateException](call)
+          assert(e.getMessage.contains(s"'$c'"), e.getMessage)
+        }
+        refused(Snapshot.read(spark, t))
+        refused(Snapshot.readChangelog(spark, t, -1L, 0L))
+        refused(Snapshot.history(spark, t))
+      }
+    } finally cleanup(t)
+  }
 }
