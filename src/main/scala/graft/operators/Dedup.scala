@@ -81,51 +81,75 @@ object Dedup {
     * prefix; verification recomputes exact jaccard from the full sets via
     * array intersection. Equivalent to the quadratic all-pairs join (the
     * DuckDB oracle runs that form) but with posting lists bounded by the
-    * rare-shingle prefix. */
-  /** @param materializeShingles the shingle projection feeds FOUR plan
-    *   branches (frequency table, prefix sort, both verify sides); `true`
-    *   (default) pins it once via lazy localCheckpoint — saves 4× recompute
-    *   and gives AQE exact sizes. At true 100 TB corpus scale the pinned
-    *   blocks are corpus-sized executor storage (spilling to disk) — pass
-    *   `false` there to trade recompute for zero pinned state, or persist a
-    *   durable shingle table yourself. Blocks are released by the context
-    *   cleaner once the result's RDD is collected/GC'd (no unbounded leak —
-    *   the round-1 advice against library-side cache() was about unreleased
-    *   eager caches; a lazy checkpoint scoped to the query lifetime is the
-    *   deliberate tradeoff here). */
+    * rare-shingle prefix.
+    *
+    * The shingle projection feeds FOUR plan branches (frequency table,
+    * prefix sort, both verify sides), so it is pinned once via lazy
+    * localCheckpoint — saves 4× recompute and gives AQE exact sizes. At
+    * corpus scale the pinned blocks are corpus-sized executor storage
+    * (spilling to disk); they are released by the context cleaner once the
+    * result's RDD is collected/GC'd (no unbounded leak — an eager
+    * library-side cache() is what stays unreleased; a lazy checkpoint
+    * scoped to the query lifetime is the deliberate tradeoff here). */
   def exactJaccardJoin(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int = 3, threshold: Double = 0.8,
-                       materializeShingles: Boolean = true): DataFrame = {
-    val ds0 = docShingles(docs, idCol, textCol, n)
-    val ds = if (materializeShingles) ds0.localCheckpoint(eager = false) else ds0
+                       n: Int = 3, threshold: Double = 0.8): DataFrame = {
+    val ds = docShingles(docs, idCol, textCol, n).localCheckpoint(eager = false)
+    val (_, prefixes) = prefixIndex(ds, threshold)
 
-    // Global shingle rarity: document frequency per shingle. The prefix
-    // order only needs to be a TOTAL ORDER consistent across docs, so the
-    // (df, shingle) tuple itself is the sort key — no global row_number
-    // window (a single-partition sort at scale); array_sort on the collected
-    // structs orders lexicographically by (df, h) per doc, fully distributed.
+    // NOTE: the self-join below references prefixes twice and re-executes
+    // the freq-join subtree per side. Measured at sf0.1, checkpointing the
+    // prefixes is a net LOSS (accumulated checkpoint blocks trigger GC churn
+    // that outweighs the saved recompute — 4.5 s → 10 s); only the shingle
+    // projection is worth pinning. Revisit if candidate generation ever
+    // dominates at larger corpora.
     //
-    // Candidate generation runs on h = xxhash64(s) — 8-byte longs where the
-    // string shingle used to cross every exchange and drive every
-    // sort/join/aggregate comparison (guide §2.3, narrower types; the
-    // weightedJaccardJoin change, applied to the set form). Recall stays
-    // exactly 1.0: the PPJoin pigeonhole needs only SOME fixed total order;
-    // a collision merges two shingles into one class, which only ADDS
-    // common keys between docs while SHORTENING a doc's class list against
-    // its true-|sh|-derived prefix length — the smallest common key still
-    // lands inside both prefixes. Verification recomputes exact jaccard
-    // from the true string arrays, so the output is unchanged.
+    // Inverted index over prefixes → candidate pairs.
+    val a = prefixes.as("a"); val b = prefixes.hint("shuffle_hash").as("b")
+    val candidates = a.join(b, col("a.h") === col("b.h") && col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
+
+    verifyJoin(candidates, "id_a", "id_b", ds, ds)
+      .withColumn("jaccard", jaccard(col("inter"), col("na"), col("nb")))
+      .where(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
+  }
+
+  /** Rarest-first prefix index of a (id, sh, n_sh) shingle table, shared by
+    * [[exactJaccardJoin]] and [[containmentJoin]]. Returns the hashed token
+    * table `tok` (id, n_sh, h) and each doc's PREFIX classes (id, n_sh, h):
+    * its |sh| − ⌈θ|sh|⌉ + 1 rarest.
+    *
+    * Global shingle rarity is the document frequency per class. The prefix
+    * order only needs to be a TOTAL ORDER consistent across docs, so the
+    * (df, h) tuple itself is the sort key — no global row_number window (a
+    * single-partition sort at scale); array_sort on the collected structs
+    * orders lexicographically by (df, h) per doc, fully distributed.
+    *
+    * Candidate generation runs on h = xxhash64(s) — 8-byte longs where the
+    * string shingle used to cross every exchange and drive every
+    * sort/join/aggregate comparison (narrower types, as in
+    * [[weightedJaccardJoin]]). Recall stays
+    * exactly 1.0: the PPJoin pigeonhole — and its one-sided containment
+    * form, any |A| − ⌈θ|A|⌉ + 1 of A's elements must hit B — needs only
+    * SOME fixed total order; a collision merges two shingles into one
+    * class, which only ADDS common keys between docs while SHORTENING a
+    * doc's class list against its true-|sh|-derived prefix length — the
+    * smallest common key still lands inside both prefixes. Verification
+    * recomputes the exact score from the true string arrays, so the output
+    * is unchanged.
+    *
+    * Every join here and in the callers is pinned to SHUFFLE_HASH: the
+    * joined sides (class frequency table, prefix inverted index, full
+    * shingle-set projections) are all CORPUS-SIZED, so broadcasting them is
+    * wrong at scale — and locally the size estimator undercounts the
+    * array-of-string rows badly enough to broadcast hundreds of MB,
+    * fragmenting the heap (measured 7 s → 187 s run-to-run degradation from
+    * humongous-allocation churn). */
+  private def prefixIndex(ds: DataFrame,
+                          threshold: Double): (DataFrame, DataFrame) = {
     val tok = ds.select(col("id"), col("n_sh"), explode(col("sh")).as("s"))
       .select(col("id"), col("n_sh"), xxhash64(col("s")).as("h"))
     val freq = tok.groupBy("h").agg(count(lit(1)).as("df"))
-
-    // Re-sort each doc's shingle classes rarest-first, keep the prefix.
-    // Every join below is pinned to SHUFFLE_HASH: the joined sides (class
-    // frequency table, prefix inverted index, full shingle-set projections)
-    // are all CORPUS-SIZED, so broadcasting them is wrong at scale — and
-    // locally the size estimator undercounts the array-of-string rows badly
-    // enough to broadcast hundreds of MB, fragmenting the heap (measured
-    // 7 s → 187 s run-to-run degradation from humongous-allocation churn).
     val prefixLen = (col("n_sh") - ceil(col("n_sh") * threshold) + 1).cast("int")
     val sortedSh = tok
       .join(freq.hint("shuffle_hash"), "h")
@@ -133,40 +157,39 @@ object Dedup {
       .agg(array_sort(collect_list(struct(col("df"), col("h")))).as("rs"))
       .select(col("id"), col("n_sh"),
         transform(col("rs"), r => r.getField("h")).as("sh_sorted"))
-    // NOTE: the self-join below references prefixes twice and re-executes
-    // the freq-join subtree per side. Measured at sf0.1, checkpointing here
-    // is a net LOSS (accumulated checkpoint blocks trigger GC churn that
-    // outweighs the saved recompute — 4.5 s → 10 s); only the shingle
-    // projection is worth pinning. Revisit if candidate generation ever
-    // dominates at larger corpora.
     val prefixes = sortedSh
-      .select(col("id"), explode(slice(col("sh_sorted"), lit(1), prefixLen)).as("h"))
-
-    // Inverted index over prefixes → candidate pairs.
-    val a = prefixes.as("a"); val b = prefixes.hint("shuffle_hash").as("b")
-    val candidates = a.join(b, col("a.h") === col("b.h") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-
-    // Verify with exact jaccard from the full shingle sets: hash-partition
-    // on id, build the hash table on the (bounded) candidate side for the
-    // first join. The second join is deliberately left to AQE: its runtime
-    // exchange size for `db` decides broadcast-vs-shuffle against the 64 MB
-    // threshold — actual bytes, not the compile-time array underestimates
-    // the round-2 lesson warned about — so locally the ~tens-of-MB side
-    // broadcasts (measured 6 s vs 56-92 s when force-shuffled: the extra
-    // exchanges + per-partition hash builds of array-heavy rows churn G1),
-    // while a corpus-scale side can never cross the threshold and falls
-    // back to a shuffled join automatically.
-    val da = ds.select(col("id").as("id_a"), col("sh").as("sh_a"), col("n_sh").as("na"))
-    val db = ds.select(col("id").as("id_b"), col("sh").as("sh_b"), col("n_sh").as("nb"))
-    candidates.hint("shuffle_hash").join(da, "id_a").join(db, "id_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", round(
-        col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")).cast("double"), 6))
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+      .select(col("id"), col("n_sh"),
+        explode(slice(col("sh_sorted"), lit(1), prefixLen)).as("h"))
+    (tok, prefixes)
   }
+
+  /** The verify join of the shingle-set candidate-then-verify operators: the candidate
+    * pairs (`aCol`, `bCol`) joined to side A's (sh_a, na) from `sa` and side
+    * B's (sh_b, nb) from `sb` (both (id, sh, n_sh) tables), plus `inter` =
+    * |sh_a ∩ sh_b|.
+    *
+    * Hash-partition on id, build the hash table on the (bounded) candidate
+    * side for the first join. The second join is deliberately left to AQE:
+    * its runtime exchange size for side B decides broadcast-vs-shuffle
+    * against the 64 MB threshold — actual bytes, not the compile-time
+    * underestimates of array rows — so locally the ~tens-of-MB side
+    * broadcasts (measured 6 s vs 56-92 s when
+    * force-shuffled: the extra exchanges + per-partition hash builds of
+    * array-heavy rows churn G1), while a corpus-scale side can never cross
+    * the threshold and falls back to a shuffled join automatically. */
+  private def verifyJoin(candidates: DataFrame, aCol: String, bCol: String,
+                         sa: DataFrame, sb: DataFrame): DataFrame = {
+    val da = sa.select(col("id").as(aCol), col("sh").as("sh_a"), col("n_sh").as("na"))
+    val db = sb.select(col("id").as(bCol), col("sh").as("sh_b"), col("n_sh").as("nb"))
+    candidates.hint("shuffle_hash").join(da, aCol).join(db, bCol)
+      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
+  }
+
+  /** Jaccard |A ∩ B| / |A ∪ B| from the intersection and the two set sizes
+    * (or bag weights), rounded to 6 decimals — the rounding the DuckDB
+    * oracle applies, so scores hash-compare across engines. */
+  private[graft] def jaccard(inter: Column, na: Column, nb: Column): Column =
+    round(inter.cast("double") / (na + nb - inter).cast("double"), 6)
 
   /** Directed shingle-set CONTAINMENT pairs: C(a→b) = |A ∩ B| / |A| ≥ θ
     * for a ≠ b — the near-SUBSET detector jaccard misses. Training corpora
@@ -187,48 +210,25 @@ object Dedup {
     * recomputes exact containment from the full sets; recall 1.0 by the
     * pigeonhole argument, so the quadratic oracle hash-matches. Same
     * SHUFFLE_HASH pins as the jaccard join (every side corpus-sized), same
-    * (df, shingle) distributed total order, no global window. */
+    * (df, shingle) distributed total order, no global window, and the
+    * same lazily pinned shingle projection. */
   def containmentJoin(docs: DataFrame, idCol: String, textCol: String,
-                      n: Int = 3, threshold: Double = 0.8,
-                      materializeShingles: Boolean = true): DataFrame = {
+                      n: Int = 3, threshold: Double = 0.8): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold in (0, 1]")
-    val ds0 = docShingles(docs, idCol, textCol, n)
-    val ds = if (materializeShingles) ds0.localCheckpoint(eager = false) else ds0
-
-    // Hashed candidate classes, exactly as in [[exactJaccardJoin]]: the
-    // one-sided pigeonhole (any |A| − ⌈θ|A|⌉ + 1 of A's elements must hit
-    // B) holds for ANY fixed total order, and collisions only add common
-    // keys while shortening class lists against the true-size prefix
-    // length — recall stays 1.0; verification is exact on the true sets.
-    val tok = ds.select(col("id"), col("n_sh"), explode(col("sh")).as("s"))
-      .select(col("id"), col("n_sh"), xxhash64(col("s")).as("h"))
-    val freq = tok.groupBy("h").agg(count(lit(1)).as("df"))
-    val prefixLen = (col("n_sh") - ceil(col("n_sh") * threshold) + 1).cast("int")
-    val sortedSh = tok
-      .join(freq.hint("shuffle_hash"), "h")
-      .groupBy("id", "n_sh")
-      .agg(array_sort(collect_list(struct(col("df"), col("h")))).as("rs"))
-      .select(col("id"), col("n_sh"),
-        transform(col("rs"), r => r.getField("h")).as("sh_sorted"))
-    val prefixes = sortedSh
-      .select(col("id"), col("n_sh"),
-        explode(slice(col("sh_sorted"), lit(1), prefixLen)).as("h"))
+    val ds = docShingles(docs, idCol, textCol, n).localCheckpoint(eager = false)
+    val (tok, prefixes) = prefixIndex(ds, threshold)
 
     // One-sided inverted index: contained-side prefixes probe the FULL
     // container-side posting lists. Size prune inside the join condition:
     // |A∩B| ≥ ⌈θ|A|⌉ needs |B| ≥ ⌈θ|A|⌉, so smaller containers never leave
     // the probe (the PPJoin length filter, one-sided).
-    val index = tok
     val candidates = prefixes.as("a")
-      .join(index.hint("shuffle_hash").as("b"),
+      .join(tok.hint("shuffle_hash").as("b"),
         col("a.h") === col("b.h") && col("a.id") =!= col("b.id") &&
           col("b.n_sh") >= ceil(col("a.n_sh") * threshold))
       .select(col("a.id").as("id_sub"), col("b.id").as("id_sup")).distinct()
 
-    val da = ds.select(col("id").as("id_sub"), col("sh").as("sh_a"), col("n_sh").as("na"))
-    val db = ds.select(col("id").as("id_sup"), col("sh").as("sh_b"), col("n_sh").as("nb"))
-    candidates.hint("shuffle_hash").join(da, "id_sub").join(db, "id_sup")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
+    verifyJoin(candidates, "id_sub", "id_sup", ds, ds)
       .withColumn("containment",
         round(col("inter").cast("double") / col("na").cast("double"), 6))
       .where(col("containment") >= threshold)
@@ -265,15 +265,17 @@ object Dedup {
     * ranking is a per-doc window (partitionBy id — thousands of rows per
     * partition at any corpus size, never a global sort). Same
     * SHUFFLE_HASH pins as [[exactJaccardJoin]] (every joined side is
-    * corpus-sized; compile-time size estimates undercount array rows). */
+    * corpus-sized; compile-time size estimates undercount array rows).
+    * The tf table feeds the prefix windows and both verify sides, so it is
+    * pinned once via lazy localCheckpoint, as [[exactJaccardJoin]] pins its
+    * shingle projection. */
   def weightedJaccardJoin(docs: DataFrame, idCol: String, textCol: String,
-                          n: Int = 3, threshold: Double = 0.8,
-                          materializeBags: Boolean = true): DataFrame = {
-    val tf0 = docs
+                          n: Int = 3, threshold: Double = 0.8): DataFrame = {
+    val tf = docs
       .select(col(idCol).as("id"),
         explode(shingleBag(col(textCol), n)).as("t"))
       .groupBy("id", "t").agg(count(lit(1)).as("tf"))
-    val tf = if (materializeBags) tf0.localCheckpoint(eager = false) else tf0
+      .localCheckpoint(eager = false)
     // Candidate generation runs entirely on h = xxhash64(t) — 8-byte longs
     // where the string shingle (~20-40 B) used to cross every exchange and
     // drive every sort/join comparison (guide §2.3, narrower types). The
@@ -301,14 +303,11 @@ object Dedup {
     // The prefix table feeds BOTH sides of the candidate self-join; without
     // a pin the whole window subtree executes twice (measured in the r17
     // before-plan: two identical 18-node branches). It is prefix-sized
-    // (≲ corpus tokens × θ-complement), far smaller than the bags the
-    // same flag already pins.
-    val prefixes0 = ordered
+    // (≲ corpus tokens × θ-complement), far smaller than the pinned bags.
+    val prefixes = ordered
       .where(col("suffix_w") >= lit(threshold) * col("w"))
       .select(col("id"), col("h"))
-    val prefixes =
-      if (materializeBags) prefixes0.localCheckpoint(eager = false)
-      else prefixes0
+      .localCheckpoint(eager = false)
     val a = prefixes.as("a"); val b = prefixes.hint("shuffle_hash").as("b")
     val candidates = a
       .join(b, col("a.h") === col("b.h") && col("a.id") < col("b.id"))
@@ -333,8 +332,7 @@ object Dedup {
         map_zip_with(col("ma"), col("mb"),
           (_, x, y) => least(coalesce(x, lit(0L)), coalesce(y, lit(0L))))),
         lit(0L), (acc, v) => acc + v))
-      .withColumn("wjaccard", round(col("inter").cast("double") /
-        (col("wa") + col("wb") - col("inter")).cast("double"), 6))
+      .withColumn("wjaccard", jaccard(col("inter"), col("wa"), col("wb")))
       .where(col("wjaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("wjaccard"))
   }
@@ -493,15 +491,6 @@ object Dedup {
       .bitwiseOR(shiftleft(hi, 64 - start)))
   }
 
-  /** [[simHashNearDupPairs]] at 128-bit signature width — the geometry
-    * BASELINE.md argues for a 100 TB corpus, where 64-bit bands at
-    * maxHamming 5 are only ~10 bits wide and bucket sizes explode. Same
-    * pigeonhole guarantee (any pair within hamming ≤ maxHamming agrees
-    * exactly on ≥ 1 of the maxHamming+1 bands → recall 1.0), same
-    * O(bands)-shuffle shape; signatures are (hi, lo) long pairs and the
-    * verify step is `bit_count(xor hi) + bit_count(xor lo)`. At
-    * maxHamming = 5 the bands are 21 bits (last 23) — 2²¹ buckets per
-    * band, which keeps expected bucket occupancy ~n/2M per band. */
   /** 128-bit pigeonhole band table behind [[simHashNearDupPairs128]]. */
   private[graft] def simHashBanded128(sigs: DataFrame, idCol: String,
                                       hiCol: String, loCol: String,
@@ -524,6 +513,15 @@ object Dedup {
       simHashBanded128(sigs, idCol, hiCol, loCol, maxHamming + 1),
       Seq("band", "bits"), cap)
 
+  /** [[simHashNearDupPairs]] at 128-bit signature width — the geometry
+    * BASELINE.md argues for a 100 TB corpus, where 64-bit bands at
+    * maxHamming 5 are only ~10 bits wide and bucket sizes explode. Same
+    * pigeonhole guarantee (any pair within hamming ≤ maxHamming agrees
+    * exactly on ≥ 1 of the maxHamming+1 bands → recall 1.0), same
+    * O(bands)-shuffle shape; signatures are (hi, lo) long pairs and the
+    * verify step is `bit_count(xor hi) + bit_count(xor lo)`. At
+    * maxHamming = 5 the bands are 21 bits (last 23) — 2²¹ buckets per
+    * band, which keeps expected bucket occupancy ~n/2M per band. */
   def simHashNearDupPairs128(sigs: DataFrame, idCol: String,
                              hiCol: String, loCol: String,
                              maxHamming: Int,
@@ -580,13 +578,12 @@ object Dedup {
     * mapper, not per token), then a sign-pack projection — the same
     * aggregation-boundary layout as the MinHash signature agg, for the same
     * reason (projection collapse cannot re-inline the per-token hashing).
+    * The (tiny: one long per doc) output is pinned with a lazy
+    * localCheckpoint — the banded hamming join downstream references it
+    * twice, and the vote aggregation would re-execute per side otherwise.
     * Output: (idCol, sh: long). */
-  /** @param materialize pin the (tiny: one long per doc) signature output
-    *   with a lazy localCheckpoint — the banded hamming join downstream
-    *   references it twice, and the vote aggregation re-executes per side
-    *   otherwise. */
   def simHashMd5Signatures(docs: DataFrame, idCol: String, textCol: String,
-                           bits: Int = 48, materialize: Boolean = true): DataFrame = {
+                           bits: Int = 48): DataFrame = {
     require(bits > 0 && bits <= 48, "md5Hash48 carries 48 hash bits")
     val toks = docs
       .select(col(idCol).as("id"), explode(TextOps.tokens(col(textCol))).as("t"))
@@ -601,9 +598,9 @@ object Dedup {
           .reduce(_ + _).as("sh"))
     // tokenless docs (empty/whitespace text) vanish in the explode — restore
     // them with the all-ties signature 0, as the native expression yields
-    val out = docs.select(col(idCol).as("id")).join(sigs, Seq("id"), "left")
+    docs.select(col(idCol).as("id")).join(sigs, Seq("id"), "left")
       .select(col("id").as(idCol), coalesce(col("sh"), lit(0L)).as("sh"))
-    if (materialize) out.localCheckpoint(eager = false) else out
+      .localCheckpoint(eager = false)
   }
 
   /** Connected components over an undirected pair list via min-label
@@ -633,6 +630,9 @@ object Dedup {
     * count off zero and extend the loop — and unlike the earlier
     * decimal-sum compare it assumes nothing about the id type.
     *
+    * Output: (id, component) for every vertex appearing in `pairs`, where
+    * component = min id of the vertex's component.
+    *
     * @param checkpointDir when set, rounds checkpoint RELIABLY to this
     *   directory (`SparkContext.setCheckpointDir` + `checkpoint()`): blocks
     *   survive executor loss, the right default on a real cluster at the
@@ -640,10 +640,7 @@ object Dedup {
     *   `localCheckpoint` keeps blocks executor-local: fastest, but an
     *   executor loss aborts the job — acceptable for interactive/local use,
     *   documented tradeoff at 1000 executors.
-    *
-    * Output: (id, component) for every vertex appearing in `pairs`, where
-    * component = min id of the vertex's component. */
-  /** @param iterShufflePartitions per-ROUND shuffle parallelism for the
+    * @param iterShufflePartitions per-ROUND shuffle parallelism for the
     *   label-propagation loop. Iteration state is PAIR-LIST-sized (near-dup
     *   pair lists are orders of magnitude below corpus size), so the
     *   per-round task count should track that size, not the corpus scan
@@ -940,9 +937,7 @@ object Dedup {
     left.join(right.hint("shuffle_hash"), Seq("blk"))
       .where(col("pb") > col("pa") && col("pb") - col("pa") < window)
       .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
-      .withColumn("jaccard", round(
-        col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")).cast("double"), 6))
+      .withColumn("jaccard", jaccard(col("inter"), col("na"), col("nb")))
       .where(col("jaccard") >= threshold)
       .select(least(col("ia"), col("ib")).as("id_a"),
         greatest(col("ia"), col("ib")).as("id_b"),
@@ -1008,19 +1003,6 @@ object Dedup {
         array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
   }
 
-  /** Banded bucket table behind [[minHashLsh]]: one (id, band, bucket) row
-    * per signature band, bucket = xxhash64 of the band's minhash slice. */
-  private[graft] def minHashBanded(sigs: DataFrame, bands: Int,
-                                   r: Int): DataFrame =
-    sigs.select(col("id"),
-      explode(transform(sequence(lit(0), lit(bands - 1)), b =>
-        struct(b.as("band"),
-          xxhash64(concat_ws(",",
-            slice(col("sig"), b * lit(r) + lit(1), lit(r)))).as("bucket"))))
-        .as("bb"))
-      .select(col("id"), col("bb.band").as("band"),
-        col("bb.bucket").as("bucket"))
-
   /** Degenerate LSH buckets [[minHashLsh]] would veto at `cap` — the
     * disclosure twin (same parameters → same banding → same buckets).
     * Empty output means the guard was inert for this corpus. */
@@ -1031,41 +1013,36 @@ object Dedup {
                            cap: Int = DefaultHotBucketCap): DataFrame = {
     val ds = docShingles(docs, idCol, textCol, n)
     bandHotBuckets(
-      minHashBanded(minHashSignatureAgg(ds, k, seed, tokenHash),
-        bands, k / bands),
+      bandedBuckets(minHashSignatureAgg(ds, k, seed, tokenHash), k, bands),
       Seq("band", "bucket"), cap)
   }
 
   /** Approximate near-dup pairs via banded MinHash-LSH: signature → `bands`
-    * buckets of `rowsPerBand` hashes; docs colliding in any bucket become
+    * buckets of k / bands hashes ([[bandedBuckets]]); docs colliding in any bucket become
     * candidates; candidates are verified with exact jaccard ≥ threshold (so
     * precision is exact; only recall is approximate).
     *
     * With k=64, bands=16 (r=4): P[detect | j=0.8] = 1-(1-0.8^4)^16 ≈ 0.9997.
-    */
-  /** @param tokenHash per-shingle hash feeding the signature permutations:
+    *
+    * @param tokenHash per-shingle hash feeding the signature permutations:
     *   xxhash64 by default (fastest single-pass at scale); pass [[md5Hash48]]
-    *   for a signature basis the DuckDB oracle reproduces exactly. */
+    *   for a signature basis the DuckDB oracle reproduces exactly.
+    */
   def minHashLsh(docs: DataFrame, idCol: String, textCol: String,
                  n: Int = 3, threshold: Double = 0.8,
                  k: Int = 64, bands: Int = 16, seed: Long = 42L,
-                 materializeShingles: Boolean = true,
                  tokenHash: Column => Column = c => xxhash64(c),
                  hotBucketCap: Int = DefaultHotBucketCap): DataFrame = {
-    require(k % bands == 0, "k must be divisible by bands")
-    val r = k / bands
-    val ds0 = docShingles(docs, idCol, textCol, n)
-    // shingles feed the signature agg + both verify sides — same
-    // materialization tradeoff as exactJaccardJoin
-    val ds = if (materializeShingles) ds0.localCheckpoint(eager = false) else ds0
+    // shingles feed the signature agg + both verify sides — pinned for the
+    // same reason as exactJaccardJoin's
+    val ds = docShingles(docs, idCol, textCol, n).localCheckpoint(eager = false)
     // The banded self-join references signatures on BOTH sides, and each
     // side would re-execute the full signature aggregation (explode + k
     // permutations per shingle — expensive with the md5 token hash). The
     // signature table is only n_docs × k longs, so pinning it is near-free
     // (unlike the banded/exploded form, whose checkpoint measured as a
     // round-2 loss).
-    val sigs0 = minHashSignatureAgg(ds, k, seed, tokenHash)
-    val sigs = if (materializeShingles) sigs0.localCheckpoint(eager = false) else sigs0
+    val sigs = minHashSignatureAgg(ds, k, seed, tokenHash).localCheckpoint(eager = false)
 
     // hot-bucket guard: an LSH bucket only exceeds the cap when >cap docs
     // share a full band of minhashes — mass-duplicated degenerate content
@@ -1073,7 +1050,7 @@ object Dedup {
     // disclosed via [[minHashLshHotBuckets]] (LSH recall is approximate by
     // contract, so the guard narrows it honestly rather than breaking an
     // exactness law)
-    val banded = vetoHotBuckets(minHashBanded(sigs, bands, r),
+    val banded = vetoHotBuckets(bandedBuckets(sigs, k, bands),
       Seq("band", "bucket"), hotBucketCap)
 
     // Same shuffle-hash pinning rationale as exactJaccardJoin: banded
@@ -1084,15 +1061,8 @@ object Dedup {
         col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct()
 
-    // same verify-join strategy rationale as exactJaccardJoin: pin the
-    // candidate build side, let AQE's runtime sizes decide the second join
-    val da = ds.select(col("id").as("id_a"), col("sh").as("sh_a"), col("n_sh").as("na"))
-    val db = ds.select(col("id").as("id_b"), col("sh").as("sh_b"), col("n_sh").as("nb"))
-    candidates.hint("shuffle_hash").join(da, "id_a").join(db, "id_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", round(
-        col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")).cast("double"), 6))
+    verifyJoin(candidates, "id_a", "id_b", ds, ds)
+      .withColumn("jaccard", jaccard(col("inter"), col("na"), col("nb")))
       .where(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
@@ -1185,14 +1155,8 @@ object Dedup {
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket"))
       .select(col("x.id").as("id_b"), col("y.id").as("id_c")).distinct()
 
-    val db = bs.select(col("id").as("id_b"), col("sh").as("sh_a"), col("n_sh").as("na"))
-    val dc = corpusShingles.select(col("id").as("id_c"), col("sh").as("sh_b"),
-      col("n_sh").as("nb"))
-    val dropIds = candidates.hint("shuffle_hash").join(db, "id_b").join(dc, "id_c")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", round(
-        col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")).cast("double"), 6))
+    val dropIds = verifyJoin(candidates, "id_b", "id_c", bs, corpusShingles)
+      .withColumn("jaccard", jaccard(col("inter"), col("na"), col("nb")))
       .where(col("jaccard") >= threshold)
       .select(col("id_b").as(idCol)).distinct()
     b12.join(dropIds, Seq(idCol), "left_anti")

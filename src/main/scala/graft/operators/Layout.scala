@@ -101,7 +101,6 @@ object Layout {
   def updateFileStats(spark: org.apache.spark.sql.SparkSession,
                       statsDir: String, dataDir: String,
                       statCols: Seq[String]): Int = {
-    def norm(u: String): String = new java.net.URI(u).getPath
     val current = spark.read.parquet(dataDir).inputFiles.map(norm).toSet
     val known: Set[String] =
       if (new java.io.File(statsDir).isDirectory)
@@ -120,7 +119,6 @@ object Layout {
     * The live-file list is |files|-sized — it joins, never `isin`s. */
   def readFileStats(spark: org.apache.spark.sql.SparkSession,
                     statsDir: String, dataDir: String): DataFrame = {
-    def norm(u: String): String = new java.net.URI(u).getPath
     import spark.implicits._
     val live = spark.read.parquet(dataDir).inputFiles.map(norm).toSeq
       .toDF("__live")
@@ -128,8 +126,10 @@ object Layout {
     stats.join(live, norm0(stats("file")) === col("__live"), "left_semi")
   }
 
-  /** Column-side twin of the URI normalization above ("file:///x" and
-    * "file:/x" are the same path). */
+  /** The path of a file URI: "file:///x" and "file:/x" are the same path. */
+  private def norm(u: String): String = new java.net.URI(u).getPath
+
+  /** Column-side twin of [[norm]]. */
   private def norm0(c: Column): Column =
     regexp_replace(c, "^[a-z]+:/+", "/")
 
@@ -147,7 +147,6 @@ object Layout {
   def statsPrunedReadStored(spark: org.apache.spark.sql.SparkSession,
                             statsDir: String, dataDir: String,
                             keep: Column): DataFrame = {
-    def norm(u: String): String = new java.net.URI(u).getPath
     val stats = readFileStats(spark, statsDir, dataDir)
       .select(col("file"), keep.as("__keep")).collect()
     val indexed = stats.map(r => norm(r.getString(0))).toSet

@@ -70,15 +70,12 @@ object Lexical {
     * alphabet size, and the verify filter drops false candidates
     * immediately after the join.
     *
-    * The vocab aggregate feeds BOTH join sides; `materializeVocab` (default)
-    * pins it once via lazy localCheckpoint so the corpus scan + token
-    * explode runs once, not twice — vocab blocks are |vocab|-sized, far
-    * below the corpus-sized pins [[Dedup.exactJaccardJoin]] documents the
-    * opt-out for. */
-  def vocabFuzzyPairs(docs: DataFrame, textCol: String, d: Int = 2,
-                      materializeVocab: Boolean = true): DataFrame = {
-    val v0 = vocab(docs, textCol)
-    val v = if (materializeVocab) v0.localCheckpoint(eager = false) else v0
+    * The vocab aggregate feeds BOTH join sides, so it is pinned once via
+    * lazy localCheckpoint: the corpus scan + token explode runs once, not
+    * twice — vocab blocks are |vocab|-sized, far below the corpus-sized
+    * shingle pin [[Dedup.exactJaccardJoin]] documents. */
+  def vocabFuzzyPairs(docs: DataFrame, textCol: String, d: Int = 2): DataFrame = {
+    val v = vocab(docs, textCol).localCheckpoint(eager = false)
     val variants = v.select(col("tok"),
       explode(deletionNeighborhood(col("tok"), d)).as("variant"))
     val a = variants.as("a")

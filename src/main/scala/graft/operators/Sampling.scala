@@ -31,9 +31,6 @@ object Sampling {
   private def bucket(key: Column): Column =
     pmod(Dedup.md5Hash48(key), lit(1000L))
 
-  /** Keep rows whose key hashes into the first `permille` of 1000 buckets.
-    * Deterministic, partitioning-independent; expected rate permille/1000
-    * with exact-membership stability. */
   /** RENDEZVOUS (highest-random-weight) STABLE SHARDING — assign each row
     * to argmax_s hash(key, s) over `nShards` shard ids. The property mod-N
     * sharding lacks: growing N to N+1 moves ONLY the rows whose new argmax
@@ -59,6 +56,9 @@ object Sampling {
     df.withColumn(as, array_max(weights).getField("s"))
   }
 
+  /** Keep rows whose key hashes into the first `permille` of 1000 buckets.
+    * Deterministic, partitioning-independent; expected rate permille/1000
+    * with exact-membership stability. */
   def hashSample(df: DataFrame, keyCol: String, permille: Int): DataFrame = {
     require(permille >= 0 && permille <= 1000, "permille in [0, 1000]")
     df.where(bucket(col(keyCol)) < permille)
@@ -388,23 +388,6 @@ object Sampling {
       .select(col(keyCol), explode(col("top.id")).as(idCol))
   }
 
-  /** Deterministic budget head: keep rows, in content-hash order, while the
-    * running `weightCol` total (tokens, chars, bytes) stays within `budget`
-    * — corpus truncation to a target training-token count, reproducibly
-    * ("the first N tokens' worth of the corpus"). Selection order is
-    * (hash-bucket, content-hash, id): a pure content permutation, so
-    * membership is partitioning/engine-independent like every sampler here.
-    *
-    * The running sum is a TWO-LEVEL prefix sum — the scale-correct shape
-    * for a global cumulative sum, which as a single window would sort the
-    * entire corpus in ONE partition:
-    *   1. per-bucket weight totals — one tiny agg (`buckets` rows);
-    *   2. running offsets over that metadata-sized table (the only
-    *      unpartitioned window, over `buckets` rows — driver-trivial);
-    *   3. offsets broadcast back; each bucket computes its own window
-    *      cumsum over |corpus|/buckets rows in parallel.
-    * At larger scale raise `buckets`: stage 2 stays metadata-sized while
-    * stage 3's per-partition sort shrinks proportionally. */
   /** TARGETED SELECTION by hashed-feature coverage (DSIR-lite, integer-
     * exact): score every candidate document by how much of its vocabulary
     * overlaps a TARGET domain's most frequent features — the
@@ -458,6 +441,23 @@ object Sampling {
       .withColumn("coverage_bp", expr("matched * 10000 div n_features"))
   }
 
+  /** Deterministic budget head: keep rows, in content-hash order, while the
+    * running `weightCol` total (tokens, chars, bytes) stays within `budget`
+    * — corpus truncation to a target training-token count, reproducibly
+    * ("the first N tokens' worth of the corpus"). Selection order is
+    * (hash-bucket, content-hash, id): a pure content permutation, so
+    * membership is partitioning/engine-independent like every sampler here.
+    *
+    * The running sum is a TWO-LEVEL prefix sum — the scale-correct shape
+    * for a global cumulative sum, which as a single window would sort the
+    * entire corpus in ONE partition:
+    *   1. per-bucket weight totals — one tiny agg (`buckets` rows);
+    *   2. running offsets over that metadata-sized table (the only
+    *      unpartitioned window, over `buckets` rows — trivially small);
+    *   3. offsets broadcast back; each bucket computes its own window
+    *      cumsum over |corpus|/buckets rows in parallel.
+    * At larger scale raise `buckets`: stage 2 stays metadata-sized while
+    * stage 3's per-partition sort shrinks proportionally. */
   def budgetHead(df: DataFrame, textCol: String, weightCol: String,
                  idCol: String, budget: Long, buckets: Int = 64): DataFrame = {
     require(budget >= 0 && buckets > 0, "budget >= 0, buckets > 0")

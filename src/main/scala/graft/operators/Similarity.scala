@@ -80,9 +80,6 @@ object Similarity {
       .agg(count(lit(1)).as("n_vecs"), avg(col("v").cast("double")).as("mean"))
   }
 
-  /** Approximate top-k via random-hyperplane LSH: score only same-bucket
-    * pairs. Same output shape as [[bruteForceTopK]]; rank is within the
-    * bucket-restricted candidate set. */
   /** RECIPROCAL-RANK FUSION of two per-query rankings — the hybrid-search
     * primitive (fuse a lexical ranking with a vector ranking, or ensemble
     * two approximate indexes whose failure modes differ, as registered:
@@ -112,6 +109,9 @@ object Similarity {
       .where(col("fused_rank") <= topK)
   }
 
+  /** Approximate top-k via random-hyperplane LSH: score only same-bucket
+    * pairs. Same output shape as [[bruteForceTopK]]; rank is within the
+    * bucket-restricted candidate set. */
   def lshTopK(corpus: DataFrame, queries: DataFrame,
               idCol: String, vecCol: String, k: Int = 5,
               nPlanes: Int = 8, dim: Int = 64, seed: Long = 42L): DataFrame = {
@@ -244,19 +244,6 @@ object Similarity {
     centers.map(_.clone()).toArray
   }
 
-  /** IVF (inverted-file) approximate top-k: a k-means coarse quantizer
-    * partitions the corpus into `nCells` cells; each query probes only its
-    * `nProbe` nearest cells. The standard billion-scale ANN layout
-    * (IVF-flat): at 100 TB the cell assignment is a narrow map over the
-    * corpus (centroids broadcast as literals), the per-cell inverted lists
-    * are just a hash-partitioned column, and query fan-out is nProbe/nCells
-    * of the corpus instead of all of it.
-    *
-    * Deterministic: seeded training ([[trainIvfCentroids]]), centroid
-    * distances via the native codegen dot expressions, rank ties broken by
-    * neighbor id. Pass `centroids` to reuse a trained quantizer across
-    * queries (training per call is wasted work — centroids depend only on
-    * the corpus). */
   /** Distance to every IVF centroid as codegen'd expressions over literal
     * centroid arrays, ascending (d², cell) structs; cell = element 1's cell,
     * probes = the first nProbe cells. */
@@ -270,6 +257,19 @@ object Similarity {
     array_sort(array(ds: _*))
   }
 
+  /** IVF (inverted-file) approximate top-k: a k-means coarse quantizer
+    * partitions the corpus into `nCells` cells; each query probes only its
+    * `nProbe` nearest cells. The standard billion-scale ANN layout
+    * (IVF-flat): at 100 TB the cell assignment is a narrow map over the
+    * corpus (centroids broadcast as literals), the per-cell inverted lists
+    * are just a hash-partitioned column, and query fan-out is nProbe/nCells
+    * of the corpus instead of all of it.
+    *
+    * Deterministic: seeded training ([[trainIvfCentroids]]), centroid
+    * distances via the native codegen dot expressions, rank ties broken by
+    * neighbor id. Pass `centroids` to reuse a trained quantizer across
+    * queries (training per call is wasted work — centroids depend only on
+    * the corpus). */
   def ivfTopK(corpus: DataFrame, queries: DataFrame,
               idCol: String, vecCol: String, k: Int = 5,
               nCells: Int = 16, nProbe: Int = 4, seed: Long = 42L,
@@ -783,34 +783,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
   }
 
-  /** Embedding near-duplicate pairs: all (i < j) with cosine ≥ threshold —
-    * EXACT (recall 1.0 by construction, so the quadratic SQL oracle
-    * hash-matches deterministically).
-    *
-    * Exact thresholded cosine join over dense random vectors at low θ is
-    * Ω(n²) comparisons — no bucketing scheme prunes when the ε-ball
-    * (ε = √(2−2θ)) covers most of the unit sphere, and the probabilistic
-    * alternatives (hyperplane LSH) cannot promise the oracle's recall 1.0.
-    * What CAN be fixed is the plan: the naive theta-join
-    * (`a.join(b, id_a < id_b)`) planned as a BroadcastNestedLoopJoin — one
-    * broadcast of the whole corpus and a single-partition n² loop. Here the
-    * irreducible work is distributed as a BLOCK MATRIX instead:
-    *
-    *   - rows are hashed into `blocks` buckets; the join key is the block
-    *     pair (bx, by), an EQUI key, so Catalyst plans a shuffled hash join
-    *     with blocks² independent cells of (n/blocks)² comparisons each —
-    *     bounded per-task memory, even spread, no broadcast of the corpus;
-    *   - each ordered pair (id_a < id_b) meets in exactly one cell
-    *     (blk_a, blk_b) — no distinct needed;
-    *   - a seeded 1-D unit projection rides along as a prefilter: for unit
-    *     vectors, cos(a,b) ≥ θ ⟹ ‖â−b̂‖ ≤ ε ⟹ |r·â − r·b̂| ≤ ε, so far
-    *     pairs fail one multiply-compare instead of a `dim`-wide dot.
-    *
-    * Shuffle volume is 2·n·blocks rows (each side replicated per block row/
-    * column) — the standard distributed all-pairs layout. At production θ
-    * (≥0.9, true near-dups) prefer the sub-quadratic candidate paths
-    * ([[lshTopK]] buckets, [[Dedup.minHashLsh]]/[[Dedup.simHashNearDupPairs]]
-    * for text) with this exact form as their recall oracle. */
   /** SemDeDup-style CELL-RESTRICTED near-dup pairs — the sub-quadratic
     * production path for embedding dedup (Abbas et al. 2023, "SemDeDup:
     * Data-efficient learning at web-scale through semantic deduplication"):
@@ -895,6 +867,34 @@ object Similarity {
       .where(col("rank") <= k)
   }
 
+  /** Embedding near-duplicate pairs: all (i < j) with cosine ≥ threshold —
+    * EXACT (recall 1.0 by construction, so the quadratic SQL oracle
+    * hash-matches deterministically).
+    *
+    * Exact thresholded cosine join over dense random vectors at low θ is
+    * Ω(n²) comparisons — no bucketing scheme prunes when the ε-ball
+    * (ε = √(2−2θ)) covers most of the unit sphere, and the probabilistic
+    * alternatives (hyperplane LSH) cannot promise the oracle's recall 1.0.
+    * What CAN be fixed is the plan: the naive theta-join
+    * (`a.join(b, id_a < id_b)`) planned as a BroadcastNestedLoopJoin — one
+    * broadcast of the whole corpus and a single-partition n² loop. Here the
+    * irreducible work is distributed as a BLOCK MATRIX instead:
+    *
+    *   - rows are hashed into `blocks` buckets; the join key is the block
+    *     pair (bx, by), an EQUI key, so Catalyst plans a shuffled hash join
+    *     with blocks² independent cells of (n/blocks)² comparisons each —
+    *     bounded per-task memory, even spread, no broadcast of the corpus;
+    *   - each ordered pair (id_a < id_b) meets in exactly one cell
+    *     (blk_a, blk_b) — no distinct needed;
+    *   - a seeded 1-D unit projection rides along as a prefilter: for unit
+    *     vectors, cos(a,b) ≥ θ ⟹ ‖â−b̂‖ ≤ ε ⟹ |r·â − r·b̂| ≤ ε, so far
+    *     pairs fail one multiply-compare instead of a `dim`-wide dot.
+    *
+    * Shuffle volume is 2·n·blocks rows (each side replicated per block row/
+    * column) — the standard distributed all-pairs layout. At production θ
+    * (≥0.9, true near-dups) prefer the sub-quadratic candidate paths
+    * ([[lshTopK]] buckets, [[Dedup.minHashLsh]]/[[Dedup.simHashNearDupPairs]]
+    * for text) with this exact form as their recall oracle. */
   def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                          threshold: Double, blocks: Int = 32,
                          dim: Int = 64, seed: Long = 42L): DataFrame = {

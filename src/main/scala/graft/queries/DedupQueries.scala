@@ -404,8 +404,8 @@ object DedupQueries {
           .join(corpusIdx, "sh")
           .groupBy(col("a_id"), col("c_id"), col("a_n"), col("c_n"))
           .agg(count(lit(1)).as("inter"))
-          .withColumn("jaccard", round(col("inter").cast("double") /
-            (col("a_n") + col("c_n") - col("inter")), 6))
+          .withColumn("jaccard",
+            Dedup.jaccard(col("inter"), col("a_n"), col("c_n")))
           .where(col("jaccard") >= JaccardThreshold)
           .select(col("a_id"), col("c_id"), col("jaccard")),
         mode = org.apache.spark.sql.streaming.OutputMode.Complete(),

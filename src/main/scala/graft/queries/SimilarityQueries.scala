@@ -613,17 +613,6 @@ object SimilarityQueries {
       |ORDER BY vec_id, j""".stripMargin
   }
 
-  /** IVF oracle, generated AFTER the query has run: Verify executes every
-    * registered query (training + memoizing the IVF centroids for its sf
-    * dir) before dumping `oracleSql`, so by dump time the quantizer for
-    * exactly one dir sits in [[centroids]] and its centroid matrix can
-    * be embedded as SQL literals. The SQL then reproduces the full IVF
-    * pipeline: per-vector distances to all 16 centroids (‖v‖² − 2·v·c +
-    * ‖c‖², monotonic ≡ the Spark side's d² sort), argmin cell for the
-    * corpus, 4 smallest cells for each query, same-cell candidate
-    * restriction, cosine ranking. None when no quantizer has been trained
-    * yet (e.g. oracle dump without a query run) — the driver then records a
-    * rows-only check, same as before. */
   /** Per-vector (d², cell) struct list over embedded centroid literals —
     * shared by the IVF and IVF-PQ oracles; expects the vector as `v.e`. */
   private def centDistList(cents: Array[Array[Double]]): String =
@@ -662,7 +651,19 @@ object SimilarityQueries {
     }
   }
 
-  /** `corpusWhere` narrows the replayed corpus — the deleted-index twin
+  /** IVF oracle, generated AFTER the query has run: Verify executes every
+    * registered query (training + memoizing the IVF centroids for its sf
+    * dir) before dumping `oracleSql`, so by dump time the quantizer for
+    * exactly one dir sits in [[centroids]] and its centroid matrix can
+    * be embedded as SQL literals. The SQL then reproduces the full IVF
+    * pipeline: per-vector distances to all 16 centroids (‖v‖² − 2·v·c +
+    * ‖c‖², monotonic ≡ the Spark side's d² sort), argmin cell for the
+    * corpus, 4 smallest cells for each query, same-cell candidate
+    * restriction, cosine ranking. None when no quantizer has been trained
+    * yet (e.g. oracle dump without a query run) — the output then gets a
+    * rows-only check.
+    *
+    * `corpusWhere` narrows the replayed corpus — the deleted-index twin
     * passes the tombstone complement so equality proves tombstone
     * visibility ≡ physical absence. */
   private def ivfOracle(corpusWhere: String = "TRUE"): Option[String] = {
@@ -898,13 +899,6 @@ object SimilarityQueries {
     }
   }
 
-  /** PQ oracles, generated AFTER the queries have run (the codebooks for
-    * exactly one sf dir then sit in [[pqBooks]] — same contract as
-    * [[ivfOracle]]). The SQL reproduces encode (per-subspace argmin over
-    * embedded centroid literals, struct-sort tie-break on code), the
-    * reconstruction error (Σ min subspace d²), and the full ADC ranking
-    * (per-query lookup tables indexed by corpus codes) — the driver
-    * hash-compares the entire approximate pipeline, not just row counts. */
   /** The PQ SQL fragments (codes / recon error / LUTs / ADC probe sum) over
     * embedded codebook literals; expects the double-cast vector as `e`.
     * Shared by the PQ and IVF-PQ oracles. */
@@ -941,6 +935,13 @@ object SimilarityQueries {
     PqSqlFragments(codesList, err2, luts, adcSum)
   }
 
+  /** PQ oracles, generated AFTER the queries have run (the codebooks for
+    * exactly one sf dir then sit in [[pqBooks]] — same contract as
+    * [[ivfOracle]]). The SQL reproduces encode (per-subspace argmin over
+    * embedded centroid literals, struct-sort tie-break on code), the
+    * reconstruction error (Σ min subspace d²), and the full ADC ranking
+    * (per-query lookup tables indexed by corpus codes) — the oracle compare
+    * hash-checks the entire approximate pipeline, not just row counts. */
   private def pqOracles: Map[String, String] = {
     val cached = Artifacts.built[Array[Array[Array[Double]]]](PqBooks)
     if (cached.size != 1) Map.empty

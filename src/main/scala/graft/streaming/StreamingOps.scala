@@ -209,8 +209,7 @@ object StreamingOps {
     a.join(cb, Seq("band", "bucket"))
       .join(cs, Seq("c_id"))
       .withColumn("inter", size(array_intersect(col("a_sh"), col("c_sh"))))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("a_n") + col("c_n") - col("inter")).cast("double"), 6))
+      .withColumn("jaccard", Dedup.jaccard(col("inter"), col("a_n"), col("c_n")))
       .where(col("jaccard") >= threshold)
       .groupBy(window(col("__ts"), windowDur), col("a_id"), col("c_id"))
       .agg(max(col("jaccard")).as("jaccard"))
@@ -230,8 +229,9 @@ object StreamingOps {
     * alone. The memory sink is the HARNESS adapter (bounded aggregate
     * output only) — the operators under test are the watermarked
     * aggregations, whose state-store scaling is the production path;
-    * production sinks are Kafka/parquet (`toParquetBatches`). */
-  /** @param dir  directory the file source monitors (streaming sources
+    * production sinks are Kafka/parquet (`toParquetBatches`).
+    *
+    * @param dir  directory the file source monitors (streaming sources
     *   list directories, not files)
     *  @param glob file-name filter within `dir` (e.g. `"events.parquet"`)
     *  @param shufflePartitions stateful-operator partition count for THIS

@@ -672,6 +672,67 @@ class DedupSpec extends AnyFunSuite {
     assert(ungated == 30L * 29L / 2L + 1L, s"ungated count $ungated")
   }
 
+  test("hot-bucket guard at 128 bits: a planted degenerate cluster is vetoed, disclosed by simHashHotBuckets128, and back when ungated") {
+    import spark.implicits._
+    // 12 identical all-ones signatures: every one of the 4 bands (32 bits
+    // at maxHamming 3) is one 12-doc bucket; no band of the normal pair
+    // (hamming 2, bits 0 and 1 of lo) can collide with an all-ones band
+    val hot = (0L until 12L).map(i => (i, -1L, -1L))
+    val normal = Seq((100L, 0x7000_0000_0000_0000L, 0L),
+      (101L, 0x7000_0000_0000_0000L, 3L))
+    val sigs = (hot ++ normal).toDF("doc_id", "hi", "lo")
+    val gated = Dedup.simHashNearDupPairs128(sigs, "doc_id", "hi", "lo",
+        maxHamming = 3, hotBucketCap = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(gated == Set((100L, 101L, 2)), s"gated pairs wrong: $gated")
+    val disclosed = Dedup.simHashHotBuckets128(sigs, "doc_id", "hi", "lo",
+        maxHamming = 3, cap = 5)
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+    assert(disclosed.map(_._1).sorted.toSeq == Seq(0, 1, 2, 3) &&
+      disclosed.forall(d => d._2 == 0xFFFF_FFFFL && d._3 == 12L),
+      s"disclosure wrong: ${disclosed.toSeq}")
+    val ungated = Dedup.simHashNearDupPairs128(sigs, "doc_id", "hi", "lo",
+        maxHamming = 3, hotBucketCap = Int.MaxValue)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val cluster = for (a <- 0L until 12L; b <- a + 1 until 12L) yield (a, b, 0)
+    assert(ungated == cluster.toSet + ((100L, 101L, 2)),
+      s"ungated pairs wrong: ${ungated.size}")
+  }
+
+  test("minHashLsh self-join banding ≡ the native MinHashBandBuckets kernel: at threshold 0 its pairs are exactly the docs sharing a (band, bucket)") {
+    import graft.functions.MinHashBandBuckets
+    // the corpus's own candidates are all near-certain (jaccard ≥ 0.85), so
+    // 12 planted pairs at jaccard ≈ 0.5 — which collide in a 4-row band
+    // with p ≈ 0.66 but in an 8-row band with p ≈ 0.04 — make the pair set
+    // depend on the band layout
+    val rnd = new scala.util.Random(7)
+    def words(k: Int) = Seq.fill(k)(s"w${rnd.nextInt(200)}")
+    val planted = (0 until 12).flatMap { i =>
+      val a = words(40)
+      Seq((1000000L + 2 * i, a.mkString(" ")),
+        (1000001L + 2 * i, (a.take(28) ++ words(12)).mkString(" ")))
+    }.toDF("doc_id", "text")
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .select("doc_id", "text").union(planted)
+    val lshRows = Dedup.minHashLsh(docs, "doc_id", "text", threshold = 0.0,
+        hotBucketCap = Int.MaxValue)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(lshRows.exists(_._3 < 0.8), "no mid-similarity candidate reached the join")
+    val lsh = lshRows.map(r => (r._1, r._2)).toSet
+    val buckets = docs.select(col("doc_id").as("id"),
+        posexplode(MinHashBandBuckets.bandBuckets(
+          Dedup.shingles(col("text")), 64, 16, 42L)))
+      .select(col("id"), col("pos").as("band"), col("col").as("bucket"))
+    val kernel = buckets.as("x").join(buckets.as("y"),
+        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
+          col("x.id") < col("y.id"))
+      .select(col("x.id"), col("y.id")).distinct()
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(kernel.nonEmpty, "the corpus has no banded candidate at all")
+    assert(lsh == kernel,
+      s"lsh-only=${(lsh -- kernel).take(3)} kernel-only=${(kernel -- lsh).take(3)}")
+  }
+
   test("exactSubstrSpans: an UNALIGNED 60-token shared passage is found with token-exact offsets on both sides (round-14 judge item)") {
     import spark.implicits._
     val passage = (0 until 60).map(i => s"p$i").mkString(" ")
