@@ -38,8 +38,7 @@ object AnnIndexLifecycleDemo {
     // day 0: train ONCE on the initial corpus, persist quantizer + assigned
     // corpus partitioned by cell
     val cents = Similarity.trainIvfCentroids(base, vecCol, nCells, seed)
-    Similarity.writeIvfIndex(base, idCol, vecCol, nCells, seed, indexDir,
-      centroids = Some(cents))
+    Similarity.writeIvfIndex(base, idCol, vecCol, indexDir, cents)
     // day 1: the delta assigns with the STORED quantizer and appends as new
     // files — base partitions byte-untouched
     Similarity.appendToIvfIndex(spark, indexDir, delta, idCol, vecCol)

@@ -7,16 +7,31 @@ import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor / similarity search over an embedding column.
   *
-  * Two paths:
-  *   - [[bruteForceTopK]]: exact top-k by cosine — the correctness baseline.
-  *     The query set is broadcast (it is small by definition), the corpus is
-  *     scanned once, and per-query top-k is a bounded window; at 1000
-  *     executors this is one broadcast + one corpus scan + one k·|queries|
-  *     sized shuffle — no corpus×corpus blowup.
-  *   - [[lshTopK]]: random-hyperplane LSH bucketing — corpus and queries are
-  *     bucketed by projection sign bits; only same-bucket pairs are scored.
-  *     Scale path when even one full corpus scan per query batch is too much;
-  *     recall is tunable via number of planes / probe multiplicity.
+  * Path families:
+  *   - exact: [[bruteForceTopK]] (the correctness baseline — the query set
+  *     is broadcast, the corpus scanned once, per-query top-k a bounded
+  *     window; no corpus×corpus blowup), [[cosineNearDupPairs]] and
+  *     [[semanticScreen]];
+  *   - LSH: [[lshTopK]] — corpus and queries bucketed by random-hyperplane
+  *     sign bits, only same-bucket pairs scored;
+  *   - IVF, in memory ([[ivfTopK]]) and stored ([[writeIvfIndex]],
+  *     [[appendToIvfIndex]], [[deleteFromIvfIndex]], [[vacuumIvfIndex]],
+  *     [[ivfTopKIndexed]], [[semanticScreenIndexed]]) — a k-means coarse
+  *     quantizer ([[trainIvfCentroids]], [[kmeansRefine]]) restricts each
+  *     query to its `nProbe` nearest cells;
+  *   - PQ / IVF-PQ: [[pqTopK]], [[ivfPqTopK]], [[ivfPqRerankTopK]] and the
+  *     stored [[writeIvfPqIndex]] / [[appendToIvfPqIndex]] /
+  *     [[ivfPqTopKIndexed]] — asymmetric-distance scoring from PQ codes
+  *     ([[trainPqCodebooks]]);
+  *   - cell-restricted: [[cellNearDupPairs]], [[cellKnnGraph]],
+  *     [[hardNegatives]] — candidates form only within a k-means cell.
+  *
+  * Every family shares one step per stage: [[nearestCell]] assigns cells,
+  * [[probeCells]] expands a query's probe cells, [[rankTopK]] keeps the
+  * per-query top k, [[adc]] scores codes against a query LUT, and
+  * [[liveCorpus]] reads a stored index minus its tombstones. Trained
+  * quantizers and codebooks are corpus properties: train once, pass them
+  * in.
   */
 object Similarity {
 
@@ -36,11 +51,21 @@ object Similarity {
     val scored = c.join(broadcast(q), col("id") =!= col("query_id"))
       .withColumn("cosine",
         round(cosinePrenormed(col("vec"), col("qvec"), col("nrm"), col("qnrm")), 6))
+    rankTopK(scored, "cosine", descending = true, k)
+  }
+
+  /** The per-query top-k every search path ends in: rank `scored` rows per
+    * `query_id` by (`score`, `id` asc), keep rank ≤ k, and select
+    * (query_id, neighbor_id, score, rank) — a bounded window, ties broken by
+    * id, fully deterministic. `id` names the candidate column. */
+  private def rankTopK(scored: DataFrame, score: String, descending: Boolean,
+                       k: Int, id: String = "id"): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("id").asc)
+      .orderBy(if (descending) col(score).desc else col(score).asc, col(id).asc)
+    val nbr = if (id == "neighbor_id") col(id) else col(id).as("neighbor_id")
     scored.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
-      .select(col("query_id"), col("id").as("neighbor_id"), col("cosine"), col("rank"))
+      .select(col("query_id"), nbr, col(score), col("rank"))
   }
 
   /** Per-group mean embedding (class centroids) — the average-pooling op of
@@ -70,15 +95,9 @@ object Similarity {
     * literals. Empty cells simply emit no rows (standard Lloyd's: reseed
     * or drop). */
   def kmeansRefine(df: DataFrame, idCol: String, vecCol: String,
-                   centroids: Array[Array[Double]]): DataFrame = {
-    val cents: Seq[Seq[Double]] = centroids.map(_.toSeq).toSeq
-    df.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .withColumn("cell",
-        element_at(cellDists(col("vec"), cents), 1).getField("cell"))
-      .select(col("cell"), posexplode(col("vec")).as(Seq("pos", "v")))
-      .groupBy(col("cell"), col("pos"))
-      .agg(count(lit(1)).as("n_vecs"), avg(col("v").cast("double")).as("mean"))
-  }
+                   centroids: Array[Array[Double]]): DataFrame =
+    groupCentroids(df.select(col(idCol).as("id"), col(vecCol).as("vec"))
+      .withColumn("cell", nearestCell(col("vec"), centroids)), "cell", "vec")
 
   /** RECIPROCAL-RANK FUSION of two per-query rankings — the hybrid-search
     * primitive (fuse a lexical ranking with a vector ranking, or ensemble
@@ -97,7 +116,6 @@ object Similarity {
   def rrfFuse(a: DataFrame, b: DataFrame, k0: Int = 60,
               topK: Int = 5): DataFrame = {
     require(k0 >= 1 && topK >= 1, "k0 >= 1, topK >= 1")
-    import org.apache.spark.sql.expressions.Window
     val contrib = (df: DataFrame) => df.select(col("query_id"),
       col("neighbor_id"), expr(s"1000000L div ($k0 + rank)").as("c"))
     val fused = contrib(a).unionByName(contrib(b))
@@ -125,11 +143,7 @@ object Similarity {
         col("bucket") === col("qbucket") && col("id") =!= col("query_id"))
       .withColumn("cosine",
         round(cosinePrenormed(col("vec"), col("qvec"), col("nrm"), col("qnrm")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("id").as("neighbor_id"), col("cosine"), col("rank"))
+    rankTopK(scored, "cosine", descending = true, k)
   }
 
   /** Seeded k-means (kmeans++ init + Lloyd's) over a BOUNDED corpus sample,
@@ -143,13 +157,13 @@ object Similarity {
     * partitioning-invariant, since the sample is drawn by content hash
     * order ([[hashOrderedSample]]), not file order.
     *
-    * Call once per corpus and reuse (see [[ivfTopK]]'s `centroids` param) —
-    * the query registry memoizes per (dataset, nCells, seed). */
+    * Call once per corpus and pass the result to every IVF and
+    * cell-restricted operator — the query registry memoizes per (dataset,
+    * nCells, seed). */
   def trainIvfCentroids(corpus: DataFrame, vecCol: String,
-                        nCells: Int, seed: Long = 42L,
-                        maxIter: Int = 10): Array[Array[Double]] = {
+                        nCells: Int, seed: Long = 42L): Array[Array[Double]] = {
     val sample = hashOrderedSample(corpus, vecCol, math.max(nCells * 200, 2000))
-    kmeansOnSample(sample, nCells, seed, maxIter)
+    kmeansOnSample(sample, nCells, seed)
   }
 
   /** Bounded training sample as the `n` vectors with the SMALLEST md5 of
@@ -174,13 +188,16 @@ object Similarity {
       .map(_.getSeq[Double](0).toArray)
   }
 
+  /** Lloyd's rounds per quantizer training run (IVF cells and PQ subspaces). */
+  private val KmeansMaxIter = 10
+
   /** The seeded kmeans++/Lloyd's core of [[trainIvfCentroids]], factored
     * over an in-memory sample so PQ codebook training ([[trainPqCodebooks]])
     * reuses the identical arithmetic per subspace. Bit-for-bit the same
     * centroids as the pre-factoring trainIvfCentroids: same rng sequence,
     * same accumulation order. */
-  private[graft] def kmeansOnSample(sample: Array[Array[Double]], nCells: Int,
-                                    seed: Long, maxIter: Int): Array[Array[Double]] = {
+  private def kmeansOnSample(sample: Array[Array[Double]], nCells: Int,
+                             seed: Long): Array[Array[Double]] = {
     require(sample.nonEmpty, "empty training sample")
     val dim = sample.head.length
     val rnd = new scala.util.Random(seed)
@@ -211,7 +228,7 @@ object Similarity {
     val k = centers.size
     var iter = 0
     var moved = true
-    while (iter < maxIter && moved) {
+    while (iter < KmeansMaxIter && moved) {
       val sums = Array.fill(k)(new Array[Double](dim))
       val counts = new Array[Long](k)
       sample.foreach { p =>
@@ -247,15 +264,27 @@ object Similarity {
   /** Distance to every IVF centroid as codegen'd expressions over literal
     * centroid arrays, ascending (d², cell) structs; cell = element 1's cell,
     * probes = the first nProbe cells. */
-  private def cellDists(vec: Column, cents: Seq[Seq[Double]]): Column = {
-    val ds = cents.zipWithIndex.map { case (c, i) =>
-      val cArr = array(c.map(lit): _*)
+  private def cellDists(vec: Column, cents: Array[Array[Double]]): Column = {
+    val ds = cents.toSeq.zipWithIndex.map { case (c, i) =>
+      val cArr = array(c.toSeq.map(lit): _*)
       val d2 = dot(vec, vec) - lit(2.0) * dot(vec, cArr) +
         lit(c.map(x => x * x).sum)
       struct(d2.as("d"), lit(i).as("cell"))
     }
     array_sort(array(ds: _*))
   }
+
+  /** The cell assignment every IVF consumer shares: `vec`'s nearest
+    * centroid (element 1 of [[cellDists]]). */
+  private def nearestCell(vec: Column, cents: Array[Array[Double]]): Column =
+    element_at(cellDists(vec, cents), 1).getField("cell")
+
+  /** The probe expansion: one row per cell among `vec`'s `nProbe` nearest,
+    * the join key of every IVF probe. */
+  private def probeCells(vec: Column, cents: Array[Array[Double]],
+                         nProbe: Int): Column =
+    explode(transform(slice(cellDists(vec, cents), 1, nProbe),
+      s => s.getField("cell")))
 
   /** IVF (inverted-file) approximate top-k: a k-means coarse quantizer
     * partitions the corpus into `nCells` cells; each query probes only its
@@ -269,40 +298,34 @@ object Similarity {
     * distances via the native codegen dot expressions, rank ties broken by
     * neighbor id. Pass `centroids` to reuse a trained quantizer across
     * queries (training per call is wasted work — centroids depend only on
-    * the corpus). */
+    * the corpus); without it, `nCells` and `seed` train one here. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame,
               idCol: String, vecCol: String, k: Int = 5,
               nCells: Int = 16, nProbe: Int = 4, seed: Long = 42L,
               centroids: Option[Array[Array[Double]]] = None): DataFrame = {
-    val cents: Seq[Seq[Double]] =
-      centroids.getOrElse(trainIvfCentroids(corpus, vecCol, nCells, seed))
-        .map(_.toSeq).toSeq
-
-    val c = prep(corpus, idCol, vecCol)
-      .withColumn("cell", element_at(cellDists(col("vec"), cents), 1).getField("cell"))
-    val q = prep(queries, idCol, vecCol)
-      .select(col("id").as("query_id"), col("vec").as("qvec"), col("nrm").as("qnrm"),
-        explode(transform(slice(cellDists(col("vec"), cents), 1, nProbe),
-          s => s.getField("cell"))).as("cell"))
-
-    probeTopK(c, q, k)
+    val cents = centroids.getOrElse(trainIvfCentroids(corpus, vecCol, nCells, seed))
+    probeTopK(assignedCorpus(corpus, idCol, vecCol, cents), queries,
+      idCol, vecCol, cents, k, nProbe)
   }
 
   /** The IVF probe join shared by the in-memory and stored-index paths:
     * corpus rows (id, vec, nrm, cell) join the broadcast probe set
-    * (query_id, qvec, qnrm, cell) on cell, cosine-rank per query, keep k.
-    * Candidate volume is nProbe/nCells of the corpus; the window is bounded
-    * by candidates-per-query, never corpus-sized. */
-  private def probeTopK(c: DataFrame, q: DataFrame, k: Int): DataFrame = {
+    * (query_id, qvec, qnrm, cell) — each query once per probed cell — on
+    * cell, cosine-rank per query, keep k. Candidate volume is nProbe/nCells
+    * of the corpus; the window is bounded by candidates-per-query, never
+    * corpus-sized. */
+  private def probeTopK(c: DataFrame, queries: DataFrame,
+                        idCol: String, vecCol: String,
+                        cents: Array[Array[Double]],
+                        k: Int, nProbe: Int): DataFrame = {
+    val q = prep(queries, idCol, vecCol)
+      .select(col("id").as("query_id"), col("vec").as("qvec"), col("nrm").as("qnrm"),
+        probeCells(col("vec"), cents, nProbe).as("cell"))
     val scored = c.as("c").join(broadcast(q.as("q")),
         col("c.cell") === col("q.cell") && col("c.id") =!= col("q.query_id"))
       .withColumn("cosine",
         round(cosinePrenormed(col("c.vec"), col("q.qvec"), col("c.nrm"), col("q.qnrm")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("id").as("neighbor_id"), col("cosine"), col("rank"))
+    rankTopK(scored, "cosine", descending = true, k)
   }
 
   /** Persist a trained IVF index as the shipped ANN artifact — the
@@ -317,14 +340,12 @@ object Similarity {
     * batch READS nProbe/nCells of the corpus, not just scores that
     * fraction. The in-memory [[ivfTopK]] assigns cells as a narrow map but
     * still scans the whole corpus; the stored layout is how a 100 TB
-    * vector store actually serves probes. Pass `centroids` to reuse an
-    * already-trained quantizer (same corpus-property memo as [[ivfTopK]]). */
+    * vector store actually serves probes. `centroids` is the trained
+    * quantizer ([[trainIvfCentroids]]). */
   def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                    nCells: Int = 16, seed: Long = 42L, outPath: String,
-                    centroids: Option[Array[Array[Double]]] = None): Unit = {
-    val cents = centroids.getOrElse(trainIvfCentroids(corpus, vecCol, nCells, seed))
-    writeCentroidTable(corpus.sparkSession, cents, outPath)
-    assignedCorpus(corpus, idCol, vecCol, cents.map(_.toSeq).toSeq)
+                    outPath: String, centroids: Array[Array[Double]]): Unit = {
+    writeCentroidTable(corpus.sparkSession, centroids, outPath)
+    assignedCorpus(corpus, idCol, vecCol, centroids)
       .write.partitionBy("cell").mode("overwrite").parquet(s"$outPath/corpus")
   }
 
@@ -339,13 +360,12 @@ object Similarity {
       .coalesce(1).write.mode("overwrite").parquet(s"$outPath/centroids")
   }
 
-  /** (id, vec, nrm, cell) — the cell-assigned corpus frame both the initial
-    * index write and incremental appends produce (one narrow encode pass). */
+  /** (id, vec, nrm, cell) — the cell-assigned corpus frame the in-memory
+    * IVF probe, the cell-restricted self-joins, the initial index write and
+    * incremental appends all start from (one narrow encode pass). */
   private def assignedCorpus(corpus: DataFrame, idCol: String, vecCol: String,
-                             cs: Seq[Seq[Double]]): DataFrame =
-    prep(corpus, idCol, vecCol)
-      .withColumn("cell",
-        element_at(cellDists(col("vec"), cs), 1).getField("cell"))
+                             cents: Array[Array[Double]]): DataFrame =
+    prep(corpus, idCol, vecCol).withColumn("cell", nearestCell(col("vec"), cents))
 
   /** Incremental index maintenance — the X49 `writeDedupIndex` corpus-
     * maintenance shape applied to ANN: new vectors are assigned cells with
@@ -359,12 +379,9 @@ object Similarity {
     * equality against the rebuild oracle). */
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
                        indexPath: String, newRows: DataFrame,
-                       idCol: String, vecCol: String): Unit = {
-    val cs: Seq[Seq[Double]] =
-      readIvfCentroids(spark, indexPath).map(_.toSeq).toSeq
-    assignedCorpus(newRows, idCol, vecCol, cs)
+                       idCol: String, vecCol: String): Unit =
+    assignedCorpus(newRows, idCol, vecCol, readIvfCentroids(spark, indexPath))
       .write.partitionBy("cell").mode("append").parquet(s"$indexPath/corpus")
-  }
 
   /** Load a stored quantizer's centroid matrix — nCells rows, a bounded
     * driver-side read by construction (the index artifact's metadata, not
@@ -385,15 +402,9 @@ object Similarity {
                      indexPath: String, queries: DataFrame,
                      idCol: String, vecCol: String, k: Int = 5,
                      nProbe: Int = 4): DataFrame = {
-    val cents: Seq[Seq[Double]] =
-      readIvfCentroids(spark, indexPath).map(_.toSeq).toSeq
-    val c = minusTombstones(spark, indexPath,
-      spark.read.parquet(s"$indexPath/corpus"))
-    val q = prep(queries, idCol, vecCol)
-      .select(col("id").as("query_id"), col("vec").as("qvec"), col("nrm").as("qnrm"),
-        explode(transform(slice(cellDists(col("vec"), cents), 1, nProbe),
-          s => s.getField("cell"))).as("cell"))
-    probeTopK(c, q, k)
+    val cents = readIvfCentroids(spark, indexPath)
+    probeTopK(liveCorpus(spark, indexPath), queries, idCol, vecCol, cents,
+      k, nProbe)
   }
 
   // ── Product quantization (PQ) ────────────────────────────────────────────
@@ -413,8 +424,8 @@ object Similarity {
     * from codes (classic IVF-PQ). Deterministic for (data, m, ksub, seed):
     * subspace `j` trains with `seed + j`. */
   def trainPqCodebooks(corpus: DataFrame, vecCol: String,
-                       m: Int = 8, ksub: Int = 16, seed: Long = 42L,
-                       maxIter: Int = 10): Array[Array[Array[Double]]] = {
+                       m: Int = 8, ksub: Int = 16,
+                       seed: Long = 42L): Array[Array[Array[Double]]] = {
     val sample = hashOrderedSample(corpus, vecCol, math.max(ksub * 200, 2000))
     require(sample.nonEmpty, "empty training sample")
     val dim = sample.head.length
@@ -422,7 +433,7 @@ object Similarity {
     val dsub = dim / m
     Array.tabulate(m) { j =>
       kmeansOnSample(sample.map(v => v.slice(j * dsub, (j + 1) * dsub)),
-        ksub, seed + j, maxIter)
+        ksub, seed + j)
     }
   }
 
@@ -494,8 +505,6 @@ object Similarity {
   def pqTopK(corpus: DataFrame, queries: DataFrame,
              idCol: String, vecCol: String,
              books: Array[Array[Array[Double]]], k: Int = 5): DataFrame = {
-    val m = books.length
-    val ksub = books(0).length
     val c = corpus.select(col(idCol).as("id"),
       pqEncode(col(vecCol), books).as("codes"))
     // lut(j)(i) = true d²(query subspace j, books(j)(i)) — native expression
@@ -504,17 +513,17 @@ object Similarity {
     // 10-row query side). Same FP association as pqReconError2's terms.
     val q = queries.select(col(idCol).as("query_id"),
       graft.functions.PqExpressions.pqAdcLutNative(col(vecCol), books).as("lut"))
-    val adc = (0 until m).map(j =>
+    val scored = c.join(broadcast(q), col("id") =!= col("query_id"))
+      .withColumn("adc_d2", round(adc(books.length), 6))
+    rankTopK(scored, "adc_d2", descending = false, k)
+  }
+
+  /** A code row's approximate d² against its query's LUT: the sum of m
+    * `lut(j)(codes(j))` probes — no corpus-side float math. */
+  private def adc(m: Int): Column =
+    (0 until m).map(j =>
       element_at(element_at(col("lut"), j + 1),
         element_at(col("codes"), j + 1) + lit(1))).reduce(_ + _)
-    val scored = c.join(broadcast(q), col("id") =!= col("query_id"))
-      .withColumn("adc_d2", round(adc, 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_d2").asc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("id").as("neighbor_id"), col("adc_d2"), col("rank"))
-  }
 
   /** Classic IVF-PQ: the IVF coarse quantizer restricts candidates to each
     * query's `nProbe` nearest cells, and PQ asymmetric-distance scoring ranks
@@ -534,34 +543,29 @@ object Similarity {
                 centroids: Array[Array[Double]],
                 books: Array[Array[Array[Double]]],
                 k: Int = 5, nProbe: Int = 4): DataFrame = {
-    val cents: Seq[Seq[Double]] = centroids.map(_.toSeq).toSeq
-    val m = books.length
     val c = corpus.select(col(idCol).as("id"),
-      element_at(cellDists(col(vecCol), cents), 1).getField("cell").as("cell"),
+      nearestCell(col(vecCol), centroids).as("cell"),
       pqEncode(col(vecCol), books).as("codes"))
-    val q = queries.select(col(idCol).as("query_id"),
-      graft.functions.PqExpressions.pqAdcLutNative(col(vecCol), books).as("lut"),
-      explode(transform(slice(cellDists(col(vecCol), cents), 1, nProbe),
-        s => s.getField("cell"))).as("cell"))
-    adcProbeTopK(c, q, m, k)
+    adcProbeTopK(c, queries, idCol, vecCol, centroids, books, k, nProbe)
   }
 
   /** The ADC probe join shared by the in-memory and stored-index IVF-PQ
     * paths: code-carrying corpus rows (id, codes, cell) join the broadcast
-    * probe set (query_id, lut, cell) on cell; a candidate's approximate d²
-    * is m LUT probes, the top-k window is bounded per query. */
-  private def adcProbeTopK(c: DataFrame, q: DataFrame, m: Int, k: Int): DataFrame = {
-    val adc = (0 until m).map(j =>
-      element_at(element_at(col("lut"), j + 1),
-        element_at(col("codes"), j + 1) + lit(1))).reduce(_ + _)
+    * probe set (query_id, lut, cell) — each query's LUT once per probed
+    * cell — on cell; a candidate's approximate d² is m LUT probes, the
+    * top-k window is bounded per query. */
+  private def adcProbeTopK(c: DataFrame, queries: DataFrame,
+                           idCol: String, vecCol: String,
+                           cents: Array[Array[Double]],
+                           books: Array[Array[Array[Double]]],
+                           k: Int, nProbe: Int): DataFrame = {
+    val q = queries.select(col(idCol).as("query_id"),
+      graft.functions.PqExpressions.pqAdcLutNative(col(vecCol), books).as("lut"),
+      probeCells(col(vecCol), cents, nProbe).as("cell"))
     val scored = c.as("c").join(broadcast(q.as("q")),
         col("c.cell") === col("q.cell") && col("c.id") =!= col("q.query_id"))
-      .withColumn("adc_d2", round(adc, 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_d2").asc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("id").as("neighbor_id"), col("adc_d2"), col("rank"))
+      .withColumn("adc_d2", round(adc(books.length), 6))
+    rankTopK(scored, "adc_d2", descending = false, k)
   }
 
   /** Persist a trained IVF-PQ index — the full billion-scale serving
@@ -573,7 +577,7 @@ object Similarity {
     * raw floats, cell-partitioned so the probe join's keys prune the SCAN
     * (dynamic partition pruning), and scoring needs no corpus-side float
     * math at all — a probe batch reads nProbe/nCells of an already-
-    * compressed table. Both trained structures may be passed in (corpus
+    * compressed table. Both trained structures are arguments (corpus
     * properties — the [[trainIvfCentroids]]/[[trainPqCodebooks]] memo
     * rationale). */
   def writeIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
@@ -587,12 +591,19 @@ object Similarity {
       b.zipWithIndex.map { case (c, i) => (j, i, c.toSeq) }
     }.toSeq.toDF("sub", "code", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$outPath/codebooks")
-    val cs: Seq[Seq[Double]] = centroids.map(_.toSeq).toSeq
-    corpus.select(col(idCol).as("id"),
-        pqEncode(col(vecCol), books).as("codes"),
-        element_at(cellDists(col(vecCol), cs), 1).getField("cell").as("cell"))
+    pqEncodedCorpus(corpus, idCol, vecCol, centroids, books)
       .write.partitionBy("cell").mode("overwrite").parquet(s"$outPath/corpus")
   }
+
+  /** (id, codes, cell) — the compressed corpus frame both the initial
+    * IVF-PQ index write and incremental appends produce (one narrow encode
+    * pass). */
+  private def pqEncodedCorpus(corpus: DataFrame, idCol: String, vecCol: String,
+                              cents: Array[Array[Double]],
+                              books: Array[Array[Array[Double]]]): DataFrame =
+    corpus.select(col(idCol).as("id"),
+      pqEncode(col(vecCol), books).as("codes"),
+      nearestCell(col(vecCol), cents).as("cell"))
 
   /** Load stored PQ codebooks back into the m×ksub×dsub matrix — m·ksub
     * small rows, index metadata like [[readIvfCentroids]]. */
@@ -637,14 +648,17 @@ object Similarity {
     if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
   }
 
-  /** Apply the tombstone filter to a corpus frame (anti-join against the
-    * broadcast deletion set) — shared by every stored-index probe path. */
-  private def minusTombstones(spark: org.apache.spark.sql.SparkSession,
-                              indexPath: String, corpus: DataFrame): DataFrame =
+  /** A stored index's live corpus: its cell-partitioned corpus minus the
+    * tombstones (anti-join against the broadcast deletion set) — the
+    * corpus side of every stored-index probe path. */
+  private def liveCorpus(spark: org.apache.spark.sql.SparkSession,
+                         indexPath: String): DataFrame = {
+    val corpus = spark.read.parquet(s"$indexPath/corpus")
     tombstones(spark, indexPath) match {
       case Some(t) => corpus.join(broadcast(t.select(col("id"))), Seq("id"), "left_anti")
       case None => corpus
     }
+  }
 
   /** Physically remove tombstoned rows: rewrite ONLY the cell partitions
     * containing them (dynamic partition overwrite — other cells' files are
@@ -708,15 +722,10 @@ object Similarity {
     * ints) into ≤nCells directories, base files immobile. */
   def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
                          indexPath: String, newRows: DataFrame,
-                         idCol: String, vecCol: String): Unit = {
-    val cs: Seq[Seq[Double]] =
-      readIvfCentroids(spark, indexPath).map(_.toSeq).toSeq
-    val books = readPqCodebooks(spark, indexPath)
-    newRows.select(col(idCol).as("id"),
-        pqEncode(col(vecCol), books).as("codes"),
-        element_at(cellDists(col(vecCol), cs), 1).getField("cell").as("cell"))
+                         idCol: String, vecCol: String): Unit =
+    pqEncodedCorpus(newRows, idCol, vecCol, readIvfCentroids(spark, indexPath),
+      readPqCodebooks(spark, indexPath))
       .write.partitionBy("cell").mode("append").parquet(s"$indexPath/corpus")
-  }
 
   /** IVF-PQ top-k against a STORED index ([[writeIvfPqIndex]] output):
     * quantizer + codebooks come from the artifact's metadata tables, the
@@ -729,16 +738,10 @@ object Similarity {
                        indexPath: String, queries: DataFrame,
                        idCol: String, vecCol: String, k: Int = 5,
                        nProbe: Int = 4): DataFrame = {
-    val cents: Seq[Seq[Double]] =
-      readIvfCentroids(spark, indexPath).map(_.toSeq).toSeq
+    val cents = readIvfCentroids(spark, indexPath)
     val books = readPqCodebooks(spark, indexPath)
-    val c = minusTombstones(spark, indexPath,
-      spark.read.parquet(s"$indexPath/corpus"))
-    val q = queries.select(col(idCol).as("query_id"),
-      graft.functions.PqExpressions.pqAdcLutNative(col(vecCol), books).as("lut"),
-      explode(transform(slice(cellDists(col(vecCol), cents), 1, nProbe),
-        s => s.getField("cell"))).as("cell"))
-    adcProbeTopK(c, q, books.length, k)
+    adcProbeTopK(liveCorpus(spark, indexPath), queries, idCol, vecCol, cents,
+      books, k, nProbe)
   }
 
   /** IVF-PQ with EXACT RE-RANKING — the production two-stage retrieval
@@ -776,11 +779,7 @@ object Similarity {
       .join(broadcast(q), "query_id")
       .withColumn("cosine",
         round(cosinePrenormed(col("vec"), col("qvec"), col("nrm"), col("qnrm")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    rescored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
+    rankTopK(rescored, "cosine", descending = true, k, id = "neighbor_id")
   }
 
   /** SemDeDup-style CELL-RESTRICTED near-dup pairs — the sub-quadratic
@@ -806,18 +805,14 @@ object Similarity {
     *
     * Scale shape: one narrow corpus pass for the assignment (centroid
     * distances are codegen'd literal dots), one cell-partitioned
-    * shuffle-hash self-join. A hot cell concentrates work as n_c² — raise
-    * `nCells` with corpus size (SemDeDup runs ~100k cells at web scale) so
+    * shuffle-hash self-join. A hot cell concentrates work as n_c² — train
+    * more cells as the corpus grows (SemDeDup runs ~100k cells at web scale) so
     * cells stay task-sized; the skew-salting and block-matrix machinery
     * compose within a cell if one still melts. */
   def cellNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
-                       threshold: Double, nCells: Int = 16, seed: Long = 42L,
-                       centroids: Option[Array[Array[Double]]] = None): DataFrame = {
-    val cents: Seq[Seq[Double]] =
-      centroids.getOrElse(trainIvfCentroids(df, vecCol, nCells, seed))
-        .map(_.toSeq).toSeq
-    val base = prep(df, idCol, vecCol)
-      .withColumn("cell", element_at(cellDists(col("vec"), cents), 1).getField("cell"))
+                       threshold: Double,
+                       centroids: Array[Array[Double]]): DataFrame = {
+    val base = assignedCorpus(df, idCol, vecCol, centroids)
     val a = base.select(col("id").as("id_a"), col("vec").as("vec_a"),
       col("nrm").as("nrm_a"), col("cell"))
     val b = base.select(col("id").as("id_b"), col("vec").as("vec_b"),
@@ -843,23 +838,18 @@ object Similarity {
     * rank), ties broken by nbr_id; vectors alone in their cell emit no
     * edges (the k-probe multi-cell variant composes via [[ivfTopK]] when
     * recall across cell borders matters). */
-  def cellKnnGraph(df: DataFrame, idCol: String, vecCol: String, k: Int = 3,
-                   nCells: Int = 16, seed: Long = 42L,
-                   centroids: Option[Array[Array[Double]]] = None): DataFrame = {
+  def cellKnnGraph(df: DataFrame, idCol: String, vecCol: String,
+                   centroids: Array[Array[Double]], k: Int = 3): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    val cents: Seq[Seq[Double]] =
-      centroids.getOrElse(trainIvfCentroids(df, vecCol, nCells, seed))
-        .map(_.toSeq).toSeq
-    val base = prep(df, idCol, vecCol)
-      .withColumn("cell", element_at(cellDists(col("vec"), cents), 1).getField("cell"))
+    val base = assignedCorpus(df, idCol, vecCol, centroids)
     val a = base.select(col("id").as("src_id"), col("vec").as("vec_a"),
       col("nrm").as("nrm_a"), col("cell"))
     val b = base.select(col("id").as("nbr_id"), col("vec").as("vec_b"),
       col("nrm").as("nrm_b"), col("cell"))
     val cosineExpr =
       round(cosinePrenormed(col("vec_a"), col("vec_b"), col("nrm_a"), col("nrm_b")), 6)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src_id")).orderBy(col("cosine").desc, col("nbr_id").asc)
+    val w = Window.partitionBy(col("src_id"))
+      .orderBy(col("cosine").desc, col("nbr_id").asc)
     a.as("a").join(b.hint("shuffle_hash").as("b"),
         col("a.cell") === col("b.cell") && col("src_id") =!= col("nbr_id"))
       .select(col("src_id"), col("nbr_id"), cosineExpr.as("cosine"))
@@ -977,14 +967,11 @@ object Similarity {
                             indexPath: String, arrivals: DataFrame,
                             idCol: String, vecCol: String,
                             threshold: Double, nProbe: Int = 4): DataFrame = {
-    val cents: Seq[Seq[Double]] =
-      readIvfCentroids(spark, indexPath).map(_.toSeq).toSeq
-    val c = minusTombstones(spark, indexPath,
-      spark.read.parquet(s"$indexPath/corpus"))
+    val cents = readIvfCentroids(spark, indexPath)
+    val c = liveCorpus(spark, indexPath)
     val a = prep(arrivals, idCol, vecCol)
       .select(col("id").as("a_id"), col("vec").as("avec"), col("nrm").as("anrm"),
-        explode(transform(slice(cellDists(col("vec"), cents), 1, nProbe),
-          s => s.getField("cell"))).as("cell"))
+        probeCells(col("vec"), cents, nProbe).as("cell"))
     a.join(c, Seq("cell"))
       .where(col("id") =!= col("a_id"))
       .withColumn("cosine",
@@ -1002,15 +989,12 @@ object Similarity {
     * (src_id, src_label, neg_id, neg_label, cosine), ≤ 1 row per anchor —
     * anchors whose cell holds no other-label vector emit nothing. */
   def hardNegatives(df: DataFrame, idCol: String, vecCol: String,
-                    labelCol: String, nCells: Int = 16, seed: Long = 42L,
-                    centroids: Option[Array[Array[Double]]] = None): DataFrame = {
-    val cents: Seq[Seq[Double]] =
-      centroids.getOrElse(trainIvfCentroids(df, vecCol, nCells, seed))
-        .map(_.toSeq).toSeq
+                    labelCol: String,
+                    centroids: Array[Array[Double]]): DataFrame = {
     val base = df.select(col(idCol).as("id"), col(vecCol).as("vec"),
         col(labelCol).as("lbl"))
       .withColumn("nrm", norm(col("vec")))
-      .withColumn("cell", element_at(cellDists(col("vec"), cents), 1).getField("cell"))
+      .withColumn("cell", nearestCell(col("vec"), centroids))
     val a = base.select(col("id").as("src_id"), col("lbl").as("src_label"),
       col("vec").as("vec_a"), col("nrm").as("nrm_a"), col("cell"))
     val b = base.select(col("id").as("neg_id"), col("lbl").as("neg_label"),

@@ -12,9 +12,6 @@ import graft.operators.{Curation, Dedup, TextOps, Versioning}
   */
 object CurationQueries {
 
-  private def q(f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, dir) => f(Tuning.tune(s), dir)
-
   /** Deterministic benchmark membership for the decontamination demo: every
     * 11th doc plays the held-out eval set. */
   private val BenchMod = 11

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{Sources, Tuning}
+import graft.engine.Sources
 import graft.operators.{Dedup, TextOps}
 
 /** Deduplication query registry over `documents`: exact (hash-groupBy),
@@ -15,9 +15,6 @@ import graft.operators.{Dedup, TextOps}
   * (SimHash — the IVF/PQ artifact-embedding pattern).
   */
 object DedupQueries {
-
-  private def q(f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, dir) => f(Tuning.tune(s), dir)
 
   /** Planted near-dups in the driver corpus sit at jaccard ≥ 0.9; background
     * pairs at ≤ 0.1 — θ=0.8 separates them with wide margin on both sides. */

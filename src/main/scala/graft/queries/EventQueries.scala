@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{Sources, Tuning}
+import graft.engine.Sources
 import graft.operators.Multimodal
 
 /** Event-time and remaining-surface queries: tumbling-window aggregation,
@@ -16,9 +16,6 @@ import graft.operators.Multimodal
   * otherwise hash differently driver-side while denoting the same instant).
   */
 object EventQueries {
-
-  private def q(f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, dir) => f(Tuning.tune(s), dir)
 
   /** Streaming file sources cannot infer schemas, and events.parquet's `ts`
     * physical layout has changed across driver testdata generations

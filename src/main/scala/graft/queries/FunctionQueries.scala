@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{Sources, Tuning}
+import graft.engine.Sources
 
 /** Scalar-function and join-kind coverage battery (beyond the reference's
   * six-function surface — SURVEY §2.6): strings, dates, arrays, null
@@ -11,9 +11,6 @@ import graft.engine.{Sources, Tuning}
   * here is breadth of verified function semantics, not plan shape.
   */
 object FunctionQueries {
-
-  private def q(f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, dir) => f(Tuning.tune(s), dir)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

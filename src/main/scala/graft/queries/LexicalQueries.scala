@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{Sources, Tuning}
+import graft.engine.Sources
 import graft.operators.Lexical
 
 /** Lexical retrieval & matching registry (X95–X98): vocabulary typo-pair
@@ -19,9 +19,6 @@ import graft.operators.Lexical
   *     are engine-portable bit-for-bit.
   */
 object LexicalQueries {
-
-  private def q(f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, dir) => f(Tuning.tune(s), dir)
 
   /** The registered 3-token phrase (present at every fixture scale —
     * 5× at sf0.001, 5× at sf0.01, 10× at sf0.1; any phrase works — the

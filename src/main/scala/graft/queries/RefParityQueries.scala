@@ -15,9 +15,6 @@ import graft.engine.{RefQueries, Sources, Tuning}
   */
 object RefParityQueries {
 
-  private def q(f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, dir) => f(Tuning.tune(s), dir)
-
   /** Committed MovieLens-format CSV fixture (deterministic, RFC-4180 edge
     * rows included) — independent of the sf testdata dir. Resolved against
     * the working directory, which sbt and [[graft.Verify]] set to the

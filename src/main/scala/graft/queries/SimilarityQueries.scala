@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{Sources, Tuning}
+import graft.engine.Sources
 import graft.operators.Similarity
 
 /** Similarity-search query registry over `embeddings` (500 × 64-dim float
@@ -17,9 +17,6 @@ import graft.operators.Similarity
   * cannot flip a comparison.
   */
 object SimilarityQueries {
-
-  private def q(f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, dir) => f(Tuning.tune(s), dir)
 
   /** Corpus cosine distribution tops out ≈0.51; θ=0.4 keeps a stable,
     * non-trivial pair set (59 pairs at sf0.01). */
@@ -49,8 +46,8 @@ object SimilarityQueries {
     Artifacts.dir("ivf", dir) { out =>
       val emb = Sources.embeddings(s, dir)
       val cents = centroids(s, dir)
-      Similarity.writeIvfIndex(emb, "vec_id", "embedding", nCells = 16,
-        seed = 42L, outPath = out, centroids = Some(cents))
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding", outPath = out,
+        centroids = cents)
     }
 
   /** Stored IVF-PQ index (compressed-code serving artifact) — build once
@@ -75,8 +72,7 @@ object SimilarityQueries {
       val emb = Sources.embeddings(s, dir)
       val cents = centroids(s, dir)
       Similarity.writeIvfIndex(emb.where(col("vec_id") % 10 =!= 0),
-        "vec_id", "embedding", nCells = 16, seed = 42L, outPath = out,
-        centroids = Some(cents))
+        "vec_id", "embedding", outPath = out, centroids = cents)
       Similarity.appendToIvfIndex(s, out,
         emb.where(col("vec_id") % 10 === 0), "vec_id", "embedding")
     }
@@ -91,8 +87,8 @@ object SimilarityQueries {
     Artifacts.dir("ivfdel", dir) { out =>
       val emb = Sources.embeddings(s, dir)
       val cents = centroids(s, dir)
-      Similarity.writeIvfIndex(emb, "vec_id", "embedding", nCells = 16,
-        seed = 42L, outPath = out, centroids = Some(cents))
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding", outPath = out,
+        centroids = cents)
       Similarity.deleteFromIvfIndex(s, out,
         emb.where(col("vec_id") % 10 === 0), "vec_id")
     }
@@ -130,7 +126,7 @@ object SimilarityQueries {
       val emb = Sources.embeddings(s, dir)
       val cents = centroids(s, dir)
       Similarity.cellNearDupPairs(emb, "vec_id", "embedding",
-        CosineThreshold, nCells = 16, centroids = Some(cents))
+        CosineThreshold, centroids = cents)
         .localCheckpoint()
     }
 
@@ -412,7 +408,7 @@ object SimilarityQueries {
       val emb = Sources.embeddings(s, dir)
       val cents = centroids(s, dir)
       Similarity.cellKnnGraph(emb, "vec_id", "embedding", k = 3,
-        nCells = 16, centroids = Some(cents))
+        centroids = cents)
         .orderBy(col("src_id"), col("rank"))
     }),
 
@@ -493,7 +489,7 @@ object SimilarityQueries {
       val emb = Sources.embeddings(s, dir)
       val cents = centroids(s, dir)
       Similarity.hardNegatives(emb, "vec_id", "embedding", "label",
-        nCells = 16, centroids = Some(cents))
+        centroids = cents)
         .orderBy(col("src_id"))
     }),
 
@@ -552,7 +548,7 @@ object SimilarityQueries {
       val emb = Sources.embeddings(s, dir)
       val cents = centroids(s, dir)
       val edges = Similarity.cellKnnGraph(emb, "vec_id", "embedding", k = 3,
-          nCells = 16, centroids = Some(cents))
+          centroids = cents)
         .select(col("src_id"), col("nbr_id"))
       graft.operators.Graph.triangles(edges, "src_id", "nbr_id")
         .orderBy(col("w_a"), col("w_b"), col("w_c"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{Sources, Tuning}
+import graft.engine.Sources
 import graft.operators.{Sketch, TextOps}
 
 /** Text-analysis query registry over the `documents` table: token counting,
@@ -16,9 +16,6 @@ import graft.operators.{Sketch, TextOps}
   * rolling hash) — see each oracle for the DuckDB twin.
   */
 object TextQueries {
-
-  private def q(f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, dir) => f(Tuning.tune(s), dir)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

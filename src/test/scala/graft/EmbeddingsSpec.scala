@@ -104,7 +104,7 @@ class EmbeddingsSpec extends AnyFunSuite {
   test("hard negatives: label differs and cosine is the within-cell max") {
     val cents = Similarity.trainIvfCentroids(emb, "embedding", 16, 42L)
     val hn = Similarity.hardNegatives(emb, "vec_id", "embedding", "label",
-      nCells = 16, centroids = Some(cents)).collect()
+      centroids = cents).collect()
     assert(hn.nonEmpty)
     val labels = emb.select("vec_id", "label").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap

@@ -14,6 +14,16 @@ class SimilaritySpec extends AnyFunSuite {
 
   private def vec(xs: Double*) = xs.toArray
 
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("dot / norm / cosine on known vectors") {
     val df = Seq((vec(1, 2, 3), vec(4, 5, 6))).toDF("a", "b")
     val r = df.select(
@@ -134,8 +144,8 @@ class SimilaritySpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_spec")
     try {
       val idx = tmp.resolve("index").toString
-      Similarity.writeIvfIndex(emb, "vec_id", "embedding", nCells = 16,
-        seed = 42L, outPath = idx, centroids = Some(cents))
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding",
+        outPath = idx, centroids = cents)
       // artifact shape: centroid table is nCells small rows, corpus is
       // partitioned by cell (directory column)
       assert(spark.read.parquet(s"$idx/centroids").count() == 16)
@@ -247,8 +257,8 @@ class SimilaritySpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft_screen_spec")
     try {
       val idx = tmp.resolve("index").toString
-      Similarity.writeIvfIndex(emb, "vec_id", "embedding", nCells = 16,
-        seed = 42L, outPath = idx, centroids = Some(cents))
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding",
+        outPath = idx, centroids = cents)
       val arrivals = emb.where(col("vec_id") % 5 === 4)
       val got = Similarity.semanticScreenIndexed(spark, idx, arrivals,
           "vec_id", "embedding", threshold = 0.3, nProbe = 4)
@@ -306,8 +316,7 @@ class SimilaritySpec extends AnyFunSuite {
     try {
       val idx = tmp.resolve("index").toString
       Similarity.writeIvfIndex(emb.where(col("vec_id") % 10 =!= 0),
-        "vec_id", "embedding", nCells = 16, seed = 42L, outPath = idx,
-        centroids = Some(cents))
+        "vec_id", "embedding", outPath = idx, centroids = cents)
       def corpusFiles(): Map[String, Long] = {
         val base = java.nio.file.Paths.get(idx, "corpus")
         import scala.jdk.CollectionConverters._
@@ -352,8 +361,8 @@ class SimilaritySpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft_ivfdel_spec")
     try {
       val idx = tmp.resolve("index").toString
-      Similarity.writeIvfIndex(emb, "vec_id", "embedding", nCells = 16,
-        seed = 42L, outPath = idx, centroids = Some(cents))
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding",
+        outPath = idx, centroids = cents)
       def corpusFiles(): Map[String, Long] = {
         import scala.jdk.CollectionConverters._
         java.nio.file.Files.walk(java.nio.file.Paths.get(idx, "corpus"))
@@ -468,6 +477,39 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("tombstone delete on a stored IVF-PQ index: probe ≡ ivfPqTopK over the live corpus, vacuum keeps it") {
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val q = emb.where(col("vec_id") < 10)
+    val cents = Similarity.trainIvfCentroids(emb, "embedding", nCells = 16, seed = 42L)
+    val books = Similarity.trainPqCodebooks(emb, "embedding", m = 16, ksub = 64, seed = 42L)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpqdel_spec")
+    try {
+      val idx = tmp.resolve("index").toString
+      Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", idx, cents, books)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+        .sortBy(t => (t._1, t._4)).toSeq
+      def direct(corpus: org.apache.spark.sql.DataFrame) = rows(Similarity.ivfPqTopK(
+        corpus, q, "vec_id", "embedding", cents, books, k = 5, nProbe = 4))
+      def probe() = rows(Similarity.ivfPqTopKIndexed(spark, idx, q,
+        "vec_id", "embedding", k = 5, nProbe = 4))
+      assert(direct(emb).exists(_._2 % 10 == 0),
+        "some deleted id must rank without the delete for this spec to bite")
+      Similarity.deleteFromIvfIndex(spark, idx,
+        emb.where(col("vec_id") % 10 === 0), "vec_id")
+      val preVacuum = probe()
+      assert(preVacuum.nonEmpty && !preVacuum.exists(_._2 % 10 == 0),
+        "the tombstoned codes probe must never return a deleted id")
+      assert(preVacuum == direct(emb.where(col("vec_id") % 10 =!= 0)),
+        "tombstoned codes probe must equal IVF-PQ over the corpus minus deletes")
+      Similarity.vacuumIvfIndex(spark, idx)
+      assert(probe() == preVacuum, "vacuum must not change probe results")
+    } finally {
+      import scala.reflect.io.Directory
+      new Directory(new java.io.File(tmp.toString)).deleteRecursively()
+    }
+  }
+
   test("PQ: codes in range, encode deterministic, recon error ≤ direct decode error") {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val books = Similarity.trainPqCodebooks(emb, "embedding", m = 16, ksub = 64)
@@ -494,13 +536,18 @@ class SimilaritySpec extends AnyFunSuite {
   test("PQ native expressions ≡ composed Column forms, bit-for-bit") {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val books = Similarity.trainPqCodebooks(emb, "embedding", m = 16, ksub = 64)
-    val diffs = emb.select(
-        Similarity.pqEncode(col("embedding"), books).as("cn"),
-        Similarity.pqEncodeComposed(col("embedding"), books).as("cc"),
-        Similarity.pqReconError2(col("embedding"), books).as("en"),
-        Similarity.pqReconError2Composed(col("embedding"), books).as("ec"))
-      .where(col("cn") =!= col("cc") || col("en") =!= col("ec"))
-      .count()
+    // the composed forms are ~3000-node trees: fused into one whole-stage
+    // method they exceed what Janino compiles, so the compare runs them
+    // unfused
+    val diffs = withConf("spark.sql.codegen.wholeStage", "false") {
+      emb.select(
+          Similarity.pqEncode(col("embedding"), books).as("cn"),
+          Similarity.pqEncodeComposed(col("embedding"), books).as("cc"),
+          Similarity.pqReconError2(col("embedding"), books).as("en"),
+          Similarity.pqReconError2Composed(col("embedding"), books).as("ec"))
+        .where(col("cn") =!= col("cc") || col("en") =!= col("ec"))
+        .count()
+    }
     assert(diffs == 0, "native PQ kernel must be bit-identical to the composed spec forms")
   }
 
@@ -656,7 +703,7 @@ class SimilaritySpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val cents = Similarity.trainIvfCentroids(emb, "embedding", nCells = 16, seed = 42L)
     val cellQ = Similarity.cellNearDupPairs(emb, "vec_id", "embedding", 0.4,
-      nCells = 16, centroids = Some(cents))
+      centroids = cents)
     val got = cellQ.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     // precision 1.0: every cell-restricted pair is a true ≥θ pair with the
     // exact pipeline's score bit-for-bit
@@ -681,7 +728,7 @@ class SimilaritySpec extends AnyFunSuite {
     val exactHi = pairsOf(Similarity.cosineNearDupPairs(union, "vec_id", "embedding", 0.99)
       .select("id_a", "id_b"))
     val cellHi = pairsOf(Similarity.cellNearDupPairs(union, "vec_id", "embedding", 0.99,
-      nCells = 16, centroids = Some(uCents)).select("id_a", "id_b"))
+      centroids = uCents).select("id_a", "id_b"))
     assert(exactHi.nonEmpty, "planted copies must produce ≥0.99 pairs")
     val recallHi = (cellHi & exactHi).size.toDouble / exactHi.size
     assert(recallHi >= 0.9,
@@ -736,7 +783,7 @@ class SimilaritySpec extends AnyFunSuite {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val cents = Similarity.trainIvfCentroids(emb, "embedding", nCells = 8, seed = 42L)
     val g = Similarity.cellKnnGraph(emb, "vec_id", "embedding", k = 3,
-      nCells = 8, centroids = Some(cents)).localCheckpoint()
+      centroids = cents).localCheckpoint()
     val bySrc = g.collect().groupBy(_.getLong(0))
     assert(bySrc.nonEmpty)
     bySrc.foreach { case (src, rows) =>
@@ -751,7 +798,7 @@ class SimilaritySpec extends AnyFunSuite {
     // must be symmetric (same-cell is mutual; no threshold cuts an edge) —
     // this pins "within-cell only" without re-deriving cell assignment
     val full = Similarity.cellKnnGraph(emb, "vec_id", "embedding", k = 100000,
-      nCells = 8, centroids = Some(cents))
+      centroids = cents)
       .select("src_id", "nbr_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(full.forall { case (a, b) => full.contains((b, a)) },
