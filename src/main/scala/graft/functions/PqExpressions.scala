@@ -135,6 +135,15 @@ private[graft] trait PqExprBase extends UnaryExpression with VecTyping {
     * oracle generator's embedded literals. */
   @transient protected lazy val c2: Array[Array[Double]] =
     books.map(_.map(c => c.map(x => x * x).sum))
+
+  /** Explain prints the codebook as its shape and content hash, not the
+    * array's identity hash, so equal codebooks print equal plans in every
+    * JVM. */
+  override protected def stringArgs: Iterator[Any] = {
+    val shape = s"${books.length}x${books(0).length}x${books(0)(0).length}"
+    val hash = java.util.Arrays.deepHashCode(books.asInstanceOf[Array[AnyRef]])
+    Iterator(child, s"codebook[$shape]@${hash.toHexString}")
+  }
 }
 
 /** PQ codes: array<int> of per-subspace nearest-centroid ids. */

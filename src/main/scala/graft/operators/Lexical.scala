@@ -186,8 +186,7 @@ object Lexical {
         stats.select(struct(col("n_docs"), col("avgdl")).as("s")).scalar())
       .withColumn("n_docs", col("__st.n_docs"))
       .withColumn("avgdl", col("__st.avgdl"))
-      .withColumn("idf_bits",
-        (length(bin(expr("n_docs div df"))) - 1).cast("long"))
+      .withColumn("idf_bits", TextOps.log2Floor(expr("n_docs div df")))
       .withColumn("milli",
         expr(s"(idf_bits * tf * ${(k1Num + k1Den) * bDen} * avgdl * 1000) div " +
           s"(${k1Den * bDen} * avgdl * tf + ${k1Num * (bDen - bNum)} * avgdl " +

@@ -133,7 +133,7 @@ object Sketch {
     * cross-engine — no float log2 boundary flips. */
   def hdrBucket(v: Column, b: Int): Column = {
     require(b >= 1 && b <= 20, "b in [1, 20]")
-    val msb = (length(bin(v)) - 1).cast("long")
+    val msb = TextOps.log2Floor(v)
     // The mantissa step is v >> (msb-b): a true integer shift, never a
     // float division. Spark's `/` promotes integrals to double, whose
     // rounding can flip the bucket by one for values ≥ 2^53 and diverge

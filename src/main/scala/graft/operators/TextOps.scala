@@ -1,13 +1,26 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis building blocks for a large-scale training-data pipeline,
-  * over a `text` string column. All pure `Column` expressions (codegen'd
-  * higher-order functions — no UDFs, so whole-stage codegen spans survive;
-  * at 100 TB each of these is a single narrow map over the corpus with no
-  * shuffle).
+  * over a `text` string column. Four families:
+  *   - per-document `Column` expressions (tokens, counts, quality, language
+  *     ID, fingerprints, repetition, chunking, classifier inference):
+  *     codegen'd higher-order functions, no UDFs — each a single narrow map
+  *     over the corpus with no shuffle;
+  *   - corpus statistics (vocabulary, top terms, character entropy): a token
+  *     explode followed by hash aggregates;
+  *   - language-model scores (unigram, bigram and stored-reference
+  *     surprisal): count tables joined back to the token stream, charged in
+  *     exact integer bits;
+  *   - BPE tokenizer training, encoding and decoding over the distinct-word
+  *     table, with the stored merge and vocabulary artifacts.
+  *
+  * The corpus families share one `(id, token)` stream ([[tokenStream]]),
+  * one `(w, wc)` word table ([[wordCounts]]), one exact log₂
+  * ([[log2Floor]]), one per-document score tail ([[perDocScore]]) and one
+  * anchored BPE merge ([[anchoredMerge]]).
   *
   * The DuckDB-oracle twins of each expression live in
   * [[graft.queries.TextQueries]]; expression semantics are chosen to be
@@ -19,6 +32,37 @@ object TextOps {
   def tokens(text: Column): Column =
     when(length(trim(text)) === 0, array().cast("array<string>"))
       .otherwise(split(trim(text), "\\s+"))
+
+  /** Exact integer ⌊log₂ x⌋ for a positive BIGINT: `bin()`'s binary-digit
+    * string is engine-identical, so its length minus one replaces the libm
+    * log (last-ulp engine-dependent, see [[tfIdf]]) in every hash-compared
+    * score. */
+  private[operators] def log2Floor(x: Column): Column =
+    (length(bin(x)) - 1).cast("long")
+
+  /** The corpus token stream: one `(id, token)` row per whitespace token. */
+  private def tokenStream(docs: DataFrame, idCol: String,
+                          textCol: String): DataFrame =
+    docs.select(col(idCol).as("id"), explode(tokens(col(textCol))).as("token"))
+
+  /** The distinct-word table `(w, wc)`: each word with its occurrence count
+    * — the |vocab|-sized input of every BPE step. */
+  private def wordCounts(docs: DataFrame, textCol: String): DataFrame =
+    docs.select(explode(tokens(col(textCol))).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("wc"))
+
+  /** Per-document score tail of the surprisal and entropy operators: every
+    * doc of `docs` gets its row of `scored` (`id`, `counts`, `sum_bits`),
+    * counts zero-filled, and `(sum_bits · 100) div counts.head` — integer
+    * centibits per counted unit — as `score`; docs without a row report
+    * zeros. Output: (idCol, counts…, score). */
+  private def perDocScore(docs: DataFrame, idCol: String, scored: DataFrame,
+                          counts: Seq[String], score: String): DataFrame = {
+    val zeroFilled = counts.map(c => coalesce(col(c), lit(0L)).as(c))
+    val avg = coalesce(expr(s"(sum_bits * 100) div ${counts.head}"), lit(0L))
+    docs.select(col(idCol).as("id")).join(scored, Seq("id"), "left")
+      .select((col("id").as(idCol) +: zeroFilled) :+ avg.as(score): _*)
+  }
 
   /** Text canonicalization for dedup/fingerprint stability: every run of
     * ASCII control-or-space bytes (0x00–0x20 — tabs, newlines, CR, VT, FF,
@@ -224,8 +268,7 @@ object TextOps {
     * aliases referenced more than once in their own stage); the lambdas then
     * index attributes in O(1) and the row cost is O(n·distinct) comparisons
     * — still a narrow no-shuffle map that annotates at scan speed. */
-  def repetitionSignals(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                        textCol: String): org.apache.spark.sql.DataFrame =
+  def repetitionSignals(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol), tokens(col(textCol)).as("tk"))
       .select(col(idCol), col("tk"), tokenBigramsOf(col("tk")).as("bi"))
       .select(col(idCol) +: repetitionSignalsFrom(col("tk"), col("bi"))
@@ -239,9 +282,8 @@ object TextOps {
     * both partitioned on the token. Output (token, n_occurrences, n_docs).
     * Consumers bound it with a deterministic top-k
     * (count desc, token asc) — see `text_vocab_topk`. */
-  def vocabulary(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                 textCol: String): org.apache.spark.sql.DataFrame =
-    docs.select(col(idCol).as("id"), explode(tokens(col(textCol))).as("token"))
+  def vocabulary(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    tokenStream(docs, idCol, textCol)
       .groupBy(col("token"))
       .agg(count(lit(1)).as("n_occurrences"),
         countDistinct(col("id")).as("n_docs"))
@@ -268,11 +310,10 @@ object TextOps {
     *     at any realistic vocab/corpus ratio),
     *   - bounded per-doc top-k window.
     * Output (idCol, token, tf, df, score_bp, rank), ties broken by token. */
-  def topTermsPerDoc(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                     textCol: String, k: Int = 3): org.apache.spark.sql.DataFrame = {
+  def topTermsPerDoc(docs: DataFrame, idCol: String,
+                     textCol: String, k: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val terms = docs.select(col(idCol).as("id"),
-      explode(tokens(col(textCol))).as("token"))
+    val terms = tokenStream(docs, idCol, textCol)
     val tf = terms.groupBy(col("id"), col("token"))
       .agg(count(lit(1)).as("tf"))
     val dfq = terms.groupBy(col("token"))
@@ -319,23 +360,16 @@ object TextOps {
     * feeds the frequency aggregate AND the join side, so it is lazily
     * pinned — the [[Dedup.docDuplicateSpanRates]] discipline. Docs with no
     * tokens report (0, 0). */
-  def unigramSurprisal(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                       textCol: String): org.apache.spark.sql.DataFrame = {
-    val toks = docs.select(col(idCol).as("id"),
-        explode(tokens(col(textCol))).as("token"))
-      .localCheckpoint(eager = false)
+  def unigramSurprisal(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val toks = tokenStream(docs, idCol, textCol).localCheckpoint(eager = false)
     val freq = toks.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
     val nTotal = freq.agg(sum(col("cnt")).as("n_total"))
     val scored = toks.join(freq, "token")
       .withColumn("n_total", nTotal.scalar())
-      .withColumn("bits", (length(bin(expr("n_total div cnt"))) - 1).cast("long"))
+      .withColumn("bits", log2Floor(expr("n_total div cnt")))
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_tokens"), sum(col("bits")).as("sum_bits"))
-    docs.select(col(idCol).as("id")).join(scored, Seq("id"), "left")
-      .select(col("id").as(idCol),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        coalesce(expr("(sum_bits * 100) div n_tokens"), lit(0L))
-          .as("avg_surprisal_cb"))
+    perDocScore(docs, idCol, scored, Seq("n_tokens"), "avg_surprisal_cb")
   }
 
   /** Per-document CHARACTER-distribution entropy — the compression-ratio
@@ -356,8 +390,7 @@ object TextOps {
     * its shuffle was |docs|·|alphabet|-bounded but the explode itself made
     * it the most linear query in the text family (8.0× at 10× rows,
     * BASELINE.md round-8). Empty docs → (0, 0). */
-  def charEntropy(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                  textCol: String): org.apache.spark.sql.DataFrame =
+  def charEntropy(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol),
       length(col(textCol)).cast("long").as("n_chars"),
       graft.functions.CharEntropyCb.charEntropyCb(col(textCol)).as("entropy_cb"))
@@ -368,8 +401,7 @@ object TextOps {
     * DuckDB — a regex empty-pattern split would instead cut UTF-16
     * surrogate pairs apart in the JVM). TextOpsSpec pins it ≡ the native
     * expression; the DuckDB oracle replays this form in SQL. */
-  def charEntropyExplode(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                         textCol: String): org.apache.spark.sql.DataFrame = {
+  def charEntropyExplode(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val cc = docs.select(col(idCol).as("id"), col(textCol).as("__t"))
       // sequence(1, 0) is a DESCENDING [1, 0] in Spark, so empty docs need
       // an explicit empty array (they re-enter via the left join as (0,0))
@@ -381,15 +413,11 @@ object TextOps {
       .groupBy(col("id"), col("ch")).agg(count(lit(1)).as("cnt"))
     val n = cc.groupBy(col("id")).agg(sum(col("cnt")).as("n_chars"))
     val scored = cc.join(n, "id")
-      .withColumn("bits", (length(bin(expr("n_chars div cnt"))) - 1).cast("long"))
+      .withColumn("bits", log2Floor(expr("n_chars div cnt")))
       .groupBy(col("id"))
       .agg(max(col("n_chars")).as("n_chars"),
         sum(expr("cnt * bits")).as("sum_bits"))
-    docs.select(col(idCol).as("id")).join(scored, Seq("id"), "left")
-      .select(col("id").as(idCol),
-        coalesce(col("n_chars"), lit(0L)).as("n_chars"),
-        coalesce(expr("(sum_bits * 100) div n_chars"), lit(0L))
-          .as("entropy_cb"))
+    perDocScore(docs, idCol, scored, Seq("n_chars"), "entropy_cb")
   }
 
   /** BIGRAM-LM surprisal quality score — the conditional-probability
@@ -409,8 +437,7 @@ object TextOps {
     * map-side combined), the per-doc aggregate keys on the doc id. Output:
     * (idCol, n_bigrams, avg_bigram_surprisal_cb) — centi-bits per bigram,
     * 0 for docs with < 2 tokens. */
-  def bigramSurprisal(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                      textCol: String): org.apache.spark.sql.DataFrame = {
+  def bigramSurprisal(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val bi = docs.select(col(idCol).as("id"), tokens(col(textCol)).as("tk"))
       .where(size(col("tk")) >= 2)
       .select(col("id"),
@@ -423,14 +450,10 @@ object TextOps {
     val c1 = c12.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
     val scored = bi.join(c12, Seq("w1", "w2"))
       .join(c1, Seq("w1"))
-      .withColumn("bits", (length(bin(expr("c1 div c12"))) - 1).cast("long"))
+      .withColumn("bits", log2Floor(expr("c1 div c12")))
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("bits")).as("sum_bits"))
-    docs.select(col(idCol).as("id")).join(scored, Seq("id"), "left")
-      .select(col("id").as(idCol),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        coalesce(expr("(sum_bits * 100) div n_bigrams"), lit(0L))
-          .as("avg_bigram_surprisal_cb"))
+    perDocScore(docs, idCol, scored, Seq("n_bigrams"), "avg_bigram_surprisal_cb")
   }
 
   /** Train + STORE a unigram reference LM — the artifact half of the
@@ -441,8 +464,7 @@ object TextOps {
     * train-once / apply-forever discipline of the stored BPE tokenizer
     * (X125) and the stored ANN indexes (X127+). Vocab-sized output: one
     * aggregate of the reference slice, coalesced to a handful of files. */
-  def writeUnigramLm(ref: org.apache.spark.sql.DataFrame, textCol: String,
-                     lmDir: String): Unit = {
+  def writeUnigramLm(ref: DataFrame, textCol: String, lmDir: String): Unit = {
     ref.select(explode(tokens(col(textCol))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
       .coalesce(4)
@@ -466,30 +488,22 @@ object TextOps {
     * stream, then one doc-partitioned aggregate — no corpus-vs-corpus
     * work, and the stored artifact amortizes over every batch scored.
     * Docs with no tokens report (0, 0, 0). */
-  def refLmSurprisal(spark: org.apache.spark.sql.SparkSession,
-                     docs: org.apache.spark.sql.DataFrame, idCol: String,
-                     textCol: String, lmDir: String)
-  : org.apache.spark.sql.DataFrame = {
+  def refLmSurprisal(spark: SparkSession, docs: DataFrame, idCol: String,
+                     textCol: String, lmDir: String): DataFrame = {
     val lm = spark.read.parquet(lmDir)
     val nTotal = lm.agg(sum(col("cnt")).as("n_total"))
-    val toks = docs.select(col(idCol).as("id"),
-      explode(tokens(col(textCol))).as("token"))
-    val scored = toks.join(lm, Seq("token"), "left")
+    val scored = tokenStream(docs, idCol, textCol).join(lm, Seq("token"), "left")
       .withColumn("n_total", nTotal.scalar())
       .withColumn("bits",
         when(col("cnt").isNull,
           length(bin(col("n_total"))).cast("long"))          // ⌊log₂N⌋ + 1
-          .otherwise((length(bin(expr("n_total div cnt"))) - 1).cast("long")))
+          .otherwise(log2Floor(expr("n_total div cnt"))))
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_tokens"),
         sum(when(col("cnt").isNull, 1L).otherwise(0L)).as("n_oov"),
         sum(col("bits")).as("sum_bits"))
-    docs.select(col(idCol).as("id")).join(scored, Seq("id"), "left")
-      .select(col("id").as(idCol),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        coalesce(col("n_oov"), lit(0L)).as("n_oov"),
-        coalesce(expr("(sum_bits * 100) div n_tokens"), lit(0L))
-          .as("avg_ref_surprisal_cb"))
+    perDocScore(docs, idCol, scored, Seq("n_tokens", "n_oov"),
+      "avg_ref_surprisal_cb")
   }
 
   /** Content fingerprint: md5 hex of the raw text — exact-dup grouping key
@@ -520,9 +534,8 @@ object TextOps {
     * staged as an array attribute (the [[tokenBigramsOf]] O(n²) caveat);
     * chunk counts use integer ceil-division (the contamination_bp lesson:
     * no doubles in cross-engine-compared arithmetic). */
-  def chunkDocs(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                textCol: String, chunkTokens: Int = 64,
-                strideTokens: Int = 48): org.apache.spark.sql.DataFrame = {
+  def chunkDocs(docs: DataFrame, idCol: String, textCol: String,
+                chunkTokens: Int = 64, strideTokens: Int = 48): DataFrame = {
     require(chunkTokens >= 1 && strideTokens >= 1 && strideTokens <= chunkTokens,
       "need 1 <= strideTokens <= chunkTokens")
     val (sz, st) = (chunkTokens, strideTokens)
@@ -566,19 +579,14 @@ object TextOps {
     *
     * Output: (pair, n_total = occurrence-weighted count, n_words = distinct
     * words containing the pair). */
-  def bpePairStats(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                   textCol: String): org.apache.spark.sql.DataFrame = {
-    val words = docs
-      .select(explode(tokens(col(textCol))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("wc"))
-    words
+  def bpePairStats(docs: DataFrame, textCol: String): DataFrame =
+    wordCounts(docs, textCol)
       .select(col("w"), col("wc"), explode(charPairsOf(col("w"))).as("pair"))
       .groupBy(col("pair"))
       .agg(sum(col("wc")).as("n_total"),
         // countDistinct, not count: a pair repeated inside one word ("aaa"
         // → "aa" twice) contributes once to the word tally
         countDistinct(col("w")).as("n_words"))
-  }
 
   /** One BPE merge ITERATION applied to the corpus vocabulary: take the
     * argmax pair from [[bpePairStats]] and fuse its occurrences in the
@@ -593,17 +601,13 @@ object TextOps {
     * Output: (w, wc, pair, symbols_before, symbols_after, n_merges) — one
     * row per distinct word; n_merges counts fused occurrences (each merge
     * removes exactly one space). */
-  def applyTopBpeMerge(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                       textCol: String): org.apache.spark.sql.DataFrame = {
-    val words = docs
-      .select(explode(tokens(col(textCol))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("wc"))
+  def applyTopBpeMerge(docs: DataFrame, textCol: String): DataFrame = {
     // argmax pair as a SCALAR SUBQUERY (the unigramSurprisal N convention) —
     // no join node at all, so the registry-wide no-cartesian audit holds
-    val top = bpePairStats(docs, idCol, textCol)
+    val top = bpePairStats(docs, textCol)
       .orderBy(col("n_total").desc, col("pair").asc).limit(1)
       .select(col("pair"))
-    words
+    wordCounts(docs, textCol)
       .withColumn("pair", top.scalar())
       .withColumn("symbols_before", array_join(split(col("w"), ""), " "))
       .withColumn("__pat", concat(substring(col("pair"), 1, 1), lit(" "),
@@ -635,9 +639,8 @@ object TextOps {
     * chunk_md5) with [start_tok, end_tok) half-open token offsets
     * partitioning [0, n). Empty docs emit no chunks; docs shorter than
     * `window` emit one whole-doc chunk. */
-  def cdcChunks(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                textCol: String, window: Int = 8, modulus: Int = 64)
-  : org.apache.spark.sql.DataFrame = {
+  def cdcChunks(docs: DataFrame, idCol: String, textCol: String,
+                window: Int = 8, modulus: Int = 64): DataFrame = {
     require(window > 0 && modulus > 0, "window > 0, modulus > 0")
     val base = docs.select(col(idCol).as("id"), tokens(col(textCol)).as("tk"))
       .withColumn("n", size(col("tk")).cast("long"))
@@ -673,11 +676,17 @@ object TextOps {
   /** Adjacent SYMBOL pairs of an anchored symbol string (see [[bpeTrain]]):
     * `" a b ab"` → `["a b", "b ab"]`; single-symbol words → empty. */
   private def symPairs(syms: Column): Column = {
-    val arr = split(expr("substring(__syms_in, 2)"), " ")
+    val arr = split(substring(syms, 2, Int.MaxValue), " ")
     when(size(arr) < 2, array().cast("array<string>"))
       .otherwise(transform(sequence(lit(1), size(arr) - 1),
         j => concat(element_at(arr, j), lit(" "), element_at(arr, j + 1))))
   }
+
+  /** The anchored rewrite of a merge-table `pair` "A B" (see [[bpeTrain]]):
+    * struct(pat = " A B", rep = " AB"). */
+  private def anchoredMerge(pair: Column): Column =
+    struct(concat(lit(" "), pair).as("pat"),
+      concat(lit(" "), regexp_replace(pair, " ", "")).as("rep"))
 
   /** FULL BPE merge-table training — [[applyTopBpeMerge]]'s loop body
     * iterated `nMerges` times: count adjacent symbol pairs over the
@@ -701,21 +710,17 @@ object TextOps {
     * the word-count aggregate) — the same trick real BPE trainers use. The
     * CORPUS-sized work (tokenize + word count) runs at full parallelism;
     * the vocabulary feeding the merge rounds is then COALESCED TO ONE
-    * PARTITION and EAGERLY pinned: a BPE vocab is bounded by the token
+    * PARTITION and pinned: a BPE vocab is bounded by the token
     * inventory (~10⁵-10⁶ rows at ANY corpus size), so each round becomes a
     * couple of single-task jobs instead of a 32-reducer shuffle per round —
     * per-round cost is job overhead, the dominant term on a contended
     * scheduler (round-13 driver bench: the lazy 32-partition form spent
-    * 15 s mostly scheduling KB-sized tasks). Eager pinning also makes each
-    * round REPLAY-PROOF: a lazy localCheckpoint can recompute through the
-    * whole rewrite chain under memory pressure. Each round's argmax rides
-    * as a 1-row scalar subquery (no driver collect, no join node). */
-  def bpeTrain(docs: org.apache.spark.sql.DataFrame, idCol: String,
-               textCol: String, nMerges: Int): org.apache.spark.sql.DataFrame = {
+    * 15 s mostly scheduling KB-sized tasks). Each round's argmax is pinned
+    * eagerly (it feeds the rewrite and the output) and rides as a 1-row
+    * scalar subquery (no driver collect, no join node). */
+  def bpeTrain(docs: DataFrame, textCol: String, nMerges: Int): DataFrame = {
     require(nMerges >= 1, "nMerges >= 1")
-    var cur = docs
-      .select(explode(tokens(col(textCol))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("wc"))
+    var cur = wordCounts(docs, textCol)
       .withColumn("syms",
         concat(lit(" "), array_join(split(col("w"), ""), " ")))
       .coalesce(1) // vocab-sized from here on: single-task rounds
@@ -726,15 +731,12 @@ object TextOps {
       .localCheckpoint(eager = false)
     val steps = (1 to nMerges).map { i =>
       val top = cur
-        .select(col("wc"), col("syms").as("__syms_in"))
-        .select(col("wc"), explode(symPairs(col("__syms_in"))).as("pair"))
+        .select(col("wc"), explode(symPairs(col("syms"))).as("pair"))
         .groupBy(col("pair")).agg(sum(col("wc")).as("n_total"))
         .coalesce(1)
         .orderBy(col("n_total").desc, col("pair").asc).limit(1)
         .localCheckpoint(eager = true) // feeds the rewrite AND the output
-      val pat = top.select(struct(
-        concat(lit(" "), col("pair")).as("pat"),
-        concat(lit(" "), regexp_replace(col("pair"), " ", "")).as("rep")).as("s"))
+      val pat = top.select(anchoredMerge(col("pair")).as("s"))
       cur = cur
         // Degenerate-corpus guard (round-10 advice): when the vocabulary
         // has no mergeable pair left, the 1-row scalar is EMPTY → NULL
@@ -777,11 +779,10 @@ object TextOps {
     * 2²⁰ buckets are negligible for a ≤(chars+nMerges)-symbol vocabulary.
     * Output: (idCol, n_words, n_tokens, token_ids) with the id sequence
     * space-joined (the registry's stringified-array rule). */
-  def bpeEncode(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                textCol: String, nMerges: Int,
-                idBuckets: Long = 1L << 20): org.apache.spark.sql.DataFrame =
+  def bpeEncode(docs: DataFrame, idCol: String, textCol: String, nMerges: Int,
+                idBuckets: Long = 1L << 20): DataFrame =
     bpeEncodeWithMerges(docs, idCol, textCol,
-      bpeTrain(docs, idCol, textCol, nMerges), nMerges, idBuckets)
+      bpeTrain(docs, textCol, nMerges), nMerges, idBuckets)
 
   /** Persist a trained BPE merge table as the shipped tokenizer artifact —
     * the [[graft.operators.Dedup]] `writeDedupIndex` convention applied to
@@ -790,9 +791,9 @@ object TextOps {
     * (no retraining, no corpus-sized aggregate). At 100 TB this is the
     * only sane shape: the tokenizer is a build artifact, not a per-job
     * computation. */
-  def writeBpeMerges(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                     textCol: String, nMerges: Int, outPath: String): Unit =
-    bpeTrain(docs, idCol, textCol, nMerges)
+  def writeBpeMerges(docs: DataFrame, textCol: String, nMerges: Int,
+                     outPath: String): Unit =
+    bpeTrain(docs, textCol, nMerges)
       // nMerges rows: a single file keeps the artifact read metadata-cheap
       .coalesce(1)
       .write.mode("overwrite").parquet(outPath)
@@ -816,10 +817,10 @@ object TextOps {
     * (round-10 advice). Only `idBuckets` = 2²⁰ is oracle-checked (the
     * generated SQL hardcodes the registry's bucket count); other values
     * are spec-covered only. */
-  def bpeEncodeWithMerges(docs: org.apache.spark.sql.DataFrame, idCol: String,
+  def bpeEncodeWithMerges(docs: DataFrame, idCol: String,
                           textCol: String,
-                          merges: org.apache.spark.sql.DataFrame, nMerges: Int,
-                          idBuckets: Long = 1L << 20): org.apache.spark.sql.DataFrame = {
+                          merges: DataFrame, nMerges: Int,
+                          idBuckets: Long = 1L << 20): DataFrame = {
     val byStep = merges.where(col("step") <= nMerges)
       .select(col("step").cast("int"), col("pair"))
       .collect()
@@ -846,18 +847,14 @@ object TextOps {
     * convention): TextOpsSpec pins the two bit-identical on the corpus,
     * including unicode, empty-text and fewer-merges-than-requested edges.
     * Not on any registered query's hot path. */
-  def bpeEncodeColumnsHof(docs: org.apache.spark.sql.DataFrame, idCol: String,
+  def bpeEncodeColumnsHof(docs: DataFrame, idCol: String,
                           textCol: String,
-                          merges: org.apache.spark.sql.DataFrame, nMerges: Int,
-                          idBuckets: Long = 1L << 20): org.apache.spark.sql.DataFrame = {
+                          merges: DataFrame, nMerges: Int,
+                          idBuckets: Long = 1L << 20): DataFrame = {
     val mergeCols = (1 to nMerges).map { i =>
       coalesce(
         merges.where(col("step") === i)
-          .select(struct(
-            concat(lit(" "), col("pair")).as("pat"),
-            concat(lit(" "), regexp_replace(col("pair"), " ", ""))
-              .as("rep"))
-            .as("m"))
+          .select(anchoredMerge(col("pair")).as("m"))
           .scalar(),
         struct(lit(" ").as("pat"), lit(" ").as("rep"))).as(s"__m$i")
     }
@@ -894,9 +891,8 @@ object TextOps {
     * engines replay the same min rule, so a collision degrades round-trip
     * equality identically instead of diverging). Output:
     * (token_id: long, sym: string), one row per occupied bucket. */
-  def bpeVocab(docs: org.apache.spark.sql.DataFrame, idCol: String,
-               textCol: String, merges: org.apache.spark.sql.DataFrame,
-               idBuckets: Long = 1L << 20): org.apache.spark.sql.DataFrame = {
+  def bpeVocab(docs: DataFrame, textCol: String, merges: DataFrame,
+               idBuckets: Long = 1L << 20): DataFrame = {
     val chars = docs
       .select(explode(tokens(col(textCol))).as("w")).distinct()
       .select(explode(split(col("w"), "")).as("sym"))
@@ -913,10 +909,9 @@ object TextOps {
     * merges make text ENCODABLE, the vocab makes ids DECODABLE. Same
     * one-write-many-reads shape; the table is |alphabet| + nMerges rows,
     * so a single file keeps the read metadata-cheap. */
-  def writeBpeVocab(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                    textCol: String, merges: org.apache.spark.sql.DataFrame,
+  def writeBpeVocab(docs: DataFrame, textCol: String, merges: DataFrame,
                     outPath: String, idBuckets: Long = 1L << 20): Unit =
-    bpeVocab(docs, idCol, textCol, merges, idBuckets)
+    bpeVocab(docs, textCol, merges, idBuckets)
       .coalesce(1)
       .write.mode("overwrite").parquet(outPath)
 
@@ -935,9 +930,7 @@ object TextOps {
     * concatenation `concat(tokens(text))` — exactly what a round-trip
     * check compares. Appends `decoded` to `encoded`; empty id strings and
     * unknown ids decode to "" (array_join null-skip semantics). */
-  def bpeDecode(encoded: org.apache.spark.sql.DataFrame, idsCol: String,
-                vocab: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+  def bpeDecode(encoded: DataFrame, idsCol: String, vocab: DataFrame): DataFrame = {
     val rows = vocab.select(col("token_id").cast("string"), col("sym"))
       .collect().map(r => (r.getString(0), r.getString(1)))
     import org.apache.spark.sql.graft.ColumnBridge
@@ -953,10 +946,8 @@ object TextOps {
     * [[graft.functions.BpeDecodeSyms]]: TextOpsSpec pins the two
     * bit-identical, including empty id strings and unknown-id skipping.
     * Not on any registered query's hot path. */
-  def bpeDecodeColumnsHof(encoded: org.apache.spark.sql.DataFrame,
-                          idsCol: String,
-                          vocab: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+  def bpeDecodeColumnsHof(encoded: DataFrame, idsCol: String,
+                          vocab: DataFrame): DataFrame = {
     val vmap = vocab.select(
       map_from_entries(collect_list(struct(
         col("token_id").cast("string").as("k"), col("sym").as("v"))))
@@ -1008,10 +999,10 @@ object TextOps {
     *
     * Output: (idCol, n_tokens, margin, margin_cb, kept) — kept as int 0/1
     * at margin_cb ≥ 0; empty docs score (0, 0, kept=1, gate-neutral). */
-  def classifierScore(docs: org.apache.spark.sql.DataFrame, idCol: String,
+  def classifierScore(docs: DataFrame, idCol: String,
                       textCol: String,
                       weights: Seq[Long] = classifierWeights())
-      : org.apache.spark.sql.DataFrame = {
+      : DataFrame = {
     require(weights.nonEmpty && weights.forall(w => math.abs(w) < 1000L),
       "weights must be non-empty with |w| < 1000 (the div-shift bound)")
     val wArr = array(weights.map(lit): _*)

@@ -915,13 +915,6 @@ object CurationQueries {
 
   private val ScrubBlocklist = Seq("spark", "stream")
 
-  /** Empty/whitespace-only docs must tokenize to ZERO tokens like the
-    * Spark side (TextOps.tokens): DuckDB's regexp_split_to_array('') yields
-    * [''] (len 1), a silent divergence on degenerate corpora (round-10
-    * advice). */
-  private val toks =
-    raw"(CASE WHEN trim(text) = '' THEN []::varchar[] ELSE regexp_split_to_array(trim(text), '\s+') END)"
-
   /** Distinct word 5-gram list in DuckDB — mirrors NGramShingles semantics:
     * fewer than n tokens → ONE shingle of all tokens space-joined. DuckDB
     * list slicing tk[i:j] is inclusive; range(a,b) is half-open. */

@@ -74,12 +74,6 @@ object LexicalQueries {
       Lexical.bm25(Sources.documents(s, dir), "doc_id", "text", postingTerms)
         .orderBy(col("bm25_milli").desc, col("doc_id"))))
 
-  /** Empty/whitespace-only docs must tokenize to ZERO tokens like the
-    * Spark side (TextOps.tokens): DuckDB's regexp_split_to_array('') yields
-    * [''] (len 1), a silent divergence on degenerate corpora (round-10
-    * advice). */
-  private val toks =
-    raw"(CASE WHEN trim(text) = '' THEN []::varchar[] ELSE regexp_split_to_array(trim(text), '\s+') END)"
   private val bpeish = raw"regexp_extract_all(text, ' ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9\s]+')"
 
   val oracles: Map[String, String] = Map(

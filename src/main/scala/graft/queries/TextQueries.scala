@@ -116,8 +116,7 @@ object TextQueries {
     // inherent to *verifying* a sketch against truth; a production build
     // runs only the sketch pass.
     "sketch_cms_tokens" -> q((s, dir) => {
-      val toks = Sources.documents(s, dir)
-        .select(explode(TextOps.tokens(col("text"))).as("token"))
+      val toks = sketchTokens(s, dir)
       val exact = toks.groupBy(col("token")).agg(count(lit(1)).as("exact_n"))
       val probes = exact.orderBy(col("exact_n").desc, col("token").asc).limit(50)
       val sketch = Sketch.cmsBuild(toks, "token", depth = 4, width = 512)
@@ -135,8 +134,7 @@ object TextQueries {
     // the result. The oracle replays sketch AND estimate value-for-value
     // (row_number over the same md5-48 hashes).
     "sketch_kmv_distinct" -> q((s, dir) => {
-      val toks = Sources.documents(s, dir)
-        .select(col("source"), explode(TextOps.tokens(col("text"))).as("token"))
+      val toks = sketchTokens(s, dir, "source")
       val exact = toks
         .select(col("source").as("g"),
           graft.operators.Dedup.md5Hash48(col("token")).as("h"))
@@ -157,8 +155,7 @@ object TextQueries {
     // rows of 64 longs — metadata cardinality after the one corpus
     // aggregate.
     "sketch_kmv_intersect" -> q((s, dir) => {
-      val toks = Sources.documents(s, dir)
-        .select(col("lang"), explode(TextOps.tokens(col("text"))).as("token"))
+      val toks = sketchTokens(s, dir, "lang")
       val hh = toks
         .select(col("lang"), graft.operators.Dedup.md5Hash48(col("token")).as("h"))
         .distinct()
@@ -184,8 +181,7 @@ object TextQueries {
     // along for error visibility. Same |groups|²-bounded pair join as the
     // intersect form.
     "sketch_kmv_diff" -> q((s, dir) => {
-      val toks = Sources.documents(s, dir)
-        .select(col("lang"), explode(TextOps.tokens(col("text"))).as("token"))
+      val toks = sketchTokens(s, dir, "lang")
       val hh = toks
         .select(col("lang"), graft.operators.Dedup.md5Hash48(col("token")).as("h"))
         .distinct()
@@ -224,8 +220,7 @@ object TextQueries {
     // (row_number over the same md5-48 hashes) — estimator correctness is
     // fully pinned without the exact rider.
     "sketch_kmv_intersect_scale" -> q((s, dir) => {
-      val toks = Sources.documents(s, dir)
-        .select(col("lang"), explode(TextOps.tokens(col("text"))).as("token"))
+      val toks = sketchTokens(s, dir, "lang")
       Sketch.kmvIntersections(
           Sketch.kmvSketches(toks, "lang", "token", k = 64))
         .select(col("g_a").as("lang_a"), col("g_b").as("lang_b"),
@@ -236,8 +231,7 @@ object TextQueries {
     // AT-SCALE KMV SET DIFFERENCE (X157, round-17): rider-free twin of
     // `sketch_kmv_diff` — same split as the intersect pair above.
     "sketch_kmv_diff_scale" -> q((s, dir) => {
-      val toks = Sources.documents(s, dir)
-        .select(col("lang"), explode(TextOps.tokens(col("text"))).as("token"))
+      val toks = sketchTokens(s, dir, "lang")
       Sketch.kmvDifferences(
           Sketch.kmvSketches(toks, "lang", "token", k = 64))
         .select(col("g_a").as("lang_a"), col("g_b").as("lang_b"),
@@ -295,7 +289,7 @@ object TextQueries {
     // vocabulary training. Pair work scales with |vocab|, not corpus size
     // (pairs expand over the aggregated word table). Deterministic top 50.
     "text_bpe_pairs" -> q((s, dir) =>
-      TextOps.bpePairStats(Sources.documents(s, dir), "doc_id", "text")
+      TextOps.bpePairStats(Sources.documents(s, dir), "text")
         .orderBy(col("n_total").desc, col("pair").asc)
         .limit(50)),
 
@@ -304,15 +298,14 @@ object TextQueries {
     // symbol sequence — the loop body of tokenizer training, |vocab|-sized
     // per iteration.
     "text_bpe_merge" -> q((s, dir) =>
-      TextOps.applyTopBpeMerge(Sources.documents(s, dir), "doc_id", "text")
+      TextOps.applyTopBpeMerge(Sources.documents(s, dir), "text")
         .orderBy(col("w"))),
 
     // Full BPE merge-table training (X114): six merge rounds of the
     // count-pairs → fuse-argmax loop over the distinct-word vocabulary —
     // the tokenizer-training artifact itself, every round |vocab|-sized.
     "text_bpe_train" -> q((s, dir) =>
-      TextOps.bpeTrain(Sources.documents(s, dir), "doc_id", "text",
-        nMerges = 6)
+      TextOps.bpeTrain(Sources.documents(s, dir), "text", nMerges = 6)
         .orderBy(col("step"))),
 
     // Full-corpus BPE ENCODE with the trained merge table (X125): every
@@ -389,6 +382,13 @@ object TextQueries {
         .orderBy(col("doc_id")))
   )
 
+  /** The corpus token stream the sketch queries build from: one
+    * `(group…, token)` row per whitespace token. */
+  private def sketchTokens(s: SparkSession, dir: String,
+                           group: String*): DataFrame =
+    Sources.documents(s, dir)
+      .select(group.map(col) :+ explode(TextOps.tokens(col("text"))).as("token"): _*)
+
   /** Build-once stored REFERENCE LM (X170) — trained on the corpus's 'en'
     * slice (the trusted-reference stand-in for CCNet's Wikipedia LM),
     * persisted once per (process, corpus); every scoring rep reads the
@@ -405,8 +405,8 @@ object TextQueries {
     * the stored parquet. */
   private def bpeMergesDir(s: SparkSession, dir: String): String =
     Artifacts.dir("bpe_merges", dir) { out =>
-      TextOps.writeBpeMerges(Sources.documents(s, dir), "doc_id", "text",
-        nMerges = 6, outPath = out)
+      TextOps.writeBpeMerges(Sources.documents(s, dir), "text", nMerges = 6,
+        outPath = out)
     }
 
   /** The vocabulary half of the shipped tokenizer artifact pair — built
@@ -415,17 +415,11 @@ object TextQueries {
     * query. */
   private def bpeVocabDir(s: SparkSession, dir: String): String =
     Artifacts.dir("bpe_vocab", dir) { out =>
-      TextOps.writeBpeVocab(Sources.documents(s, dir), "doc_id", "text",
+      TextOps.writeBpeVocab(Sources.documents(s, dir), "text",
         s.read.parquet(bpeMergesDir(s, dir)), outPath = out)
     }
 
   // DuckDB twins. `len()` is BIGINT in DuckDB vs Spark size() INT → ::int.
-  /** Empty/whitespace-only docs must tokenize to ZERO tokens like the
-    * Spark side (TextOps.tokens): DuckDB's regexp_split_to_array('') yields
-    * [''] (len 1), a silent divergence on degenerate corpora (round-10
-    * advice). */
-  private val toks =
-    raw"(CASE WHEN trim(text) = '' THEN []::varchar[] ELSE regexp_split_to_array(trim(text), '\s+') END)"
 
   /** Shared CDC CTE block (window 8, modulus 32): per doc the token array
     * `tk`, completed boundary list `bs`, and the chunk index stream `j` —

@@ -182,6 +182,29 @@ class TextOpsSpec extends AnyFunSuite {
     assert(r(2L) == ((0L, 0L)), "token-less docs report zeros")
   }
 
+  test("refLmSurprisal: stored reference LM, exact log2, OOV backoff, empty docs zero") {
+    import SparkTestSession.spark.implicits._
+    // reference LM: cnt(a)=4, cnt(b)=cnt(c)=1, N=6 ⇒ a = ⌊log2(6 div 4)⌋ = 0
+    // bits, b = c = ⌊log2 6⌋ = 2 bits; OOV backoff ⌊log2 6⌋ + 1 = 3 bits
+    val ref = Seq((0L, "a a a b"), (1L, "a c")).toDF("doc_id", "text")
+    val docs = Seq((1L, "a b c"), (2L, "a zz zz"), (3L, "")).toDF("doc_id", "text")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_reflm_spec")
+    try {
+      val lmDir = tmp.resolve("lm").toString
+      TextOps.writeUnigramLm(ref, "text", lmDir)
+      val r = TextOps.refLmSurprisal(spark, docs, "doc_id", "text", lmDir)
+        .collect()
+        .map(x => x.getLong(0) -> ((x.getLong(1), x.getLong(2), x.getLong(3))))
+        .toMap
+      assert(r(1L) == ((3L, 0L, 133L)), s"doc 1: ${r(1L)} (400 div 3)")
+      assert(r(2L) == ((3L, 2L, 200L)), s"doc 2: ${r(2L)} (0+3+3 bits, 2 OOV)")
+      assert(r(3L) == ((0L, 0L, 0L)), "token-less docs report zeros")
+    } finally {
+      import scala.reflect.io.Directory
+      new Directory(new java.io.File(tmp.toString)).deleteRecursively()
+    }
+  }
+
   test("chunkDocs: exact chunk grid, overlap, short tail, boundary and empty docs") {
     import SparkTestSession.spark.implicits._
     // 10 tokens, size 4, stride 3 → chunks at 0,3,6 (6+4=10 reaches the
@@ -221,7 +244,7 @@ class TextOpsSpec extends AnyFunSuite {
     import SparkTestSession.spark.implicits._
     // "ab" ×3 (two docs), "aab" ×1, "x" ×1 (no pairs)
     val docs = Seq((1L, "ab ab aab"), (2L, "ab x")).toDF("doc_id", "text")
-    val out = TextOps.bpePairStats(docs, "doc_id", "text")
+    val out = TextOps.bpePairStats(docs, "text")
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     // "ab" pair: 3 occurrences of word "ab" + 1 of "aab" = 4; in 2 words
     assert(out("ab") == ((4L, 2L)), s"ab: ${out.get("ab")}")
@@ -233,7 +256,7 @@ class TextOpsSpec extends AnyFunSuite {
   test("bpePairStats: repeated pair inside one word counts occurrences but one word") {
     import SparkTestSession.spark.implicits._
     val docs = Seq((1L, "aaa")).toDF("doc_id", "text")
-    val out = TextOps.bpePairStats(docs, "doc_id", "text")
+    val out = TextOps.bpePairStats(docs, "text")
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(out == Map("aa" -> ((2L, 1L))),
       s"'aaa' has the 'aa' pair twice in ONE distinct word: $out")
@@ -243,7 +266,7 @@ class TextOpsSpec extends AnyFunSuite {
     import SparkTestSession.spark.implicits._
     // pair counts: "ab" ×4 (3×"ab" + 1 in "aab"), "aa" ×1 → argmax "ab"
     val docs = Seq((1L, "ab ab aab"), (2L, "ab cd")).toDF("doc_id", "text")
-    val out = TextOps.applyTopBpeMerge(docs, "doc_id", "text")
+    val out = TextOps.applyTopBpeMerge(docs, "text")
       .collect()
       .map(r => r.getString(0) -> (r.getString(2), r.getString(3),
         r.getString(4), r.getInt(5))).toMap
@@ -257,7 +280,7 @@ class TextOpsSpec extends AnyFunSuite {
     // vocab {"aaa"}: only pair is "aa" (×2, 1 word); fusing in "a a a"
     // takes the LEFTMOST occurrence then continues after it → "aa a"
     val docs = Seq((1L, "aaa")).toDF("doc_id", "text")
-    val out = TextOps.applyTopBpeMerge(docs, "doc_id", "text").collect()
+    val out = TextOps.applyTopBpeMerge(docs, "text").collect()
     assert(out.length == 1)
     val r = out(0)
     assert((r.getString(2), r.getString(3), r.getString(4), r.getInt(5)) ==
@@ -328,7 +351,7 @@ class TextOpsSpec extends AnyFunSuite {
     //     it mid-symbol); the anchored form must not
     val docs = (Seq.fill(3)("aaab") ++ Seq.fill(2)("ab")).zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    val out = TextOps.bpeTrain(docs, "doc_id", "text", nMerges = 3)
+    val out = TextOps.bpeTrain(docs, "text", nMerges = 3)
       .orderBy("step").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
     assert(out == Seq((1, "a a", 6L), (2, "a b", 5L), (3, "aa ab", 3L)))
@@ -415,7 +438,7 @@ class TextOpsSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft_bpe_spec")
     try {
       val path = tmp.resolve("merges").toString
-      TextOps.writeBpeMerges(docs, "doc_id", "text", nMerges = 3, path)
+      TextOps.writeBpeMerges(docs, "text", nMerges = 3, path)
       val stored = spark.read.parquet(path)
       assert(stored.count() == 3 &&
         stored.columns.toSet == Set("step", "pair", "n_total"))
@@ -451,7 +474,7 @@ class TextOpsSpec extends AnyFunSuite {
     import SparkTestSession.spark.implicits._
     val merges = Seq((1, "a a"), (2, "aa b")).toDF("step", "pair")
     val docs = Seq((1L, "aaa aab b"), (2L, ""), (3L, "cc")).toDF("doc_id", "text")
-    val out = TextOps.bpeVocab(docs, "doc_id", "text", merges)
+    val out = TextOps.bpeVocab(docs, "text", merges)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     // chars {a, b, c} ∪ merge outputs {aa, aab}; no collisions at 2^20
     val expect = Seq("a", "b", "c", "aa", "aab").map(s => (tokId(s), s))
@@ -469,7 +492,7 @@ class TextOpsSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft_bpe_vocab_spec")
     try {
       val vpath = tmp.resolve("vocab").toString
-      TextOps.writeBpeVocab(docs, "doc_id", "text", merges, vpath)
+      TextOps.writeBpeVocab(docs, "text", merges, vpath)
       val enc = TextOps.bpeEncodeWithMerges(docs, "doc_id", "text", merges,
         nMerges = 2)
       val dec = TextOps.bpeDecode(enc, "token_ids",
