@@ -113,10 +113,16 @@ object Sources {
     * cost. The reference splits each line once by position and reads only
     * the fields it uses (`line.split(",")`, MovieRank.java:58,65,
     * MovieRating.java:59,68); [[RatingsCsvFormat]] does the same as a
-    * columnar file source: each line is parsed once, a plain digit line
-    * straight from its bytes, any other line by Spark's own CSV parser, and
-    * only into the column vectors of the columns the query reads, a batch of
-    * [[RatingsCsvFormat.BatchRows]] rows at a time. The scan's `ReadSchema`
+    * columnar file source: each line is parsed once, a plain digit line in
+    * one pass over the block's bytes, in place, from its first byte to its
+    * terminator, any other line by Spark's own CSV parser, and only into the
+    * column vectors of the columns the query reads, a batch of
+    * [[RatingsCsvFormat.BatchRows]] rows at a time. Lines follow Hadoop's
+    * `LineRecordReader`, as the CSV reader's do: LF, CR and CRLF end a line,
+    * a block not at byte 0 skips through its first line end, a block owns
+    * every line that starts at an offset ≤ its end, a UTF-8 BOM at byte 0 is
+    * skipped and the last line needs no terminator. A compressed file (any
+    * codec, `.bz2` too) is one split, read to its end. The scan's `ReadSchema`
     * is the query's columns, it shows `Batched: true`, and whole-stage
     * codegen reads the vectors directly, so the join's `isnotnull(movieId)`
     * tests an already-parsed value. Blank lines and each file's header

@@ -45,6 +45,8 @@ class KmvAggregator(k: Int)
   override def finish(buf: Seq[Long]): Seq[Long] = buf
   override def bufferEncoder: Encoder[Seq[Long]] = ExpressionEncoder[Seq[Long]]()
   override def outputEncoder: Encoder[Seq[Long]] = ExpressionEncoder[Seq[Long]]()
+  /** Explain prints the aggregator: by content, so plans are equal across JVMs. */
+  override def toString: String = s"KmvAggregator(k=$k)"
 }
 
 object KmvAggregator {

@@ -35,6 +35,8 @@ class TopKAggregator(k: Int)
   override def finish(buf: Seq[In]): Seq[In] = buf
   override def bufferEncoder: Encoder[Seq[In]] = ExpressionEncoder[Seq[In]]()
   override def outputEncoder: Encoder[Seq[In]] = ExpressionEncoder[Seq[In]]()
+  /** Explain prints the aggregator: by content, so plans are equal across JVMs. */
+  override def toString: String = s"TopKAggregator(k=$k)"
 }
 
 object TopKAggregator {

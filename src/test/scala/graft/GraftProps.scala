@@ -213,4 +213,53 @@ object GraftProps extends Properties("graft") {
         else s(lo) + (s(lo + 1) - s(lo)) * (pos - lo)
       got == expected // bit-exact, no tolerance
     }
+
+  // A small ratings file: lines of every kind (plain, out-of-grammar, blank,
+  // the header text) with a random LF, CR or CRLF after each, an optional
+  // UTF-8 BOM and an optional last terminator; and a split size from 1 byte
+  // up. Blocks then start and end inside lines, BOMs and CRLFs.
+  private val ratingsLineGen: Gen[String] = Gen.frequency(
+    4 -> Gen.zip(Gen.choose(0, 999), Gen.choose(0, 99), Gen.oneOf("4.5", "3", "0.25", "10.125"),
+      Gen.choose(0L, 9999999999L)).map { case (u, m, r, t) => s"$u,$m,$r,$t" },
+    2 -> Gen.oneOf("1,2,,3", "\"3\",5,4.0,9", "1,2,4.5", "1,2,4.5,7,8", "-1,2,4.5,7", "1,2,1e3,7",
+      "x", "1,2,4.5,99999999999999999999"),
+    2 -> Gen.oneOf("", " ", "\t"),
+    1 -> Gen.const("userId,movieId,rating,timestamp"))
+
+  private val ratingsFileGen: Gen[(String, Int)] = for {
+    n <- Gen.choose(0, 8)
+    lines <- Gen.listOfN(n, ratingsLineGen)
+    eols <- Gen.listOfN(n, Gen.oneOf("\n", "\r", "\r\n"))
+    bom <- Gen.oneOf("", "\uFEFF")
+    trailing <- Gen.oneOf(true, false)
+    split <- Gen.frequency(3 -> Gen.choose(1, 4), 2 -> Gen.choose(5, 40), 1 -> Gen.choose(41, 400))
+  } yield {
+    val ended = lines.zip(eols).map { case (l, e) => l + e }
+    val body = if (trailing || lines.isEmpty) ended.mkString else ended.init.mkString + lines.last
+    (bom + body, split)
+  }
+
+  property("ratingsCsv ≡ the CSV reader at any split size (LF/CR/CRLF, BOM, blank, odd lines)") =
+    forAll(ratingsFileGen) { case (text, split) =>
+      val dir = java.nio.file.Files.createTempDirectory("graft_split_props")
+      val path = dir.resolve("r.csv")
+      java.nio.file.Files.write(path, text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val confs = Seq("spark.sql.files.maxPartitionBytes" -> split.toString,
+        "spark.sql.files.openCostInBytes" -> split.toString) // from 4 MB: below the split, splits shrink to size/cores
+      val before = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      try {
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        def rows(df: org.apache.spark.sql.DataFrame) =
+          df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+        val got = rows(graft.engine.Sources.ratingsCsv(spark, path.toString))
+        val expected = rows(spark.read.option("header", "true").option("escape", "\"")
+          .schema(graft.engine.Sources.ratingsSchema).csv(path.toString))
+        (got == expected) :| s"split $split bytes, file ${text.flatMap {
+          case '\n' => "\\n"; case '\r' => "\\r"; case '\uFEFF' => "<BOM>"; case c => c.toString }}"
+      } finally {
+        before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+        java.nio.file.Files.delete(path)
+        java.nio.file.Files.delete(dir)
+      }
+    }
 }

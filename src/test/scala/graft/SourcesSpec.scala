@@ -8,21 +8,34 @@ import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
-import org.apache.spark.sql.functions.{col, from_csv}
+import org.apache.hadoop.io.compress.BZip2Codec
+import org.apache.hadoop.util.ReflectionUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.functions.{col, from_csv, sum}
 import org.apache.spark.sql.types.{IntegerType, StringType}
 import graft.engine.{MovieAnalysis, RatingsCsvFormat, Sources}
 import graft.queries.RefParityQueries
 
-/** `Sources.ratingsCsv` (the columnar `RatingsCsvFormat` file source:
-  * header/blank skip, one-pass strict parse of plain lines, Spark's own
-  * parser for the rest, 4096-row column batches) ≡ Spark's CSV reader with
-  * the options it replaces, on seeded files built to hit every line the
-  * strict grammar refuses, at the default split size and with 64 KB splits,
-  * gzipped too, for any set of selected columns, with partition and
-  * `_metadata` columns, across batch edges and through the row adapter
-  * (no whole-stage codegen); plus the guards that the strict grammar takes
-  * every plain MovieLens line and that the pipelines' ratings scans are
-  * batched and read only the columns they use. */
+/** `Sources.ratingsCsv` (the columnar `RatingsCsvFormat` file source: lines
+  * found and parsed in place over each block's bytes, header/blank skip,
+  * one-pass strict parse of plain lines, Spark's own parser for the rest,
+  * 4096-row column batches) ≡ Spark's CSV reader with the options it
+  * replaces. The line rules are Hadoop `LineRecordReader`'s: LF, CR and CRLF
+  * each end a line (a CRLF once, also when a buffer fill splits it), a block
+  * not at byte 0 skips through its first line end, a block owns every line
+  * whose first byte is at an offset ≤ its end, a UTF-8 BOM at byte 0 is
+  * skipped, and the last line needs no terminator. A compressed file (gzip,
+  * bz2) is one split, read to its end. Checked on seeded files built to hit
+  * every line the strict grammar refuses, at the default split size and
+  * with 64 KB splits, gzipped and bz2-compressed, for any set of selected
+  * columns, with partition and `_metadata` columns, across batch edges,
+  * buffer-fill edges (a CRLF split by a fill, a line longer than the
+  * buffer), a BOM that decides the header, and through the row adapter (no
+  * whole-stage codegen); plus the guards that the strict grammar takes every
+  * plain MovieLens line, that a 64 KB-split scan reads each byte once (file
+  * size plus one tail read per split), and that the pipelines' ratings
+  * scans are batched and read only the columns they use. `GraftProps` checks
+  * the split rules at random split sizes from 1 byte up. */
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -177,19 +190,25 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   /** Each line through `RatingsCsvFormat.strictLine` over all four columns,
-    * written into column vectors at row id 1: its row, or null where the
-    * grammar refuses the line. */
+    * parsed from the middle of a buffer (after a preceding line, before its
+    * LF terminator) into column vectors at row id 1: its row, or null where
+    * the grammar refuses the line. */
   private def strict(lines: Seq[String]): Seq[Row] = {
     val schema = Sources.ratingsSchema
     val kinds = RatingsCsvFormat.kinds(schema)
     val vectors = OnHeapColumnVector.allocateColumns(2, schema)
     val out = vectors.toArray[WritableColumnVector]
+    val before = "9,9,9.5,9\r\n".getBytes(UTF_8)
     lines.map { line =>
-      val bytes = line.getBytes(UTF_8)
+      val bytes = before ++ s"$line\n".getBytes(UTF_8)
       vectors.foreach(_.reset())
-      if (!RatingsCsvFormat.strictLine(bytes, bytes.length, kinds, out, 1)) null
-      else Row(vectors(0).getInt(1), vectors(1).getInt(1), vectors(2).getDouble(1),
-        vectors(3).getLong(1))
+      val end = RatingsCsvFormat.strictLine(bytes, before.length, kinds, out, 1)
+      if (end < 0) null
+      else {
+        assert(end == bytes.length - 1, s"'$line' ends at its terminator")
+        Row(vectors(0).getInt(1), vectors(1).getInt(1), vectors(2).getDouble(1),
+          vectors(3).getLong(1))
+      }
     }
   }
 
@@ -214,6 +233,22 @@ class SourcesSpec extends AnyFunSuite {
       .select(from_csv(col("value"), schema, Map("escape" -> "\"")))
       .collect().toSeq.map(_.getStruct(0))
     assert(strict(accepted) == viaParser)
+  }
+
+  test("fast path: strictLine checks the columns it does not write") {
+    val kinds = RatingsCsvFormat.kinds(Sources.ratingsSchema)
+    val movieId = new OnHeapColumnVector(1, IntegerType)
+    val out = Array[WritableColumnVector](null, movieId, null, null)
+    def parse(line: String): Int = {
+      val bytes = s"$line\n".getBytes(UTF_8)
+      RatingsCsvFormat.strictLine(bytes, 0, kinds, out, 0)
+    }
+    (oddInts.map(v => s"$v,2,4.5,964982703") ++ oddLongs.map(v => s"1,2,4.5,$v") ++
+      Seq("1,2,4.5", "1,2,4.5,964982703,7")).foreach { line =>
+      assert(parse(line) == -1, s"'$line' is outside the strict grammar, unread columns too")
+    }
+    assert(parse("007,4242,4.5,999999999999999999") == 31)
+    assert(movieId.getInt(0) == 4242)
   }
 
   test("pruning: ratingsCsv(p).select(cols) ≡ the CSV reader's full rows projected to cols") {
@@ -334,6 +369,127 @@ class SourcesSpec extends AnyFunSuite {
         Seq(Row(424242, 4242, 4.25, 1234567890123L)))
       assert(got.where(col("userId") === 1 && col("movieId") === 2 && col("rating").isNull)
         .count() == 1)
+    } finally deleteDir(dir)
+  }
+
+  /** `assertSameAsCsvReader` at the default split size and with 64 KB
+    * splits, which must cut `path` into several blocks; its row count. */
+  private def assertSameAtBothSplits(path: String): Long = {
+    val rows = assertSameAsCsvReader(path)
+    withMaxPartitionBytes("64KB") {
+      assert(Sources.ratingsCsv(spark, path).rdd.getNumPartitions > 1, s"$path must be several blocks")
+      assert(assertSameAsCsvReader(path) == rows)
+    }
+    rows
+  }
+
+  /** A plain line of exactly `len` bytes, 17 ≤ `len` ≤ 42: leading zeros pad it. */
+  private def plainLineOf(len: Int): String = {
+    var pad = len - 17
+    def zeros(max: Int): String = { val z = math.min(pad, max); pad -= z; "0" * z }
+    val ts = zeros(9) + "964982703"
+    s"${zeros(8)}1,${zeros(8)}2,4.5,$ts"
+  }
+
+  test("buffer edges: a CRLF split by a buffer fill, and a CR ending one, ≡ the CSV reader") {
+    val fill = RatingsCsvFormat.BlockBytes
+    val rnd = new Random(20261020L)
+    val text = new StringBuilder(header + "\r\n")
+    /** Plain lines ending in `eol` until `last`, the index of the last
+      * line's terminator: the last line is padded so that it ends there. */
+    def linesUntil(last: Int, eol: String): Unit = {
+      while (last - text.length > 120) text ++= plainLine(rnd) + "\r\n"
+      while (last - text.length > 42) text ++= plainLineOf(17) + "\r\n"
+      text ++= plainLineOf(last - text.length) + eol
+    }
+    linesUntil(fill - 1, "\r\n")     // the CR is the last byte of the first fill
+    linesUntil(2 * fill - 1, "\r")   // a bare CR is the last byte of the second
+    text ++= "424242,4242,4.25,1234567890123\n"
+    (1 to 3000).foreach(_ => text ++= plainLine(rnd) + "\n")
+    val bytes = text.toString.getBytes(UTF_8)
+    assert(bytes(fill - 1) == '\r' && bytes(fill) == '\n' && bytes(2 * fill - 1) == '\r')
+    val dir = writeDir(Seq("fills.csv" -> text.toString))
+    val path = dir.resolve("fills.csv").toString
+    try {
+      assert(assertSameAtBothSplits(path) == text.toString.split("\r\n|\r|\n").length - 1)
+      assert(Sources.ratingsCsv(spark, path).where(col("userId") === 424242).count() == 1)
+    } finally deleteDir(dir)
+  }
+
+  test("buffer edges: a 200 KB out-of-grammar line, longer than the buffer, ≡ the CSV reader") {
+    val rnd = new Random(20261021L)
+    val long = "7,8,4.5," + "9" * (200 * 1024)
+    assert(long.length > 3 * RatingsCsvFormat.BlockBytes)
+    val lines = (header +: Seq.fill(2000)(plainLine(rnd))) ++ (long +: Seq.fill(2000)(plainLine(rnd)))
+    val dir = writeDir(Seq("long.csv" -> lines.mkString("", "\n", "\n")))
+    val path = dir.resolve("long.csv").toString
+    try {
+      assert(assertSameAtBothSplits(path) == 4001)
+      assert(Sources.ratingsCsv(spark, path)
+        .where(col("userId") === 7 && col("movieId") === 8 && col("timestamp").isNull).count() == 1)
+    } finally deleteDir(dir)
+  }
+
+  test("BOM: a BOM, a blank line, then a data line: skipping the BOM makes that line the header") {
+    val rnd = new Random(20261022L)
+    val data = Seq.fill(6000)(plainLine(rnd))
+    val text = "\uFEFF\n" + ("424242,4242,4.25,1234567890123" +: data).mkString("", "\n", "\n")
+    val dir = writeDir(Seq("bom.csv" -> text))
+    val path = dir.resolve("bom.csv").toString
+    try {
+      assert(assertSameAtBothSplits(path) == data.size)
+      assert(Sources.ratingsCsv(spark, path).where(col("userId") === 424242).count() == 0,
+        "the first non-blank line after the BOM is the header")
+    } finally deleteDir(dir)
+  }
+
+  /** Sums `inputMetrics.bytesRead` over the tasks that `body` runs. */
+  private def bytesRead(body: => Unit): Long = {
+    val sum = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(end: SparkListenerTaskEnd): Unit =
+        Option(end.taskMetrics).foreach(m => sum.addAndGet(m.inputMetrics.bytesRead))
+    }
+    org.apache.spark.SparkTestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.SparkTestBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    sum.get
+  }
+
+  test("the scan reads each byte once: 64 KB splits read the file plus one tail read per split") {
+    val rnd = new Random(20261023L)
+    val dir = writeDir(Seq("r.csv" -> ratingsFile(rnd, 30000, "\n", trailingEol = true,
+      leadingBlanks = 0)))
+    val path = dir.resolve("r.csv").toString
+    val size = Files.size(dir.resolve("r.csv"))
+    try withMaxPartitionBytes("64KB") {
+      val splits = Sources.ratingsCsv(spark, path).rdd.getNumPartitions
+      assert(splits == (size + 65535) / 65536)
+      val read = bytesRead(Sources.ratingsCsv(spark, path).agg(sum("movieId")).collect())
+      assert(read >= size, s"$read bytes read of $size")
+      assert(read <= size + splits * RatingsCsvFormat.TailBytes,
+        s"$read bytes read of $size in $splits splits")
+    } finally deleteDir(dir)
+  }
+
+  test("ratingsCsv ≡ the CSV reader on a .bz2 file, which is one split") {
+    val dir = writeDir(Nil)
+    val bz2 = dir.resolve("r.csv.bz2")
+    val codec = ReflectionUtils.newInstance(classOf[BZip2Codec], spark.sparkContext.hadoopConfiguration)
+    val out = codec.createOutputStream(Files.newOutputStream(bz2))
+    val rnd = new Random(20261024L)
+    try out.write(ratingsFile(rnd, 20000, "\r\n", trailingEol = false, leadingBlanks = 1)
+      .getBytes(UTF_8))
+    finally out.close()
+    try {
+      assert(Files.size(bz2) > 64 * 1024, "the file must be larger than one 64 KB split")
+      withMaxPartitionBytes("64KB") {
+        assert(Sources.ratingsCsv(spark, bz2.toString).rdd.getNumPartitions == 1)
+        assert(assertSameAsCsvReader(bz2.toString) > 15000)
+      }
     } finally deleteDir(dir)
   }
 }
